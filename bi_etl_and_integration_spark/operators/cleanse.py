@@ -29,11 +29,12 @@ def cast_with_quarantine(df: DataFrame, col: str, dtype: str,
     """Cast ``col`` to ``dtype``; rows where the cast fails (non-null
     source, null result) divert to the error stream.  Returns
     (good_with_cast, quarantined)."""
-    out = out or col
-    casted = df.withColumn(out, F.col(col).try_cast(dtype))
-    failed = F.col(col).isNotNull() & F.col(out).isNull()
-    return casted.where(~failed), df.where(
-        F.col(col).isNotNull() & F.col(col).try_cast(dtype).isNull())
+    cast = F.col(col).try_cast(dtype)
+    # judged on the SOURCE column, before ``out`` (default: ``col``
+    # itself) is overwritten with the cast result
+    failed = F.col(col).isNotNull() & cast.isNull()
+    return (df.where(~failed).withColumn(out or col, cast),
+            df.where(failed))
 
 
 def character_map(df: DataFrame, mappings: Mapping[str, str],

@@ -21,7 +21,6 @@ row-wise via higher-order functions — signatures never leave the JVM.
 
 from __future__ import annotations
 
-import os
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
@@ -29,7 +28,7 @@ from pyspark.sql import functions as F
 
 from bi_etl_and_integration_spark.operators.fuzzy import tokenize
 from bi_etl_and_integration_spark.operators.relational import (
-    spread_for_compute)
+    source_bytes, spread_for_compute)
 
 _P = 2_147_483_647  # Mersenne prime 2^31-1 for the minhash hash family
 
@@ -73,12 +72,12 @@ def _shj_if_big(src, banded: DataFrame) -> DataFrame:
     the SMJ to a shuffled-hash join when partitions allow."""
     srcs = src if isinstance(src, (list, tuple)) else [src]
     try:
-        nbytes = sum(os.stat(f.removeprefix("file:")).st_size
-                     for s in srcs if s is not None
-                     for f in s.inputFiles())
-    except Exception:  # noqa: BLE001 — exotic/remote source: AQE decides
-        nbytes = 0
-    if _SHJ_SOURCE_BYTES < nbytes <= _SHJ_SOURCE_BYTES_MAX:
+        files = [f for s in srcs if s is not None for f in s.inputFiles()]
+    except Exception:  # noqa: BLE001 — exotic source: AQE decides
+        files = []
+    nbytes = source_bytes(files)
+    if nbytes is not None and (
+            _SHJ_SOURCE_BYTES < nbytes <= _SHJ_SOURCE_BYTES_MAX):
         return banded.hint("SHUFFLE_HASH")
     return banded
 
@@ -720,7 +719,6 @@ def exact_jaccard_join(df: DataFrame, text_col: str = "text",
 def embedding_dedup(df: DataFrame, vec_col: str = "embedding",
                     id_col: str = "vec_id", *, threshold: float = 0.95,
                     n_planes: int = 8, seed: int = 42,
-                    planes: list[list[float]] | None = None,
                     max_bucket_rows: int | None = None) -> DataFrame:
     """Embedding cosine near-dup: bucket by sign-of-random-projection
     (n_planes hyperplanes -> 2^n buckets), then verify cosine INSIDE
@@ -732,15 +730,13 @@ def embedding_dedup(df: DataFrame, vec_col: str = "embedding",
     cosine was ~10x slower at equal semantics.
     Exactness note: random-projection LSH is approximate; near-dups
     straddling a hyperplane need multi-probe (repeat with different
-    seeds and union) — documented recall/cost dial."""
+    seeds and union) — documented recall/cost dial.  The hyperplanes
+    are drawn inside the Arrow worker from the batch's vector width,
+    so building the plan launches no Spark job."""
     from bi_etl_and_integration_spark.operators.similarity import (
-        random_hyperplanes, sign_buckets_udf)
-    if planes is None:
-        # _dim runs a limit(1) job; callers looping over probes pass
-        # precomputed planes to avoid paying it per probe
-        planes = random_hyperplanes(_dim(df, vec_col), n_planes, seed)
+        sign_buckets_udf)
     base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-                     sign_buckets_udf([planes])(F.col(vec_col))[0]
+                     sign_buckets_udf(n_planes, [seed])(F.col(vec_col))[0]
                      .alias("bkt"))
     verify, out_schema = _cosine_verify(
         df, id_col, threshold,
@@ -825,11 +821,9 @@ def embedding_dedup_multiprobe(df: DataFrame, vec_col: str = "embedding",
     dropDuplicates collapses pairs several probes both found (cosine is
     deterministic per pair, so the copies are identical rows)."""
     from bi_etl_and_integration_spark.operators.similarity import (
-        random_hyperplanes, sign_buckets_udf)
-    dim = _dim(df, vec_col)  # one limit(1) job, shared by all probes
+        sign_buckets_udf)
     buckets = sign_buckets_udf(
-        [random_hyperplanes(dim, n_planes, seed + 7919 * i)
-         for i in range(n_probes)])(F.col(vec_col))
+        n_planes, [seed + 7919 * i for i in range(n_probes)])(F.col(vec_col))
     probed = df.select(F.col(id_col).alias("id"),
                        F.col(vec_col).alias("v"),
                        F.posexplode(buckets).alias("probe", "bkt"))
@@ -838,11 +832,6 @@ def embedding_dedup_multiprobe(df: DataFrame, vec_col: str = "embedding",
         max_bucket_rows=max_bucket_rows or _MAX_BUCKET_ROWS)
     return (probed.groupBy("probe", "bkt").applyInPandas(verify, out_schema)
             .dropDuplicates(["id_a", "id_b"]))
-
-
-def _dim(df: DataFrame, vec_col: str) -> int:
-    row = df.select(F.size(F.col(vec_col)).alias("d")).limit(1).collect()
-    return int(row[0]["d"]) if row else 0
 
 
 def dedup_canonicalize(df: DataFrame, pairs: DataFrame, *,

@@ -25,23 +25,36 @@ ColumnLike = Column | str
 #: 0.68 -> 1.07 s when the spread fired on a 0.6 MB documents file;
 #: at 6 MB/50k docs the spread is a clear win — shingle passes there
 #: run seconds serial vs ~0.1 s exchange).  4 MB sits between those
-#: two measured regimes; env-overridable for bench experiments.
-_SPREAD_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES",
-                                       str(4 * 1024 * 1024)))
+#: two measured regimes.
+_SPREAD_MIN_BYTES = 4 * 1024 * 1024
+
+
+def source_bytes(files: Sequence[str]) -> int | None:
+    """Total on-disk bytes of ``inputFiles()`` paths — the size reader
+    behind every plan-time scale decision.  None when unknowable (no
+    files: an in-memory frame; or a path local stat cannot reach: a
+    remote FS); callers treat None as unknown, never as small."""
+    if not files:
+        return None
+    try:
+        return sum(os.stat(f.removeprefix("file:")).st_size for f in files)
+    except OSError:
+        return None
 
 
 def spread_for_compute(df: DataFrame, id_col: str, *,
-                       min_bytes: int | None = None) -> DataFrame:
+                       min_bytes: int = _SPREAD_MIN_BYTES) -> DataFrame:
     """Scale-adaptive input spread for CPU-heavy per-row passes
-    (shingling, window hashing, embedding folds): when the source's
-    scan parallelism is below the session's core count — a single
-    parquet file with one or a few row groups cannot be split
-    further; every split beyond the row-group count is EMPTY (a split
-    gets the row groups whose midpoint falls in its range), so the
-    whole compute pass serializes onto 1-5 tasks — pay one cheap hash
-    exchange of the raw input rows to fan the compute out across all
-    cores (the optimization-guide remedy for input skew: "one huge
-    unsplittable file … repartition immediately after the read").
+    (shingling, window hashing, embedding folds, regex/JSON parses):
+    when the source's scan parallelism is below the session's core
+    count — a single parquet file with one or a few row groups cannot
+    be split further; every split beyond the row-group count is EMPTY
+    (a split gets the row groups whose midpoint falls in its range),
+    so the whole compute pass serializes onto 1-5 tasks — pay one
+    cheap hash exchange of the raw input rows to fan the compute out
+    across all cores (the optimization-guide remedy for input skew:
+    "one huge unsplittable file … repartition immediately after the
+    read").  The engine's only parallelism helper.
 
     Hash-partitioned on ``id_col`` (deterministic under task retry,
     and no sortBeforeRepartition pass, unlike round-robin).  Guarded
@@ -50,51 +63,43 @@ def spread_for_compute(df: DataFrame, id_col: str, *,
 
       - file count: >= core-count whole files is production-shaped
         input, no exchange needed;
-      - source size: below ``min_bytes`` (default
-        ``_SPREAD_MIN_BYTES``) the exchange costs more than the
-        serial pass it parallelizes (VERDICT r11 item 3 — x42 at the
-        0.6 MB sf0.1 fixture regressed 0.68 -> 1.07 s);
+      - source size: below ``min_bytes`` the exchange costs more than
+        the serial pass it parallelizes (VERDICT r11 item 3 — x42 at
+        the 0.6 MB sf0.1 fixture regressed 0.68 -> 1.07 s); an
+        unknown size falls through to the next guard;
       - split count AND footer row-group count: split count lies for
         few-row-group files (splits beyond the row-group count are
-        empty), so both must clear the core count.  When the
-        row-group count is unknowable (in-memory frames, non-parquet
-        sources) the SPLIT count alone decides (ADVICE r11: CSV/JSON
-        and createDataFrame inputs are row-splittable, so an
-        already-parallel frame must stay a no-op).
+        empty), so both must clear the core count.  An unreadable
+        ``.parquet`` footer (remote FS) counts as zero row groups —
+        the conservative spread; in-memory frames and other formats
+        are row-splittable, so the SPLIT count alone decides (ADVICE
+        r11: an already-parallel CSV/JSON or createDataFrame input
+        must stay a no-op).
 
     Measured (r11, sf10 one-file fixtures): minhash corpus banding
     13.3 -> 2.8 s; x43 bench shape 61.6 -> 9.4 s same digest."""
-    sc = df.sparkSession.sparkContext
-    p = sc.defaultParallelism
+    p = df.sparkSession.sparkContext.defaultParallelism
     try:
         files = df.inputFiles()
     except Exception:  # noqa: BLE001 — exotic sources: assume files
         files = None
     if files is not None and len(files) >= p:
         return df  # enough whole files to parallelize — no-op
-    if files:
-        floor = _SPREAD_MIN_BYTES if min_bytes is None else min_bytes
-        try:
-            nbytes = sum(os.path.getsize(f.removeprefix("file:"))
-                         for f in files)
-        except OSError:  # remote FS: size unknowable, fall through
-            nbytes = None
-        if nbytes is not None and nbytes < floor:
-            return df  # tiny source: serial pass beats the exchange
+    nbytes = source_bytes(files)
+    if nbytes is not None and nbytes < min_bytes:
+        return df  # tiny source: serial pass beats the exchange
     splits = df.rdd.getNumPartitions()
-    rgs: int | None = 0
+    rgs = 0 if files else splits  # no files: row-splittable, trust splits
     for f in files or []:
         try:
             import pyarrow.parquet as pq
-            path = f.removeprefix("file:")
-            rgs += pq.ParquetFile(path).metadata.num_row_groups
-        except Exception:  # noqa: BLE001 — non-parquet/remote footer
-            rgs = None
+            rgs += pq.ParquetFile(
+                f.removeprefix("file:")).metadata.num_row_groups
+        except Exception:  # noqa: BLE001 — unreadable or not parquet
+            rgs = 0 if f.endswith(".parquet") else splits
             break
         if rgs >= p:
             break
-    if rgs is None or not files:
-        rgs = splits  # row-splittable or unknowable: trust splits
     if min(splits, rgs) >= p:
         return df
     return df.repartition(p, F.col(id_col))
@@ -366,23 +371,6 @@ def except_(left: DataFrame, right: DataFrame, all: bool = False) -> DataFrame:
 
 
 # --------------------------------------------------- sort/top-k/sample
-
-def ensure_min_parallelism(df: DataFrame,
-                           min_partitions: int | None = None) -> DataFrame:
-    """Small-input adapter for CPU-heavy downstream work (JSON parse,
-    regex, UDF): repartition ONLY when the scan yields fewer partitions
-    than cores.  A single-row-group parquet file (the small-SF fixture
-    shape) otherwise serializes a whole-stage parse on one thread.
-
-    100 TB no-op by construction: real inputs carry thousands of row
-    groups, getNumPartitions >= cores, and no shuffle is added — the
-    repartition branch only exists below ~one row group per core."""
-    if min_partitions is None:
-        min_partitions = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < min_partitions:
-        return df.repartition(min_partitions)
-    return df
-
 
 def sort(df: DataFrame, *cols) -> DataFrame:
     """Full sort (PRO/Глава 05:78) — range-partitioned total order."""

@@ -254,34 +254,41 @@ def sign_bucket(vec: Column, planes: list[list[float]]) -> Column:
     return bucket
 
 
-def sign_buckets_udf(planes_sets: list[list[list[float]]]):
+def sign_buckets_udf(n_planes: int, seeds: list[int]):
     """Arrow-vectorized multi-probe bucketing: returns a pandas_udf
     mapping an embedding column to array<long> of one sign-bucket id
-    per plane set — ALL probes in one ``batch × dim @ dim × total``
-    BLAS matmul, ~100x less per-element overhead than the interpreted
+    per seed — ALL probes in one ``batch × dim @ dim × total`` BLAS
+    matmul, ~100x less per-element overhead than the interpreted
     per-plane array folds of ``sign_bucket``.
 
+    Probe i's planes are ``random_hyperplanes(width, n_planes,
+    seeds[i])``, drawn inside the worker from the batch's vector
+    width — the same ``random.Random`` stream the driver would draw,
+    so bucket ids need no driver-side job to learn the width.
     Bit semantics match ``sign_bucket`` except for dot products within
     float rounding of zero (BLAS accumulates in a different order) —
     immaterial for LSH bucketing, which is approximate by construction.
     """
     import numpy as np
 
-    # dim × (sum of plane counts); per-set column offsets to split on
-    mats = [np.asarray(ps, dtype=np.float64).T for ps in planes_sets]
-    P = np.hstack(mats)
-    offs = np.cumsum([0] + [m.shape[1] for m in mats])
+    weights = 1 << np.arange(n_planes, dtype=np.int64)
+    planes_for: dict[int, np.ndarray] = {}  # width -> dim × total
 
     @F.pandas_udf("array<long>")
     def buckets(s: pd.Series) -> pd.Series:
         if not len(s):
             return pd.Series([], dtype="object")
-        signs = (np.stack(s.to_numpy()).astype(np.float64) @ P) >= 0
-        per_set = [
-            signs[:, offs[i]:offs[i + 1]]
-            @ (1 << np.arange(offs[i + 1] - offs[i], dtype=np.int64))
-            for i in range(len(mats))]
-        return pd.Series(list(np.column_stack(per_set)))
+        mat = np.stack(s.to_numpy()).astype(np.float64)
+        width = mat.shape[1]
+        if width not in planes_for:
+            planes_for[width] = np.hstack(
+                [np.asarray(random_hyperplanes(width, n_planes, seed),
+                            dtype=np.float64).T
+                 for seed in seeds])
+        signs = (mat @ planes_for[width]) >= 0
+        return pd.Series(list(np.column_stack(
+            [signs[:, i * n_planes:(i + 1) * n_planes] @ weights
+             for i in range(len(seeds))])))
 
     return buckets
 

@@ -237,19 +237,23 @@ def bm25_rank(docs: DataFrame, query_terms: list[str], *,
          array, no explode);
       2. corpus stats (N, avg doclen) — one tiny aggregate,
          cross-joined back as a broadcast scalar row;
-      3. explode ONLY rows that can match (pre-filter: text contains
-         any query term) and keep exploded terms ∈ query — at 100 TB
-         the explode's row blow-up is bounded by matches × terms, not
-         corpus × doclen;
-      4. tf per (doc, term) and df per term (broadcast — at most
-         |query| rows), then the BM25 sum per doc.
+      3. tf per (doc, term) as a per-row array count over the SAME
+         tokenize pass — keep only query tokens, then count each
+         term in that near-empty array; no explode, no exchange;
+      4. df per term folded into step 2's aggregate (docs with
+         tf > 0), then the BM25 sum per doc over the rows with any
+         tf > 0.
+
+    ``query_terms`` are lower-cased and deduplicated (first
+    occurrence order): a repeated term is scored once, as in a bag
+    of distinct query terms.
 
     IDF uses the +1 smoothing form ``ln(1 + (N-df+.5)/(df+.5))`` so
     scores stay positive.  Returns (id, bm25_score) — ``topk`` caps
     output via TakeOrdered; ties at the boundary break on id."""
     if not query_terms:
         raise ValueError("query_terms is empty")
-    terms = [t.lower() for t in query_terms]
+    terms = list(dict.fromkeys(t.lower() for t in query_terms))
     # ONE tokenize pass over the corpus (r12, guide §2.3/§2.4): tf per
     # (doc, term) is a per-row array count — |query| is a small literal
     # list, so `size(filter(toks, = term))` replaces the old

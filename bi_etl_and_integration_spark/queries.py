@@ -470,9 +470,10 @@ def q07(spark, cat):
     # an unreleased multicast would accumulate in executor storage)
     rel_ops.release_multicasts(spark)
     # from_json parses props ONCE (get_json_object re-parses the whole
-    # string per call) and the small-input adapter keeps the parse off
-    # a single thread when the fixture is one row group
-    ev = rel_ops.ensure_min_parallelism(cat.events).withColumn(
+    # string per call) and the spread keeps the parse off a single
+    # thread when the fixture is one row group
+    ev = rel_ops.spread_for_compute(
+        cat.events, "event_id", min_bytes=0).withColumn(
         "k_str", F.from_json("props", "k string").getField("k"))
     # two downstream consumers (ok-count + quarantine-count) -> SSIS
     # Multicast persist-on-fanout: the parse runs once, not per branch
@@ -1560,7 +1561,7 @@ def q35(spark, cat):
    " CAST(COUNT(CASE WHEN TRY_CAST(event_type AS INT) IS NULL THEN 1 END) "
    "<= GREATEST(1000, 0.1*COUNT(*)) AS INT) AS within_tolerance FROM events")
 def q36(spark, cat):
-    ev = rel_ops.ensure_min_parallelism(cat.events)
+    ev = rel_ops.spread_for_compute(cat.events, "event_id", min_bytes=0)
     n_ok = F.count(F.when(
         F.from_json("props", "k string").getField("k")
         .try_cast("int").isNotNull(), 1))
@@ -3099,11 +3100,11 @@ def x27(spark, cat):
         .otherwise(F.concat(F.lit("?id="),
                             (F.col("doc_id") % 7).cast("string"))),
         F.lit("#sec"))
-    # ensure_min_parallelism: the canonicalization regex chain is
+    # spread_for_compute: the canonicalization regex chain is
     # CPU-bound and the fixture is a single small file (sf10:
     # ~1.7 -> ~1.0 s); no-op on a real corpus scan
-    base = rel_ops.ensure_min_parallelism(
-        cat.documents.select("doc_id", "source"))
+    base = rel_ops.spread_for_compute(
+        cat.documents.select("doc_id", "source"), "doc_id", min_bytes=0)
     return (base.select(
         cu_ops.canonicalize_url(messy).alias("curl"))
         .groupBy("curl")
@@ -3127,12 +3128,13 @@ def x07(spark, cat):
    "len(list_filter(STRING_SPLIT(text,' '), x -> x != '')) AS q_n_tokens "
    "FROM documents ORDER BY doc_id")
 def x08(spark, cat):
-    """Quality features; ensure_min_parallelism because the tokenize
+    """Quality features; spread_for_compute because the tokenize
     pass is CPU-bound and the small-SF fixture scan yields fewer tasks
     than cores (sf10: ~6 s -> ~3.2 s; no-op on a real corpus scan)."""
     feats = tx_ops.quality_features(
-        rel_ops.ensure_min_parallelism(
-            cat.documents.select("doc_id", "text")), "text")
+        rel_ops.spread_for_compute(
+            cat.documents.select("doc_id", "text"), "doc_id", min_bytes=0),
+        "text")
     return (feats.select("doc_id", "q_n_chars", "q_n_tokens")
             .orderBy("doc_id"))
 
@@ -3162,7 +3164,7 @@ def x09(spark, cat):
     argmax tie-break (max struct = highest hits, then lexicographically
     greatest code) matches Spark's array_max over (hits, lang)
     structs."""
-    docs = rel_ops.ensure_min_parallelism(cat.documents)
+    docs = rel_ops.spread_for_compute(cat.documents, "doc_id", min_bytes=0)
     pred = tx_ops.language_id(docs, "text")
     return (pred.groupBy("lang", "lang_pred")
             .agg(F.count(F.lit(1)).alias("n")).orderBy("lang", "lang_pred"))
@@ -3191,8 +3193,8 @@ def x14(spark, cat):
     text is carried verbatim and chunk_start is a stable re-runnable
     key.  Zero-shuffle narrow op, oracle-matched chunk for chunk."""
     return (tx_ops.chunk_documents(
-        rel_ops.ensure_min_parallelism(cat.documents), "text", "doc_id",
-                                   chunk_tokens=32, overlap_tokens=8)
+        rel_ops.spread_for_compute(cat.documents, "doc_id", min_bytes=0),
+        "text", "doc_id", chunk_tokens=32, overlap_tokens=8)
             .orderBy("id", "chunk_start"))
 
 
@@ -3251,13 +3253,15 @@ def x13(spark, cat):
     exceeds any fixture partition's distinct-token count, making the
     sketch exact; at corpus scale the same plan degrades gracefully
     to a space-saving approximation instead of shuffling the full
-    token frequency table.  ensure_min_parallelism: the small-SF
+    token frequency table.  spread_for_compute: the small-SF
     fixture is a single low-row-group file whose scan yields fewer
     tasks than cores while the counting pass is CPU-bound (sf10:
     2.4 -> 2.0 s); a real corpus scan already exceeds core count and
-    the adapter is a no-op."""
+    the spread is a no-op.  Hashed on the text itself: the projection
+    carries no id."""
     return agg_ops.approx_top_tokens(
-        rel_ops.ensure_min_parallelism(cat.documents.select("text")),
+        rel_ops.spread_for_compute(cat.documents.select("text"), "text",
+                                   min_bytes=0),
         "text", k=20, m=10_000)
 
 
@@ -3717,8 +3721,8 @@ def x19(spark, cat):
     HOF frequency machinery on real data): duplicate-token fraction,
     duplicated-token char fraction, top-bigram fraction."""
     rep = cu_ops.repetition_features(
-        rel_ops.ensure_min_parallelism(cat.documents), "text",
-        line_sep=" ", ngram=2)
+        rel_ops.spread_for_compute(cat.documents, "doc_id", min_bytes=0),
+        "text", line_sep=" ", ngram=2)
     return (rep.select(
         "doc_id",
         dec_round("rep_dup_line_frac", 4).alias("dup_seg_frac"),
@@ -3807,7 +3811,8 @@ def x23(spark, cat):
     first occurrence is dropped, text reassembled in original order —
     certified segment-for-segment against the indexed-lambda oracle."""
     out = cu_ops.dedup_segments(
-        rel_ops.ensure_min_parallelism(cat.documents), "text", sep=" ")
+        rel_ops.spread_for_compute(cat.documents, "doc_id", min_bytes=0),
+        "text", sep=" ")
     return out.select("doc_id", "text").orderBy("doc_id")
 
 

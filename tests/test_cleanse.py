@@ -17,6 +17,18 @@ def test_cast_with_quarantine(rows):
     assert good.where(F.col("id") == 1).collect()[0]["n"] == 42
 
 
+def test_cast_with_quarantine_in_place(rows):
+    """Default ``out`` overwrites the source column: a failed cast must
+    still divert to quarantine only, never stay in the good stream as
+    a NULL."""
+    df = rows([(1, "42"), (2, "n/a"), (3, None)], "id int, raw string")
+    good, bad = cl.cast_with_quarantine(df, "raw", "int")
+    assert sorted((r["id"], r["raw"]) for r in good.collect()) == \
+        [(1, 42), (3, None)]
+    assert good.schema["raw"].dataType.simpleString() == "int"
+    assert [(r["id"], r["raw"]) for r in bad.collect()] == [(2, "n/a")]
+
+
 def test_character_map(rows):
     df = rows([("MiXeD", "abc")], "a string, b string")
     out = cl.character_map(df, {"a": "upper", "b": "translate:abc:xyz"})

@@ -102,6 +102,28 @@ def test_embedding_dedup_identical_vectors(rows):
     assert all(3 not in p for p in pairs)
 
 
+def test_embedding_dedup_builds_without_spark_jobs(spark, rows, tmp_path):
+    """The hyperplanes are drawn in the Arrow worker from the batch's
+    vector width, so building either plan over a file source launches
+    no job (no driver-side probe for the embedding width)."""
+    rows([(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0])],
+         "vec_id long, embedding array<float>").write.parquet(
+        str(tmp_path / "emb"))
+    df = spark.read.parquet(str(tmp_path / "emb"))
+    sc = spark.sparkContext
+    group = "test.embedding_dedup.build"
+    sc.setJobGroup(group, "construction only")
+    try:
+        single = dd.embedding_dedup(df, threshold=0.99, n_planes=4)
+        multi = dd.embedding_dedup_multiprobe(df, threshold=0.99,
+                                              n_planes=4, n_probes=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert single.columns == multi.columns == ["id_a", "id_b",
+                                               "cosine_sim"]
+
+
 def test_embedding_dedup_multiprobe_superset(rows):
     df = rows([(1, [1.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0]),
                (3, [0.95, 0.3, 0.05]), (4, [-1.0, 0.0, 0.0])],

@@ -491,3 +491,34 @@ def test_spread_for_compute_is_scale_adaptive(cat, spark):
         .repartition(p)
     assert rel_ops.spread_for_compute(memdf, "doc_id",
                                       min_bytes=0) is memdf
+
+
+def test_spread_for_compute_unreadable_parquet_footer_spreads(
+        cat, spark, monkeypatch, tmp_path):
+    """A ``.parquet`` source whose footer cannot be read (remote FS)
+    keeps the conservative spread even when its split count clears the
+    core count — splits beyond the row-group count are empty — while a
+    non-parquet source with enough splits is row-splittable and stays
+    a no-op."""
+    import pyarrow.parquet as pq
+    p = spark.sparkContext.defaultParallelism
+    [path] = cat.documents.inputFiles()
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
+    try:
+        split = spark.read.parquet(path)
+        assert split.rdd.getNumPartitions() >= p
+        cat.documents.coalesce(1).write.json(str(tmp_path / "json"))
+        js = spark.read.schema(cat.documents.schema).json(
+            str(tmp_path / "json"))
+        assert js.rdd.getNumPartitions() >= p
+
+        def unreadable(*_a, **_k):
+            raise OSError("footer unreadable")
+        monkeypatch.setattr(pq, "ParquetFile", unreadable)
+        spread = rel_ops.spread_for_compute(split, "doc_id", min_bytes=0)
+        assert spread is not split
+        assert spread.rdd.getNumPartitions() == p
+        assert rel_ops.spread_for_compute(js, "doc_id",
+                                          min_bytes=0) is js
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")

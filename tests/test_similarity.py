@@ -84,7 +84,7 @@ def test_sign_buckets_udf_matches_expression_form(rows):
         sim.sign_bucket(F.col("embedding"), planes_b).alias("b"))
     udf = df.select(
         "vec_id",
-        sim.sign_buckets_udf([planes_a, planes_b])(F.col("embedding"))
+        sim.sign_buckets_udf(5, [1, 2])(F.col("embedding"))
         .alias("ab"))
     want = {r["vec_id"]: (r["a"], r["b"]) for r in expr.collect()}
     got = {r["vec_id"]: tuple(r["ab"]) for r in udf.collect()}

@@ -117,6 +117,19 @@ def test_bm25_rank_orders_by_relevance(rows):
     assert [r["doc_id"] for r in top1] == [1]
 
 
+def test_bm25_rank_dedupes_repeated_query_terms(rows):
+    """A repeated query term is scored once, not double-counted."""
+    from bi_etl_and_integration_spark.operators import text as tx
+    docs = rows([(1, "spark merge spark"), (2, "merge sort"),
+                 (3, "alpha beta")], "doc_id int, text string")
+
+    def scores(terms):
+        return {r["doc_id"]: r["bm25_score"]
+                for r in tx.bm25_rank(docs, terms).collect()}
+    assert scores(["spark", "spark", "merge"]) == \
+        scores(["spark", "merge"])
+
+
 def test_bm25_rank_single_pass_reference_values_and_plan(rows):
     """r12 rewrite pin: tf/df computed as per-row array counts (one
     tokenize pass, no explode, no per-(doc,term) shuffle) must

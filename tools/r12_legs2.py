@@ -43,8 +43,8 @@ def _messy():
 
 
 def x27_nocanon(spark, sf_dir):
-    base = rel_ops.ensure_min_parallelism(
-        cat.documents.select("doc_id", "source"))
+    base = rel_ops.spread_for_compute(
+        cat.documents.select("doc_id", "source"), "doc_id", min_bytes=0)
     return (base.select(_messy().alias("curl"))
             .groupBy("curl")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
@@ -52,8 +52,8 @@ def x27_nocanon(spark, sf_dir):
 
 
 def x27_canon_only(spark, sf_dir):
-    base = rel_ops.ensure_min_parallelism(
-        cat.documents.select("doc_id", "source"))
+    base = rel_ops.spread_for_compute(
+        cat.documents.select("doc_id", "source"), "doc_id", min_bytes=0)
     return base.select(cu_ops.canonicalize_url(_messy()).alias("curl"))
 
 

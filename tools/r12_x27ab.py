@@ -75,8 +75,8 @@ def _messy():
 
 
 def x27_old(spark, sf_dir):
-    base = rel_ops.ensure_min_parallelism(
-        cat.documents.select("doc_id", "source"))
+    base = rel_ops.spread_for_compute(
+        cat.documents.select("doc_id", "source"), "doc_id", min_bytes=0)
     return (base.select(canonicalize_url_r11(_messy()).alias("curl"))
             .groupBy("curl")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))

@@ -40,10 +40,10 @@ def bench(name, fn, n=N):
 
 def docs(sf):
     from bi_etl_and_integration_spark.operators.relational import (
-        ensure_min_parallelism)
-    return ensure_min_parallelism(
+        spread_for_compute)
+    return spread_for_compute(
         spark.read.parquet(os.path.join(sf, "documents.parquet"))
-        .select("doc_id", "source", "text"))
+        .select("doc_id", "source", "text"), "doc_id", min_bytes=0)
 
 
 def messy_url():
