@@ -15,83 +15,39 @@ from pyspark.sql import DataFrame, SparkSession
 
 from bi_etl_and_integration_spark.queries import ORACLE, QUERIES
 
-# The driver verifies the FIRST 50 ``queries()`` entries per round
-# (CORRECTNESS_r01/r02 each stopped at entry 50 — `_ordered()` below
-# self-rotates the window onto whatever still lacks a verdict).
-# After round 9 every declared query holds a cumulative verdict
-# (178 hash-green, 2 rows-only by SURVEY §2.12 declaration).  Round 11
-# changed PLANS (same output) for: the optimization round's
-# dedup/similarity family (spread exchange, InferFiltersFromGenerate
-# exclusion, join-strategy crossover, union-by-sizes verify:
-# x02*/x03/x04/x34*/x36*/x42/x43*), q14/q47 (customer-grain bucketed
-# staging), the staging helper shared by q43/q45/q13b, and the IVF
-# sidecar cache behind x44/x44b/x44c — all front-loaded for fresh
-# verdicts.
-# ``_VERIFY_FIRST`` is only the TIE-BREAK order within the groups;
-# EXACTLY 50 names (pinned by tests/test_entry_window.py).
-_VERIFY_FIRST = [
-    # plans changed in round 11 (same output) — fresh verdicts first:
-    # the optimization round's dedup/similarity family (spread
-    # exchange, InferFiltersFromGenerate exclusion, join crossover,
-    # union-by-sizes) ...
-    "x43_incremental_dedup", "x43b_incremental_dedup_append",
-    "x02_dedup_minhash", "x02b_dedup_minhash_multiprobe",
-    "x03_dedup_simhash", "x04_dedup_ngram",
-    "x42_substring_dedup",
-    "x34_semantic_dedup", "x34b_semantic_dedup_arrow",
-    "x34c_semantic_dedup_coarse",
-    "x36_dedup_canonical", "x36b_dedup_keep_longest",
-    # ... and the interrupted build session's staging queries
-    "q14_mart_cte_cascade", "q47_lateral_topk",
-    "q43_shipping_topk", "q45_returned_items", "q13b_bucketed_join",
-    "x44c_ann_ivfadc_persisted", "x44b_ann_ivf_append",
-    "x44_ann_ivf_persisted",
-    # round-9/10 changed set, kept warm one more round
-    "x08_text_quality", "x27_url_dedup", "x38_url_parts",
-    "q24b_fuzzy_grouping", "q24c_fuzzy_grouping_cc",
-    # high-value carry-overs worth keeping warm
-    "q39_term_extraction", "q39b_term_lookup",
-    "x26_bm25_search",
-    "q51_hierarchy_flatten",
-    "q41d_stateful_sessionize", "x41_jpeg_features", "q64_with_totals",
-    # corpus-curation block (operators/curation.py)
-    "x17_pii_redaction", "x18_quality_filter", "x19_repetition_features",
-    "x20_contamination_check", "x21_domain_mix", "x22_split_assignment",
-    "x23_segment_dedup", "x24_boilerplate_removal",
-    # oracle-bearing LLM extensions (incl. the scale-set dedup
-    # flagship family — sf1/sf10 fixtures regenerated this round,
-    # so keep their sf0.01 verdicts fresh)
-    "x29_stratified_exact_sample", "x30_semantic_clusters",
-    "x32_weighted_sample", "x33_hybrid_rrf",
-    "x35_normalize_text", "x37_sum_map",
-    "x39_curation_pipeline", "x40_standardize",
-    # ClickHouse-parity analytics
-    "q53b_outliers_iqr", "q57_sessionize",
-]
+# Each verification round checks the FIRST 50 ``queries()`` entries and
+# commits the verdicts as CORRECTNESS_r<round>.json; ``_ordered()``
+# derives the next window from those files.
 
 
-def _verified_so_far() -> tuple[set[str], set[str], set[str]]:
-    """Scan the driver-committed CORRECTNESS_r*.json files for queries
-    that already hold a green verdict (hash_match, or a completed
-    rows-only check), the subset with a HASH verdict specifically, and
-    ones that were checked and FAILED."""
-    import glob
+def _verified_so_far() -> tuple[set[str], set[str], set[str],
+                                dict[str, int]]:
+    """Scan the committed CORRECTNESS_r<round>.json verdict files, in
+    round order, for queries that already hold a green verdict
+    (hash_match, or a completed rows-only check), the subset with a
+    HASH verdict specifically, the ones whose latest check FAILED, and
+    the round of each query's newest verdict."""
     import json
     import os
+    import re
     green: set[str] = set()
     hashed: set[str] = set()
     failed: set[str] = set()
+    last_round: dict[str, int] = {}
     here = os.path.dirname(os.path.abspath(__file__))
-    for path in sorted(glob.glob(os.path.join(here,
-                                              "CORRECTNESS_r*.json"))):
+    pattern = re.compile(r"CORRECTNESS_r(\d+)\.json")
+    rounds = sorted((int(m.group(1)), m.group(0))
+                    for m in map(pattern.fullmatch, os.listdir(here)) if m)
+    for rnd, fname in rounds:
         try:
-            with open(path) as fh:
-                rounds = json.load(fh)
+            with open(os.path.join(here, fname)) as fh:
+                verdicts = json.load(fh)
         except (OSError, ValueError):
             continue
-        for name, row in rounds.items():
+        for name, row in verdicts.items():
             if not isinstance(row, dict):
                 continue
+            last_round[name] = rnd
             if row.get("hash_match") or (row.get("err") == "no_oracle"
                                          and row.get("spark_rows")
                                          is not None):
@@ -101,7 +57,7 @@ def _verified_so_far() -> tuple[set[str], set[str], set[str]]:
                     hashed.add(name)
             else:
                 failed.add(name)
-    return green, hashed, failed
+    return green, hashed, failed, last_round
 
 
 def _ordered() -> list[str]:
@@ -112,14 +68,12 @@ def _ordered() -> list[str]:
     possible verdict is still outstanding — no verdict at all in any
     committed CORRECTNESS_r*.json, OR oracle-bearing but never
     hash-verified (a rows-only entry that later GAINS a value oracle
-    rotates back in automatically, e.g. the q10b/q21c band upgrades) —
-    then the proven tail.  `_VERIFY_FIRST` breaks ties inside each
-    group (it front-loads the families judged highest-value), followed
-    by declaration order."""
-    green, hashed, failed = _verified_so_far()
-    missing = [n for n in _VERIFY_FIRST if n not in QUERIES]
-    assert not missing, f"unknown names in _VERIFY_FIRST: {missing}"
-    prio = {n: i for i, n in enumerate(_VERIFY_FIRST)}
+    rotates back in automatically) — then the proven tail.  Inside each
+    group the OLDEST newest-verdict goes first (never verified = round
+    0), then declaration order, so absent failures a window of 50
+    re-verifies every query at least once per ceil(len(QUERIES) / 50)
+    rounds."""
+    green, hashed, failed, last_round = _verified_so_far()
     decl = {n: i for i, n in enumerate(QUERIES)}
 
     def group(n: str) -> int:
@@ -129,8 +83,7 @@ def _ordered() -> list[str]:
         return 1 if pending else 2
 
     return sorted(QUERIES,
-                  key=lambda n: (group(n),
-                                 prio.get(n, len(prio)), decl[n]))
+                  key=lambda n: (group(n), last_round.get(n, 0), decl[n]))
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -20,6 +20,17 @@ import os
 import sys
 import time
 
+# Dispersion/regression gates (see the methodology note in main()):
+# a row whose timed samples disagree by more than SPREAD_GATE, or whose
+# best sample is more than REGRESS_GATE above the last committed value,
+# is re-measured with EXTRA_RUNS more samples.  Walls under SPREAD_FLOOR
+# seconds are exempt from the spread gate (codegen/scheduling jitter
+# dominates there: a 0.25 s query reading 0.25/0.32 s is not drift).
+SPREAD_GATE = 0.20
+REGRESS_GATE = 0.25
+EXTRA_RUNS = 2
+SPREAD_FLOOR = 0.4
+
 
 def normalized_regressions(times: dict, prev_times: dict, spread: dict,
                            *, spread_gate: float, regress_gate: float,
@@ -158,17 +169,10 @@ def main() -> None:
     #   (b) regression vs the LAST COMMITTED value for the same query
     #       in the detail sidecar being refreshed (>25% above it).
     # A row tripping either gate is AUTOMATICALLY re-measured with
-    # BENCH_EXTRA_RUNS more samples (min-of-all is kept — the min
-    # tracks plan cost, noise only ever inflates); rows still over
-    # the gate after re-measurement are listed in the output so a
-    # committed artifact can never silently carry a drifted sample.
-    spread_gate = float(os.environ.get("BENCH_SPREAD_GATE", "0.20"))
-    regress_gate = float(os.environ.get("BENCH_REGRESS_GATE", "0.25"))
-    extra_runs = max(0, int(os.environ.get("BENCH_EXTRA_RUNS", "2")))
-    # sub-noise-floor walls (codegen/scheduling jitter dominates under
-    # ~0.4 s) are exempt from the spread gate: a 0.25 s query whose
-    # samples read 0.25/0.32 s is not drift worth re-measuring
-    spread_floor = float(os.environ.get("BENCH_SPREAD_FLOOR", "0.4"))
+    # EXTRA_RUNS more samples (min-of-all is kept — the min tracks
+    # plan cost, noise only ever inflates); rows still over the gate
+    # after re-measurement are listed in the output so a committed
+    # artifact can never silently carry a drifted sample.
     prev_times: dict[str, float] = {}
     prev_path = os.environ.get("BENCH_DETAIL_PATH") or os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
@@ -211,13 +215,13 @@ def main() -> None:
                 # window-normalized post-hoc (normalized_regressions).
                 best = min(ss)
                 sp = (max(ss) - best) / best if best > 0 else 0.0
-                over_spread = best >= spread_floor and sp > spread_gate
+                over_spread = best >= SPREAD_FLOOR and sp > SPREAD_GATE
                 over_prev = (name in prev_times and
-                             best > (1 + regress_gate) * prev_times[name])
+                             best > (1 + REGRESS_GATE) * prev_times[name])
                 return over_spread or over_prev
 
             if _over(samples):                  # drift suspected:
-                for _ in range(extra_runs):     # re-measure, keep min
+                for _ in range(EXTRA_RUNS):     # re-measure, keep min
                     load0 = min(load0, os.getloadavg()[0])
                     t0 = time.monotonic()
                     consume(fn(spark, sf_dir))
@@ -236,7 +240,7 @@ def main() -> None:
             spread[name] = round((ss[-1] - ss[0]) / ss[0], 3) \
                 if ss[0] > 0 else 0.0
             loadavg[name] = round(load0, 1)
-            if best >= spread_floor and spread[name] > spread_gate:
+            if best >= SPREAD_FLOOR and spread[name] > SPREAD_GATE:
                 dispersion_flagged.append(name)
             if sw0 is not None and sw1 is not None:
                 shuffle_mb[name] = round(
@@ -269,8 +273,8 @@ def main() -> None:
     # window-normalized regression flags: computed over the FULL window
     # so uniform co-tenant inflation divides out (VERDICT r10 item 4)
     regressed, window_cal = normalized_regressions(
-        times, prev_times, spread, spread_gate=spread_gate,
-        regress_gate=regress_gate, spread_floor=spread_floor)
+        times, prev_times, spread, spread_gate=SPREAD_GATE,
+        regress_gate=REGRESS_GATE, spread_floor=SPREAD_FLOOR)
     batch_s = round(sum(t for n, t in times.items()
                         if t >= 0 and n not in STREAMING_QUERIES), 3)
     streaming_s = round(sum(t for n, t in times.items()
@@ -290,14 +294,14 @@ def main() -> None:
         "shuffle_mb": shuffle_mb,
         "spill_mb": spill_mb,
         "loadavg": loadavg,
-        "spread_gate": spread_gate,
-        "regress_gate": regress_gate,
-        # rows whose samples still disagree > spread_gate after the
+        "spread_gate": SPREAD_GATE,
+        "regress_gate": REGRESS_GATE,
+        # rows whose samples still disagree > SPREAD_GATE after the
         # automatic re-measurement — a committed artifact carrying one
         # of these is carrying a drifted sample, re-run before commit
         "dispersion_flagged": sorted(dispersion_flagged),
         # rows whose min exceeds the last committed value by
-        # > regress_gate AFTER dividing out the window calibration
+        # > REGRESS_GATE AFTER dividing out the window calibration
         # factor (median current/committed over stable rows):
         # [committed, now, calibration] — a genuinely per-query plan
         # regression, not uniform window inflation; deserves eyes

@@ -142,8 +142,7 @@ def conditional_split(df: DataFrame, branches: Mapping[str, Column],
     return out
 
 
-def multicast(df: DataFrame, n_consumers: int = 2,
-              persist: bool = True) -> DataFrame:
+def multicast(df: DataFrame, n_consumers: int = 2) -> DataFrame:
     """Multicast (PRO/Глава 05:96): in Spark, consuming one DataFrame
     twice recomputes lineage; persist when fan-out > 1 is genuinely
     consumed more than once (SURVEY.md §4 'pre-materialization').
@@ -151,7 +150,7 @@ def multicast(df: DataFrame, n_consumers: int = 2,
     :func:`release_multicasts` frees them once the fan-out is consumed
     (a cache held past its consumers steals executor storage from every
     later stage of a long-lived session)."""
-    if not (persist and n_consumers > 1):
+    if n_consumers < 2:
         return df
     df = df.persist()
     reg = getattr(df.sparkSession, "_bi_etl_multicasts", None)

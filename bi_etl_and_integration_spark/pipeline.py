@@ -10,7 +10,9 @@ Reference parity:
   - checkpoint/restart: only PHASE boundaries are resumable, never
     intra-flow progress (PRACT/004 CDC.md:552-555) -> ``resume_from`` +
     ``checkpointed_write`` (atomic temp-dir swap).
-  - multicast persistence (PRO/Глава 07:76-80) -> ``persist_on_fanout``.
+  - multicast persistence (PRO/Глава 07:76-80) -> a stage that fans a
+    frame out calls ``operators.relational.multicast`` and frees it with
+    ``release_multicasts`` (the runner does not persist on its own).
 """
 
 from __future__ import annotations
@@ -295,12 +297,6 @@ def from_spec(spec: Mapping) -> Pipeline:
                 retries=int(st.get("retries", 0)),
                 run_on=st.get("run_on", "success"))(fn)
     return p
-
-
-def persist_on_fanout(df: DataFrame, consumers: int) -> DataFrame:
-    """Persist a DataFrame consumed by >1 downstream stage (Cache
-    Connection Manager reuse, PRO/Глава 07:76-80)."""
-    return df.persist() if consumers > 1 else df
 
 
 def recover_publish(path: str) -> bool:

@@ -1757,9 +1757,10 @@ def prepare_session(spark, sf_dir: str) -> None:
     residue from three 32-thread shuffle writes that contaminates the
     first MEASURED samples — r11 diagnosed q14 at sf10 reading
     0.9-2.4 s depending on how the residue fell, decaying to a
-    repeatable ~1.0 s once settled (tools/r11_q14diag.py).  Separating
-    the one-time build from per-query timing is exactly the declared
-    methodology ("warm JVM, session startup excluded")."""
+    repeatable ~1.0 s once settled (VERDICT.md r11, bench item 2;
+    OPTIMIZATION_r11.md "Staging build moved to session warm-up").
+    Separating the one-time build from per-query timing is exactly the
+    declared methodology ("warm JVM, session startup excluded")."""
     cat = _catalog(spark, sf_dir)
     _bucketed_facts(spark, cat)
     _custgrain_facts(spark, cat)

@@ -1,14 +1,15 @@
 """Pin the driver-verification window math in ``__spark_entry__``.
 
-The driver verifies the FIRST 50 ``queries()`` entries per round, so
-an oversized ``_VERIFY_FIRST`` silently costs its tail a verdict (the
-round-2 off-by-one: 51 entries dropped x17 from the window).  These
-tests make the window arithmetic a hard invariant instead of a
-convention.
+Each verification round checks the FIRST 50 ``queries()`` entries and
+commits the verdicts as ``CORRECTNESS_r<round>.json``.  ``_ordered()``
+derives the next window from those files alone (failed, then pending,
+then proven; oldest newest-verdict first inside each group); these
+tests pin that derivation.
 """
 
 from __future__ import annotations
 
+import json
 import sys
 from pathlib import Path
 
@@ -19,19 +20,7 @@ from bi_etl_and_integration_spark.queries import (  # noqa: E402
     ORACLE, QUERIES)
 
 WINDOW = 50
-
-
-def test_verify_first_is_exactly_one_window():
-    assert len(entry._VERIFY_FIRST) == WINDOW, (
-        f"_VERIFY_FIRST has {len(entry._VERIFY_FIRST)} entries for a "
-        f"{WINDOW}-entry driver window — the overflow silently loses "
-        f"its verdict (the round-2 x17 regression)")
-
-
-def test_verify_first_names_exist_and_are_unique():
-    unknown = [n for n in entry._VERIFY_FIRST if n not in QUERIES]
-    assert not unknown, f"unknown names: {unknown}"
-    assert len(set(entry._VERIFY_FIRST)) == len(entry._VERIFY_FIRST)
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_window_prefix_spends_no_slot_on_settled_queries():
@@ -39,7 +28,7 @@ def test_window_prefix_spends_no_slot_on_settled_queries():
     that already holds its strongest verdict (hash-green, or rows-only
     green with no oracle to upgrade to) must not occupy the prefix
     while any pending query waits outside it."""
-    green, hashed, _failed = entry._verified_so_far()
+    green, hashed, _failed, _last = entry._verified_so_far()
     order = entry._ordered()
     window, rest = order[:WINDOW], order[WINDOW:]
 
@@ -58,3 +47,53 @@ def test_ordered_is_a_permutation_of_queries():
     order = entry._ordered()
     assert sorted(order) == sorted(QUERIES)
     assert set(entry.oracle_sql()) == set(ORACLE)
+
+
+def test_committed_verdicts_rotate_the_window():
+    """On the committed verdict files the next window is the stalest
+    one: q17b (result logic changed after its round-1 verdict) is in
+    it, and none of the 50 queries verified in round 12 is."""
+    window = list(entry.queries())[:WINDOW]
+    assert "q17b_asof_join" in window
+    latest = json.loads((ROOT / "CORRECTNESS_r12.json").read_text())
+    assert len(latest) == WINDOW
+    assert not set(window) & set(latest)
+
+
+def _verdicts(names, *, failed=()):
+    """Verdict rows as committed: hash-green where an oracle exists, rows-only
+    green otherwise, and a hash mismatch for ``failed``."""
+    def row(n):
+        if n in failed:
+            return {"hash_match": False, "spark_rows": 1,
+                    "err": "hash_mismatch"}
+        if n in ORACLE:
+            return {"hash_match": True, "spark_rows": 1, "err": None}
+        return {"hash_match": False, "spark_rows": 1, "err": "no_oracle"}
+    return {n: row(n) for n in names}
+
+
+def test_window_rotates_oldest_verdict_first(tmp_path, monkeypatch):
+    """Synthetic verdict files: once every query is proven, a newer
+    round covering the current window pushes the next window onto a
+    disjoint set, and a failed row still sorts first."""
+    monkeypatch.setattr(entry, "__file__",
+                        str(tmp_path / "__spark_entry__.py"))
+
+    def write(rnd, verdicts):
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(
+            json.dumps(verdicts))
+
+    write(1, _verdicts(QUERIES))
+    first = entry._ordered()[:WINDOW]
+    assert first == list(QUERIES)[:WINDOW]   # all tied: declaration
+
+    write(2, _verdicts(first))
+    second = entry._ordered()[:WINDOW]
+    assert not set(second) & set(first)
+
+    flaky = second[-1]
+    write(3, _verdicts(second, failed={flaky}))
+    order = entry._ordered()
+    assert order[0] == flaky
+    assert not set(order[1:WINDOW]) & (set(first) | set(second))

@@ -32,6 +32,18 @@ def test_conditional_split_first_match_wins(rows):
     assert total == df.count()
 
 
+def test_multicast_persists_until_released(rows, spark):
+    rel.release_multicasts(spark)  # start from an empty session registry
+    df = rows([(1,), (2,)], "id int")
+    assert rel.multicast(df, 1) is df          # single consumer: no cache
+    assert not df.storageLevel.useMemory
+    fanned = rel.multicast(df, 2)
+    assert fanned.storageLevel.useMemory or fanned.storageLevel.useDisk
+    assert rel.release_multicasts(spark) == 1
+    assert not (df.storageLevel.useMemory or df.storageLevel.useDisk)
+    assert rel.release_multicasts(spark) == 0
+
+
 def test_conditional_split_no_default(rows):
     df = rows([(1, 5), (2, 50)], "id int, v int")
     streams = rel.conditional_split(df, {"lo": F.col("v") < 10},

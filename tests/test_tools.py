@@ -326,3 +326,18 @@ def test_normalized_regression_gate():
     flagged, cal = bench.normalized_regressions(
         {"a": -1.0, "new": 9.9}, {"a": 1.0}, {}, **kw)
     assert flagged == {} and cal == 1.0
+
+
+def test_every_tool_is_documented():
+    """Every script in tools/ must be named in the verify skill, so a
+    one-off probe cannot land there without a documented, reusable
+    purpose (one-off probes belong in a scratch directory)."""
+    skill = open(os.path.join(ROOT, ".claude", "skills", "verify",
+                              "SKILL.md")).read()
+    tools = sorted(f for f in os.listdir(os.path.join(ROOT, "tools"))
+                   if f.endswith(".py"))
+    assert tools, "tools/ has no scripts"
+    undocumented = [f for f in tools if f"tools/{f}" not in skill]
+    assert not undocumented, (
+        f"tools/ scripts not named in .claude/skills/verify/SKILL.md: "
+        f"{undocumented}")
