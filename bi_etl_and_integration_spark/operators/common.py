@@ -7,8 +7,8 @@ from pyspark.sql import DataFrame
 
 def materialize(df: DataFrame) -> DataFrame:
     """Eagerly materialize ``df`` and CUT ITS LINEAGE — the primitive
-    every iterative/offset-dependent operator needs (fuzzy label
-    propagation and star CC rounds, flatten_hierarchy pointer-doubling
+    every iterative/offset-dependent operator needs (star
+    connected-components rounds, flatten_hierarchy pointer-doubling
     rounds, sequence packing's partition-offset table): without
     truncation the logical plan grows multiplicatively per round and
     Catalyst re-analysis dominates (persist alone does NOT cut the

@@ -116,26 +116,6 @@ def shingles(text: Column, n: int = 3) -> Column:
                                    F.slice(toks, i, n), " "))))
 
 
-def minhash_signature(shingle_arr: Column, num_hashes: int = 64,
-                      seed: int = 42) -> Column:
-    """Minhash signature as array<long> of length ``num_hashes``.
-
-    Uses the affine family (a_i * xxhash64(s) + b_i) mod p with
-    deterministic (seeded) coefficients; computed entirely with
-    higher-order functions (no UDF)."""
-    import random
-    rnd = random.Random(seed)
-    coeffs = [(rnd.randrange(1, _P), rnd.randrange(0, _P))
-              for _ in range(num_hashes)]
-    hashed = F.transform(shingle_arr,
-                         lambda s: F.pmod(F.xxhash64(s), F.lit(_P)))
-    sig = F.array(*[
-        F.array_min(F.transform(
-            hashed, lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(_P))))
-        for a, b in coeffs])
-    return sig
-
-
 def hashed_shingles(text: Column, n: int = 3) -> Column:
     """Distinct word-n-gram shingles hashed to longs.  Downstream set ops
     (Jaccard, minhash) run on longs instead of strings — same semantics

@@ -10,8 +10,9 @@ Reference parity:
     candidate set per row.
   - Fuzzy Grouping (PRO/Глава 11:46-55): duplicate clusters WITHIN one
     dataset; emits ``_key_in`` / ``_key_out`` (canonical row) / ``_score``
-    exactly like the SSIS component.  Connected components via iterative
-    min-key label propagation over the similarity edge set.
+    exactly like the SSIS component.  Connected components over the
+    similarity edge set: driver-local union-find for a small graph,
+    alternating large/small-star rounds otherwise.
   - Term Extraction / Term Lookup (PRO/Глава 05:91-92): tokenize +
     stopword filter + frequency; lookup = join on term.
 """
@@ -81,7 +82,7 @@ def _local_components(edge_rows) -> dict:
     """Union-find (path compression) over a driver-collected edge
     list; returns ``{node: component}`` where ``component`` is the
     minimum node id of the component — the exact contract of the
-    distributed paths (Python's ``<`` on homogeneous int/str ids
+    distributed path (Python's ``<`` on homogeneous int/str ids
     orders identically to Spark's: int order is int order, and str
     comparison by code point equals UTF-8 binary order).  NULL and
     self-loop edges are ignored, duplicate edges are harmless."""
@@ -153,8 +154,9 @@ def connected_components(edges: DataFrame, src: str = "src",
     the driver and union-find labels it in one pass — zero job waves
     instead of O(log² n) rounds of two shuffles each (the probe is a
     ``limit(threshold+1)`` scan, so the decision itself never reads
-    more than threshold+1 rows even on a 100 TB edge set).  Pass ``0``
-    to force the distributed algorithm.
+    more than threshold+1 rows even on a 100 TB edge set).  The labels
+    come back broadcast-hinted, so the caller's join against them
+    stays a broadcast.  Pass ``0`` to force the distributed algorithm.
 
     Each distributed round is two shuffles (groupBy min + join) per
     star step, all JVM-side; no driver-side data beyond the
@@ -165,7 +167,7 @@ def connected_components(edges: DataFrame, src: str = "src",
     if small_graph_threshold:
         probe = e0.limit(small_graph_threshold + 1).collect()
         if len(probe) <= small_graph_threshold:
-            return _local_labels_df(e0, probe)
+            return F.broadcast(_local_labels_df(e0, probe))
     # canonical orientation u > v; the edge set is kept distinct so the
     # convergence check compares sets, not multisets
     e = (e0.select(F.greatest("u", "v").alias("u"),
@@ -259,8 +261,6 @@ def fuzzy_pairs(df: DataFrame, key: str, col: str, *,
 def fuzzy_grouping(df: DataFrame, key: str, col: str, *,
                    block: Column | Sequence[Column] | None = None,
                    min_similarity: float = 0.8,
-                   max_iter: int = 10,
-                   algorithm: str = "label_prop",
                    pairs: DataFrame | None = None,
                    small_graph_threshold: int = _SMALL_GRAPH_EDGES
                    ) -> DataFrame:
@@ -275,32 +275,17 @@ def fuzzy_grouping(df: DataFrame, key: str, col: str, *,
          ``block`` accepts a single Column or a SEQUENCE of Columns
          (multi-pass blocking — candidate pairs union across
          blockers, see :func:`fuzzy_pairs`)
-      2. connected components over the edge set —
-         ``algorithm="label_prop"`` (default): iterative min-label
-         propagation, O(diameter) rounds, fine for short chains;
-         ``algorithm="star"``: alternating large/small-star
-         (:func:`connected_components`), O(log² n) rounds — the 100 TB
-         path when similarity chains can be long.
+      2. :func:`connected_components` over the edge set — driver-local
+         union-find when the edge set has at most
+         ``small_graph_threshold`` rows, alternating large/small-star
+         otherwise (``small_graph_threshold=0`` forces the
+         distributed loop); nodes without an edge are singletons
       3. canonical = min key per component
 
     ``pairs`` short-circuits step 1 with a precomputed
     :func:`fuzzy_pairs` result (columns id_a/id_b) — callers that also
     EMIT the pair set (q24b) avoid generating it twice.
-
-    Step 2 carries the same SMALL-GRAPH FAST PATH as
-    :func:`connected_components` (both algorithms compute the same
-    fixpoint — the true component-min label — so the driver-local
-    union-find is a valid implementation of either): when a bounded
-    ``limit(threshold+1)`` probe shows the blocked edge set is at most
-    ``small_graph_threshold`` rows, it collects and labels in one pass
-    instead of O(rounds) job waves — the dominant cost on a small
-    value domain is pure scheduling, and the domain does not grow with
-    the data (the reference's own "small reference data belongs in
-    RAM" lesson, PRO/Глава 07:33-37).  ``small_graph_threshold=0``
-    forces the named distributed algorithm.
     """
-    if algorithm not in ("label_prop", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
     nodes = df.select(F.col(key).alias("id"), F.col(col).alias("val"))
     internal_pairs = pairs is None
     if internal_pairs:
@@ -308,108 +293,38 @@ def fuzzy_grouping(df: DataFrame, key: str, col: str, *,
                             min_similarity=min_similarity)
     edges = pairs.select(F.col("id_a").alias("src"),
                          F.col("id_b").alias("dst"))
-    edges_persisted = False
-    probe = None
-    if small_graph_threshold:
-        if internal_pairs:
-            # ADVICE r8: the probe executes the (expensive) blocked
-            # pair-generation plan; persist FIRST so an over-threshold
-            # probe's partitions are reused by the distributed path
-            # instead of the whole LSH/blocked join being recomputed
-            # from scratch (the cache is partition-grain: the limit()
-            # probe only materializes the partitions it touches, so
-            # the bounded-probe contract is preserved).  Caller-given
-            # pairs stay unpersisted — the caller owns their lifetime.
-            edges = edges.persist()
-            edges_persisted = True
-        probe = edges.limit(small_graph_threshold + 1).collect()
-        if len(probe) > small_graph_threshold:
-            probe = None                 # too big: distributed path
-    if probe is not None:
-        comp = _local_labels_df(edges, probe)
-        labels = (nodes.select("id")
-                  .join(F.broadcast(comp), "id", "left")
-                  .select("id", F.coalesce("component", F.col("id"))
-                          .alias("label")))
-        adj = edges  # placeholder for the shared unpersist below
-    elif algorithm == "star":
-        # threshold 0: the bounded probe above already ruled small out
-        comp = connected_components(edges, max_iter=max_iter,
-                                    small_graph_threshold=0)
-        labels = (nodes.select("id")
-                  .join(comp, "id", "left")
-                  .select("id", F.coalesce("component", F.col("id"))
-                          .alias("label")))
-        adj = edges  # placeholder for the shared unpersist below
-    else:
-        # undirected adjacency (both directions) + self loops
-        adj = (edges.select("src", "dst")
-               .unionByName(edges.select(F.col("dst").alias("src"),
-                                         F.col("src").alias("dst")))
-               .persist())
-        labels = _materialize(
-            nodes.select("id", F.col("id").alias("label")))
-        for _ in range(max_iter):
-            # candidate label for each node = min(own, neighbors' labels)
-            prop = (adj.join(labels.withColumnRenamed("id", "dst")
-                             .withColumnRenamed("label", "nbr_label"), "dst")
-                    .groupBy("src").agg(F.min("nbr_label").alias("min_nbr")))
-            stepped = (labels.join(prop.withColumnRenamed("src", "id"),
-                                   "id", "left")
-                       .select("id", F.least(F.col("label"),
-                                             F.coalesce(F.col("min_nbr"),
-                                                        F.col("label")))
-                               .alias("label")))
-            # POINTER JUMPING (round 6): follow label -> label-of-label
-            # before the next round, halving the distance every node's
-            # label still has to travel — convergence drops from
-            # O(diameter) rounds to O(log diameter), which is the
-            # difference between 20+ and ~5 job waves on chain-shaped
-            # similarity components (q24b at sf0.1: 49 s -> ~3 s).
-            # Each round is _materialize'd (reliable checkpoint when a
-            # checkpoint dir is set, localCheckpoint otherwise —
-            # ADVICE r6): without truncation the iterative lineage
-            # makes Catalyst re-analyze a deeper plan every wave (the
-            # dominant cost, not the data).
-            # Storage note: superseded snapshots (2 longs x |domain|,
-            # MEMORY_AND_DISK) are released by the ContextCleaner as
-            # their references drop at reassignment — worst case
-            # O(log diameter) live snapshots, spillable; the previous
-            # persist/unpersist freed each round deterministically
-            # but paid the growing-lineage re-analysis instead.
-            hop = stepped.select(F.col("id").alias("label"),
-                                 F.col("label").alias("label2"))
-            new_labels = (stepped.join(hop, "label", "left")
-                          .select("id",
-                                  F.least(F.col("label"),
-                                          F.coalesce(F.col("label2"),
-                                                     F.col("label")))
-                                  .alias("label")))
-            new_labels = _materialize(new_labels)
-            changed = (new_labels
-                       .join(labels.withColumnRenamed("label", "old"), "id")
-                       .where(F.col("label") != F.col("old"))
-                       .limit(1).count())
-            labels = new_labels
-            if changed == 0:
-                break
+    edges_persisted = internal_pairs and bool(small_graph_threshold)
+    if edges_persisted:
+        # ADVICE r8: the small-graph probe executes the (expensive)
+        # blocked pair-generation plan; persist FIRST so an
+        # over-threshold probe's partitions are reused by the
+        # distributed path instead of the whole LSH/blocked join being
+        # recomputed from scratch (the cache is partition-grain: the
+        # limit() probe only materializes the partitions it touches,
+        # so the bounded-probe contract is preserved).  Caller-given
+        # pairs stay unpersisted — the caller owns their lifetime.
+        edges = edges.persist()
+    comp = connected_components(edges,
+                                small_graph_threshold=small_graph_threshold)
+    if edges_persisted:
+        # both CC paths return labels that no longer read the edges (a
+        # driver-built frame, or the last checkpointed star round)
+        edges.unpersist()
+    labels = (nodes.select("id")
+              .join(comp, "id", "left")
+              .select("id", F.coalesce("component", F.col("id"))
+                      .alias("label")))
     canon_val = (labels.join(nodes.select(F.col("id").alias("label"),
                                           F.col("val").alias("__canon_val")),
                              "label"))
-    out = (df.join(canon_val.withColumnRenamed("id", key), key)
-           .withColumn("_key_in", F.col(key))
-           .withColumn("_key_out", F.col("label"))
-           .withColumn("_score", F.when(F.col("_key_in") == F.col("_key_out"),
-                                        F.lit(1.0))
-                       .otherwise(similarity(F.col(col),
-                                             F.col("__canon_val"))))
-           .drop("label", "__canon_val"))
-    adj.unpersist()
-    if edges_persisted:
-        # labels are already eagerly materialized on every path, so the
-        # cache has served its purpose by the time the result is built
-        edges.unpersist()
-    return out
+    return (df.join(canon_val.withColumnRenamed("id", key), key)
+            .withColumn("_key_in", F.col(key))
+            .withColumn("_key_out", F.col("label"))
+            .withColumn("_score", F.when(F.col("_key_in") == F.col("_key_out"),
+                                         F.lit(1.0))
+                        .otherwise(similarity(F.col(col),
+                                              F.col("__canon_val"))))
+            .drop("label", "__canon_val"))
 
 
 STOPWORDS = (

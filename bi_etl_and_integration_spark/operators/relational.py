@@ -113,12 +113,6 @@ def project(df: DataFrame, *cols: ColumnLike, **derived: Column) -> DataFrame:
     return df.select(*out)
 
 
-def derive(df: DataFrame, **cols: Column) -> DataFrame:
-    """Derived Column transform: add/replace computed columns
-    (PRO/Глава 05:76).  Stays inside whole-stage codegen."""
-    return df.withColumns(dict(cols))
-
-
 def conditional_split(df: DataFrame, branches: Mapping[str, Column],
                       default: str | None = "default",
                       ) -> dict[str, DataFrame]:

@@ -73,23 +73,6 @@ def cosine_similarity_udf():
     return cos
 
 
-def with_l2_normalized(df: DataFrame, vec_col: str,
-                       out_col: str) -> DataFrame:
-    """Add a unit-L2 copy of ``vec_col`` (double elements).
-
-    Normalizing ONCE per row turns every later cosine into a single
-    dot pass — the higher-order-function norm is the interpreted slow
-    path, so paying it per row instead of per candidate pair is the
-    difference between O(n) and O(n·candidates) interpreter calls.
-    Zero vectors map to zero vectors (cosine 0 downstream)."""
-    return (df.withColumn("__l2", F.greatest(norm(F.col(vec_col)),
-                                             F.lit(1e-12)))
-            .withColumn(out_col, F.transform(
-                F.col(vec_col),
-                lambda x: x.cast("double") / F.col("__l2")))
-            .drop("__l2"))
-
-
 _MAX_QUERY_ROWS = 10_000
 """Default brute_force_topk query-side cap: the contract is a SMALL
 probe batch (the query set is broadcast/collected), and beyond ~10k
@@ -1003,24 +986,6 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 10, *,
                     F.col("__rn").alias("rank")))
 
 
-def sq_l2(a: Column, b: Column) -> Column:
-    """Squared L2 distance, double-precision sequential fold (the
-    engine-portable form: any oracle that folds left-to-right in
-    double reproduces it bit for bit)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-                   * (x.cast("double") - y.cast("double"))),
-        F.lit(0.0), lambda acc, x: acc + x)
-
-
-#: k·dim above which the plan-literal fold is replaced by the Arrow
-#: path: the literal fold runs INTERPRETED (HOF lambdas), so its cost
-#: is ~n·k·dim lambda evaluations — fine for a handful of centroids,
-#: ruinous at the k ∝ n/target_cluster_rows scaling semantic_dedup
-#: needs (VERDICT r6 item 2).  2048 keeps every small-k caller
-#: (x30's k=8·dim=64=512) on the zero-dependency codegen plan.
-_LITERAL_ASSIGN_BUDGET = 2048
-
 #: relative half-width of the BLAS-vs-exact-fold disagreement band for
 #: squared-L2 distances.  float64 matmul error for dim≤4096 unit-scale
 #: data is ≤ ~1e-12 relative; 1e-6 is six orders of safety, and band
@@ -1044,28 +1009,23 @@ def kmeans_assign(df: DataFrame, centroids: list[tuple[int, list[float]]],
                   out_col: str = "cluster",
                   method: str = "auto") -> DataFrame:
     """Assign every row to its nearest centroid (squared-L2; ties break
-    on the lower centroid id).  Two physical strategies, same result
-    bit for bit:
+    on the lower centroid id; a NULL or NaN-bearing embedding gets the
+    minimum centroid id).  Two physical strategies, same result bit
+    for bit:
 
-    - ``literal`` (small k·dim): the centroid list is a PLAN LITERAL —
-      k·dim doubles inlined into one expression (an array of
-      (distance, centroid_id) structs + ``array_min``; struct ordering
-      compares distance first, id second — the deterministic argmin).
-      No join, no shuffle, no UDF, but the HOF fold runs INTERPRETED,
-      so cost ≈ n·k·dim lambda evaluations.
-    - ``arrow`` (large k·dim): one ``mapInPandas`` pass; the k×dim
+    - ``arrow`` (small k): one scalar ``pandas_udf`` pass; the k×dim
       centroid matrix ships once per task and distances come from one
       float64 BLAS matmul per batch.  Exactness is PRESERVED, not
       approximated — the same band argument the semantic_dedup
       dominance pass uses: BLAS decides a row only when the runner-up
       distance is farther than ``_ASSIGN_EPS`` (relative) from the
       minimum; any centroid inside the band is re-decided with the
-      exact sequential double fold (identical IEEE op order to
-      :func:`sq_l2`, which any engine-portable oracle mirrors), with
-      the same (distance, id) lexicographic tie rule.  Since the true
-      exact argmin's BLAS distance can differ from the BLAS minimum by
-      at most 2× the BLAS error (≪ band), it is always among the band
-      candidates — so the arrow result equals the literal result on
+      exact sequential double fold (``d += (x - y)²`` left to right,
+      the op order any engine-portable oracle mirrors), with a
+      (distance, id) lexicographic tie rule.  Since the true exact
+      argmin's BLAS distance can differ from the BLAS minimum by at
+      most 2× the BLAS error (≪ band), it is always among the band
+      candidates — so the result equals the exact fold's argmin on
       every input, exact ties included (property-tested).
 
     - ``coarse`` (large k): the Arrow pass with TRIANGLE-INEQUALITY
@@ -1082,10 +1042,10 @@ def kmeans_assign(df: DataFrame, centroids: list[tuple[int, list[float]]],
       candidates the flat pass would (the bound itself is deflated by
       the BLAS error margin before comparing).
 
-    ``auto`` picks by ``k·dim ≤ _LITERAL_ASSIGN_BUDGET`` (literal),
-    then ``k ≥ _COARSE_MIN_K`` (coarse), else arrow.  All are narrow
-    zero-shuffle maps over the corpus — exactly how the IVF coarse
-    quantizer assigns lists at 100 TB.
+    ``auto`` picks coarse at ``k ≥ _COARSE_MIN_K``, else arrow.  Both
+    are narrow zero-shuffle maps over the corpus — exactly how the IVF
+    coarse quantizer assigns lists at 100 TB.  Centroid ids must fit
+    int32 (the output column's type).
     """
     import math
     if not centroids:
@@ -1094,28 +1054,14 @@ def kmeans_assign(df: DataFrame, centroids: list[tuple[int, list[float]]],
         if not all(math.isfinite(float(x)) for x in vec):
             # a NaN/inf centroid would silently poison every BLAS
             # distance row (D.min() = NaN -> empty band -> min-cid
-            # fallback) while the literal path still returns the true
-            # argmin over the finite centroids — refuse loudly instead
-            # of diverging (ADVICE r7)
+            # fallback) instead of returning the true argmin over the
+            # finite centroids — refuse loudly (ADVICE r7)
             raise ValueError(
                 f"kmeans_assign: centroid {cid} contains a non-finite "
                 "value; clean the centroid list (kmeans_fit never "
                 "produces one from finite input)")
     if method == "auto":
-        k = len(centroids)
-        if k * len(centroids[0][1]) <= _LITERAL_ASSIGN_BUDGET:
-            method = "literal"
-        else:
-            method = "coarse" if k >= _COARSE_MIN_K else "arrow"
-    if method == "literal":
-        v = F.col(vec_col)
-        cands = F.array(*[
-            F.struct(
-                sq_l2(v, F.array(*[F.lit(float(x)) for x in vec]))
-                .alias("d"),
-                F.lit(int(cid)).alias("c"))
-            for cid, vec in centroids])
-        return df.withColumn(out_col, F.array_min(cands)["c"])
+        method = "coarse" if len(centroids) >= _COARSE_MIN_K else "arrow"
     if method not in ("arrow", "coarse"):
         raise ValueError(f"kmeans_assign: unknown method {method!r}")
     return _kmeans_assign_arrow(df, centroids, vec_col, out_col,
@@ -1165,13 +1111,11 @@ def _kmeans_assign_arrow(df: DataFrame,
 
     cids = [int(c) for c, _ in centroids]
     if any(not (-2**31 <= c < 2**31) for c in cids):
-        # the output column is int32 (matching the literal path's
-        # IntegerType on small-int literals); refuse loudly instead of
+        # the output column is int32; refuse loudly instead of
         # silently wrapping a 64-bit centroid id
         raise ValueError(
-            "kmeans_assign(method='arrow'): centroid ids must fit "
-            "int32; re-number the centroids (enumerate()) or use "
-            "method='literal'")
+            "kmeans_assign: centroid ids must fit int32; re-number "
+            "the centroids (enumerate())")
     cvecs = [[float(x) for x in v] for _, v in centroids]
 
     coarse_prep = None
@@ -1191,8 +1135,7 @@ def _kmeans_assign_arrow(df: DataFrame,
     # array column on the return leg alone was ~2s of the 5s pass; the
     # scalar form ships the embedding IN once and 4 bytes/row OUT
     # (5.0 s -> 0.7 s per fresh assignment plan, k=800/200k rows).
-    # withColumn also preserves a pre-existing out_col's position —
-    # identical to the literal path's in-place replacement.
+    # withColumn also preserves a pre-existing out_col's position.
     def assign_series(s):
         import numpy as np
         import pandas as pd
@@ -1205,10 +1148,8 @@ def _kmeans_assign_arrow(df: DataFrame,
         if not len(s):
             return pd.Series([], dtype="int32")
         # NULL embeddings behave like all-NaN vectors: every distance
-        # is non-comparable, which on the LITERAL path makes every
-        # (d, c) struct compare equal on d (NULL/NaN sort together
-        # first) so array_min falls through to the MIN centroid id —
-        # reproduced here via the no-band-candidate fallback
+        # is non-comparable, so no centroid lands in the band and the
+        # row falls through to the MIN centroid id
         cells = [c if c is not None else np.full(dim, np.nan)
                  for c in s.to_numpy()]
         V = np.stack(cells).astype(np.float64)
@@ -1219,7 +1160,7 @@ def _kmeans_assign_arrow(df: DataFrame,
             best = None
             for j in cand:
                 d = 0.0
-                for x, y in zip(V[i], C[j]):       # sq_l2's op order
+                for x, y in zip(V[i], C[j]):       # sequential fold
                     t = x - y
                     d += t * t
                 pair = (d, int(cid[j]))
@@ -1344,8 +1285,8 @@ def kmeans_fit(df: DataFrame, k: int, *, vec_col: str = "embedding",
     the smallest ``id_col`` (reproducible across runs and engines —
     no RNG), assignment ties break on centroid id.
 
-    Per iteration: one narrow assignment pass (``kmeans_assign`` plan
-    literal) + ONE shuffle for the per-dimension means — posexplode
+    Per iteration: one narrow assignment pass (:func:`kmeans_assign`)
+    + ONE shuffle for the per-dimension means — posexplode
     to (cluster, dim_pos, value) then hash aggregate: avg is
     algebraic, so map-side partial aggregation reduces the shuffle to
     tasks × k × dim rows regardless of corpus size.  Only the k·dim
@@ -1457,10 +1398,10 @@ def semantic_dedup(df: DataFrame,
     dominance work stays LINEAR in n (the declared x34 query uses
     target_cluster_rows = 250).  Assignment itself is
     :func:`kmeans_assign` — a narrow zero-shuffle map either way;
-    ``assign_method`` forwards to it (``auto`` picks the plan-literal
-    fold for small k·dim, the Arrow/BLAS pass — bit-identical via the
-    exact-fold band re-decision — for the large k the scaling rule
-    produces).  ``max_cluster_rows`` is the
+    ``assign_method`` forwards to it (``auto`` picks the flat
+    Arrow/BLAS pass for small k, the pruned coarse pass for the large
+    k the scaling rule produces — both bit-identical to the exact
+    fold via the band re-decision).  ``max_cluster_rows`` is the
     same loud hot-bucket guard the LSH family uses: a degenerate
     cluster (k too small for the corpus) fails with instructions
     instead of burning an executor on n²/2 pair computations.  The
@@ -1488,18 +1429,16 @@ def semantic_dedup(df: DataFrame,
     (the dominated-id set is eagerly checkpointed so the result no
     longer depends on it) — repeated calls in one session do not
     accrete cached partitions; the returned plan re-evaluates the
-    assignment fold once when consumed.  With
+    assignment pass once when consumed.  With
     ``sc.setCheckpointDir(...)`` set the checkpoint is RELIABLE
     (survives executor loss); otherwise it falls back to
     ``localCheckpoint``, whose executor-local blocks have no lineage
     fallback — fine in local mode, set a checkpoint dir on a real
     cluster with dynamic allocation or spot executors.
     """
-    # persist: the assignment expression (k x dim literal folds per
+    # persist: the assignment pass (a k x dim distance search per
     # row) feeds the size guard, the dominance pass, and the final
     # anti-join — without the persist it is re-evaluated three times
-    # (HOF folds run interpreted, so re-evaluation is the dominant
-    # cost, measured at sf0.1)
     if max_cluster_rows is None:
         # memory-derived default: ~100M floats of stacked cluster
         # (~800 MB float64).  The floor only backstops degenerate
@@ -1508,7 +1447,7 @@ def semantic_dedup(df: DataFrame,
         # (the old 100k floor let dim-4096 clusters stack ~3.3 GB)
         dim = len(centroids[0][1]) if centroids else 1
         max_cluster_rows = max(10_000, 100_000_000 // max(dim, 1))
-    # spread first: the assignment fold (k x dim per row) is the
+    # spread first: the assignment pass (k x dim per row) is the
     # CPU-heavy pass, and single-file embedding fixtures scan with
     # row-group-bounded parallelism (guide: repartition after read)
     from bi_etl_and_integration_spark.operators.relational import (
@@ -1610,6 +1549,6 @@ def semantic_dedup(df: DataFrame,
     dominated = materialize(dominated)
     # the size guard + dominance pass (the two extra consumers the
     # persist existed for) have run; the final anti-join re-evaluates
-    # the assignment fold exactly once at consume time
+    # the assignment pass exactly once at consume time
     assigned.unpersist()
     return assigned.join(dominated, id_col, "left_anti")

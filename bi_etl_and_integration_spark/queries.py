@@ -1783,8 +1783,8 @@ def remark_session_caches(spark) -> None:
 
 def _part_name_pairs(spark, cat):
     """The certified part-name similarity pair set, built ONCE per
-    (session, sf_dir) and shared by q24b (emits the pairs + label_prop
-    clusters) and q24c (alternating-star CC over the same edges).
+    (session, sf_dir) and shared by q24b (emits the pairs + their
+    clusters) and q24c (cluster sizes over the same edges).
     Pair generation — two blocked self-joins + a Levenshtein score
     pass — is the dominant cost of both queries and is byte-identical
     between them, so it is materialized once (VERDICT r6 item 1: the
@@ -1833,22 +1833,20 @@ def q24b(spark, cat):
     certified end to end (VERDICT r5 item 1): the Spark side emits the
     MULTI-PASS-BLOCKED similarity pair set (fuzzy_pairs, 4-char prefix
     ∪ 4-char suffix blockers — never all-pairs) plus each pair's
-    min-label-propagation cluster, while the DuckDB oracle restates
+    connected-component cluster (min id), while the DuckDB oracle restates
     the pair set from an UNBLOCKED all-pairs scan of the (small)
     distinct-name domain and the clusters from a recursive-CTE
     transitive closure.  Hash equality therefore proves three things
     at once: the blocking union is COMPLETE on this corpus (blocked
     set == all-pairs set), the similarity scores are exact, and the
-    label_prop component labels equal true connected components.
-    Complements q24c, which certifies the alternating-star algorithm
+    fuzzy.connected_components labels equal true connected components.
+    Complements q24c, which certifies the same path's cluster sizes
     over the SAME shared edge set (built once per session — VERDICT
     r6 item 1: pair generation dominated both queries' cost and ran
     twice)."""
     names, pairs = _part_name_pairs(spark, cat)
     g = fz_ops.fuzzy_grouping(names, "name_id", "p_name",
-                              min_similarity=0.6,
-                              algorithm="label_prop", max_iter=30,
-                              pairs=pairs)
+                              min_similarity=0.6, pairs=pairs)
     lab = g.select(F.col("name_id").alias("id_a"),
                    F.col("_key_out").alias("cluster"))
     return (pairs.join(lab, "id_a")
@@ -1875,14 +1873,14 @@ def q24b(spark, cat):
    "SELECT cluster, COUNT(*) AS n_rows FROM rows_ "
    "GROUP BY cluster ORDER BY cluster")
 def q24c(spark, cat):
-    """Fuzzy Grouping, oracle-matched end to end: the large/small-star
+    """Fuzzy Grouping, oracle-matched end to end: the
     connected-components path (fuzzy.connected_components) versus a
     DuckDB recursive-CTE transitive closure.  The Spark side consumes
     the SAME shared multi-pass-blocked edge set q24b emits (built once
     per session, _part_name_pairs — VERDICT r6 item 1: generating it
     twice was the round-6 bench regression); the oracle restates the
     edges from an UNBLOCKED all-pairs scan of the small distinct-name
-    domain, so hash equality proves the star labels equal true
+    domain, so hash equality proves the component labels equal true
     connected components of the full similarity graph AND re-proves
     blocking completeness on this corpus, independently of q24b.
 
@@ -1890,11 +1888,11 @@ def q24c(spark, cat):
     similarity is 0.7, so 0.75 produced an EMPTY edge set and the
     certification proved only a trivial all-singleton assignment
     (round-6 fix); at 0.6 the edge set is non-trivial (multi-node
-    components with real chains) and the star algorithm does work."""
+    components with real chains) and the component search does
+    work."""
     names, pairs = _part_name_pairs(spark, cat)
     g = fz_ops.fuzzy_grouping(names, "name_id", "p_name",
-                              min_similarity=0.6,
-                              algorithm="star", pairs=pairs)
+                              min_similarity=0.6, pairs=pairs)
     rows = cat.part.join(g.select("p_name", "_key_out"), "p_name")
     return (rows.groupBy(F.col("_key_out").alias("cluster"))
             .agg(F.count(F.lit(1)).alias("n_rows"))
@@ -4144,9 +4142,9 @@ def x29(spark, cat):
 def x30(spark, cat):
     """Semantic clustering, the assignment half (fixed deterministic
     centroids = the 8 lowest-id embeddings): nearest-centroid
-    assignment is a zero-shuffle plan-literal expression; cluster
-    sizes verify the exact per-row assignment against the oracle's
-    cross-join argmin.  ``kmeans_fit`` iterates this same plan."""
+    assignment is a zero-shuffle Arrow/BLAS map; cluster sizes verify
+    the exact per-row assignment against the oracle's cross-join
+    argmin.  ``kmeans_fit`` iterates this same plan."""
     cents = [(int(r["vec_id"]), [float(x) for x in r["embedding"]])
              for r in cat.embeddings.where(F.col("vec_id") < 8)
              .select("vec_id", "embedding").collect()]
@@ -4538,10 +4536,11 @@ _X34B_ORACLE = _X34_ORACLE.replace(
 
 @q("x34b_semantic_dedup_arrow", _X34B_ORACLE)
 def x34b(spark, cat):
-    """x34 with the Arrow/BLAS assignment path FORCED (at the sf0.01
-    driver scale k=8 keeps auto on the plan-literal fold, so this twin
-    is what driver-certifies the arrow path's bit-exactness — the
-    band-re-decision argument — against the same all-exact oracle).
+    """x34 with the flat Arrow/BLAS assignment path FORCED (x34 itself
+    reaches the coarse path once k ≥ 64, so this twin keeps the flat
+    path's bit-exactness — the band-re-decision argument —
+    driver-certified against the same all-exact oracle at every
+    scale).
     Bounded to ``vec_id < 500`` on BOTH engines: at sf0.01 that is the
     whole table (the certification is unweakened where it counts), and
     at bench SFs the twin doesn't re-pay x34's full corpus for a

@@ -285,8 +285,8 @@ def test_flag_outliers_broadcasts_stats_not_rows(cat):
 
 
 def test_mask_and_kmeans_assign_are_zero_shuffle(cat):
-    """Masking and centroid assignment are plan-literal narrow maps:
-    no Exchange, no join, single codegen span over the scan."""
+    """Masking and centroid assignment are narrow maps (a codegen'd
+    projection, an Arrow pass): no Exchange, no join."""
     from bi_etl_and_integration_spark.operators import cleanse as cl_ops
     from bi_etl_and_integration_spark.operators import (
         similarity as sim_ops)
@@ -337,8 +337,8 @@ def test_retention_and_with_totals_single_aggregate(cat):
 
 
 def test_semantic_dedup_assignment_is_zero_shuffle(cat):
-    """x34's cluster assignment must stay a narrow plan-literal map —
-    the shuffles belong to the within-cluster join only."""
+    """x34's cluster assignment must stay a narrow Arrow map — the
+    shuffles belong to the within-cluster join only."""
     from bi_etl_and_integration_spark.operators.similarity import (
         kmeans_assign)
     cents = [(i, [float(i)] * 4) for i in range(4)]
@@ -346,6 +346,18 @@ def test_semantic_dedup_assignment_is_zero_shuffle(cat):
         "vec_id", F.slice("embedding", 1, 4).alias("embedding"))
     out = kmeans_assign(df, cents)
     assert plans.shuffle_count(out) == 0, plans.formatted_plan(out)
+
+
+def test_dedup_canonicalize_broadcasts_small_components(spark, cat):
+    """A small pair set takes connected_components' driver-local path,
+    whose labels come back broadcast-hinted: fanning them back onto
+    the corpus must plan as a broadcast, not a corpus shuffle."""
+    from bi_etl_and_integration_spark.operators.dedup import (
+        dedup_canonicalize)
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 8)],
+                                  "id_a long, id_b long")
+    out = dedup_canonicalize(cat.documents, pairs)
+    assert plans.broadcast_join_count(out) >= 1, plans.formatted_plan(out)
 
 
 def test_no_expand_carries_sketch_state(cat):

@@ -11,6 +11,29 @@ from bi_etl_and_integration_spark.operators import similarity as sim
 EMB = "vec_id long, embedding array<float>"
 
 
+def _exact_assign(df, cents, vec_col="embedding", id_col="vec_id"):
+    """Reference nearest-centroid assignment: a sequential double fold
+    ``d += (x - y) * (x - y)`` per centroid, the lexicographic min of
+    (distance, cid), and the minimum cid for a NULL or NaN-bearing
+    embedding (the x30/x34 oracle rule)."""
+    min_cid = min(c for c, _ in cents)
+    out = {}
+    for r in df.select(id_col, vec_col).collect():
+        v = r[vec_col]
+        if v is None or any(math.isnan(x) for x in v):
+            out[r[id_col]] = min_cid
+            continue
+        best = None
+        for cid, c in cents:
+            d = 0.0
+            for x, y in zip(v, c):
+                d += (float(x) - float(y)) * (float(x) - float(y))
+            if best is None or (d, cid) < best:
+                best = (d, cid)
+        out[r[id_col]] = best[1]
+    return out
+
+
 def test_cosine_similarity_known_values(rows):
     df = rows([([1.0, 0.0], [1.0, 0.0]),
                ([1.0, 0.0], [0.0, 1.0]),
@@ -354,11 +377,11 @@ def test_pq_topk_shortlist_reranks_exact(rows):
         sim.pq_topk(corpus, queries, k=5, shortlist=5)
 
 
-def test_kmeans_assign_arrow_equals_literal(rows):
-    """The Arrow/BLAS assignment path must reproduce the plan-literal
-    fold bit for bit: random data, duplicated centroids (exact tie ->
-    lower cid wins even when the lower cid comes later in the list),
-    and near-tie rows engineered inside the band."""
+def test_kmeans_assign_arrow_equals_exact(rows):
+    """The Arrow/BLAS assignment path must reproduce the exact
+    sequential fold bit for bit: random data, duplicated centroids
+    (exact tie -> lower cid wins even when the lower cid comes later
+    in the list), and near-tie rows engineered inside the band."""
     import numpy as np
     from bi_etl_and_integration_spark.operators.similarity import (
         kmeans_assign)
@@ -378,44 +401,41 @@ def test_kmeans_assign_arrow_equals_literal(rows):
     data += [(100, [float(x) for x in cents_vecs[0]]),
              (101, [float(x) for x in cents_vecs[3]])]
     df = rows(data, "vec_id long, embedding array<double>")
-    lit = {r["vec_id"]: r["cluster"] for r in
-           kmeans_assign(df, cents, method="literal").collect()}
     arr = {r["vec_id"]: r["cluster"] for r in
            kmeans_assign(df, cents, method="arrow").collect()}
-    assert arr == lit
+    assert arr == _exact_assign(df, cents)
     assert arr[100] == 3                  # duplicated centroid: min cid
 
 
-def test_kmeans_assign_auto_switches_on_budget(rows):
-    """auto = literal under the k*dim budget (zero-dependency codegen
-    plan), arrow above it; both zero-shuffle narrow maps."""
-    from bi_etl_and_integration_spark.operators.similarity import (
-        _LITERAL_ASSIGN_BUDGET, kmeans_assign)
+def test_kmeans_assign_auto_switches_on_budget(rows, monkeypatch):
+    """auto switches on the _COARSE_MIN_K budget: below it, the flat
+    Arrow pass — a zero-shuffle narrow map with no coarse grouping."""
+    from bi_etl_and_integration_spark.operators import similarity
     from bi_etl_and_integration_spark import plans
 
     dim = 16
-    big_k = _LITERAL_ASSIGN_BUDGET // dim + 1
+    k = similarity._COARSE_MIN_K - 1
     df = rows([(i, [float(i)] * dim) for i in range(5)],
               "vec_id long, embedding array<double>")
-    small = kmeans_assign(df, [(0, [0.0] * dim), (1, [9.0] * dim)])
-    assert "mapInPandas" not in small._jdf.queryExecution().toString()
-    big_cents = [(i, [float(3 * i)] * dim) for i in range(big_k)]
-    big = kmeans_assign(df, big_cents)
-    assert plans.shuffle_count(big) == 0
-    got = {r["vec_id"]: r["cluster"] for r in big.collect()}
+    cents = [(i, [float(3 * i)] * dim) for i in range(k)]
+    grouped = []
+    real = similarity._group_centroids
+    monkeypatch.setattr(similarity, "_group_centroids",
+                        lambda *a: grouped.append(1) or real(*a))
+    out = similarity.kmeans_assign(df, cents)
+    assert not grouped                    # arrow, not coarse
+    assert plans.shuffle_count(out) == 0
+    got = {r["vec_id"]: r["cluster"] for r in out.collect()}
     # row i = [i]*dim is nearest centroid [3j]*dim with j = round(i/3)
     assert got == {i: int(round(i / 3.0)) for i in range(5)}
+    assert got == _exact_assign(df, cents)
 
 
 def test_kmeans_assign_arrow_null_nan_and_id_guard(rows):
     """Review r7 fixes: NULL or NaN-bearing embeddings -> the MIN
-    centroid id on BOTH paths (every (d,c) struct compares equal on a
-    non-comparable d, so the literal array_min falls through to the
-    id; the arrow path reproduces it via the empty-band fallback);
-    64-bit centroid ids are rejected loudly on the arrow path instead
-    of silently wrapping."""
-    import math
-
+    centroid id (the arrow path reaches it via the empty-band
+    fallback); 64-bit centroid ids are rejected loudly on every path
+    instead of silently wrapping."""
     import pytest
     from bi_etl_and_integration_spark.operators.similarity import (
         kmeans_assign)
@@ -424,24 +444,23 @@ def test_kmeans_assign_arrow_null_nan_and_id_guard(rows):
                (3, [float("nan"), 1.0]), (4, [9.0, 9.0])],
               "vec_id long, embedding array<double>")
     cents = [(5, [0.0, 0.0]), (2, [9.0, 9.0])]   # min cid = 2
-    lit = {r["vec_id"]: r["cluster"] for r in
-           kmeans_assign(df, cents, method="literal").collect()}
     arr = {r["vec_id"]: r["cluster"] for r in
            kmeans_assign(df, cents, method="arrow").collect()}
-    assert arr == lit
-    assert arr[2] == 2     # NULL embedding -> min cid (both paths)
+    assert arr == _exact_assign(df, cents)
+    assert arr[2] == 2                  # NULL embedding -> min cid
     assert arr[3] == 2                         # NaN -> min cid
-    with pytest.raises(ValueError, match="int32"):
-        kmeans_assign(df, [(3_000_000_000, [0.0, 0.0])],
-                      method="arrow")
+    for method in ("arrow", "coarse", "auto"):
+        with pytest.raises(ValueError, match="int32"):
+            kmeans_assign(df, [(3_000_000_000, [0.0, 0.0])],
+                          method=method)
 
 
-def test_kmeans_assign_arrow_equals_literal_near_ties(rows):
+def test_kmeans_assign_arrow_equals_exact_near_ties(rows):
     """Adversarial equivalence sweep: random corpora against centroid
     sets that include an ENGINEERED near-tie pair (B = A + 1e-9 per
     component — distances differ by ~1e-8, inside the re-decision
     band), across several seeds.  The arrow path must reproduce the
-    literal fold's argmin bit for bit, near-ties included."""
+    exact fold's argmin bit for bit, near-ties included."""
     import numpy as np
     from bi_etl_and_integration_spark.operators.similarity import (
         kmeans_assign)
@@ -459,22 +478,20 @@ def test_kmeans_assign_arrow_equals_literal_near_ties(rows):
         df = rows([(i, [float(x) for x in pts[i]])
                    for i in range(len(pts))],
                   "vec_id long, embedding array<double>")
-        lit = {r["vec_id"]: r["cluster"] for r in
-               kmeans_assign(df, cents, method="literal").collect()}
         arr = {r["vec_id"]: r["cluster"] for r in
                kmeans_assign(df, cents, method="arrow").collect()}
-        assert arr == lit, f"seed {seed}"
+        assert arr == _exact_assign(df, cents), f"seed {seed}"
         # the 1e-6-radius cloud around base[0] sits in the band of the
         # three base[0]-coincident centroids (10 exact, 50 exact, 3 at
         # +1e-9) — every cloud point must land on one of them, decided
-        # by the exact fold, identically on both paths
+        # by the exact fold
         twin_hits = sum(1 for i in range(40, 50) if arr[i] in (3, 10, 50))
         assert twin_hits == 10, f"seed {seed}: {twin_hits}"
 
 
-def test_kmeans_assign_coarse_equals_literal(rows):
+def test_kmeans_assign_coarse_equals_exact(rows):
     """The triangle-inequality-pruned coarse path (VERDICT r7 item 1)
-    must reproduce the literal fold bit for bit: random corpora, a
+    must reproduce the exact sequential fold bit for bit: random corpora, a
     duplicated-centroid exact tie, an engineered near-tie pair inside
     the band, NULL/NaN rows, across seeds and a k big enough for real
     super-grouping (k=96 -> G=10)."""
@@ -498,25 +515,23 @@ def test_kmeans_assign_coarse_equals_literal(rows):
         data = [(i, [float(x) for x in pts[i]]) for i in range(len(pts))]
         data += [(900, None), (901, [float("nan")] * dim)]
         df = rows(data, "vec_id long, embedding array<double>")
-        lit = {r["vec_id"]: r["cluster"] for r in
-               kmeans_assign(df, cents, method="literal").collect()}
         crs = {r["vec_id"]: r["cluster"] for r in
                kmeans_assign(df, cents, method="coarse").collect()}
-        assert crs == lit, f"seed {seed}"
+        assert crs == _exact_assign(df, cents), f"seed {seed}"
         assert crs[900] == 5 and crs[901] == 5   # min cid fallback
         # exact-tie cloud lands on min(200, 7) = 7 via the exact fold
         assert all(crs[i] in (7, 200) for i in range(60, 65))
 
 
 def test_kmeans_assign_auto_picks_coarse_at_large_k(rows):
-    """auto: literal under the k*dim budget, coarse at k >=
-    _COARSE_MIN_K, arrow between; coarse stays a zero-shuffle map."""
+    """auto: coarse at k >= _COARSE_MIN_K, arrow below; coarse stays
+    a zero-shuffle map."""
     import numpy as np
     from bi_etl_and_integration_spark import plans
     from bi_etl_and_integration_spark.operators.similarity import (
         _COARSE_MIN_K, kmeans_assign)
 
-    dim = 40   # k*dim > budget already at k=52 (< _COARSE_MIN_K)
+    dim = 40
     rng = np.random.RandomState(3)
     df = rows([(i, [float(x) for x in rng.randn(dim)])
                for i in range(20)],
@@ -526,21 +541,19 @@ def test_kmeans_assign_auto_picks_coarse_at_large_k(rows):
     auto = kmeans_assign(df, cents)            # k=73 -> coarse
     assert plans.shuffle_count(auto) == 0
     got = {r["vec_id"]: r["cluster"] for r in auto.collect()}
-    lit = {r["vec_id"]: r["cluster"] for r in
-           kmeans_assign(df, cents, method="literal").collect()}
-    assert got == lit
+    assert got == _exact_assign(df, cents)
 
 
 def test_kmeans_assign_rejects_nonfinite_centroid(rows):
     """ADVICE r7: a NaN/inf centroid must be rejected at entry on
-    EVERY path (on the arrow path it would silently poison all
-    distances and diverge from the literal argmin)."""
+    EVERY path (it would silently poison all BLAS distances and
+    diverge from the exact argmin)."""
     import pytest
     from bi_etl_and_integration_spark.operators.similarity import (
         kmeans_assign)
 
     df = rows([(1, [0.0, 0.0])], "vec_id long, embedding array<double>")
-    for method in ("literal", "arrow", "coarse", "auto"):
+    for method in ("arrow", "coarse", "auto"):
         with pytest.raises(ValueError, match="non-finite"):
             kmeans_assign(df, [(0, [0.0, float("nan")])], method=method)
     with pytest.raises(ValueError, match="non-finite"):
@@ -549,20 +562,20 @@ def test_kmeans_assign_rejects_nonfinite_centroid(rows):
 
 def test_kmeans_assign_arrow_preserves_out_col_position(rows):
     """ADVICE r7: when out_col already exists, the arrow/coarse paths
-    must keep it at its original schema position (the literal path's
-    withColumn replaces in place; `auto` may flip between them)."""
+    must keep it at its original schema position (`auto` may flip
+    between them), and both must match the exact reference."""
     from bi_etl_and_integration_spark.operators.similarity import (
         kmeans_assign)
 
     df = rows([(1, 99, [0.0, 0.0]), (2, 99, [9.0, 9.0])],
               "vec_id long, cluster int, embedding array<double>")
     cents = [(0, [0.0, 0.0]), (1, [9.0, 9.0])]
-    lit = kmeans_assign(df, cents, method="literal", out_col="cluster")
     arr = kmeans_assign(df, cents, method="arrow", out_col="cluster")
     crs = kmeans_assign(df, cents, method="coarse", out_col="cluster")
-    assert lit.columns == arr.columns == crs.columns == df.columns
+    assert arr.columns == crs.columns == df.columns
     want = {1: 0, 2: 1}
-    for out in (lit, arr, crs):
+    assert _exact_assign(df, cents) == want
+    for out in (arr, crs):
         assert {r["vec_id"]: r["cluster"] for r in out.collect()} == want
 
 

@@ -341,3 +341,62 @@ def test_every_tool_is_documented():
     assert not undocumented, (
         f"tools/ scripts not named in .claude/skills/verify/SKILL.md: "
         f"{undocumented}")
+
+
+def _py_files(*rels):
+    for rel in rels:
+        path = os.path.join(ROOT, rel)
+        if os.path.isfile(path):
+            yield path
+            continue
+        for d, _, files in os.walk(path):
+            yield from (os.path.join(d, f) for f in files
+                        if f.endswith(".py"))
+
+
+def _referenced_names(node):
+    import ast
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            yield n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+        elif isinstance(n, ast.alias):
+            yield n.name.rsplit(".", 1)[-1]
+
+
+def test_every_public_definition_is_used():
+    """Every public top-level def/class in the package must be named
+    somewhere besides its own body — in the package, the tests, tools/,
+    perfbench/, bench.py or the driver entry — so an orphaned helper
+    is deleted instead of kept as an archive.  Declared queries (``@q``)
+    and the SSIS vocabulary in ``functions.__all__`` are surface by
+    declaration and exempt."""
+    import ast
+    from collections import Counter
+
+    from bi_etl_and_integration_spark import functions
+
+    pkg = os.path.join(ROOT, "bi_etl_and_integration_spark")
+    uses: Counter = Counter()
+    defs = []
+    for path in _py_files("bi_etl_and_integration_spark", "tests",
+                          "tools", "perfbench", "bench.py",
+                          "__spark_entry__.py"):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        uses.update(_referenced_names(tree))
+        if not path.startswith(pkg + os.sep):
+            continue
+        for node in tree.body:
+            if (isinstance(node, (ast.FunctionDef, ast.ClassDef))
+                    and not node.name.startswith("_")
+                    and not any(isinstance(d, ast.Call)
+                                and getattr(d.func, "id", None) == "q"
+                                for d in node.decorator_list)):
+                defs.append((os.path.relpath(path, ROOT), node))
+    unused = [f"{rel}:{node.lineno} {node.name}" for rel, node in defs
+              if node.name not in functions.__all__
+              and uses[node.name] == sum(
+                  1 for x in _referenced_names(node) if x == node.name)]
+    assert not unused, f"public definitions nothing uses: {unused}"
