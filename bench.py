@@ -75,8 +75,8 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from bi_etl_and_integration_spark import get_session
 
-    # the UI REST API is the (public) source for per-query shuffle-byte
-    # deltas; it is off by default for tests, on for bench
+    # the UI REST API is the (public) source for per-query shuffle and
+    # spill bytes; it is off by default for tests, on for bench
     os.environ.setdefault("SPARK_GRAFT_UI", "true")
 
     # GC orphaned staging dirs (bf_*/bk_* bucketed-fact tables) left by
@@ -109,6 +109,7 @@ def main() -> None:
     # the build leaves GC/page-cache residue that contaminates its
     # samples (r11: q14 at sf10 read 0.9-2.4 s depending on the
     # residue, ~1.0 s repeatable once settled)
+    from bi_etl_and_integration_spark.operators.common import cache_scope
     from bi_etl_and_integration_spark.queries import prepare_session
     prepare_session(spark, sf_dir)
 
@@ -124,33 +125,17 @@ def main() -> None:
         df.select(F.count(F.lit(1)).alias("n"),
                   F.bit_xor(F.xxhash64(*cols)).alias("digest")).collect()
 
-    import urllib.request
-
-    def stage_totals() -> dict[str, int] | None:
-        """Cumulative stage metrics via the local Spark UI REST API —
-        per-query deltas are the scale signal: a query whose shuffle
-        grows linearly with input is the one that breaks first on a
-        1000-executor 100 TB run, and ANY disk spill is the Spark
-        analog of the reference's "Buffers spooled > 0 = bad"
-        (PRO/Глава 15:85-88) — it means a partition outgrew exec
-        memory and the same plan at 100 TB needs more partitions or a
-        skew fix."""
-        try:
-            ui = spark.sparkContext.uiWebUrl
-            apps = json.load(urllib.request.urlopen(
-                f"{ui}/api/v1/applications", timeout=3))
-            app_id = apps[0]["id"]
-            stages = json.load(urllib.request.urlopen(
-                f"{ui}/api/v1/applications/{app_id}/stages?status=complete",
-                timeout=10))
-            return {
-                "shuffle": sum(s.get("shuffleWriteBytes", 0)
-                               for s in stages),
-                "spill": sum(s.get("diskBytesSpilled", 0)
-                             for s in stages),
-            }
-        except Exception:  # noqa: BLE001 — UI disabled/slow: skip metric
-            return None
+    # Per-query shuffle and spill bytes of the first timed run, summed
+    # over the stages of its job group: the scale signal — a query whose
+    # shuffle grows linearly with input is the one that breaks first on
+    # a 1000-executor 100 TB run, and ANY disk spill is the Spark analog
+    # of the reference's "Buffers spooled > 0 = bad" (PRO/Глава
+    # 15:85-88) — a partition outgrew exec memory and the same plan at
+    # 100 TB needs more partitions or a skew fix.  Attribution is by
+    # stage id, so a reading is never negative.
+    from perfbench.layers import Probe
+    probe = Probe(spark)
+    sc = spark.sparkContext
 
     # Methodology (matches BASELINE.md "warm JVM, session startup
     # excluded"): each query runs once untimed — paying its one-time
@@ -194,76 +179,70 @@ def main() -> None:
     for name, fn in queries.items():
         if only and name not in only:
             continue
-        try:
-            consume(fn(spark, sf_dir))          # warm: codegen + JIT
-            sw0 = stage_totals()
-            load0 = os.getloadavg()[0]
-            samples: list[float] = []
-            t0 = time.monotonic()
-            consume(fn(spark, sf_dir))          # measured (1st)
-            samples.append(time.monotonic() - t0)
-            sw1 = stage_totals()
-            for _ in range(n_runs - 1):
-                load0 = min(load0, os.getloadavg()[0])
+        with cache_scope():
+            try:
+                consume(fn(spark, sf_dir))          # warm: codegen + JIT
+                load0 = os.getloadavg()[0]
+                samples: list[float] = []
+                sc.setJobGroup(f"bench.{name}", name)
                 t0 = time.monotonic()
-                consume(fn(spark, sf_dir))      # measured (2nd..nth)
+                consume(fn(spark, sf_dir))          # measured (1st)
                 samples.append(time.monotonic() - t0)
-
-            def _over(ss: list[float]) -> bool:
-                # RAW compare here, by design: this only triggers extra
-                # samples (cheap insurance).  The FINAL flag list is
-                # window-normalized post-hoc (normalized_regressions).
-                best = min(ss)
-                sp = (max(ss) - best) / best if best > 0 else 0.0
-                over_spread = best >= SPREAD_FLOOR and sp > SPREAD_GATE
-                over_prev = (name in prev_times and
-                             best > (1 + REGRESS_GATE) * prev_times[name])
-                return over_spread or over_prev
-
-            if _over(samples):                  # drift suspected:
-                for _ in range(EXTRA_RUNS):     # re-measure, keep min
+                sc._jsc.clearJobGroup()  # noqa: SLF001
+                for _ in range(n_runs - 1):
                     load0 = min(load0, os.getloadavg()[0])
                     t0 = time.monotonic()
-                    consume(fn(spark, sf_dir))
+                    consume(fn(spark, sf_dir))      # measured (2nd..nth)
                     samples.append(time.monotonic() - t0)
-            best = min(samples)
-            # min of n steady-state runs: co-tenant load on this host
-            # inflates single samples ±30%; the min tracks plan cost
-            times[name] = round(best, 3)
-            # final spread over the n_runs SMALLEST samples: noise only
-            # inflates, so agreement among the best samples is what
-            # makes the min trustworthy — one drifted early sample that
-            # the re-measurement contradicted should not keep the row
-            # flagged, while a row whose best samples still disagree
-            # > gate is genuinely unstable
-            ss = sorted(samples)[:max(2, n_runs)]
-            spread[name] = round((ss[-1] - ss[0]) / ss[0], 3) \
-                if ss[0] > 0 else 0.0
-            loadavg[name] = round(load0, 1)
-            if best >= SPREAD_FLOOR and spread[name] > SPREAD_GATE:
-                dispersion_flagged.append(name)
-            if sw0 is not None and sw1 is not None:
-                shuffle_mb[name] = round(
-                    (sw1["shuffle"] - sw0["shuffle"]) / 1e6, 2)
-                if sw1["spill"] > sw0["spill"]:  # only flag offenders
-                    spill_mb[name] = round(
-                        (sw1["spill"] - sw0["spill"]) / 1e6, 2)
-        except Exception as e:  # noqa: BLE001 — record, keep benching
-            times[name] = -1.0
-            print(f"bench error {name}: {type(e).__name__}: {str(e)[:200]}",
-                  file=sys.stderr)
-        # Isolate queries from each other's cached state (r7): queries
-        # that persist an intermediate (the exact-pair certification
-        # frames of x02/x43/x43b are ~100 MB-class at sf10) release it
-        # only via async GC, so a rapid-fire 28-query session let
-        # leaked caches pressure later queries into spill (q17b) and
-        # one x43b run into a failed broadcast materialization.  Clear
-        # everything between queries; the queries module re-marks its
-        # own session-scoped memos (it owns their shape).
-        from bi_etl_and_integration_spark.queries import (
-            remark_session_caches)
-        spark.catalog.clearCache()
-        remark_session_caches(spark)
+
+                def _over(ss: list[float]) -> bool:
+                    # RAW compare here, by design: this only triggers
+                    # extra samples (cheap insurance).  The FINAL flag
+                    # list is window-normalized post-hoc
+                    # (normalized_regressions).
+                    best = min(ss)
+                    sp = (max(ss) - best) / best if best > 0 else 0.0
+                    over_spread = (best >= SPREAD_FLOOR
+                                   and sp > SPREAD_GATE)
+                    over_prev = (name in prev_times and best >
+                                 (1 + REGRESS_GATE) * prev_times[name])
+                    return over_spread or over_prev
+
+                if _over(samples):                  # drift suspected:
+                    for _ in range(EXTRA_RUNS):     # re-measure, keep min
+                        load0 = min(load0, os.getloadavg()[0])
+                        t0 = time.monotonic()
+                        consume(fn(spark, sf_dir))
+                        samples.append(time.monotonic() - t0)
+                best = min(samples)
+                # min of n steady-state runs: co-tenant load on this
+                # host inflates single samples ±30%; the min tracks plan
+                # cost
+                times[name] = round(best, 3)
+                # final spread over the n_runs SMALLEST samples: noise
+                # only inflates, so agreement among the best samples is
+                # what makes the min trustworthy — one drifted early
+                # sample that the re-measurement contradicted should not
+                # keep the row flagged, while a row whose best samples
+                # still disagree > gate is genuinely unstable
+                ss = sorted(samples)[:max(2, n_runs)]
+                spread[name] = round((ss[-1] - ss[0]) / ss[0], 3) \
+                    if ss[0] > 0 else 0.0
+                loadavg[name] = round(load0, 1)
+                if best >= SPREAD_FLOOR and spread[name] > SPREAD_GATE:
+                    dispersion_flagged.append(name)
+                try:
+                    shuffle, spill = probe.stage_bytes(
+                        probe.group(f"bench.{name}")["stages"])
+                    shuffle_mb[name] = round(shuffle / 1e6, 2)
+                    if spill:  # only flag offenders
+                        spill_mb[name] = round(spill / 1e6, 2)
+                except Exception:  # noqa: BLE001 — UI off/slow: skip
+                    pass
+            except Exception as e:  # noqa: BLE001 — record, keep going
+                times[name] = -1.0
+                print(f"bench error {name}: {type(e).__name__}: "
+                      f"{str(e)[:200]}", file=sys.stderr)
 
     # Streaming twins run real checkpointed micro-batch jobs; their
     # wall time is the streaming-runtime floor, not plan cost.  They

@@ -26,6 +26,7 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bi_etl_and_integration_spark.operators.common import cached
 from bi_etl_and_integration_spark.operators.fuzzy import tokenize
 from bi_etl_and_integration_spark.operators.relational import (
     source_bytes, spread_for_compute)
@@ -214,10 +215,10 @@ def minhash_lsh_dedup(df: DataFrame, text_col: str = "text",
        multi-probe the band windows could straddle probe families);
        callers with odd combinations must pick num_hashes = r x bands.
     """
-    base = (_spread_for_compute(df, id_col)
-            .select(F.col(id_col).alias("id"),
-                    hashed_shingles(F.col(text_col), shingle_n)
-                    .alias("__hs")).persist())  # consumed 3x (sig + verify)
+    base = cached(_spread_for_compute(df, id_col)
+                  .select(F.col(id_col).alias("id"),
+                          hashed_shingles(F.col(text_col), shingle_n)
+                          .alias("__hs")))  # consumed 3x (sig + verify)
     banded = _minhash_banded(base, num_hashes=num_hashes, bands=bands,
                              seed=seed, n_probes=n_probes)
     # join strategy: broadcast for small corpora (AQE), shuffled-hash
@@ -369,10 +370,10 @@ def minhash_lookup(df: DataFrame, index: MinhashIndex,
                 "silently collapses recall to ~0; pass the index's "
                 "params (or rely on its defaults)")
     idx_buckets, idx_shingles = index[0], index[1]
-    base = (_spread_for_compute(df, id_col)
-            .select(F.col(id_col).alias("id"),
-                    hashed_shingles(F.col(text_col), shingle_n)
-                    .alias("__hs")).persist())  # banding + verify
+    base = cached(_spread_for_compute(df, id_col)
+                  .select(F.col(id_col).alias("id"),
+                          hashed_shingles(F.col(text_col), shingle_n)
+                          .alias("__hs")))  # banding + verify
     banded = _minhash_banded(base, num_hashes=num_hashes, bands=bands,
                              seed=seed, n_probes=n_probes)
     # join strategy: a genuinely small probe batch stays unhinted
@@ -493,7 +494,7 @@ def simhash_dedup(df: DataFrame, text_col: str = "text",
     # token-explode + vote aggregation (the broadcast side is separate
     # lineage, so ReuseExchange can't kick in); the table is only
     # (id, 64-bit hash) — N×16 bytes, cacheable at any corpus size
-    base = simhash_table(df, text_col, id_col).persist()
+    base = cached(simhash_table(df, text_col, id_col))
     banded = base.select(
         "id", "__sh",
         F.posexplode(F.array(*[
@@ -527,10 +528,10 @@ def ngram_jaccard_dedup(df: DataFrame, text_col: str = "text",
     variant of minhash_lsh_dedup for modest corpora / audits)."""
     blk = block if block is not None else F.xxhash64(
         F.slice(tokenize(F.col(text_col)), 1, n))
-    base = (_spread_for_compute(df, id_col)
-            .select(F.col(id_col).alias("id"),
-                    hashed_shingles(F.col(text_col), n).alias("sh"),
-                    blk.alias("blk")).persist())  # both sides of self-join
+    base = cached(_spread_for_compute(df, id_col)
+                  .select(F.col(id_col).alias("id"),
+                          hashed_shingles(F.col(text_col), n).alias("sh"),
+                          blk.alias("blk")))  # both sides of self-join
     a, b = base.alias("a"), base.alias("b")
     cand = a.join(b, (F.col("a.blk") == F.col("b.blk")) &
                   (F.col("a.id") < F.col("b.id")))
@@ -625,19 +626,11 @@ def exact_jaccard_join(df: DataFrame, text_col: str = "text",
     # sides) — without it the scan→shingle→freq-join→collect subtree
     # recomputes per consumer (ReusedExchange only covers the shuffle,
     # not the post-shuffle agg or the upstream compute).
-    # LIFETIME (ADVICE r11): the persist is session-scoped by design —
-    # the returned frame is lazy, so there is no safe point inside
-    # this function to unpersist.  Callers looping this operator
-    # (incremental x43-style sessions) should spark.catalog.clearCache()
-    # between rounds (bench.py does, between every query); at cluster
-    # scale the storage-memory fraction evicts LRU cached partitions
-    # under pressure, so the leak degrades to recompute, never OOM.
-    ranked = (ex.join(freq, "__h")
-              .groupBy("id", "__side")
-              .agg(F.sort_array(F.collect_list(
-                  F.col("__df") * F.lit(1 << 31) + F.col("__h")))
-                  .alias("__sorted"))
-              .persist())
+    ranked = cached(ex.join(freq, "__h")
+                    .groupBy("id", "__side")
+                    .agg(F.sort_array(F.collect_list(
+                        F.col("__df") * F.lit(1 << 31) + F.col("__h")))
+                        .alias("__sorted")))
     sz = F.size("__sorted")
     # Overlap bound with rounding slack: ceil(t*|s|) computed on
     # doubles can round ABOVE the exact rational ceiling (t=0.34,

@@ -27,7 +27,7 @@ from pyspark.sql.window import Window
 
 
 from bi_etl_and_integration_spark.operators.common import (
-    materialize as _materialize)
+    cache_scope, cached, materialize as _materialize)
 
 
 def similarity(a: Column, b: Column) -> Column:
@@ -293,23 +293,23 @@ def fuzzy_grouping(df: DataFrame, key: str, col: str, *,
                             min_similarity=min_similarity)
     edges = pairs.select(F.col("id_a").alias("src"),
                          F.col("id_b").alias("dst"))
-    edges_persisted = internal_pairs and bool(small_graph_threshold)
-    if edges_persisted:
-        # ADVICE r8: the small-graph probe executes the (expensive)
-        # blocked pair-generation plan; persist FIRST so an
-        # over-threshold probe's partitions are reused by the
-        # distributed path instead of the whole LSH/blocked join being
-        # recomputed from scratch (the cache is partition-grain: the
-        # limit() probe only materializes the partitions it touches,
-        # so the bounded-probe contract is preserved).  Caller-given
-        # pairs stay unpersisted — the caller owns their lifetime.
-        edges = edges.persist()
-    comp = connected_components(edges,
-                                small_graph_threshold=small_graph_threshold)
-    if edges_persisted:
-        # both CC paths return labels that no longer read the edges (a
-        # driver-built frame, or the last checkpointed star round)
-        edges.unpersist()
+    # both CC paths return labels that no longer read the edges (a
+    # driver-built frame, or the last checkpointed star round), so the
+    # edge cache ends with this scope
+    with cache_scope():
+        if internal_pairs and small_graph_threshold:
+            # ADVICE r8: the small-graph probe executes the (expensive)
+            # blocked pair-generation plan; cache FIRST so an
+            # over-threshold probe's partitions are reused by the
+            # distributed path instead of the whole LSH/blocked join
+            # being recomputed from scratch (the cache is
+            # partition-grain: the limit() probe only materializes the
+            # partitions it touches, so the bounded-probe contract is
+            # preserved).  Caller-given pairs stay uncached — the
+            # caller owns their lifetime.
+            edges = cached(edges)
+        comp = connected_components(
+            edges, small_graph_threshold=small_graph_threshold)
     labels = (nodes.select("id")
               .join(comp, "id", "left")
               .select("id", F.coalesce("component", F.col("id"))

@@ -136,37 +136,6 @@ def conditional_split(df: DataFrame, branches: Mapping[str, Column],
     return out
 
 
-def multicast(df: DataFrame, n_consumers: int = 2) -> DataFrame:
-    """Multicast (PRO/Глава 05:96): in Spark, consuming one DataFrame
-    twice recomputes lineage; persist when fan-out > 1 is genuinely
-    consumed more than once (SURVEY.md §4 'pre-materialization').
-    Persisted frames are tracked on the session —
-    :func:`release_multicasts` frees them once the fan-out is consumed
-    (a cache held past its consumers steals executor storage from every
-    later stage of a long-lived session)."""
-    if n_consumers < 2:
-        return df
-    df = df.persist()
-    reg = getattr(df.sparkSession, "_bi_etl_multicasts", None)
-    if reg is None:
-        reg = []
-        df.sparkSession._bi_etl_multicasts = reg  # noqa: SLF001
-    reg.append(df)
-    return df
-
-
-def release_multicasts(spark) -> int:
-    """Unpersist every DataFrame :func:`multicast` has cached on this
-    session; returns how many were released.  Call when a pipeline
-    phase's fan-outs are fully consumed."""
-    reg = getattr(spark, "_bi_etl_multicasts", [])
-    n = len(reg)
-    for df in reg:
-        df.unpersist()
-    reg.clear()
-    return n
-
-
 # ---------------------------------------------------------------- joins
 
 def lookup(df: DataFrame, ref: DataFrame, on: Sequence[str] | Column, *,

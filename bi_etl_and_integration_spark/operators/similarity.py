@@ -1450,105 +1450,109 @@ def semantic_dedup(df: DataFrame,
     # spread first: the assignment pass (k x dim per row) is the
     # CPU-heavy pass, and single-file embedding fixtures scan with
     # row-group-bounded parallelism (guide: repartition after read)
+    from bi_etl_and_integration_spark.operators.common import (
+        cache_scope, cached, materialize)
     from bi_etl_and_integration_spark.operators.relational import (
         spread_for_compute)
-    assigned = kmeans_assign(spread_for_compute(df, id_col),
-                             centroids, vec_col=vec_col,
-                             out_col=cluster_col,
-                             method=assign_method).persist()
-    sizes = assigned.groupBy(cluster_col).agg(
-        F.count(F.lit(1)).alias("__n"))
-    big = sizes.where(F.col("__n") > max_cluster_rows).limit(1).collect()
-    if big:
-        raise ValueError(
-            f"semantic_dedup: cluster {big[0][0]} has {big[0][1]} rows "
-            f"(cap {max_cluster_rows}); raise k (more centroids) or "
-            f"max_cluster_rows — the within-cluster join is O(n^2)")
-    # Dominance phase: ONE Arrow pass per cluster (the same
-    # per-bucket BLAS shape embedding_dedup uses) instead of a
-    # self-join whose interpreted per-pair cosine folds dominated the
-    # wall time (measured 2.3 s -> 0.6 s at sf0.1).  Bit-exactness is
-    # PRESERVED, not approximated: BLAS cosines decide only pairs
-    # farther than _EPS from the threshold; any pair inside the _EPS
-    # band is re-decided with the exact sequential double fold (the
-    # loop below performs the identical IEEE op sequence as the
-    # cosine_similarity expression the oracle mirrors).  BLAS error
-    # for unit-scale dims is ~1e-15 relative, 6 orders inside _EPS,
-    # so blas-decided pairs provably agree with the exact fold and
-    # the survivor set is the one the all-exact plan produces.
-    id_t = assigned.schema[id_col].dataType.simpleString()
-    tau = float(threshold)
-    block_floats = _DOM_BLOCK_FLOATS  # closure-captured: test dial
+    with cache_scope():
+        assigned = cached(kmeans_assign(spread_for_compute(df, id_col),
+                                        centroids, vec_col=vec_col,
+                                        out_col=cluster_col,
+                                        method=assign_method))
+        sizes = assigned.groupBy(cluster_col).agg(
+            F.count(F.lit(1)).alias("__n"))
+        big = (sizes.where(F.col("__n") > max_cluster_rows)
+               .limit(1).collect())
+        if big:
+            raise ValueError(
+                f"semantic_dedup: cluster {big[0][0]} has {big[0][1]} "
+                f"rows (cap {max_cluster_rows}); raise k (more "
+                f"centroids) or max_cluster_rows — the within-cluster "
+                f"join is O(n^2)")
+        # Dominance phase: ONE Arrow pass per cluster (the same
+        # per-bucket BLAS shape embedding_dedup uses) instead of a
+        # self-join whose interpreted per-pair cosine folds dominated the
+        # wall time (measured 2.3 s -> 0.6 s at sf0.1).  Bit-exactness is
+        # PRESERVED, not approximated: BLAS cosines decide only pairs
+        # farther than _EPS from the threshold; any pair inside the _EPS
+        # band is re-decided with the exact sequential double fold (the
+        # loop below performs the identical IEEE op sequence as the
+        # cosine_similarity expression the oracle mirrors).  BLAS error
+        # for unit-scale dims is ~1e-15 relative, 6 orders inside _EPS,
+        # so blas-decided pairs provably agree with the exact fold and
+        # the survivor set is the one the all-exact plan produces.
+        id_t = assigned.schema[id_col].dataType.simpleString()
+        tau = float(threshold)
+        block_floats = _DOM_BLOCK_FLOATS  # closure-captured: test dial
 
-    def dominated_fn(pdf):
-        import math
+        def dominated_fn(pdf):
+            import math
 
-        import numpy as np
-        import pandas as pd
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"__dom": pd.Series([], dtype="int64")
-                                 .astype(pdf[id_col].dtype)})
-        pdf = pdf.sort_values(id_col, kind="mergesort")
-        ids = pdf[id_col].to_numpy()
-        v = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-        nrm = np.sqrt(np.einsum("ij,ij->i", v, v))
-        # Row-blocked: the full n×n cosine matrix is never allocated —
-        # each block is (b × n) with b sized to ~64M floats (512 MB),
-        # so memory is O(block × n), not O(n²); a 100k-row cluster
-        # peaks at ~512 MB of matrix instead of 80 GB.
-        block = max(256, block_floats // n)
-        dominated = np.zeros(n, dtype=bool)
-        for a in range(1, n, block):        # row 0 has no j < i
-            b = min(a + block, n)
-            # clamp the PRODUCT (not each norm): matches the exact
-            # fold's max(sqrt(na)*sqrt(nb), 1e-12) denominator
-            cos = (v[a:b] @ v.T) / np.maximum(
-                np.outer(nrm[a:b], nrm), 1e-12)
-            # mask to j < i (global row index a+r)
-            cols = np.arange(n)
-            tri = cols[None, :] < (np.arange(a, b))[:, None]
-            ge = (cos >= tau) & tri
-            band = (np.abs(cos - tau) <= _EPS) & tri
-            for r, j in zip(*np.nonzero(band)):
-                # exact sequential fold, identical op order to the
-                # cosine_similarity expression (double acc,
-                # left-to-right)
-                i = a + r
-                d = na = nb = 0.0
-                for x, y in zip(v[i], v[j]):
-                    d += x * y
-                    na += x * x
-                    nb += y * y
-                # math.sqrt is IEEE correctly-rounded (as is the
-                # JVM's); pow(x, 0.5) carries no such guarantee
-                exact = d / max(math.sqrt(na) * math.sqrt(nb), 1e-12)
-                ge[r, j] = exact >= tau
-            dominated[a:b] = ge.any(axis=1)
-        dom = ids[dominated]
-        return pd.DataFrame({"__dom": dom})
+            import numpy as np
+            import pandas as pd
+            n = len(pdf)
+            if n < 2:
+                return pd.DataFrame({"__dom": pd.Series([], dtype="int64")
+                                     .astype(pdf[id_col].dtype)})
+            pdf = pdf.sort_values(id_col, kind="mergesort")
+            ids = pdf[id_col].to_numpy()
+            v = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
+            nrm = np.sqrt(np.einsum("ij,ij->i", v, v))
+            # Row-blocked: the full n×n cosine matrix is never allocated —
+            # each block is (b × n) with b sized to ~64M floats (512 MB),
+            # so memory is O(block × n), not O(n²); a 100k-row cluster
+            # peaks at ~512 MB of matrix instead of 80 GB.
+            block = max(256, block_floats // n)
+            dominated = np.zeros(n, dtype=bool)
+            for a in range(1, n, block):        # row 0 has no j < i
+                b = min(a + block, n)
+                # clamp the PRODUCT (not each norm): matches the exact
+                # fold's max(sqrt(na)*sqrt(nb), 1e-12) denominator
+                cos = (v[a:b] @ v.T) / np.maximum(
+                    np.outer(nrm[a:b], nrm), 1e-12)
+                # mask to j < i (global row index a+r)
+                cols = np.arange(n)
+                tri = cols[None, :] < (np.arange(a, b))[:, None]
+                ge = (cos >= tau) & tri
+                band = (np.abs(cos - tau) <= _EPS) & tri
+                for r, j in zip(*np.nonzero(band)):
+                    # exact sequential fold, identical op order to the
+                    # cosine_similarity expression (double acc,
+                    # left-to-right)
+                    i = a + r
+                    d = na = nb = 0.0
+                    for x, y in zip(v[i], v[j]):
+                        d += x * y
+                        na += x * x
+                        nb += y * y
+                    # math.sqrt is IEEE correctly-rounded (as is the
+                    # JVM's); pow(x, 0.5) carries no such guarantee
+                    exact = d / max(math.sqrt(na) * math.sqrt(nb), 1e-12)
+                    ge[r, j] = exact >= tau
+                dominated[a:b] = ge.any(axis=1)
+            dom = ids[dominated]
+            return pd.DataFrame({"__dom": dom})
 
-    dominated = (assigned.select(F.col(cluster_col),
-                                 F.col(id_col),
-                                 F.col(vec_col).alias("__v"))
-                 .groupBy(cluster_col)
-                 .applyInPandas(dominated_fn, f"__dom {id_t}")
-                 .select(F.col("__dom").alias(id_col))
-                 .distinct())
-    # Eager materialization cuts the lineage back to `assigned` so the
-    # cache can be RELEASED below instead of accreting per call (the
-    # dominated-id set is the small output of the dominance pass,
-    # never the corpus).  When the session has a checkpoint dir, use a
-    # RELIABLE checkpoint: localCheckpoint pins blocks executor-local
-    # with no lineage fallback, so on a real cluster losing any
-    # executor (dynamic allocation, spot nodes — the 100 TB regime)
-    # before the result is consumed would fail the query.  Without a
-    # checkpoint dir (local dev) fall back to localCheckpoint and
-    # accept that single-process risk profile.
-    from bi_etl_and_integration_spark.operators.common import materialize
-    dominated = materialize(dominated)
+        dominated = (assigned.select(F.col(cluster_col),
+                                     F.col(id_col),
+                                     F.col(vec_col).alias("__v"))
+                     .groupBy(cluster_col)
+                     .applyInPandas(dominated_fn, f"__dom {id_t}")
+                     .select(F.col("__dom").alias(id_col))
+                     .distinct())
+        # Eager materialization cuts the lineage back to `assigned` so
+        # the cache can be RELEASED at scope exit instead of accreting
+        # per call (the dominated-id set is the small output of the
+        # dominance pass, never the corpus).  When the session has a
+        # checkpoint dir, use a RELIABLE checkpoint: localCheckpoint
+        # pins blocks executor-local with no lineage fallback, so on a
+        # real cluster losing any executor (dynamic allocation, spot
+        # nodes — the 100 TB regime) before the result is consumed
+        # would fail the query.  Without a checkpoint dir (local dev)
+        # fall back to localCheckpoint and accept that single-process
+        # risk profile.
+        dominated = materialize(dominated)
     # the size guard + dominance pass (the two extra consumers the
-    # persist existed for) have run; the final anti-join re-evaluates
+    # cache existed for) have run; the final anti-join re-evaluates
     # the assignment pass exactly once at consume time
-    assigned.unpersist()
     return assigned.join(dominated, id_col, "left_anti")

@@ -16,6 +16,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bi_etl_and_integration_spark.operators.common import cached
 from bi_etl_and_integration_spark.operators.fuzzy import STOPWORDS, tokenize
 
 #: tiny per-language marker lexicons (n-gram-heuristic stand-in; a real
@@ -264,9 +265,7 @@ def bm25_rank(docs: DataFrame, query_terms: list[str], *,
     # time — ~3 full-corpus tokenizations per run (x33's before-plan
     # carries two Generate nodes over the same 500k-doc scan).
     # ``per_doc`` is (id, dl, tf_0..tf_k) — a narrow int frame —
-    # persisted because stats and the score projection both consume it
-    # (operator-owned, same pattern as the dedup family; bench.py
-    # clears caches between queries).
+    # cached because stats and the score projection both consume it.
     toks = F.filter(F.split(F.lower(F.col(text_col)), " "),
                     lambda t: t != "")
     # per-term counts in ONE full-array pass: first keep only query
@@ -281,14 +280,13 @@ def bm25_rank(docs: DataFrame, query_terms: list[str], *,
         return F.size(F.filter(F.col("__qt"),
                                lambda x: x == F.lit(term)))
 
-    per_doc = (docs.select(F.col(id_col), toks.alias("__toks"))
-               .select(F.col(id_col),
-                       F.size("__toks").alias("__dl"),
-                       qt.alias("__qt"))
-               .select(F.col(id_col), F.col("__dl"),
-                       *[_count_of(t).alias(f"__tf{i}")
-                         for i, t in enumerate(terms)])
-               .persist())
+    per_doc = cached(docs.select(F.col(id_col), toks.alias("__toks"))
+                     .select(F.col(id_col),
+                             F.size("__toks").alias("__dl"),
+                             qt.alias("__qt"))
+                     .select(F.col(id_col), F.col("__dl"),
+                             *[_count_of(t).alias(f"__tf{i}")
+                               for i, t in enumerate(terms)]))
     # corpus stats AND per-term document frequencies in one tiny
     # aggregate (broadcast scalar row): df_i = #docs with tf_i > 0 —
     # identical to the old count over the (doc, term) tf table

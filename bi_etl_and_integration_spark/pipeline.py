@@ -11,8 +11,10 @@ Reference parity:
     intra-flow progress (PRACT/004 CDC.md:552-555) -> ``resume_from`` +
     ``checkpointed_write`` (atomic temp-dir swap).
   - multicast persistence (PRO/Глава 07:76-80) -> a stage that fans a
-    frame out calls ``operators.relational.multicast`` and frees it with
-    ``release_multicasts`` (the runner does not persist on its own).
+    frame out caches it with ``operators.common.cached`` inside its own
+    ``cache_scope()`` (the runner does not persist on its own; stages
+    run with ``max_parallel > 1`` are on other threads, which do not
+    see the caller's scope).
 """
 
 from __future__ import annotations

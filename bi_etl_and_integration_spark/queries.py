@@ -33,6 +33,7 @@ from bi_etl_and_integration_spark.operators import (
     windows as win_ops,
 )
 from bi_etl_and_integration_spark.operators.cdc import net_changes
+from bi_etl_and_integration_spark.operators.common import cached
 from bi_etl_and_integration_spark.sources import Catalog, read_csv
 from bi_etl_and_integration_spark.sources.writers import (
     staged_roundtrip, write_bucketed, write_csv)
@@ -71,16 +72,24 @@ def R(expr: str, p: int = 2) -> str:
     return f"CAST(ROUND(CAST({expr} AS DECIMAL(38,10)),{p}) AS DOUBLE)"
 
 
+def _session_memo(spark: SparkSession, kind: str, key, build):
+    """The one session memo: ``build()`` runs once per (session,
+    ``kind``, ``key``) and later calls return its value.  Every
+    one-time per-session build (catalogs, the q24b/q24c pair set, the
+    persisted IVF index dirs) lives here, on one session attribute."""
+    memo = getattr(spark, "_bi_etl_memo", None)
+    if memo is None:
+        memo = spark._bi_etl_memo = {}  # noqa: SLF001
+    if (kind, key) not in memo:
+        memo[(kind, key)] = build()
+    return memo[(kind, key)]
+
+
 def _catalog(spark: SparkSession, sf_dir: str) -> Catalog:
     """One Catalog per (session, sf_dir): parquet footers and file
     listings are read once per session, not once per query."""
-    cache = getattr(spark, "_bi_etl_catalogs", None)
-    if cache is None:
-        cache = {}
-        spark._bi_etl_catalogs = cache  # noqa: SLF001
-    if sf_dir not in cache:
-        cache[sf_dir] = Catalog(spark, sf_dir, register_views=False)
-    return cache[sf_dir]
+    return _session_memo(spark, "catalog", sf_dir, lambda: Catalog(
+        spark, sf_dir, register_views=False))
 
 
 def q(name: str, oracle: str | None = None):
@@ -466,9 +475,6 @@ def q06c(spark, cat):
    "COUNT(CASE WHEN TRY_CAST(event_type AS INT) IS NULL THEN 1 END) "
    "AS n_quarantined FROM events")
 def q07(spark, cat):
-    # free the cache a previous q07 run left (bench reruns the query;
-    # an unreleased multicast would accumulate in executor storage)
-    rel_ops.release_multicasts(spark)
     # from_json parses props ONCE (get_json_object re-parses the whole
     # string per call) and the spread keeps the parse off a single
     # thread when the fixture is one row group
@@ -477,7 +483,7 @@ def q07(spark, cat):
         "k_str", F.from_json("props", "k string").getField("k"))
     # two downstream consumers (ok-count + quarantine-count) -> SSIS
     # Multicast persist-on-fanout: the parse runs once, not per branch
-    ev = rel_ops.multicast(ev, n_consumers=2)
+    ev = cached(ev)
     good_k, _bad_k = cl_ops.cast_with_quarantine(ev, "k_str", "int", "k_int")
     _good_t, bad_t = cl_ops.cast_with_quarantine(ev, "event_type", "int",
                                                  "et_int")
@@ -1771,14 +1777,19 @@ def prepare_session(spark, sf_dir: str) -> None:
 
 
 def remark_session_caches(spark) -> None:
-    """Re-mark every session-scoped memoized DataFrame for caching
-    after an external ``spark.catalog.clearCache()`` (bench.py clears
-    between queries to keep leaked per-query persists from pressuring
-    later queries).  Owned HERE, next to the memo it covers, so the
-    memo's shape and its re-mark contract can never drift apart."""
-    for memo in getattr(spark, "_bi_etl_pair_cache", {}).values():
-        for df in memo:
-            df.persist()
+    """Re-cache every frame of the q24b/q24c pair memo whose cache is
+    gone — freed by the ``cache_scope()`` it was cached in, or by an
+    external ``spark.catalog.clearCache()``.  ``storageLevel`` asks the
+    JVM's cache manager, so both cases read NONE.  The pair memo calls
+    this on every lookup; it stays public because perfbench isolates
+    its ops with ``clearCache()`` followed by this call."""
+    from pyspark import StorageLevel
+    for (kind, _key), frames in getattr(spark, "_bi_etl_memo", {}).items():
+        if kind != "pairs":
+            continue
+        for df in frames:
+            if df.storageLevel == StorageLevel.NONE:
+                cached(df)
 
 
 def _part_name_pairs(spark, cat):
@@ -1789,23 +1800,20 @@ def _part_name_pairs(spark, cat):
     pass — is the dominant cost of both queries and is byte-identical
     between them, so it is materialized once (VERDICT r6 item 1: the
     duplicate generation was the round-6 bench regression).  The memo
-    holds (names, pairs) with pairs persisted; both are tiny (the
+    holds (names, pairs), both cached; both are tiny (the
     distinct-name domain), so the cache is bounded like _catalog's."""
-    cache = getattr(spark, "_bi_etl_pair_cache", None)
-    if cache is None:
-        cache = {}
-        spark._bi_etl_pair_cache = cache  # noqa: SLF001
-    key = cat.sf_dir
-    if key not in cache:
+    def build():
         blocks = [F.substring(F.col("p_name"), 1, 4),
                   F.expr("substring(p_name, -4, 4)")]
-        names = cat.part.groupBy("p_name").agg(
-            F.min("p_partkey").alias("name_id")).persist()
-        pairs = fz_ops.fuzzy_pairs(names, "name_id", "p_name",
-                                   blocks=blocks,
-                                   min_similarity=0.6).persist()
-        cache[key] = (names, pairs)
-    return cache[key]
+        names = cached(cat.part.groupBy("p_name").agg(
+            F.min("p_partkey").alias("name_id")))
+        pairs = cached(fz_ops.fuzzy_pairs(names, "name_id", "p_name",
+                                          blocks=blocks,
+                                          min_similarity=0.6))
+        return names, pairs
+    memo = _session_memo(spark, "pairs", cat.sf_dir, build)
+    remark_session_caches(spark)
+    return memo
 
 
 @q("q24b_fuzzy_grouping",
@@ -2637,8 +2645,8 @@ def _lsh_recall_certified(cat, *, n_probes: int, min_recall: float):
     filtered exact join, hash-matched against the oracle's quadratic
     restatement) + a recall band over the MinHash-LSH candidates."""
     docs = cat.documents
-    exact = dd_ops.exact_jaccard_join(docs, "text", "doc_id",
-                                      n=3, threshold=0.5).persist()
+    exact = cached(dd_ops.exact_jaccard_join(docs, "text", "doc_id",
+                                             n=3, threshold=0.5))
     lsh = (dd_ops.minhash_lsh_dedup(docs, "text", "doc_id",
                                     num_hashes=32, bands=16,
                                     jaccard_threshold=0.5,
@@ -2843,8 +2851,8 @@ def _ann_recall_certified(cat, ann, *, min_recall: float, extra=None):
     every output row; the oracle restates each as literal TRUE."""
     queries = (cat.embeddings.where(F.col("vec_id") < 3)
                .select(F.col("vec_id").alias("query_id"), "embedding"))
-    exact = sim_ops.brute_force_topk(cat.embeddings, queries,
-                                     k=10).persist()
+    exact = cached(sim_ops.brute_force_topk(cat.embeddings, queries,
+                                            k=10))
     hits = (exact.select("query_id", "vec_id")
             .join(ann(queries).select("query_id", "vec_id",
                                       F.lit(1).alias("__hit")),
@@ -2909,17 +2917,11 @@ def _ivf_index_dir(spark, cat) -> str:
     path is the repeated operation, the build is one-time like a real
     index).  Same training config as x06 (nlist=8, seeded), so the
     recall band carries over."""
-    cache = getattr(spark, "_bi_etl_ivf_cache", None)
-    if cache is None:
-        cache = {}
-        spark._bi_etl_ivf_cache = cache  # noqa: SLF001
-    key = cat.sf_dir
-    if key not in cache:
-        import tempfile
+    def build():
         d = tempfile.mkdtemp(prefix="bi_etl_ivf_")
         sim_ops.ivf_index_write(cat.embeddings, d, nlist=8)
-        cache[key] = d
-    return cache[key]
+        return d
+    return _session_memo(spark, "ivf", cat.sf_dir, build)
 
 
 @q("x44_ann_ivf_persisted", _ANN_EXACT_ORACLE)
@@ -2946,18 +2948,12 @@ def _ivfadc_index_dir(spark, cat) -> str:
     """Session-memoized persisted IVFADC index (ivf_index_write with
     pq_m=16/nbits=6 — the x06b codebook-resolution dials — over the
     x44 nlist=8 coarse config)."""
-    cache = getattr(spark, "_bi_etl_ivfadc_cache", None)
-    if cache is None:
-        cache = {}
-        spark._bi_etl_ivfadc_cache = cache  # noqa: SLF001
-    key = cat.sf_dir
-    if key not in cache:
-        import tempfile
+    def build():
         d = tempfile.mkdtemp(prefix="bi_etl_ivfadc_")
         sim_ops.ivf_index_write(cat.embeddings, d, nlist=8,
                                 pq_m=16, pq_nbits=6)
-        cache[key] = d
-    return cache[key]
+        return d
+    return _session_memo(spark, "ivfadc", cat.sf_dir, build)
 
 
 @q("x44c_ann_ivfadc_persisted", _ANN_EXACT_ORACLE)
@@ -2992,13 +2988,7 @@ def _ivf_append_dirs(spark, cat) -> tuple[str, str]:
     with the appended index's own frozen centroids (append == rebuild
     only makes sense against the same quantizer; retraining would
     move the list boundaries)."""
-    cache = getattr(spark, "_bi_etl_ivf_append_cache", None)
-    if cache is None:
-        cache = {}
-        spark._bi_etl_ivf_append_cache = cache  # noqa: SLF001
-    key = cat.sf_dir
-    if key not in cache:
-        import tempfile
+    def build():
         d_app = tempfile.mkdtemp(prefix="bi_etl_ivf_app_")
         d_reb = tempfile.mkdtemp(prefix="bi_etl_ivf_reb_")
         base = cat.embeddings.where(F.col("vec_id") % 2 == 0)
@@ -3007,8 +2997,8 @@ def _ivf_append_dirs(spark, cat) -> tuple[str, str]:
         sim_ops.ivf_index_append(batch, d_app)
         cmat, _ = sim_ops._ivf_read_centroids(spark, d_app)  # noqa: SLF001
         sim_ops.ivf_index_write(cat.embeddings, d_reb, centroids=cmat)
-        cache[key] = (d_app, d_reb)
-    return cache[key]
+        return d_app, d_reb
+    return _session_memo(spark, "ivf_append", cat.sf_dir, build)
 
 
 @q("x44b_ann_ivf_append",
@@ -3496,9 +3486,9 @@ def x43(spark, cat):
     docs = cat.documents
     corpus = docs.where(F.col("doc_id") % 2 == 0)
     batch = docs.where(F.col("doc_id") % 2 == 1)
-    exact = dd_ops.exact_jaccard_join(batch, "text", "doc_id",
-                                      n=3, threshold=0.5,
-                                      other=corpus).persist()
+    exact = cached(dd_ops.exact_jaccard_join(batch, "text", "doc_id",
+                                             n=3, threshold=0.5,
+                                             other=corpus))
     idx = dd_ops.minhash_index(corpus, "text", "doc_id",
                                num_hashes=32, bands=16)
     found = (dd_ops.minhash_lookup(batch, idx, "text", "doc_id",
@@ -3551,9 +3541,9 @@ def x43b(spark, cat):
     corpus0 = docs.where(F.col("doc_id") % 3 == 0)
     batch1 = docs.where(F.col("doc_id") % 3 == 1)
     probe = docs.where(F.col("doc_id") % 3 == 2)
-    exact = dd_ops.exact_jaccard_join(
+    exact = cached(dd_ops.exact_jaccard_join(
         probe, "text", "doc_id", n=3, threshold=0.5,
-        other=corpus0.unionByName(batch1)).persist()
+        other=corpus0.unionByName(batch1)))
     idx = dd_ops.minhash_index(corpus0, "text", "doc_id",
                                num_hashes=32, bands=16)
     appended = dd_ops.minhash_index_append(idx, batch1, "text", "doc_id")
@@ -4420,12 +4410,11 @@ def x33(spark, cat):
     # embeddings scan).  It is only ``overfetch`` rows (top-k output),
     # so the persist is ~1100 rows; measured sf10: cosine leg
     # 0.94 -> ~0.4 s (guide §5 caching rule: reused AND expensive to
-    # recompute; bench.py clears caches between queries).
-    fetched = (sim_ops.brute_force_topk(cat.embeddings, qvec,
-                                        k=overfetch)
-               .select(F.col("vec_id").alias("doc_id"),
-                       dec_round("cosine_sim", 6).alias("s"))
-               .persist())
+    # recompute).
+    fetched = cached(sim_ops.brute_force_topk(cat.embeddings, qvec,
+                                              k=overfetch)
+                     .select(F.col("vec_id").alias("doc_id"),
+                             dec_round("cosine_sim", 6).alias("s")))
     cut = (fetched.orderBy(F.col("s").desc(), F.col("doc_id").asc())
            .limit(candidates))
     guard = (fetched.agg(

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bi_etl_and_integration_spark.operators.common import cached
+
 #: the fixture star schema + stream/text/vector tables (TESTDATA.md)
 TABLES = (
     "region nation customer supplier part orders lineitem "
@@ -154,7 +156,7 @@ def read_csv_tolerant(spark: SparkSession, path: str,
           .option("mode", "PERMISSIVE")
           .option("columnNameOfCorruptRecord", _CORRUPT_COL)
           .csv(path))
-    df = df.persist()
+    df = cached(df)
     bad = df.where(F.col(_CORRUPT_COL).isNotNull())
     good = df.where(F.col(_CORRUPT_COL).isNull()).drop(_CORRUPT_COL)
     n_bad = bad.count()

@@ -48,6 +48,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bi_etl_and_integration_spark.operators.common import (
+    cache_scope, cached)
 from bi_etl_and_integration_spark.operators.dedup import (
     MinhashIndex,
     MinhashParams,
@@ -248,8 +250,10 @@ def dedup_stream(stream_df: DataFrame, *, index_dir: str,
 
     def apply_batch(batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
-        batch = batch.persist()
-        try:
+        # one scope per micro-batch: frees the batch, its survivors and
+        # the shingle tables the lookup/dedup operators cache
+        with cache_scope():
+            batch = cached(batch)
             kept = _intra_batch_survivors(batch, text_col, id_col,
                                           params, jaccard_threshold)
             index = load_minhash_index(spark, index_dir, params,
@@ -263,7 +267,7 @@ def dedup_stream(stream_df: DataFrame, *, index_dir: str,
                 kept = kept.join(
                     dup.select(F.col("id_a").alias(id_col)).distinct(),
                     id_col, "left_anti")
-            kept = kept.persist()
+            kept = cached(kept)
             kept.write.mode("overwrite").parquet(
                 os.path.join(survivors_dir, f"epoch={epoch_id}"))
             fresh = minhash_index(kept, text_col, id_col,
@@ -275,15 +279,12 @@ def dedup_stream(stream_df: DataFrame, *, index_dir: str,
             fresh.shingles.write.mode("overwrite").parquet(
                 os.path.join(index_dir, "shingles",
                              f"epoch={epoch_id}"))
-            kept.unpersist()
             if compact_every and epoch_id > 0 \
                     and epoch_id % compact_every == 0:
                 # after this epoch's writes: the newest epoch (this
                 # one, possibly uncommitted until foreachBatch
                 # returns) is never touched by the merge
                 compact_minhash_index(spark, index_dir)
-        finally:
-            batch.unpersist()
 
     return (stream_df.writeStream.foreachBatch(apply_batch)
             .option("checkpointLocation", checkpoint_dir)

@@ -32,16 +32,54 @@ def test_conditional_split_first_match_wins(rows):
     assert total == df.count()
 
 
-def test_multicast_persists_until_released(rows, spark):
-    rel.release_multicasts(spark)  # start from an empty session registry
-    df = rows([(1,), (2,)], "id int")
-    assert rel.multicast(df, 1) is df          # single consumer: no cache
-    assert not df.storageLevel.useMemory
-    fanned = rel.multicast(df, 2)
-    assert fanned.storageLevel.useMemory or fanned.storageLevel.useDisk
-    assert rel.release_multicasts(spark) == 1
-    assert not (df.storageLevel.useMemory or df.storageLevel.useDisk)
-    assert rel.release_multicasts(spark) == 0
+def test_cache_scope_releases_its_own_frames(rows):
+    """``cached()`` inside a ``cache_scope()`` is unpersisted when that
+    scope exits — a nested scope frees only its own frames, an
+    exception still releases — and outside any scope it stays cached."""
+    import threading
+
+    from bi_etl_and_integration_spark.operators.common import (
+        cache_scope, cached)
+
+    def is_cached(df):
+        lvl = df.storageLevel
+        return lvl.useMemory or lvl.useDisk
+
+    outer_df = rows([(1,)], "id int")
+    inner_df = rows([(2,)], "id int")
+    with cache_scope():
+        assert cached(outer_df) is outer_df
+        with cache_scope():
+            cached(inner_df)
+            assert is_cached(inner_df) and is_cached(outer_df)
+        assert not is_cached(inner_df)
+        assert is_cached(outer_df)
+    assert not is_cached(outer_df)
+
+    failed = rows([(3,)], "id int")
+    with pytest.raises(RuntimeError):
+        with cache_scope():
+            cached(failed)
+            raise RuntimeError("consumer failed")
+    assert not is_cached(failed)
+
+    session = rows([(4,)], "id int")
+    cached(session)
+    with cache_scope():
+        pass
+    assert is_cached(session)
+    session.unpersist()
+
+    # the scope stack is per thread: a frame another thread caches is
+    # not freed by this thread's scope
+    other = rows([(5,)], "id int")
+    with cache_scope():
+        t = threading.Thread(target=cached, args=(other,))
+        t.start()
+        t.join(timeout=60)
+        assert not t.is_alive()
+    assert is_cached(other)
+    other.unpersist()
 
 
 def test_conditional_split_no_default(rows):

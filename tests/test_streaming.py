@@ -785,3 +785,53 @@ def test_dedup_stream_live_compaction(spark, rows, tmp_path):
             index_dir=str(tmp_path / "i2"),
             survivors_dir=str(tmp_path / "o2"),
             checkpoint_dir=str(tmp_path / "c2"), compact_every=1)
+
+
+def test_dedup_stream_releases_batch_caches(spark, rows, tmp_path):
+    """Each micro-batch's caches — the batch, its survivors and the
+    shingle tables the dedup and lookup operators cache — end with the
+    batch: the persistent-RDD set is back at its baseline after every
+    one of three micro-batches."""
+    import gc
+    import time
+
+    from bi_etl_and_integration_spark.streaming.dedup import dedup_stream
+
+    jsc = spark.sparkContext._jsc
+
+    def leaked():
+        deadline = time.monotonic() + 10
+        while (set(jsc.getPersistentRDDs().keySet()) - before
+               and time.monotonic() < deadline):
+            gc.collect()
+            spark._jvm.System.gc()
+            time.sleep(0.2)
+        return set(jsc.getPersistentRDDs().keySet()) - before
+
+    text = "the quick brown fox jumps over the lazy dog " * 5
+    src = str(tmp_path / "src")
+    DOCS = "doc_id long, text string"
+    first = rows([(0, text + "batch 0"), (1, "novel document zero " * 5)],
+                 DOCS)
+    first.write.parquet(src)
+    writer = dedup_stream(
+        spark.readStream.schema(first.schema).parquet(src),
+        index_dir=str(tmp_path / "index"),
+        survivors_dir=str(tmp_path / "survivors"),
+        checkpoint_dir=str(tmp_path / "ckpt"), num_hashes=32, bands=16,
+        jaccard_threshold=0.5)
+    before = set(jsc.getPersistentRDDs().keySet())
+    for i in range(3):
+        if i:
+            rows([(10 * i, text + f"batch {i}"),
+                  (10 * i + 1, f"novel document {i} " * 5)],
+                 DOCS).write.mode("append").parquet(src)
+        q = writer.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        assert leaked() == set(), f"micro-batch {i}"
+    got = {r["doc_id"] for r in
+           spark.read.parquet(str(tmp_path / "survivors")).collect()}
+    assert got == {0, 1, 11, 21}

@@ -201,6 +201,16 @@ def test_no_pathological_bench_outlier():
         f"executor memory; repartition or fix the plan")
 
 
+def test_bench_detail_has_no_negative_shuffle():
+    """Per-query shuffle and spill are byte counts of the first timed
+    run's own stages: a negative reading means the measurement diffed
+    totals over a stage list Spark caps, not the query's work."""
+    det = _load_detail()
+    bad = {k: v for key in ("shuffle_mb", "spill_mb")
+           for k, v in det.get(key, {}).items() if v < 0}
+    assert not bad, f"negative per-query bytes: {bad}"
+
+
 def test_make_scale_text_bijection(tmp_path):
     """documents.text replicas must be per-shard token bijections of
     the base corpus (r7): shard 0 verbatim; shard i>0 token-suffixed so
@@ -400,3 +410,25 @@ def test_every_public_definition_is_used():
               and uses[node.name] == sum(
                   1 for x in _referenced_names(node) if x == node.name)]
     assert not unused, f"public definitions nothing uses: {unused}"
+
+
+def test_persist_only_through_cached():
+    """Every cache in the package goes through
+    ``operators.common.cached`` so that one ``cache_scope()`` frees
+    it: no ``.persist(`` or ``.cache()`` call anywhere else."""
+    import ast
+
+    common = os.path.join(ROOT, "bi_etl_and_integration_spark",
+                          "operators", "common.py")
+    raw = []
+    for path in _py_files("bi_etl_and_integration_spark"):
+        if path == common:
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        raw += [f"{os.path.relpath(path, ROOT)}:{n.lineno}"
+                for n in ast.walk(tree)
+                if isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in ("persist", "cache")]
+    assert not raw, f"raw persist/cache calls (use cached()): {raw}"

@@ -96,6 +96,7 @@ def main():
         os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from bi_etl_and_integration_spark import get_session
+    from bi_etl_and_integration_spark.operators.common import cache_scope
 
     spark = get_session("oracle-check")
     spark.sparkContext.setLogLevel("ERROR")
@@ -117,9 +118,11 @@ def main():
             continue
         t0 = time.monotonic()
         try:
-            df = fn(spark, sf_dir)
-            cols = df.columns
-            rows = [tuple(r) for r in df.collect()]
+            # the query's cached intermediates end once its rows are in
+            with cache_scope():
+                df = fn(spark, sf_dir)
+                cols = df.columns
+                rows = [tuple(r) for r in df.collect()]
         except Exception as e:
             n_fail += 1
             failures.append(name)
