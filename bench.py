@@ -79,7 +79,7 @@ def main() -> None:
     # spill bytes; it is off by default for tests, on for bench
     os.environ.setdefault("SPARK_GRAFT_UI", "true")
 
-    # GC orphaned staging dirs (bf_*/bk_* bucketed-fact tables) left by
+    # GC orphaned staging dirs (queries.STAGE_PREFIXES) left by
     # dead sessions: staged names are per-session (queries._stage_suffix
     # embeds the app id), so a NEW session can never reuse them and they
     # are pure scratch — 1.3 GB per sf10 session if left to pile up.
@@ -87,12 +87,15 @@ def main() -> None:
     # and the 1-hour age guard keeps a concurrently-running pytest
     # session's freshly staged tables safe even if that contract slips.
     import shutil
+
+    from bi_etl_and_integration_spark.queries import STAGE_PREFIXES
+    staged = tuple(f"{p}_" for p in STAGE_PREFIXES)
     wh = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                       "spark-warehouse")
     if os.path.isdir(wh):
         for d in os.listdir(wh):
             p = os.path.join(wh, d)
-            if ((d.startswith("bf_") or d.startswith("bk_"))
+            if (d.startswith(staged)
                     and os.path.isdir(p)
                     and time.time() - os.path.getmtime(p) > 3600):
                 shutil.rmtree(p, ignore_errors=True)

@@ -1,15 +1,31 @@
 """Similarity search over embedding columns (beyond-reference surface;
 BASELINE.json north star).
 
-  cosine_similarity   zip_with dot product + norms — pure JVM expression
-  brute_force_topk    exact top-k neighbors: broadcast the query set,
-                      score every corpus row, TakeOrdered per query.
-                      The corpus is never shuffled — scales linearly.
-  ivf_topk            IVF-style approximate search: k-means-ish coarse
-                      centroids (sampled seeds), corpus rows assigned to
-                      nearest centroid once (pre-partitionable), queries
-                      probe the ``n_probe`` nearest centroid partitions
-                      only — the 100 TB path (scan 1/nlist of corpus).
+Every top-k search runs one staged pipeline, one private helper per
+stage:
+
+  _query_batch     collect the small probe batch (``take(max + 1)``):
+                   size guard, empty check, duplicate-id check, the
+                   nq × dim float64 query matrix
+  _partition_topk  one Arrow ``mapInPandas`` fold over the scanned
+                   rows: a per-batch scoring callback, a per-PARTITION
+                   top-k per query — only k × partitions candidates
+                   leave the scan and the corpus never shuffles
+  _rank            ``row_number() <= k`` per query, ties on neighbor id
+  _rerank          exact cosine of a shortlist, its float vectors
+                   fetched by a bounded broadcast join
+
+The entry points pick their scoring and their candidate source:
+
+  brute_force_topk    exact: BLAS cosine in the fold over the corpus.
+  ivf_topk            IVF-style approximate search: k-means-trained
+                      coarse centroids (bounded sample), corpus rows
+                      assigned to their nearest list, each query
+                      probes its ``n_probe`` nearest lists only.
+  ivf_index_write /   the same IVF layout AT REST: the corpus written
+  ivf_search          partitioned by list id, so a probe is a literal
+                      partition filter (~n_probe/nlist of the files);
+                      ``pq_m=`` / ``shortlist=`` add IVFADC+R.
   pq_encode/pq_topk   product quantization (Jégou et al., "Product
                       Quantization for Nearest Neighbor Search", TPAMI
                       2011): the corpus compresses to ``m`` one-byte
@@ -27,36 +43,14 @@ import os
 import random
 
 import pandas as pd  # module-level: pandas_udf resolves 'pd.Series' hints
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def dot(a: Column, b: Column) -> Column:
-    # cast elements to double BEFORE multiplying: float*float would lose
-    # precision the oracle (computing in double) keeps
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x)
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(
-        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x))
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    return (dot(a, b) / F.greatest(norm(a) * norm(b), F.lit(1e-12))
-            ).cast("double")
-
-
 def cosine_similarity_udf():
     """Arrow-vectorized pairwise cosine for bulk scoring joins: one
-    einsum + two norms per batch instead of three interpreted array
-    folds per row.  Same math as ``cosine_similarity`` up to float
-    summation order (BLAS) — use the expression form where the result
-    feeds an oracle-matched digest, this one in rows-only/topk paths."""
+    einsum + two norms per batch (float64, BLAS summation order)."""
     import numpy as np
 
     @F.pandas_udf("double")
@@ -74,10 +68,9 @@ def cosine_similarity_udf():
 
 
 _MAX_QUERY_ROWS = 10_000
-"""Default brute_force_topk query-side cap: the contract is a SMALL
-probe batch (the query set is broadcast/collected), and beyond ~10k
-queries the corpus x queries score matrix is the workload — use the
-LSH/IVF paths, which exist for exactly that regime."""
+"""Default query-side cap of every search that collects its query
+set: the contract is a SMALL probe batch, and beyond ~10k queries the
+corpus x queries score matrix is the workload — split the batch."""
 
 _MAX_SHORTLIST_ROWS = 250_000
 """Default IVFADC rerank cap on shortlist × nq (ADVICE r10): the
@@ -86,111 +79,62 @@ pushdown, so its size must stay driver-and-plan-friendly — 250k ids
 is ~2 MB collected and a pushable IN set; beyond that, split the
 query batch (each split reruns ADC over its own probed lists only)."""
 
-_DEBUG_CAPTURE_PLANS = False
-"""Test-only introspection (ADVICE r10: keep debug plumbing out of the
-operator signature): when True, intermediate executed plans that a
-returned DataFrame cannot expose (the IVFADC ADC leg runs eagerly
-inside ivf_search) are recorded in _LAST_PLANS keyed by leg name."""
 
-_LAST_PLANS: dict = {}
+def _query_batch(queries: DataFrame, who: str, query_id_col: str,
+                 vec_col: str, max_query_rows: int, force: bool = False):
+    """Collect the probe batch a search plans around: at most
+    ``max_query_rows`` rows (``take`` one more to detect overflow with
+    no count job; ``force`` collects them all), at least one, and no
+    repeated query id — per-query top-k lists, probe sets and ADC
+    tables are keyed by it, so a duplicate would silently merge two
+    queries.  Returns the query ids and the nq × dim float64 matrix."""
+    import numpy as np
+    sel = queries.select(F.col(query_id_col), F.col(vec_col))
+    qrows = sel.collect() if force else sel.take(max_query_rows + 1)
+    if not force and len(qrows) > max_query_rows:
+        raise ValueError(
+            f"{who}: queries has > {max_query_rows} rows; the whole "
+            "query set is collected to the driver (small-probe-batch "
+            "contract). Split it into batches of at most "
+            "max_query_rows (ivf_search probes each batch against the "
+            "index at rest), or search a large query set with "
+            "ivf_topk, which joins the queries instead of collecting "
+            "them")
+    if not qrows:
+        raise ValueError(f"{who}: queries is empty")
+    qids = [r[0] for r in qrows]
+    if len(set(qids)) != len(qids):
+        raise ValueError(
+            f"{who}: duplicate query ids in the probe batch — "
+            "de-duplicate or re-key the query set")
+    return qids, np.stack([np.asarray(r[1], dtype=np.float64)
+                           for r in qrows])
 
 
-def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10, *,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     query_id_col: str = "query_id",
-                     arrow: bool = True,
-                     max_query_rows: int = _MAX_QUERY_ROWS,
-                     force: bool = False) -> DataFrame:
-    """Exact cosine top-k per query.
-
-    ``arrow=True`` (default, the scale path): the query set — small by
-    contract, it is the ANN probe batch — ships to every task in the
-    plan; ONE Arrow ``mapInPandas`` pass scores each corpus batch with
-    a single BLAS matmul and keeps a per-PARTITION top-k per query, so
-    only ``k × partitions`` candidate rows (not corpus × queries) reach
-    the final per-query ranking window.  The corpus itself never
-    shuffles — the old plan's Exchange of every scored row to one
-    reducer per query was the hidden 100 TB cliff.
-
-    ``arrow=False`` keeps the pure-expression form (interpreted HOF
-    dot per pair + full scored-row window): summation order matches
-    the sequential-fold oracle bit for bit — the audit path.
-
-    Output: (query_id, vec_id, cosine_sim, rank), deterministic
-    tie-break on neighbor id (both paths).
-
-    Both paths put the WHOLE query set on one machine (driver collect
-    / broadcast), so the small-|Q| contract is enforced mechanically:
-    more than ``max_query_rows`` queries raises ValueError unless
-    ``force=True`` — a large query set belongs on the LSH/IVF join
-    paths (:func:`ann_ivf_search`), not here."""
-    # On the arrow path the guard probe DOUBLES as the collect (no
-    # extra job); the non-arrow path only needs a count, so it guards
-    # with limit+count (no query rows shipped) — and force=True skips
-    # the guard entirely (the caller accepted the collect/broadcast).
-    _over = (f"brute_force_topk: queries has > {max_query_rows} "
-             "rows; this operator collects/broadcasts the whole "
-             "query set (small-probe-batch contract). Use "
-             "ann_ivf_search / the LSH paths for large query sets, "
-             "raise max_query_rows, or pass force=True for an "
-             "audited exception")
-    probe = None
-    if arrow and not force:
-        probe = (queries.select(F.col(query_id_col), F.col(vec_col))
-                 .take(max_query_rows + 1))
-        if len(probe) > max_query_rows:
-            raise ValueError(_over)
-    elif not force:
-        if queries.limit(max_query_rows + 1).count() > max_query_rows:
-            raise ValueError(_over)
-    if not arrow:
-        q = F.broadcast(queries.select(F.col(query_id_col),
-                                       F.col(vec_col).alias("__qv")))
-        scored = (corpus.select(F.col(id_col), F.col(vec_col).alias("__cv"))
-                  .crossJoin(q)
-                  .withColumn("cosine_sim",
-                              cosine_similarity(F.col("__cv"),
-                                                F.col("__qv"))))
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.col("cosine_sim").desc(), F.col(id_col))
-        return (scored.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") <= k)
-                .select(query_id_col, id_col, "cosine_sim",
-                        F.col("__rn").alias("rank")))
-
+def _partition_topk(rows: DataFrame, score, qids: list, k: int,
+                    qfield, score_col: str, id_col: str) -> DataFrame:
+    """Per-partition top-k per query in ONE Arrow ``mapInPandas``
+    pass over ``rows``.  ``score(pdf)`` yields ``(j, ids, scores)``
+    for each query j a batch scores; each batch keeps its top k per
+    query, the partition folds those to its own top k, and only those
+    k × partitions rows per query reach :func:`_rank`.  Order is
+    (score desc, id asc), so ties at the k boundary are deterministic.
+    Output: (``qfield``, id_col, score_col), the input id types."""
     import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
-    qrows = (probe if probe is not None else
-             queries.select(F.col(query_id_col), F.col(vec_col)).collect())
-    if not qrows:
-        raise ValueError("queries is empty")
-    qids = [r[0] for r in qrows]
-    qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    qnorm = np.maximum(np.linalg.norm(qmat, axis=1), 1e-12)
-    # output keeps the INPUT id dtypes (schema parity with the old plan)
-    out_schema = StructType([
-        queries.schema[query_id_col],
-        corpus.schema[id_col],
-        StructField("cosine_sim", DoubleType(), True)])
+    out_schema = StructType([qfield, rows.schema[id_col],
+                             StructField(score_col, DoubleType(), True)])
 
-    def local_topk(batches):
-        # per-batch top-k kept, folded to per-partition top-k at the end
+    def fold(batches):
         parts_s = [[] for _ in qids]
         parts_i = [[] for _ in qids]
         for pdf in batches:
             if not len(pdf):
                 continue
-            ids = pdf[id_col].to_numpy()
-            c = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            den = np.maximum(np.linalg.norm(c, axis=1), 1e-12)[:, None] \
-                * qnorm[None, :]
-            sims = (c @ qmat.T) / den            # batch × nq
-            for j in range(len(qids)):
-                # sort by (-sim, id): deterministic k-boundary ties
-                order = np.lexsort((ids, -sims[:, j]))[:k]
-                parts_s[j].append(sims[order, j])
+            for j, ids, s in score(pdf):
+                order = np.lexsort((ids, -s))[:k]
+                parts_s[j].append(s[order])
                 parts_i[j].append(ids[order])
-        import pandas as pd_
         out_q, out_i, out_s = [], [], []
         for j, qid in enumerate(qids):
             if parts_s[j]:
@@ -201,55 +145,109 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10, *,
                 out_i.append(i[order])
                 out_q.extend([qid] * len(order))
         if out_s:                      # empty partition: yield nothing
-            yield pd_.DataFrame({query_id_col: out_q,
-                                 id_col: np.concatenate(out_i),
-                                 "cosine_sim": np.concatenate(out_s)})
+            yield pd.DataFrame({qfield.name: out_q,
+                                id_col: np.concatenate(out_i),
+                                score_col: np.concatenate(out_s)})
 
-    cand = corpus.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        local_topk, out_schema)
+    return rows.mapInPandas(fold, out_schema)
+
+
+def _rank(scored: DataFrame, k: int, query_id_col: str, id_col: str,
+          score_col: str = "cosine_sim") -> DataFrame:
+    """The top ``k`` rows per query by (score desc, id asc):
+    (query_id, id, score, rank)."""
     w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine_sim").desc(), F.col(id_col))
-    return (cand.withColumn("__rn", F.row_number().over(w))
+        F.col(score_col).desc(), F.col(id_col))
+    return (scored.withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") <= k)
-            .select(query_id_col, id_col, "cosine_sim",
+            .select(query_id_col, id_col, score_col,
                     F.col("__rn").alias("rank")))
 
+
+def _cosine_rank(pairs: DataFrame, k: int, query_id_col: str,
+                 id_col: str) -> DataFrame:
+    """Exact cosine of each (``__cv``, ``__qv``) candidate pair,
+    ranked per query."""
+    return _rank(pairs.withColumn(
+        "cosine_sim", cosine_similarity_udf()(F.col("__cv"),
+                                              F.col("__qv"))),
+        k, query_id_col, id_col)
+
+
+def _rerank(fetch: DataFrame, shortlist: DataFrame, qv: DataFrame,
+            k: int, *, id_col: str, vec_col: str,
+            query_id_col: str) -> DataFrame:
+    """Exact re-rank (IVFADC+R, Jégou et al. 2011 §V): ``shortlist``
+    holds the (query_id, id) pairs an approximate leg kept; their
+    float vectors come from ``fetch`` by a broadcast join (the
+    shortlist side is queries × shortlist rows — bounded, never a
+    corpus shuffle), ``qv`` supplies (query_id, ``__qv``), and exact
+    cosine picks the final top ``k``."""
+    return _cosine_rank(
+        fetch.select(F.col(id_col), F.col(vec_col).alias("__cv"))
+        .join(F.broadcast(shortlist), id_col)
+        .join(F.broadcast(qv), query_id_col),
+        k, query_id_col, id_col)
+
+
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10, *,
+                     id_col: str = "vec_id", vec_col: str = "embedding",
+                     query_id_col: str = "query_id",
+                     max_query_rows: int = _MAX_QUERY_ROWS,
+                     force: bool = False) -> DataFrame:
+    """Exact cosine top-k per query.
+
+    The query set — small by contract, it is the probe batch — is
+    collected and ships to every task in the plan; ONE Arrow
+    ``mapInPandas`` pass scores each corpus batch with a single BLAS
+    matmul and keeps a per-PARTITION top-k per query, so only
+    ``k × partitions`` candidate rows (not corpus × queries) reach the
+    final per-query ranking window.  The corpus itself never shuffles.
+
+    Output: (query_id, vec_id, cosine_sim, rank), deterministic
+    tie-break on neighbor id.
+
+    The WHOLE query set lands on the driver, so the small-|Q| contract
+    is enforced mechanically: more than ``max_query_rows`` queries
+    raises ValueError unless ``force=True``, and so do repeated query
+    ids.  A large query set belongs on :func:`ivf_topk` (a join, not a
+    collect) or split into batches for :func:`ivf_search`."""
+    import numpy as np
+    qids, qmat = _query_batch(queries, "brute_force_topk", query_id_col,
+                              vec_col, max_query_rows, force)
+    qnorm = np.maximum(np.linalg.norm(qmat, axis=1), 1e-12)
+
+    def cosine(pdf):
+        ids = pdf[id_col].to_numpy()
+        c = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        den = np.maximum(np.linalg.norm(c, axis=1), 1e-12)[:, None] \
+            * qnorm[None, :]
+        sims = (c @ qmat.T) / den            # batch × nq
+        return ((j, ids, sims[:, j]) for j in range(len(qids)))
+
+    cand = _partition_topk(corpus.select(F.col(id_col), F.col(vec_col)),
+                           cosine, qids, k, queries.schema[query_id_col],
+                           "cosine_sim", id_col)
+    return _rank(cand, k, query_id_col, id_col)
 
 def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     rnd = random.Random(seed)
     return [[rnd.gauss(0, 1) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def sign_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """LSH bucket id = bit pattern of sign(vec . plane_i).
-
-    Pure-JVM expression form.  NOTE the HOF dot is deliberate: unrolling
-    n_planes×dim multiply-adds into one expression blows the 64 KB
-    codegen method limit and the interpreted fallback is ~3x SLOWER
-    (measured) — for bulk bucketing use ``sign_buckets_udf``, which does
-    the whole batch as one BLAS matmul."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        parr = F.array(*[F.lit(float(x)) for x in p])
-        bit = F.when(dot(vec, parr) >= 0,
-                     F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
-        bucket = bucket.bitwiseOR(bit)
-    return bucket
-
-
 def sign_buckets_udf(n_planes: int, seeds: list[int]):
     """Arrow-vectorized multi-probe bucketing: returns a pandas_udf
     mapping an embedding column to array<long> of one sign-bucket id
     per seed — ALL probes in one ``batch × dim @ dim × total`` BLAS
-    matmul, ~100x less per-element overhead than the interpreted
-    per-plane array folds of ``sign_bucket``.
+    matmul, ~100x less per-element overhead than interpreted
+    per-plane array folds.
 
     Probe i's planes are ``random_hyperplanes(width, n_planes,
     seeds[i])``, drawn inside the worker from the batch's vector
     width — the same ``random.Random`` stream the driver would draw,
     so bucket ids need no driver-side job to learn the width.
-    Bit semantics match ``sign_bucket`` except for dot products within
-    float rounding of zero (BLAS accumulates in a different order) —
+    Bit i of a bucket id is ``vec · plane_i >= 0``, up to dot products
+    within float rounding of zero (BLAS accumulation order) —
     immaterial for LSH bucketing, which is approximate by construction.
     """
     import numpy as np
@@ -372,16 +370,8 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10, *,
         F.col(query_id_col), F.col(vec_col).alias("__qv"),
         F.explode(_ivf_nearest_udf(cmat, n_probe)(F.col(vec_col)))
         .alias("__list"))
-    scored = (assigned.join(F.broadcast(probes), "__list")
-              .withColumn("cosine_sim",
-                          cosine_similarity_udf()(F.col("__cv"),
-                                                  F.col("__qv"))))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine_sim").desc(), F.col(id_col))
-    return (scored.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= k)
-            .select(query_id_col, id_col, "cosine_sim",
-                    F.col("__rn").alias("rank")))
+    return _cosine_rank(assigned.join(F.broadcast(probes), "__list"),
+                        k, query_id_col, id_col)
 
 
 def ivf_index_write(corpus: DataFrame, index_dir: str, *,
@@ -432,13 +422,8 @@ def ivf_index_write(corpus: DataFrame, index_dir: str, *,
         "centroid_id",
         _ivf_nearest_udf(cmat, 1)(F.col(vec_col))[0])
     if pq_m is not None:
-        if train_size is None:
-            train_size = max((1 << pq_nbits) * 32, 4096)
-        sample = (corpus.select(F.col(vec_col).alias("v"))
-                  .limit(train_size).collect())
-        x = np.asarray([r["v"] for r in sample], dtype=np.float64)
-        x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-        books = _pq_train(x, pq_m, pq_nbits, pq_train_iters, seed)
+        books = _pq_books(corpus, vec_col, pq_m, pq_nbits, pq_train_iters,
+                          seed, train_size)
         assigned = pq_encode(assigned, books, vec_col=vec_col)
         brows = [(int(j), int(c), [float(v) for v in books[j, c]])
                  for j in range(books.shape[0])
@@ -591,7 +576,7 @@ def ivf_search(spark, index_dir: str, queries: DataFrame, k: int = 10,
     """Probe a persisted :func:`ivf_index_write` index: per query, the
     ``n_probe`` nearest stored centroids are computed DRIVER-SIDE
     (queries are a small probe batch — same collect contract and
-    guard as :func:`brute_force_topk`), their union becomes a literal
+    guards as :func:`brute_force_topk`), their union becomes a literal
     ``centroid_id IN (...)`` predicate on the vectors table — a
     PARTITION FILTER, so only the probed lists' files are listed and
     read — and exact cosine + a per-query window rank the survivors.
@@ -626,68 +611,41 @@ def ivf_search(spark, index_dir: str, queries: DataFrame, k: int = 10,
     if shortlist is not None and shortlist <= k:
         raise ValueError(f"shortlist ({shortlist}) must exceed k ({k})")
     cmat, cid = _ivf_read_centroids(spark, index_dir)
-    qrows = (queries.select(F.col(query_id_col), F.col(vec_col))
-             .take(max_query_rows + 1))
-    if len(qrows) > max_query_rows:
+    qids, qmat = _query_batch(queries, "ivf_search", query_id_col,
+                              vec_col, max_query_rows)
+    if shortlist is not None and shortlist * len(qids) > max_shortlist_rows:
         raise ValueError(
-            f"ivf_search: queries has > {max_query_rows} rows; this "
-            "operator collects the probe batch to plan the literal "
-            "partition filter — split the query set or raise "
-            "max_query_rows")
-    if not qrows:
-        raise ValueError("ivf_search: queries is empty")
-    if shortlist is not None and shortlist * len(qrows) > max_shortlist_rows:
-        raise ValueError(
-            f"ivf_search: shortlist × nq = {shortlist} × {len(qrows)} "
+            f"ivf_search: shortlist × nq = {shortlist} × {len(qids)} "
             f"exceeds max_shortlist_rows ({max_shortlist_rows}); the "
             "IVFADC rerank collects the shortlist to plan a literal id "
             "pushdown — lower shortlist, split the query batch, or "
             "raise max_shortlist_rows")
-    if len({r[0] for r in qrows}) != len(qrows):
-        # probe sets and ADC LUTs are keyed by query id — duplicates
-        # would silently collapse to one row's probe set and score the
-        # other rows' candidates against the wrong lists
-        raise ValueError(
-            "ivf_search: duplicate query ids in the probe batch — "
-            "de-duplicate or re-key the query set")
-    qmat = np.stack([np.asarray(r[1], dtype=np.float64)
-                     for r in qrows])
     order = np.argsort(-(qmat @ cmat), axis=1, kind="stable")
     n_probe = min(n_probe, cmat.shape[1])
-    probe_sets = {r[0]: {int(cid[j]) for j in row[:n_probe]}
-                  for r, row in zip(qrows, order)}
-    lists = sorted(set().union(*probe_sets.values()))
-    vectors_path = os.path.join(index_dir, "vectors")
-    qtype_field = queries.schema[query_id_col]
-    qtype = qtype_field.dataType.simpleString()
+    probes = [[int(cid[j]) for j in row[:n_probe]] for row in order]
+    # literal IN over the partition column: this is what static
+    # partition pruning needs — only the probed lists' directories are
+    # listed/read
+    vectors = (spark.read.parquet(os.path.join(index_dir, "vectors"))
+               .where(F.col("centroid_id").isin(
+                   sorted(set().union(*probes)))))
+    qfield = queries.schema[query_id_col]
+    qtype = qfield.dataType.simpleString()
+    qvecs = qmat.tolist()
 
     if shortlist is None:
-        probe_rows = [(r[0], int(cid[j]), [float(x) for x in r[1]])
-                      for r, row in zip(qrows, order)
-                      for j in row[:n_probe]]
-        probes = spark.createDataFrame(
-            probe_rows,
+        probe_df = spark.createDataFrame(
+            [(q, c, v) for q, ps, v in zip(qids, probes, qvecs)
+             for c in ps],
             f"{query_id_col} {qtype}, centroid_id int, "
             "__qv array<double>")
-        vectors = (spark.read.parquet(vectors_path)
-                   # literal IN over the partition column: this is what
-                   # static partition pruning needs — only the probed
-                   # lists' directories are listed/read
-                   .where(F.col("centroid_id").isin(lists)))
-        scored = (vectors.select(F.col(id_col), F.col("centroid_id"),
-                                 F.col(vec_col).alias("__cv"))
-                  .join(F.broadcast(probes), "centroid_id")
-                  .withColumn("cosine_sim",
-                              cosine_similarity_udf()(F.col("__cv"),
-                                                      F.col("__qv"))))
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.col("cosine_sim").desc(), F.col(id_col))
         # no dedup needed: each corpus vector lives in exactly one
         # partition and per-query probe lists are distinct centroid ids
-        return (scored.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") <= k)
-                .select(query_id_col, id_col, "cosine_sim",
-                        F.col("__rn").alias("rank")))
+        return _cosine_rank(
+            vectors.select(F.col(id_col), F.col("centroid_id"),
+                           F.col(vec_col).alias("__cv"))
+            .join(F.broadcast(probe_df), "centroid_id"),
+            k, query_id_col, id_col)
 
     # ---- IVFADC path: ADC over the codes column, exact re-rank ----
     books = _ivf_read_pq_books(spark, index_dir)
@@ -695,73 +653,12 @@ def ivf_search(spark, index_dir: str, queries: DataFrame, k: int = 10,
         raise ValueError(
             "ivf_search: shortlist= needs an IVFADC index — rebuild "
             "with ivf_index_write(pq_m=...) to store pq codes")
-    m, ksub, dsub = books.shape
-    qids = [r[0] for r in qrows]
-    qn = qmat / np.maximum(
-        np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
-    luts = np.stack([
-        np.stack([qn[qi, j * dsub:(j + 1) * dsub] @ books[j].T
-                  for j in range(m)])
-        for qi in range(len(qids))])
-    masks = [probe_sets[q] for q in qids]
-    nq = len(qids)
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-    vec_schema = spark.read.parquet(vectors_path).schema
-    out_schema = StructType([
-        StructField(query_id_col, qtype_field.dataType, True),
-        vec_schema[id_col],
-        StructField("adc_score", DoubleType(), True)])
-
-    def scan(batches):
-        parts_s = [[] for _ in range(nq)]
-        parts_i = [[] for _ in range(nq)]
-        j_idx = np.arange(m)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            cids = pdf["centroid_id"].to_numpy()
-            codes = np.stack(pdf["pq_code"].to_numpy()).astype(np.int64)
-            for qi in range(nq):
-                # each query scores only ITS probed lists — the scan
-                # reads the union, the mask keeps IVF semantics exact
-                sel = np.isin(cids, list(masks[qi]))
-                if not sel.any():
-                    continue
-                scores = luts[qi][j_idx[None, :], codes[sel]].sum(axis=1)
-                sids = ids[sel]
-                o = np.lexsort((sids, -scores))[:shortlist]
-                parts_s[qi].append(scores[o])
-                parts_i[qi].append(sids[o])
-        out_q, out_i, out_s = [], [], []
-        for qi in range(nq):
-            if parts_s[qi]:
-                s = np.concatenate(parts_s[qi])
-                i = np.concatenate(parts_i[qi])
-                o = np.lexsort((i, -s))[:shortlist]
-                out_s.append(s[o])
-                out_i.append(i[o])
-                out_q.extend([qids[qi]] * len(o))
-        if out_s:
-            yield pd.DataFrame({query_id_col: out_q,
-                                id_col: np.concatenate(out_i),
-                                "adc_score": np.concatenate(out_s)})
-
-    cand = (spark.read.parquet(vectors_path)
-            .where(F.col("centroid_id").isin(lists))
-            # the ADC scan never touches the float vectors: reading
-            # only (id, centroid_id, pq_code) is the IVFADC payoff
-            .select(F.col(id_col), "centroid_id", "pq_code")
-            .mapInPandas(scan, out_schema))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("adc_score").desc(), F.col(id_col))
-    ranked = (cand.withColumn("__rn", F.row_number().over(w))
-              .where(F.col("__rn") <= shortlist)
-              .select(query_id_col, id_col))
-    if _DEBUG_CAPTURE_PLANS:
-        _LAST_PLANS["adc"] = (
-            ranked._jdf.queryExecution().executedPlan().toString())
+    cand = _partition_topk(
+        # the ADC scan never touches the float vectors: reading only
+        # (id, centroid_id, pq_code) is the IVFADC payoff
+        vectors.select(F.col(id_col), "centroid_id", "pq_code"),
+        _adc_scorer(_adc_luts(qmat, books), id_col, probes),
+        qids, shortlist, qfield, "adc_score", id_col)
     # materialize the bounded shortlist (≤ shortlist × nq rows, both
     # driver-chosen dials) so the rerank scan carries a LITERAL id
     # predicate: partition pruning already narrows the fetch to the
@@ -769,33 +666,21 @@ def ivf_search(spark, index_dir: str, queries: DataFrame, k: int = 10,
     # page skipping WITHIN them — at 100 TB the rerank reads only the
     # shortlisted rows' groups instead of n_probe/nlist of the float
     # corpus (VERDICT r9 item 5)
-    short_rows = ranked.collect()
-    pair_schema = StructType([
-        StructField(query_id_col, qtype_field.dataType, True),
-        vec_schema[id_col]])
+    short_rows = (_rank(cand, shortlist, query_id_col, id_col, "adc_score")
+                  .select(query_id_col, id_col).collect())
+    from pyspark.sql.types import StructField, StructType
     pairs = spark.createDataFrame(
-        [(r[0], r[1]) for r in short_rows], pair_schema)
+        [(r[0], r[1]) for r in short_rows],
+        StructType([StructField(query_id_col, qfield.dataType, True),
+                    vectors.schema[id_col]]))
     short_ids = sorted({r[1] for r in short_rows})
     qv = spark.createDataFrame(
-        [(r[0], [float(x) for x in r[1]]) for r in qrows],
+        list(zip(qids, qvecs)),
         f"{query_id_col} {qtype}, __qv array<double>")
-    fetch = (spark.read.parquet(vectors_path)
-             .where(F.col("centroid_id").isin(lists)))
-    if short_ids:
-        fetch = fetch.where(F.col(id_col).isin(short_ids))
-    fetched = (fetch
-               .select(F.col(id_col), F.col(vec_col).alias("__cv"))
-               .join(F.broadcast(pairs), id_col)
-               .join(F.broadcast(qv), query_id_col)
-               .withColumn("cosine_sim",
-                           cosine_similarity_udf()(F.col("__cv"),
-                                                   F.col("__qv"))))
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine_sim").desc(), F.col(id_col))
-    return (fetched.withColumn("__rn", F.row_number().over(w2))
-            .where(F.col("__rn") <= k)
-            .select(query_id_col, id_col, "cosine_sim",
-                    F.col("__rn").alias("rank")))
+    fetch = vectors.where(F.col(id_col).isin(short_ids)) if short_ids \
+        else vectors
+    return _rerank(fetch, pairs, qv, k, id_col=id_col, vec_col=vec_col,
+                   query_id_col=query_id_col)
 
 
 def _pq_train(x, m: int, nbits: int, n_iter: int, seed: int):
@@ -862,6 +747,60 @@ def pq_encode(corpus: DataFrame, books, *, vec_col: str = "embedding",
     return corpus.withColumn(out_col, encode(F.col(vec_col)))
 
 
+def _pq_books(corpus: DataFrame, vec_col: str, m: int, nbits: int,
+              n_iter: int, seed: int, train_size: int | None):
+    """Sample-and-train PQ codebooks: collect a bounded sample
+    (default ``max(32 · 2^nbits, 4096)`` rows), L2-normalize it (the
+    cosine metric) and run :func:`_pq_train` on it."""
+    import numpy as np
+    if train_size is None:
+        train_size = max((1 << nbits) * 32, 4096)
+    sample = (corpus.select(F.col(vec_col).alias("v"))
+              .limit(train_size).collect())
+    x = np.asarray([r["v"] for r in sample], dtype=np.float64)
+    x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+    return _pq_train(x, m, nbits, n_iter, seed)
+
+
+def _adc_luts(qmat, books):
+    """Per-query ADC lookup tables (nq × m × ksub): each L2-normalized
+    query's subspace slice dotted with that subspace's codebook — the
+    whole ADC trick is that this is computed per QUERY, not per row."""
+    import numpy as np
+    m, _, dsub = books.shape
+    qn = qmat / np.maximum(
+        np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
+    return np.stack([
+        np.stack([qn[qi, j * dsub:(j + 1) * dsub] @ books[j].T
+                  for j in range(m)])
+        for qi in range(len(qn))])
+
+
+def _adc_scorer(luts, id_col: str, probes=None):
+    """:func:`_partition_topk` callback for ADC: a row's score for
+    query q is the sum of q's table entries at the row's ``pq_code``.
+    With ``probes`` (IVFADC: query q's probed list ids) each query
+    scores only rows of its own lists — the scan reads their union,
+    the mask keeps IVF semantics exact."""
+    import numpy as np
+    j_idx = np.arange(luts.shape[1])
+
+    def score(pdf):
+        ids = pdf[id_col].to_numpy()
+        codes = np.stack(pdf["pq_code"].to_numpy()).astype(np.int64)
+        if probes is None:
+            for qi, lut in enumerate(luts):
+                yield qi, ids, lut[j_idx[None, :], codes].sum(axis=1)
+            return
+        cids = pdf["centroid_id"].to_numpy()
+        for qi, lut in enumerate(luts):
+            sel = np.isin(cids, probes[qi])
+            if sel.any():
+                yield (qi, ids[sel],
+                       lut[j_idx[None, :], codes[sel]].sum(axis=1))
+    return score
+
+
 def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 10, *,
             id_col: str = "vec_id", vec_col: str = "embedding",
             query_id_col: str = "query_id", m: int = 8, nbits: int = 8,
@@ -874,11 +813,12 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 10, *,
     subspace dot products ONCE, and scoring a corpus row is ``m``
     table lookups summed — no float vector is ever read in the scan.
 
-    Shape mirrors ``brute_force_topk``'s scale contract: the query set
-    is the small probe batch (ships to every task), the corpus never
-    shuffles, per-partition top-k bounds what reaches the final
-    ranking window to k × partitions rows.  At 100 TB the codes column
-    (m bytes/row) is what the scan reads — persist it once via
+    Shape mirrors ``brute_force_topk``'s scale contract and guards:
+    the query set is the small probe batch (at most
+    ``_MAX_QUERY_ROWS`` rows, unique ids; it ships to every task), the
+    corpus never shuffles, per-partition top-k bounds what reaches the
+    final ranking window to k × partitions rows.  At 100 TB the codes
+    column (m bytes/row) is what the scan reads — persist it once via
     ``pq_encode`` and reuse across query batches.
 
     Output: (query_id, vec_id, adc_score, rank) — adc_score
@@ -893,97 +833,26 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 10, *,
     metric, with ADC deciding only which candidates are considered —
     the standard dial that buys back most of the quantization recall
     for one extra bounded join."""
-    import numpy as np
-    from pyspark.sql.types import DoubleType, StructField, StructType
     if shortlist is not None and shortlist <= k:
         raise ValueError(f"shortlist ({shortlist}) must exceed k ({k})")
-    if train_size is None:
-        train_size = max((1 << nbits) * 32, 4096)
-    sample = (corpus.select(F.col(vec_col).alias("v"))
-              .limit(train_size).collect())
-    x = np.asarray([r["v"] for r in sample], dtype=np.float64)
-    x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-    books = _pq_train(x, m, nbits, train_iters, seed)
-
-    qrows = queries.select(F.col(query_id_col), F.col(vec_col)).collect()
-    if not qrows:
-        raise ValueError("queries is empty")
-    qids = [r[0] for r in qrows]
-    qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    qmat /= np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
-    dsub = qmat.shape[1] // m
-    # luts[q] : m × ksub — the whole ADC trick is that this is computed
-    # per QUERY, not per corpus row
-    luts = np.stack([
-        np.stack([qmat[qi, j * dsub:(j + 1) * dsub] @ books[j].T
-                  for j in range(m)])
-        for qi in range(len(qids))])
-
-    encoded = pq_encode(corpus, books, vec_col=vec_col)
-    out_schema = StructType([
-        queries.schema[query_id_col],
-        corpus.schema[id_col],
-        StructField("adc_score", DoubleType(), True)])
-    nq = len(qids)
+    qids, qmat = _query_batch(queries, "pq_topk", query_id_col, vec_col,
+                              _MAX_QUERY_ROWS)
+    books = _pq_books(corpus, vec_col, m, nbits, train_iters, seed,
+                      train_size)
     adc_k = shortlist if shortlist is not None else k
-
-    def scan(batches):
-        import pandas as pd_
-        parts_s = [[] for _ in range(nq)]
-        parts_i = [[] for _ in range(nq)]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            codes = np.stack(pdf["pq_code"].to_numpy()).astype(np.int64)
-            j_idx = np.arange(m)
-            for qi in range(nq):
-                scores = luts[qi][j_idx[None, :], codes].sum(axis=1)
-                order = np.lexsort((ids, -scores))[:adc_k]
-                parts_s[qi].append(scores[order])
-                parts_i[qi].append(ids[order])
-        out_q, out_i, out_s = [], [], []
-        for qi in range(nq):
-            if parts_s[qi]:
-                s = np.concatenate(parts_s[qi])
-                i = np.concatenate(parts_i[qi])
-                order = np.lexsort((i, -s))[:adc_k]
-                out_s.append(s[order])
-                out_i.append(i[order])
-                out_q.extend([qids[qi]] * len(order))
-        if out_s:
-            yield pd_.DataFrame({query_id_col: out_q,
-                                 id_col: np.concatenate(out_i),
-                                 "adc_score": np.concatenate(out_s)})
-
-    cand = encoded.select(F.col(id_col), "pq_code").mapInPandas(
-        scan, out_schema)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("adc_score").desc(), F.col(id_col))
-    ranked = (cand.withColumn("__rn", F.row_number().over(w))
-              .where(F.col("__rn") <= adc_k))
+    cand = _partition_topk(
+        pq_encode(corpus, books, vec_col=vec_col)
+        .select(F.col(id_col), "pq_code"),
+        _adc_scorer(_adc_luts(qmat, books), id_col),
+        qids, adc_k, queries.schema[query_id_col], "adc_score", id_col)
+    ranked = _rank(cand, adc_k, query_id_col, id_col, "adc_score")
     if shortlist is None:
-        return ranked.select(query_id_col, id_col, "adc_score",
-                             F.col("__rn").alias("rank"))
-    # exact re-rank: fetch the shortlist rows' float vectors (the
-    # shortlist side is queries × shortlist rows — broadcast it, the
-    # corpus side is a semi-joined scan, never a corpus shuffle) and
-    # re-order by true cosine
-    qv = queries.select(F.col(query_id_col),
-                        F.col(vec_col).alias("__qv"))
-    fetched = (corpus.select(F.col(id_col), F.col(vec_col).alias("__cv"))
-               .join(F.broadcast(ranked.select(query_id_col, id_col)),
-                     id_col)
-               .join(F.broadcast(qv), query_id_col)
-               .withColumn("cosine_sim",
-                           cosine_similarity_udf()(F.col("__cv"),
-                                                   F.col("__qv"))))
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine_sim").desc(), F.col(id_col))
-    return (fetched.withColumn("__rn", F.row_number().over(w2))
-            .where(F.col("__rn") <= k)
-            .select(query_id_col, id_col, "cosine_sim",
-                    F.col("__rn").alias("rank")))
+        return ranked
+    return _rerank(corpus, ranked.select(query_id_col, id_col),
+                   queries.select(F.col(query_id_col),
+                                  F.col(vec_col).alias("__qv")),
+                   k, id_col=id_col, vec_col=vec_col,
+                   query_id_col=query_id_col)
 
 
 #: relative half-width of the BLAS-vs-exact-fold disagreement band for
@@ -1418,8 +1287,8 @@ def semantic_dedup(df: DataFrame,
     explicit ``max_cluster_rows`` — pass one to pin the cap.
 
     Determinism contract (the oracle's): the survivor set equals the
-    one the exact double-sequential-fold cosine
-    (:func:`cosine_similarity`) produces, bit for bit — BLAS decides
+    one the exact double-sequential-fold cosine (``d += x·y`` and
+    both squared norms, left to right) produces, bit for bit — BLAS decides
     only pairs farther than ``_EPS`` from the threshold, and every
     pair inside the band is re-decided with that exact fold (see the
     inline proof sketch below).  Returns the surviving rows of ``df``
@@ -1477,7 +1346,7 @@ def semantic_dedup(df: DataFrame,
         # farther than _EPS from the threshold; any pair inside the _EPS
         # band is re-decided with the exact sequential double fold (the
         # loop below performs the identical IEEE op sequence as the
-        # cosine_similarity expression the oracle mirrors).  BLAS error
+        # sequential fold the oracle mirrors).  BLAS error
         # for unit-scale dims is ~1e-15 relative, 6 orders inside _EPS,
         # so blas-decided pairs provably agree with the exact fold and
         # the survivor set is the one the all-exact plan produces.
@@ -1516,8 +1385,7 @@ def semantic_dedup(df: DataFrame,
                 ge = (cos >= tau) & tri
                 band = (np.abs(cos - tau) <= _EPS) & tri
                 for r, j in zip(*np.nonzero(band)):
-                    # exact sequential fold, identical op order to the
-                    # cosine_similarity expression (double acc,
+                    # exact sequential fold (double acc,
                     # left-to-right)
                     i = a + r
                     d = na = nb = 0.0

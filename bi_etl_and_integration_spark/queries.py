@@ -2212,6 +2212,12 @@ def q42(spark, cat):
                        dec_round("cosine_sim", 4).alias("cosine_sim"))
 
 
+STAGE_PREFIXES = ("bf", "bk", "bc")
+"""Name prefixes of the session-staged tables in the warehouse (bf_
+bucketed facts, bk_ bucketed customer/orders, bc_ customer grain).
+bench.py removes dead sessions' ``<prefix>_*`` directories."""
+
+
 def _stage_suffix(spark, sf_dir: str, sources: Sequence[str]) -> str:
     """Staging-table name suffix for session-memoized bucketed tables
     (ADVICE r10, medium): the key must identify the DATA, not just the
@@ -2224,9 +2230,10 @@ def _stage_suffix(spark, sf_dir: str, sources: Sequence[str]) -> str:
     the drop/rmtree below can only ever touch directories this very
     session created (ADVICE r10: a shared warehouse dir must not let
     one session delete files a concurrent session's live table still
-    reads).  Dead sessions leave orphan bf_*/bk_* dirs behind; bench.py
-    GCs those at window start (it owns its window), and they are
-    bounded local scratch otherwise."""
+    reads).  Dead sessions leave orphan ``<prefix>_*`` dirs behind, one
+    prefix per :data:`STAGE_PREFIXES` entry; bench.py GCs those at
+    window start (it owns its window), and they are bounded local
+    scratch otherwise."""
     import hashlib
     real = os.path.realpath(sf_dir)
     h = hashlib.md5(real.encode())

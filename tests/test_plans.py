@@ -419,15 +419,26 @@ def test_ivfadc_scan_prunes_partitions_and_columns(cat, spark, tmp_path):
     sim.ivf_index_write(cat.embeddings, idx, nlist=4, pq_m=4, pq_nbits=4)
     queries = (cat.embeddings.where("vec_id < 2")
                .selectExpr("vec_id AS query_id", "embedding"))
-    sim._DEBUG_CAPTURE_PLANS = True
-    try:
-        rerank_plan = sim.ivf_search(spark, idx, queries, k=3, n_probe=2,
-                                     shortlist=10) \
-            ._jdf.queryExecution().executedPlan().toString()
-        adc_plan = sim._LAST_PLANS["adc"]
-    finally:
-        sim._DEBUG_CAPTURE_PLANS = False
-        sim._LAST_PLANS.clear()
+    # the ADC leg runs (collects) inside ivf_search: read its plan
+    # from the SQL status store, which records every execution's
+    # physical plan with or without the UI
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        # the store is fed by the async listener bus: drain it first
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        runs = store.executionsList()
+        return [runs.apply(i) for i in range(runs.size())]
+
+    before = max((e.executionId() for e in executions()), default=-1)
+    rerank_plan = sim.ivf_search(spark, idx, queries, k=3, n_probe=2,
+                                 shortlist=10) \
+        ._jdf.queryExecution().executedPlan().toString()
+    adc_plans = [e.physicalPlanDescription() for e in executions()
+                 if e.executionId() > before
+                 and "pq_code" in e.physicalPlanDescription()]
+    assert len(adc_plans) == 1, len(adc_plans)
+    adc_plan = adc_plans[0]
     pf = [ln for ln in adc_plan.splitlines() if "PartitionFilters" in ln]
     assert pf and any("centroid_id" in ln for ln in pf), adc_plan[:2000]
     # the ADC candidate scan's ReadSchema must exclude the embedding

@@ -41,7 +41,8 @@ def test_cosine_similarity_known_values(rows):
                ([1.0, 1.0], [1.0, 0.0])],
               "a array<float>, b array<float>")
     out = [r["s"] for r in df.select(
-        sim.cosine_similarity(F.col("a"), F.col("b")).alias("s")).collect()]
+        sim.cosine_similarity_udf()(F.col("a"), F.col("b")).alias("s"))
+        .collect()]
     assert out[0] == 1.0
     assert out[1] == 0.0
     assert out[2] == -1.0
@@ -68,20 +69,40 @@ def test_brute_force_topk_multiple_queries(rows):
 
 def test_brute_force_topk_guards_large_query_sets(rows):
     """The small-|Q| contract is mechanical: beyond max_query_rows the
-    collect/broadcast of the query side raises (both paths) unless
-    force=True — large query sets belong on the LSH/IVF joins."""
+    collect of the query side raises unless force=True — large query
+    sets belong on the LSH/IVF joins."""
     import pytest
     corpus = rows([(1, [1.0, 0.0]), (2, [0.0, 1.0])], EMB)
     queries = rows([(i, [1.0, 0.0]) for i in range(5)],
                    "query_id long, embedding array<float>")
-    for arrow in (True, False):
-        with pytest.raises(ValueError, match="max_query_rows"):
-            sim.brute_force_topk(corpus, queries, k=1, arrow=arrow,
-                                 max_query_rows=3)
+    with pytest.raises(ValueError, match="max_query_rows"):
+        sim.brute_force_topk(corpus, queries, k=1, max_query_rows=3)
     forced = sim.brute_force_topk(corpus, queries, k=1,
                                   max_query_rows=3, force=True).collect()
     assert {r["query_id"] for r in forced} == set(range(5))
     assert all(r["vec_id"] == 1 for r in forced)
+
+
+def test_topk_guards_duplicate_ids_and_query_cap(rows):
+    """Every search collects its query batch through one guard: a
+    repeated query id raises (two vectors under one id used to merge
+    into one top-k list, silently dropping one query's neighbours),
+    and pq_topk enforces the same max_query_rows cap as the others."""
+    import pytest
+    corpus = rows([(i, [math.cos(i), math.sin(i)]) for i in range(16)],
+                  EMB)
+    qschema = "query_id long, embedding array<float>"
+    dup = rows([(0, [1.0, 0.0]), (0, [0.0, 1.0])], qschema)
+    with pytest.raises(ValueError, match="duplicate query ids"):
+        sim.brute_force_topk(corpus, dup, k=3)
+    with pytest.raises(ValueError, match="duplicate query ids"):
+        sim.brute_force_topk(corpus, dup, k=3, force=True)
+    with pytest.raises(ValueError, match="duplicate query ids"):
+        sim.pq_topk(corpus, dup, k=3, m=2, nbits=2)
+    big = rows([(i, [1.0, 0.0]) for i in range(sim._MAX_QUERY_ROWS + 1)],
+               qschema)
+    with pytest.raises(ValueError, match="max_query_rows"):
+        sim.pq_topk(corpus, big, k=3, m=2, nbits=2)
 
 
 def test_ivf_topk_recovers_exact_match(rows):
@@ -96,20 +117,24 @@ def test_ivf_topk_recovers_exact_match(rows):
 
 
 def test_sign_buckets_udf_matches_expression_form(rows):
+    """Reference: a test-local numpy sign-bit fold — bit i of a bucket
+    id is set iff the vector's dot with random_hyperplanes plane i is
+    >= 0."""
+    import numpy as np
     vecs = [(i, [((i * 7 + j * 3) % 11) - 5.0 for j in range(8)])
             for i in range(20)]
     df = rows(vecs, EMB)
-    planes_a = sim.random_hyperplanes(8, 5, seed=1)
-    planes_b = sim.random_hyperplanes(8, 5, seed=2)
-    expr = df.select(
-        "vec_id",
-        sim.sign_bucket(F.col("embedding"), planes_a).alias("a"),
-        sim.sign_bucket(F.col("embedding"), planes_b).alias("b"))
+
+    def bucket(v, planes):
+        bits = (np.asarray(planes) @ np.asarray(v)) >= 0
+        return int(bits @ (1 << np.arange(len(planes))))
+
+    planes = [sim.random_hyperplanes(8, 5, seed=s) for s in (1, 2)]
     udf = df.select(
         "vec_id",
         sim.sign_buckets_udf(5, [1, 2])(F.col("embedding"))
         .alias("ab"))
-    want = {r["vec_id"]: (r["a"], r["b"]) for r in expr.collect()}
+    want = {i: tuple(bucket(v, p) for p in planes) for i, v in vecs}
     got = {r["vec_id"]: tuple(r["ab"]) for r in udf.collect()}
     # fixture dots are far from zero, so BLAS order can't flip a sign
     assert got == want

@@ -432,3 +432,60 @@ def test_persist_only_through_cached():
                 and isinstance(n.func, ast.Attribute)
                 and n.func.attr in ("persist", "cache")]
     assert not raw, f"raw persist/cache calls (use cached()): {raw}"
+
+
+def test_staged_table_prefixes_are_declared():
+    """bench.py removes dead sessions' staged tables by the prefixes in
+    ``queries.STAGE_PREFIXES``: every staged-table prefix queries.py
+    names must be listed there, or its directories pile up in the
+    warehouse."""
+    import ast
+
+    from bi_etl_and_integration_spark.queries import STAGE_PREFIXES
+
+    with open(os.path.join(ROOT, "bi_etl_and_integration_spark",
+                           "queries.py")) as f:
+        tree = ast.parse(f.read())
+    used = set()
+    for n in ast.walk(tree):
+        # _staged_tables(spark, cat, "<prefix>", specs)
+        if (isinstance(n, ast.Call)
+                and getattr(n.func, "id", None) == "_staged_tables"):
+            used.add(n.args[2].value)
+        # f"<prefix>_<table>_{sfx}": a name on the _stage_suffix suffix
+        if (isinstance(n, ast.JoinedStr)
+                and isinstance(n.values[0], ast.Constant)
+                and any(isinstance(v, ast.FormattedValue)
+                        and getattr(v.value, "id", None) == "sfx"
+                        for v in n.values)):
+            used.add(n.values[0].value.split("_")[0])
+    assert used and used <= set(STAGE_PREFIXES), (used, STAGE_PREFIXES)
+
+
+def test_update_baseline_refuses_spark_only_sidecar(tmp_path, monkeypatch):
+    """A BENCH_DETAIL.json without a ``duckdb`` map (any plain
+    ``python bench.py`` run) makes tools/update_baseline.py exit
+    non-zero before it writes BASELINE.md, instead of blanking table
+    3's DuckDB column and ratios."""
+    import importlib.util
+    import json
+    import shutil
+
+    import pytest
+
+    spec = importlib.util.spec_from_file_location(
+        "update_baseline", os.path.join(ROOT, "tools", "update_baseline.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    with open(os.path.join(ROOT, "BENCH_DETAIL.json")) as f:
+        det = json.load(f)
+    det.pop("duckdb", None)
+    (tmp_path / "BENCH_DETAIL.json").write_text(json.dumps(det))
+    for name in ("BENCH_SF1.json", "BASELINE.md"):
+        shutil.copy(os.path.join(ROOT, name), tmp_path / name)
+    before = (tmp_path / "BASELINE.md").read_text()
+    monkeypatch.setattr(mod, "ROOT", str(tmp_path))
+    with pytest.raises(SystemExit) as exc:
+        mod.main()
+    assert exc.value.code and "duckdb" in str(exc.value.code)
+    assert (tmp_path / "BASELINE.md").read_text() == before

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -173,6 +174,11 @@ def growth_table(det: dict, sf1: dict, label: str = "sf1/sf0.1") -> str:
 
 def main() -> None:
     det = json.load(open(os.path.join(ROOT, "BENCH_DETAIL.json")))
+    if not det.get("duckdb"):
+        # a Spark-only sidecar would blank table 3's DuckDB column,
+        # every ratio and the TOTAL comparison
+        sys.exit("update_baseline: BENCH_DETAIL.json has no 'duckdb' "
+                 "map; regenerate it with BENCH_DUCKDB=1 python bench.py")
     sf1 = json.load(open(os.path.join(ROOT, "BENCH_SF1.json")))
     base = open(os.path.join(ROOT, "BASELINE.md")).read()
     head = base.split("## Table 3 ")[0].rstrip()
