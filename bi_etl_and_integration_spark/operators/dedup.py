@@ -1,19 +1,32 @@
 """Deduplication operators for training-data pipelines
 (beyond-reference surface; BASELINE.json north star).
 
-Five regimes, all expressed as shuffle-bounded DataFrame plans:
+Seven regimes, all expressed as shuffle-bounded DataFrame plans:
 
-  exact_dedup      hash-groupBy on a normalized content key (1 shuffle)
-  minhash_lsh      shingle -> minhash signature -> band buckets ->
-                   bucket-join candidate pairs -> Jaccard verify.
-                   The band/bucket join is the ONLY pair generator; no
-                   O(n^2) stage exists, so it survives 100 TB corpora.
-  simhash          64-bit simhash from token hashes; near-dups =
-                   Hamming distance <= k via band equality
-  ngram_jaccard    word n-gram shingle sets + exact Jaccard on blocked
-                   candidate pairs
-  embedding_dedup  cosine near-dup over an embedding column via
-                   LSH-ish bucketing (sign of random projections)
+  exact_dedup        hash-groupBy on a normalized content key (1 shuffle)
+  minhash_lsh        shingle -> minhash signature -> band buckets ->
+                     bucket-join candidate pairs -> Jaccard verify.
+                     The band/bucket join is the ONLY pair generator; no
+                     O(n^2) stage exists, so it survives 100 TB corpora.
+                     minhash_index / minhash_lookup split it into a
+                     frozen-corpus index and a per-batch probe
+  exact_jaccard      prefix-filtered set-similarity join: ALL pairs at
+                     Jaccard >= t, complete (the LSH recall reference)
+  ngram_jaccard      word n-gram shingle sets + exact Jaccard on blocked
+                     candidate pairs
+  simhash            64-bit simhash from token hashes; near-dups =
+                     Hamming distance <= k via band equality
+  embedding_dedup    cosine near-dup over an embedding column via
+                     sign-of-random-projection buckets (multi-probe)
+  substring_dedup    exact repeated-substring removal (ExactSubstr) at
+                     window granularity
+
+The four Jaccard generators differ only in how they propose candidate
+pairs (band buckets, prefix keys, a block key); all of them verify on
+one shingle-set base (:func:`_shingle_sets`) with one exact Jaccard
+(:func:`_jaccard_pairs`) — the candidate-then-verify set-similarity
+join (Vernica et al., SIGMOD 2010).  :func:`dedup_canonicalize` turns
+any generator's pairs into a per-document survivor.
 
 Minhash math: h_i(doc) = min over shingles of ((a_i*x + b_i) mod p);
 row-wise via higher-order functions — signatures never leave the JVM.
@@ -32,11 +45,6 @@ from bi_etl_and_integration_spark.operators.relational import (
     source_bytes, spread_for_compute)
 
 _P = 2_147_483_647  # Mersenne prime 2^31-1 for the minhash hash family
-
-
-# shared scale-adaptive input spread (defined with the relational
-# operators; used here before every CPU-heavy shingle/window pass)
-_spread_for_compute = spread_for_compute
 
 #: source-size window inside which a band join side gets the static
 #: SHUFFLE_HASH hint (see _shj_if_big).  Below the floor AQE's
@@ -140,6 +148,46 @@ def hashed_shingles(text: Column, n: int = 3) -> Column:
     return F.array_distinct(F.when(F.size(th) < n, whole).otherwise(hs))
 
 
+def _shingle_sets(df: DataFrame, text_col: str, id_col: str, n: int,
+                  *extra: Column) -> DataFrame:
+    """(id, __hs) hashed shingle sets — the one base every Jaccard pair
+    generator bands, blocks and verifies on.  The input is spread
+    first: shingling is the CPU-heavy pass.  ``extra`` columns (a
+    block key, a side tag) ride along in the same projection."""
+    return (spread_for_compute(df, id_col)
+            .select(F.col(id_col).alias("id"),
+                    hashed_shingles(F.col(text_col), n).alias("__hs"),
+                    *extra))
+
+
+def _jaccard_pairs(pairs: DataFrame, sa: str, sb: str,
+                   threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard_sim) for the rows of ``pairs`` whose shingle
+    sets ``sa``/``sb`` reach Jaccard >= ``threshold`` — tested on the
+    UNROUNDED value, emitted rounded to 4 decimals.  |A∪B| by
+    inclusion-exclusion: shingle arrays are distinct and null-free, so
+    this is exact and skips materializing the merged array per pair."""
+    inter = F.size(F.array_intersect(F.col(sa), F.col(sb)))
+    union = F.size(sa) + F.size(sb) - inter
+    jac = (inter / F.greatest(union, F.lit(1))).cast("double")
+    return pairs.where(jac >= threshold).select(
+        "id_a", "id_b", F.round(jac, 4).alias("jaccard_sim"))
+
+
+def _verify_candidates(cand: DataFrame, sets_a: DataFrame,
+                       sets_b: DataFrame, threshold: float) -> DataFrame:
+    """Exact verify of (id_a, id_b) candidates: a pair proposed by
+    several band buckets or prefix keys is verified once
+    (dropDuplicates), then each side's (id, __hs) shingle set joins in
+    for :func:`_jaccard_pairs`."""
+    pairs = (cand.dropDuplicates(["id_a", "id_b"])
+             .join(sets_a.select(F.col("id").alias("id_a"),
+                                 F.col("__hs").alias("sh_a")), "id_a")
+             .join(sets_b.select(F.col("id").alias("id_b"),
+                                 F.col("__hs").alias("sh_b")), "id_b"))
+    return _jaccard_pairs(pairs, "sh_a", "sh_b", threshold)
+
+
 def _minhash_banded(base: DataFrame, *, num_hashes: int, bands: int,
                     seed: int, n_probes: int) -> DataFrame:
     """(id, band, bucket) LSH band keys from a (id, __hs) shingle table.
@@ -215,10 +263,8 @@ def minhash_lsh_dedup(df: DataFrame, text_col: str = "text",
        multi-probe the band windows could straddle probe families);
        callers with odd combinations must pick num_hashes = r x bands.
     """
-    base = cached(_spread_for_compute(df, id_col)
-                  .select(F.col(id_col).alias("id"),
-                          hashed_shingles(F.col(text_col), shingle_n)
-                          .alias("__hs")))  # consumed 3x (sig + verify)
+    # consumed 3x (signature + both verify sides)
+    base = cached(_shingle_sets(df, text_col, id_col, shingle_n))
     banded = _minhash_banded(base, num_hashes=num_hashes, bands=bands,
                              seed=seed, n_probes=n_probes)
     # join strategy: broadcast for small corpora (AQE), shuffled-hash
@@ -229,34 +275,16 @@ def minhash_lsh_dedup(df: DataFrame, text_col: str = "text",
     cand = (a.join(b, (F.col("a.band") == F.col("b.band")) &
                    (F.col("a.bucket") == F.col("b.bucket")) &
                    (F.col("a.id") < F.col("b.id")))
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"]))
-    verify = (cand
-              .join(base.select(F.col("id").alias("id_a"),
-                                F.col("__hs").alias("sh_a")), "id_a")
-              .join(base.select(F.col("id").alias("id_b"),
-                                F.col("__hs").alias("sh_b")), "id_b"))
-    # |A∪B| by inclusion-exclusion: shingle arrays are distinct and
-    # null-free, so this is exact — and it skips materializing the
-    # merged array per candidate pair (array_union builds one; the
-    # verify only ever needs its size)
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (verify.withColumn("jaccard_sim",
-                              (inter / F.greatest(union, F.lit(1)))
-                              .cast("double"))
-            .where(F.col("jaccard_sim") >= jaccard_threshold)
-            .select("id_a", "id_b", F.round("jaccard_sim", 4)
-                    .alias("jaccard_sim")))
+            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")))
+    return _verify_candidates(cand, base, base, jaccard_threshold)
 
 
 class MinhashParams(NamedTuple):
-    """Banding parameters shared by a :class:`MinhashIndex` and every
-    :func:`minhash_lookup` probe against it.  A mismatch doesn't
-    error at the join — it silently yields a near-empty candidate set
-    (different seeded families almost never collide), so recall
-    collapses to ~0; carrying the params inside the index makes the
-    contract mechanically checkable."""
+    """Banding parameters of a :class:`MinhashIndex`.  Every
+    :func:`minhash_lookup` probe and :func:`minhash_index_append`
+    batch is banded with the index's own params: different seeded
+    families almost never collide, so a mismatch would not error at
+    the join but silently collapse recall to ~0."""
     num_hashes: int = 64
     bands: int = 16
     shingle_n: int = 3
@@ -270,8 +298,7 @@ class MinhashIndex(NamedTuple):
     verify, ``params`` = the banding family that produced them.
     Reconstructable from persisted parquet:
     ``MinhashIndex(spark.read.parquet(b), spark.read.parquet(s),
-    MinhashParams(...))``.  Unpacks as a plain tuple for legacy
-    two-field callers (``buckets, shingles, _ = index``)."""
+    MinhashParams(...))``."""
     buckets: DataFrame
     shingles: DataFrame
     params: MinhashParams
@@ -292,14 +319,10 @@ def minhash_index(df: DataFrame, text_col: str = "text",
     where re-running the self-join over corpus+batch would re-pay the
     full corpus shingle+signature cost per batch.
 
-    :func:`minhash_lookup` validates its banding arguments against
-    ``params`` and raises on mismatch (a silent mismatch would
-    collapse recall to ~0, not error).  Fold a deduped batch's
+    :func:`minhash_lookup` bands each probe batch with ``params``, so
+    a lookup cannot drift from its index.  Fold a deduped batch's
     survivors back in with :func:`minhash_index_append`."""
-    base = (_spread_for_compute(df, id_col)
-            .select(F.col(id_col).alias("id"),
-                    hashed_shingles(F.col(text_col), shingle_n)
-                    .alias("__hs")))
+    base = _shingle_sets(df, text_col, id_col, shingle_n)
     params = MinhashParams(num_hashes, bands, shingle_n, seed, n_probes)
     buckets = _minhash_banded(base, num_hashes=num_hashes, bands=bands,
                               seed=seed, n_probes=n_probes)
@@ -323,89 +346,47 @@ def minhash_index_append(index: MinhashIndex, df: DataFrame,
     equal to a fresh full rebuild: band keys are per-document
     (signature mins over the doc's own shingles — corpus-independent),
     so union-of-bandings == banding-of-union."""
-    p = index.params
-    base = (_spread_for_compute(df, id_col)
-            .select(F.col(id_col).alias("id"),
-                    hashed_shingles(F.col(text_col), p.shingle_n)
-                    .alias("__hs")))
-    buckets = _minhash_banded(base, num_hashes=p.num_hashes,
-                              bands=p.bands, seed=p.seed,
-                              n_probes=p.n_probes)
-    return MinhashIndex(index.buckets.unionByName(buckets),
-                        index.shingles.unionByName(base), p)
+    new = minhash_index(df, text_col, id_col, **index.params._asdict())
+    return MinhashIndex(index.buckets.unionByName(new.buckets),
+                        index.shingles.unionByName(new.shingles),
+                        index.params)
 
 
 def minhash_lookup(df: DataFrame, index: MinhashIndex,
                    text_col: str = "text", id_col: str = "doc_id", *,
-                   num_hashes: int = 64, bands: int = 16,
-                   shingle_n: int = 3, jaccard_threshold: float = 0.8,
-                   seed: int = 42, n_probes: int = 1) -> DataFrame:
+                   jaccard_threshold: float = 0.8) -> DataFrame:
     """Incremental near-dup: probe a NEW batch against a
     :func:`minhash_index` — returns (id_a = batch id, id_b = corpus
     id, jaccard_sim >= threshold).
 
-    Plan shape: the batch is banded with the index's seeded families
-    (one agg over batch shingles only), candidates come from the
-    (band, bucket) equi-join against the index's bucket table — the
-    corpus text is never touched; the exact-Jaccard verify joins the
-    index's stored shingle sets for candidate corpus ids only.  Batch
-    cost is O(batch + matching buckets), independent of corpus size
-    beyond the join — the property that makes rolling dedup of a
-    growing 100 TB corpus affordable.  Recall is the self-join
-    S-curve (same families), certified by x43 against the exact
-    two-table prefix join.
-
-    Raises ValueError if the banding arguments disagree with the
-    index's stored :class:`MinhashParams` — a mismatch would not
-    error at the join, it would silently yield a near-empty candidate
-    set (recall ~0).  A legacy plain ``(buckets, shingles)`` tuple is
-    accepted without validation."""
-    if len(index) >= 3 and index[2] is not None:
-        stored, given = index[2], MinhashParams(
-            num_hashes, bands, shingle_n, seed, n_probes)
-        if stored != given:
-            raise ValueError(
-                "minhash_lookup params do not match the index they "
-                f"probe: index={stored}, lookup={given} — a mismatch "
-                "silently collapses recall to ~0; pass the index's "
-                "params (or rely on its defaults)")
-    idx_buckets, idx_shingles = index[0], index[1]
-    base = cached(_spread_for_compute(df, id_col)
-                  .select(F.col(id_col).alias("id"),
-                          hashed_shingles(F.col(text_col), shingle_n)
-                          .alias("__hs")))  # banding + verify
-    banded = _minhash_banded(base, num_hashes=num_hashes, bands=bands,
-                             seed=seed, n_probes=n_probes)
+    Plan shape: the batch is banded with the index's own
+    :class:`MinhashParams` (one agg over batch shingles only),
+    candidates come from the (band, bucket) equi-join against the
+    index's bucket table — the corpus text is never touched; the
+    exact-Jaccard verify joins the index's stored shingle sets for
+    candidate corpus ids only.  Batch cost is O(batch + matching
+    buckets), independent of corpus size beyond the join — the
+    property that makes rolling dedup of a growing 100 TB corpus
+    affordable.  Recall is the self-join S-curve (same families),
+    certified by x43 against the exact two-table prefix join."""
+    p = index.params
+    # consumed twice (banding + verify)
+    base = cached(_shingle_sets(df, text_col, id_col, p.shingle_n))
+    banded = _minhash_banded(base, num_hashes=p.num_hashes, bands=p.bands,
+                             seed=p.seed, n_probes=p.n_probes)
     # join strategy: a genuinely small probe batch stays unhinted
     # (AQE broadcasts it — the rolling-crawl shape); above the
     # crossover (x43's certification probes HALF the corpus) the
     # banded batch takes the same SHUFFLE_HASH hint as the self-join,
     # else AQE broadcasts a multi-million-row side (see _shj_if_big)
     cand = (_shj_if_big(df, banded).alias("a")
-            .join(idx_buckets.alias("b"),
+            .join(index.buckets.alias("b"),
                   (F.col("a.band") == F.col("b.band")) &
                   (F.col("a.bucket") == F.col("b.bucket")))
             .select(F.col("a.id").alias("id_a"),
-                    F.col("b.id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"]))
-    verify = (cand
-              .join(base.select(F.col("id").alias("id_a"),
-                                F.col("__hs").alias("sh_a")), "id_a")
-              .join(idx_shingles.select(F.col("id").alias("id_b"),
-                                        F.col("__hs").alias("sh_b")),
-                    "id_b"))
-    # |A∪B| by inclusion-exclusion: shingle arrays are distinct and
-    # null-free, so this is exact — and it skips materializing the
-    # merged array per candidate pair (array_union builds one; the
-    # verify only ever needs its size)
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (verify.withColumn("jaccard_sim",
-                              (inter / F.greatest(union, F.lit(1)))
-                              .cast("double"))
-            .where(F.col("jaccard_sim") >= jaccard_threshold)
-            .select("id_a", "id_b", F.round("jaccard_sim", 4)
-                    .alias("jaccard_sim")))
+                    F.col("b.id").alias("id_b")))
+    return _verify_candidates(cand, base, index.shingles,
+                              jaccard_threshold)
 
 
 def _bit_masks(bits: int) -> list[int]:
@@ -528,22 +509,16 @@ def ngram_jaccard_dedup(df: DataFrame, text_col: str = "text",
     variant of minhash_lsh_dedup for modest corpora / audits)."""
     blk = block if block is not None else F.xxhash64(
         F.slice(tokenize(F.col(text_col)), 1, n))
-    base = cached(_spread_for_compute(df, id_col)
-                  .select(F.col(id_col).alias("id"),
-                          hashed_shingles(F.col(text_col), n).alias("sh"),
-                          blk.alias("blk")))  # both sides of self-join
+    # both sides of the self-join
+    base = cached(_shingle_sets(df, text_col, id_col, n, blk.alias("blk")))
     a, b = base.alias("a"), base.alias("b")
     cand = a.join(b, (F.col("a.blk") == F.col("b.blk")) &
                   (F.col("a.id") < F.col("b.id")))
-    # inclusion-exclusion union size (arrays distinct + null-free):
-    # exact, and skips materializing the merged array per pair
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    union = F.size("a.sh") + F.size("b.sh") - inter
-    return (cand.select(F.col("a.id").alias("id_a"),
-                        F.col("b.id").alias("id_b"),
-                        F.round((inter / F.greatest(union, F.lit(1)))
-                                .cast("double"), 4).alias("jaccard_sim"))
-            .where(F.col("jaccard_sim") >= threshold))
+    return _jaccard_pairs(
+        cand.select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+                    F.col("a.__hs").alias("sh_a"),
+                    F.col("b.__hs").alias("sh_b")),
+        "sh_a", "sh_b", threshold)
 
 
 _CEIL_EPS = 1e-6
@@ -608,16 +583,10 @@ def exact_jaccard_join(df: DataFrame, text_col: str = "text",
     """
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    base = (_spread_for_compute(df, id_col)
-            .select(F.col(id_col).alias("id"),
-                    hashed_shingles(F.col(text_col), n).alias("__hs"),
-                    F.lit(0).alias("__side")))
+    base = _shingle_sets(df, text_col, id_col, n, F.lit(0).alias("__side"))
     if other is not None:
-        base = base.unionByName(
-            _spread_for_compute(other, id_col)
-            .select(F.col(id_col).alias("id"),
-                    hashed_shingles(F.col(text_col), n).alias("__hs"),
-                    F.lit(1).alias("__side")))
+        base = base.unionByName(_shingle_sets(
+            other, text_col, id_col, n, F.lit(1).alias("__side")))
     ex = base.select("id", "__side", F.explode("__hs").alias("__h"))
     freq = ex.groupBy("__h").agg(F.count(F.lit(1)).alias("__df"))
     # canonical order (df asc, shingle asc) packed into ONE sortable
@@ -668,30 +637,18 @@ def exact_jaccard_join(df: DataFrame, text_col: str = "text",
         pair_pred = pair_pred & (F.col("a.id") < F.col("b.id"))
     cand = (a.join(b, pair_pred)
             .select(F.col("a.id").alias("id_a"),
-                    F.col("b.id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"]))
-    sets_a = (ranked.where(F.col("__side") == 0)
-              .select(F.col("id").alias("id_a"),
-                      F.col("__sorted").alias("__sa")))
-    sets_b = (ranked.where(F.col("__side")
-                           == (1 if other is not None else 0))
-              .select(F.col("id").alias("id_b"),
-                      F.col("__sorted").alias("__sb")))
-    verify = cand.join(sets_a, "id_a").join(sets_b, "id_b")
-    # inclusion-exclusion union size (packed shingle arrays are
-    # per-doc distinct + null-free): exact, and skips materializing
-    # the merged array for every candidate pair
-    inter = F.size(F.array_intersect("__sa", "__sb"))
-    union = F.size("__sa") + F.size("__sb") - inter
-    jac = (inter / F.greatest(union, F.lit(1))).cast("double")
-    return (verify.where(jac >= threshold)
-            .select("id_a", "id_b",
-                    F.round(jac, 4).alias("jaccard_sim")))
+                    F.col("b.id").alias("id_b")))
+    # the packed (df, shingle) keys are per-doc distinct like __hs
+    sets = ranked.select("id", "__side", F.col("__sorted").alias("__hs"))
+    return _verify_candidates(
+        cand, sets.where(F.col("__side") == 0),
+        sets.where(F.col("__side") == (1 if other is not None else 0)),
+        threshold)
 
 
 def embedding_dedup(df: DataFrame, vec_col: str = "embedding",
                     id_col: str = "vec_id", *, threshold: float = 0.95,
-                    n_planes: int = 8, seed: int = 42,
+                    n_planes: int = 8, n_probes: int = 1, seed: int = 42,
                     max_bucket_rows: int | None = None) -> DataFrame:
     """Embedding cosine near-dup: bucket by sign-of-random-projection
     (n_planes hyperplanes -> 2^n buckets), then verify cosine INSIDE
@@ -700,21 +657,33 @@ def embedding_dedup(df: DataFrame, vec_col: str = "embedding",
     BLAS, and per-bucket memory is O(bucket² ) — ``n_planes`` is the
     dial that bounds bucket size (add planes until the hottest bucket's
     pair count fits an executor).  A pair-join + per-pair interpreted
-    cosine was ~10x slower at equal semantics.
-    Exactness note: random-projection LSH is approximate; near-dups
-    straddling a hyperplane need multi-probe (repeat with different
-    seeds and union) — documented recall/cost dial.  The hyperplanes
-    are drawn inside the Arrow worker from the batch's vector width,
-    so building the plan launches no Spark job."""
+    cosine was ~10x slower at equal semantics.  The hyperplanes are
+    drawn inside the Arrow worker from the batch's vector width, so
+    building the plan launches no Spark job.
+
+    ``n_probes`` is the recall dial: random-projection LSH is
+    approximate, and a pair at cosine s lands in the same bucket of
+    one hyperplane draw with p(s) = (1 - acos(s)/pi)^n_planes, so k
+    independent draws (probe i seeded ``seed + 7919*i``; probe 0 is the
+    single-probe draw) lift recall to 1 - (1-p)^k at k× verify cost.
+    All probes run in ONE plan: each row posexplodes its bucket ids,
+    one shuffle on (probe, bucket) feeds one BLAS verify stage — k×
+    shuffle ROWS but a single stage barrier, not k sequential job
+    waves.  With more than one probe a final dropDuplicates collapses
+    pairs several probes found (cosine is deterministic per pair, so
+    the copies are identical rows)."""
     from bi_etl_and_integration_spark.operators.similarity import (
         sign_buckets_udf)
-    base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-                     sign_buckets_udf(n_planes, [seed])(F.col(vec_col))[0]
-                     .alias("bkt"))
+    buckets = sign_buckets_udf(
+        n_planes, [seed + 7919 * i for i in range(n_probes)])(F.col(vec_col))
+    probed = df.select(F.col(id_col).alias("id"),
+                       F.col(vec_col).alias("v"),
+                       F.posexplode(buckets).alias("probe", "bkt"))
     verify, out_schema = _cosine_verify(
         df, id_col, threshold,
         max_bucket_rows=max_bucket_rows or _MAX_BUCKET_ROWS)
-    return base.groupBy("bkt").applyInPandas(verify, out_schema)
+    pairs = probed.groupBy("probe", "bkt").applyInPandas(verify, out_schema)
+    return pairs if n_probes == 1 else pairs.dropDuplicates(["id_a", "id_b"])
 
 
 _VERIFY_BLOCK = 4096          # gram-matrix row block: O(block x n) mem
@@ -773,38 +742,6 @@ def _cosine_verify(df: DataFrame, id_col: str, threshold: float,
                              "cosine_sim": np.concatenate(out_s)})
 
     return verify, out_schema
-
-
-def embedding_dedup_multiprobe(df: DataFrame, vec_col: str = "embedding",
-                               id_col: str = "vec_id", *,
-                               threshold: float = 0.95, n_planes: int = 8,
-                               n_probes: int = 3, seed: int = 42,
-                               max_bucket_rows: int | None = None
-                               ) -> DataFrame:
-    """Multi-probe random-projection near-dup: union verified pairs over
-    ``n_probes`` independent hyperplane draws, then pair-dedup.
-
-    The recall dial documented on ``embedding_dedup`` made real: a pair
-    at cosine s lands in the same bucket of one probe with
-    p(s) = (1 - acos(s)/pi)^n_planes, so k independent probes lift
-    recall to 1 - (1-p)^k at k× verify cost.  All probes run in ONE
-    plan: each row posexplodes its ``n_probes`` bucket ids, one shuffle
-    on (probe, bucket) feeds one BLAS verify stage — k× shuffle ROWS
-    but a single stage barrier, not k sequential job waves.  The final
-    dropDuplicates collapses pairs several probes both found (cosine is
-    deterministic per pair, so the copies are identical rows)."""
-    from bi_etl_and_integration_spark.operators.similarity import (
-        sign_buckets_udf)
-    buckets = sign_buckets_udf(
-        n_planes, [seed + 7919 * i for i in range(n_probes)])(F.col(vec_col))
-    probed = df.select(F.col(id_col).alias("id"),
-                       F.col(vec_col).alias("v"),
-                       F.posexplode(buckets).alias("probe", "bkt"))
-    verify, out_schema = _cosine_verify(
-        df, id_col, threshold,
-        max_bucket_rows=max_bucket_rows or _MAX_BUCKET_ROWS)
-    return (probed.groupBy("probe", "bkt").applyInPandas(verify, out_schema)
-            .dropDuplicates(["id_a", "id_b"]))
 
 
 def dedup_canonicalize(df: DataFrame, pairs: DataFrame, *,
@@ -919,7 +856,7 @@ def substring_dedup(df: DataFrame, text_col: str = "text",
     t, i = text_col, id_col
     # window hashing is the CPU-heavy pass (len/stride substrings +
     # xxhash each): spread it when the source can't split (guide §2.5)
-    src = _spread_for_compute(df.select(i, t), i)
+    src = spread_for_compute(df.select(i, t), i)
     wins = (src.select(
         F.col(i),
         F.explode(F.expr(

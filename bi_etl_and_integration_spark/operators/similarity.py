@@ -360,13 +360,25 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10, *,
     At scale the assignment output is written partitioned by
     ``centroid_id`` so a probe reads only matching partitions —
     :func:`ivf_index_write` / :func:`ivf_search` are that persisted
-    form (partition pruning does the fan-out reduction)."""
+    form (partition pruning does the fan-out reduction).
+
+    The queries are joined, not collected, so the duplicate-id check
+    of the collecting searches runs inside the plan: a repeated query
+    id fails the query when it executes instead of silently merging
+    two queries' probe sets and top-k lists."""
     cmat = _ivf_train(corpus, vec_col, nlist, seed, train_iters,
                       train_size)
     assigned = corpus.select(
         F.col(id_col), F.col(vec_col).alias("__cv"),
         _ivf_nearest_udf(cmat, 1)(F.col(vec_col))[0].alias("__list"))
-    probes = queries.select(
+    repeated = F.count(F.lit(1)).over(Window.partitionBy(query_id_col)) > 1
+    checked = queries.select(
+        F.col(query_id_col),
+        F.when(repeated, F.raise_error(F.lit(
+            "ivf_topk: duplicate query ids in the query set — "
+            "de-duplicate or re-key the query set")))
+        .otherwise(F.col(vec_col)).alias(vec_col))
+    probes = checked.select(
         F.col(query_id_col), F.col(vec_col).alias("__qv"),
         F.explode(_ivf_nearest_udf(cmat, n_probe)(F.col(vec_col)))
         .alias("__list"))

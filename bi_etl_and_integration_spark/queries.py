@@ -2647,6 +2647,21 @@ _EXACT_JACCARD_ORACLE = (
     ">= 0.5 ORDER BY id_a, id_b")
 
 
+def _recall_band(exact: DataFrame, found: DataFrame, keys: list,
+                 min_recall: float) -> DataFrame:
+    """``exact`` plus a ``recall_in_band`` column, true on every row iff
+    ``found`` covers at least ``min_recall`` of ``exact``'s ``keys``:
+    one left join, one count, broadcast back onto the exact rows."""
+    stats = (exact.select(*keys)
+             .join(found.select(*keys, F.lit(1).alias("__hit")), keys,
+                   "left")
+             .agg(F.count(F.lit(1)).alias("__n"),
+                  F.count("__hit").alias("__c")))
+    band = F.col("__c") >= F.lit(min_recall) * F.col("__n")
+    return exact.crossJoin(F.broadcast(
+        stats.select(band.alias("recall_in_band"))))
+
+
 def _lsh_recall_certified(cat, *, n_probes: int, min_recall: float):
     """Shared x02/x02b body: exact Jaccard>=0.5 pair set (prefix-
     filtered exact join, hash-matched against the oracle's quadratic
@@ -2654,21 +2669,14 @@ def _lsh_recall_certified(cat, *, n_probes: int, min_recall: float):
     docs = cat.documents
     exact = cached(dd_ops.exact_jaccard_join(docs, "text", "doc_id",
                                              n=3, threshold=0.5))
-    lsh = (dd_ops.minhash_lsh_dedup(docs, "text", "doc_id",
-                                    num_hashes=32, bands=16,
-                                    jaccard_threshold=0.5,
-                                    n_probes=n_probes)
-           .select("id_a", "id_b", F.lit(1).alias("__hit")))
+    lsh = dd_ops.minhash_lsh_dedup(docs, "text", "doc_id",
+                                   num_hashes=32, bands=16,
+                                   jaccard_threshold=0.5, n_probes=n_probes)
     # LSH output is exact-verified at the same threshold over the same
     # shingle sets, so it is a SUBSET of `exact` by construction and
     # recall is literally |lsh| / |exact|
-    stats = (exact.join(lsh, ["id_a", "id_b"], "left")
-             .agg(F.count(F.lit(1)).alias("__n"),
-                  F.count("__hit").alias("__c")))
-    band = F.col("__c") >= F.lit(min_recall) * F.col("__n")
-    return (exact.crossJoin(F.broadcast(stats))
-            .select("id_a", "id_b", "jaccard_sim",
-                    band.alias("recall_in_band"))
+    return (_recall_band(exact, lsh, ["id_a", "id_b"], min_recall)
+            .select("id_a", "id_b", "jaccard_sim", "recall_in_band")
             .orderBy("id_a", "id_b"))
 
 
@@ -2814,20 +2822,13 @@ def x05b(spark, cat):
     planted = (vecs.where(F.col("vec_id") % 5 == 0)
                .select((F.col("vec_id") + 1_000_000).alias("vec_id"),
                        noisy.alias("embedding")))
-    found = dd_ops.embedding_dedup_multiprobe(
+    found = dd_ops.embedding_dedup(
         vecs.unionByName(planted), "embedding", "vec_id",
         threshold=0.9, n_planes=6, n_probes=3)
     expected = (vecs.where(F.col("vec_id") % 5 == 0)
                 .select(F.col("vec_id").alias("id_a"),
                         (F.col("vec_id") + 1_000_000).alias("id_b")))
-    stats = (expected.join(found.select("id_a", "id_b",
-                                        F.lit(1).alias("__hit")),
-                           ["id_a", "id_b"], "left")
-             .agg(F.count(F.lit(1)).alias("__n"),
-                  F.count("__hit").alias("__c")))
-    band = F.col("__c") >= F.lit(0.9) * F.col("__n")
-    return (expected.crossJoin(F.broadcast(stats))
-            .select("id_a", "id_b", band.alias("recall_in_band"))
+    return (_recall_band(expected, found, ["id_a", "id_b"], 0.9)
             .orderBy("id_a"))
 
 
@@ -2860,15 +2861,9 @@ def _ann_recall_certified(cat, ann, *, min_recall: float, extra=None):
                .select(F.col("vec_id").alias("query_id"), "embedding"))
     exact = cached(sim_ops.brute_force_topk(cat.embeddings, queries,
                                             k=10))
-    hits = (exact.select("query_id", "vec_id")
-            .join(ann(queries).select("query_id", "vec_id",
-                                      F.lit(1).alias("__hit")),
-                  ["query_id", "vec_id"], "left"))
-    stats = hits.agg(F.count(F.lit(1)).alias("__n"),
-                     F.count("__hit").alias("__c"))
-    band = F.col("__c") >= F.lit(min_recall) * F.col("__n")
-    out = exact.crossJoin(F.broadcast(stats))
-    flags = [band.alias("recall_in_band")]
+    out = _recall_band(exact, ann(queries), ["query_id", "vec_id"],
+                       min_recall)
+    flags = [F.col("recall_in_band")]
     if extra is not None:
         out = out.crossJoin(F.broadcast(extra))
         flags += [F.col(c) for c in extra.columns]
@@ -3498,17 +3493,10 @@ def x43(spark, cat):
                                              other=corpus))
     idx = dd_ops.minhash_index(corpus, "text", "doc_id",
                                num_hashes=32, bands=16)
-    found = (dd_ops.minhash_lookup(batch, idx, "text", "doc_id",
-                                   num_hashes=32, bands=16,
-                                   jaccard_threshold=0.5)
-             .select("id_a", "id_b", F.lit(1).alias("__hit")))
-    stats = (exact.join(found, ["id_a", "id_b"], "left")
-             .agg(F.count(F.lit(1)).alias("__n"),
-                  F.count("__hit").alias("__c")))
-    band = F.col("__c") >= F.lit(0.95) * F.col("__n")
-    return (exact.crossJoin(F.broadcast(stats))
-            .select("id_a", "id_b", "jaccard_sim",
-                    band.alias("recall_in_band"))
+    found = dd_ops.minhash_lookup(batch, idx, "text", "doc_id",
+                                  jaccard_threshold=0.5)
+    return (_recall_band(exact, found, ["id_a", "id_b"], 0.95)
+            .select("id_a", "id_b", "jaccard_sim", "recall_in_band")
             .orderBy("id_a", "id_b"))
 
 
@@ -3554,17 +3542,10 @@ def x43b(spark, cat):
     idx = dd_ops.minhash_index(corpus0, "text", "doc_id",
                                num_hashes=32, bands=16)
     appended = dd_ops.minhash_index_append(idx, batch1, "text", "doc_id")
-    found = (dd_ops.minhash_lookup(probe, appended, "text", "doc_id",
-                                   num_hashes=32, bands=16,
-                                   jaccard_threshold=0.5)
-             .select("id_a", "id_b", F.lit(1).alias("__hit")))
-    stats = (exact.join(found, ["id_a", "id_b"], "left")
-             .agg(F.count(F.lit(1)).alias("__n"),
-                  F.count("__hit").alias("__c")))
-    band = F.col("__c") >= F.lit(0.95) * F.col("__n")
-    return (exact.crossJoin(F.broadcast(stats))
-            .select("id_a", "id_b", "jaccard_sim",
-                    band.alias("recall_in_band"))
+    found = dd_ops.minhash_lookup(probe, appended, "text", "doc_id",
+                                  jaccard_threshold=0.5)
+    return (_recall_band(exact, found, ["id_a", "id_b"], 0.95)
+            .select("id_a", "id_b", "jaccard_sim", "recall_in_band")
             .orderBy("id_a", "id_b"))
 
 

@@ -196,10 +196,8 @@ def _intra_batch_survivors(batch: DataFrame, text_col: str, id_col: str,
     an already-dropped doc survives); use `dedup_canonicalize` for
     transitive-closure semantics on a bounded corpus."""
     pairs = minhash_lsh_dedup(batch, text_col, id_col,
-                              num_hashes=p.num_hashes, bands=p.bands,
-                              shingle_n=p.shingle_n, seed=p.seed,
-                              n_probes=p.n_probes,
-                              jaccard_threshold=jaccard_threshold)
+                              jaccard_threshold=jaccard_threshold,
+                              **p._asdict())
     dropped = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return batch.join(dropped, id_col, "left_anti")
 
@@ -215,7 +213,7 @@ def dedup_stream(stream_df: DataFrame, *, index_dir: str,
     ``.start()`` (and owns trigger/query-name options).
 
     Per micro-batch: intra-batch greedy dedup -> index probe
-    (:func:`minhash_lookup`, raising on any banding drift) -> survivors
+    (:func:`minhash_lookup`, banded with the index's params) -> survivors
     to ``<survivors_dir>/epoch=<n>`` and their bucket/shingle rows to
     ``<index_dir>/{buckets,shingles}/epoch=<n>`` — all three writes
     epoch-keyed and overwrite-idempotent under replay.
@@ -260,10 +258,7 @@ def dedup_stream(stream_df: DataFrame, *, index_dir: str,
                                        before_epoch=epoch_id)
             if index is not None:
                 dup = minhash_lookup(kept, index, text_col, id_col,
-                                     num_hashes=num_hashes, bands=bands,
-                                     shingle_n=shingle_n,
-                                     jaccard_threshold=jaccard_threshold,
-                                     seed=seed, n_probes=n_probes)
+                                     jaccard_threshold=jaccard_threshold)
                 kept = kept.join(
                     dup.select(F.col("id_a").alias(id_col)).distinct(),
                     id_col, "left_anti")
@@ -271,9 +266,7 @@ def dedup_stream(stream_df: DataFrame, *, index_dir: str,
             kept.write.mode("overwrite").parquet(
                 os.path.join(survivors_dir, f"epoch={epoch_id}"))
             fresh = minhash_index(kept, text_col, id_col,
-                                  num_hashes=num_hashes, bands=bands,
-                                  shingle_n=shingle_n, seed=seed,
-                                  n_probes=n_probes)
+                                  **params._asdict())
             fresh.buckets.write.mode("overwrite").parquet(
                 os.path.join(index_dir, "buckets", f"epoch={epoch_id}"))
             fresh.shingles.write.mode("overwrite").parquet(

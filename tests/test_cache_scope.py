@@ -37,7 +37,6 @@ def _lookup(docs):
     idx = dd.minhash_index(docs.where("doc_id % 2 = 0"), num_hashes=32,
                            bands=16)
     return dd.minhash_lookup(docs.where("doc_id % 2 = 1"), idx,
-                             num_hashes=32, bands=16,
                              jaccard_threshold=0.5)
 
 

@@ -92,6 +92,35 @@ def test_ngram_jaccard_dedup(rows):
     assert (1, 2) in pairs
 
 
+# every Jaccard pair generator as (docs, threshold) -> pairs; the
+# lookup indexes doc 2 and probes doc 1, so its pair is (1, 2) too
+JACCARD_GENERATORS = {
+    "ngram_jaccard_dedup": lambda df, t: dd.ngram_jaccard_dedup(
+        df, n=3, threshold=t),
+    "exact_jaccard_join": lambda df, t: dd.exact_jaccard_join(
+        df, n=3, threshold=t),
+    "minhash_lsh_dedup": lambda df, t: dd.minhash_lsh_dedup(
+        df, num_hashes=32, bands=32, shingle_n=3, jaccard_threshold=t),
+    "minhash_lookup": lambda df, t: dd.minhash_lookup(
+        df.where("doc_id = 1"),
+        dd.minhash_index(df.where("doc_id = 2"), num_hashes=32, bands=32,
+                         shingle_n=3),
+        jaccard_threshold=t),
+}
+
+
+@pytest.mark.parametrize("gen", sorted(JACCARD_GENERATORS))
+def test_jaccard_generators_threshold_unrounded_value(rows, gen):
+    """J = 2/3 exactly (shingles {abc, bcd, cde} vs {abc, bcd}): every
+    generator thresholds the UNROUNDED Jaccard, so 0.6667 rejects the
+    pair even though it reports as round(2/3, 4) = 0.6667 at 0.6666."""
+    df = rows([(1, "a b c d e"), (2, "a b c d")], DOCS)
+    pairs = lambda t: {(r["id_a"], r["id_b"], r["jaccard_sim"])  # noqa: E731
+                       for r in JACCARD_GENERATORS[gen](df, t).collect()}
+    assert pairs(0.6667) == set()
+    assert pairs(0.6666) == {(1, 2, 0.6667)}
+
+
 def test_embedding_dedup_identical_vectors(rows):
     df = rows([(1, [1.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0]),
                (3, [-1.0, 0.0, 0.0])],
@@ -115,8 +144,8 @@ def test_embedding_dedup_builds_without_spark_jobs(spark, rows, tmp_path):
     sc.setJobGroup(group, "construction only")
     try:
         single = dd.embedding_dedup(df, threshold=0.99, n_planes=4)
-        multi = dd.embedding_dedup_multiprobe(df, threshold=0.99,
-                                              n_planes=4, n_probes=2)
+        multi = dd.embedding_dedup(df, threshold=0.99, n_planes=4,
+                                   n_probes=2)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup(group) == []
@@ -130,7 +159,7 @@ def test_embedding_dedup_multiprobe_superset(rows):
               "vec_id long, embedding array<float>")
     single = {(r["id_a"], r["id_b"]) for r in dd.embedding_dedup(
         df, threshold=0.9, n_planes=6).collect()}
-    multi_rows = dd.embedding_dedup_multiprobe(
+    multi_rows = dd.embedding_dedup(
         df, threshold=0.9, n_planes=6, n_probes=3).collect()
     multi = {(r["id_a"], r["id_b"]) for r in multi_rows}
     # probe 0 uses the same seed as the single run: union can only add
@@ -398,39 +427,22 @@ def test_minhash_index_lookup_matches_self_join_cross_pairs(rows):
                                          "about spark aggregation " * 4)]
     batch = [(1, base + "batch copy"), (3, "unrelated short doc")]
     dfc, dfb = rows(corpus, DOCS), rows(batch, DOCS)
-    kw = dict(num_hashes=32, bands=16, jaccard_threshold=0.5)
     idx = dd.minhash_index(dfc, "text", "doc_id", num_hashes=32, bands=16)
     got = {(r["id_a"], r["id_b"]): r["jaccard_sim"]
            for r in dd.minhash_lookup(dfb, idx, "text", "doc_id",
-                                      **kw).collect()}
+                                      jaccard_threshold=0.5).collect()}
     union = dfc.unionByName(dfb)
     self_pairs = {(max(r["id_a"], r["id_b"]), min(r["id_a"], r["id_b"])):
                   r["jaccard_sim"]
-                  for r in dd.minhash_lsh_dedup(union, "text", "doc_id",
-                                                **kw).collect()
+                  for r in dd.minhash_lsh_dedup(
+                      union, "text", "doc_id", num_hashes=32, bands=16,
+                      jaccard_threshold=0.5).collect()
                   if r["id_a"] % 2 != r["id_b"] % 2}
     # lookup keys are (batch_id=odd, corpus_id=even); self-join emits
     # (min,max) — normalize to (odd, even)
     norm = {(a if a % 2 else b, b if a % 2 else a): v
             for (a, b), v in self_pairs.items()}
     assert got == norm and got, (got, norm)
-
-
-def test_minhash_lookup_rejects_param_mismatch(rows):
-    """An index/lookup banding mismatch must raise, not silently
-    collapse recall to ~0 (different seeded families never collide)."""
-    df = rows([(0, "alpha beta gamma delta " * 4)], DOCS)
-    idx = dd.minhash_index(df, "text", "doc_id", num_hashes=32, bands=16)
-    with pytest.raises(ValueError, match="do not match"):
-        dd.minhash_lookup(df, idx, "text", "doc_id",
-                          num_hashes=64, bands=16)
-    with pytest.raises(ValueError, match="do not match"):
-        dd.minhash_lookup(df, idx, "text", "doc_id",
-                          num_hashes=32, bands=16, seed=7)
-    # legacy two-field tuple: accepted, caller owns the contract
-    assert dd.minhash_lookup(df, (idx.buckets, idx.shingles), "text",
-                             "doc_id", num_hashes=32, bands=16,
-                             jaccard_threshold=0.5).count() >= 1
 
 
 def test_minhash_index_append_equals_fresh_rebuild(rows):
@@ -445,7 +457,6 @@ def test_minhash_index_append_equals_fresh_rebuild(rows):
                    (6, "a fresh unrelated document " * 5)], DOCS)
     batch2 = rows([(1, base + "batch two probe"),
                    (3, "spark shuffles partition data " * 5)], DOCS)
-    kw = dict(num_hashes=32, bands=16, jaccard_threshold=0.5)
     idx = dd.minhash_index(corpus0, "text", "doc_id",
                            num_hashes=32, bands=16)
     appended = dd.minhash_index_append(idx, batch1, "text", "doc_id")
@@ -455,7 +466,7 @@ def test_minhash_index_append_equals_fresh_rebuild(rows):
     res = lambda ix: sorted(
         (r["id_a"], r["id_b"], r["jaccard_sim"])
         for r in dd.minhash_lookup(batch2, ix, "text", "doc_id",
-                                   **kw).collect())
+                                   jaccard_threshold=0.5).collect())
     got_appended, got_fresh = res(appended), res(fresh)
     assert got_appended == got_fresh and got_appended
     # the appended batch's near-dup (id 4) must now be findable

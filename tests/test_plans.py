@@ -124,7 +124,7 @@ def test_embedding_multiprobe_is_single_shuffle(cat):
     (probe, bucket) shuffle — k probes as k sequential job waves would
     multiply stage barriers at corpus scale."""
     from bi_etl_and_integration_spark.operators import dedup as dd
-    out = dd.embedding_dedup_multiprobe(
+    out = dd.embedding_dedup(
         cat.embeddings, "embedding", "vec_id",
         threshold=0.5, n_planes=4, n_probes=3)
     # one Exchange for the bucket groupBy, one for the pair dedup
@@ -470,7 +470,8 @@ def test_shingle_explode_not_duplicated_below_exchange(cat):
     from bi_etl_and_integration_spark.operators import dedup as dd
     # min_bytes=0 forces the spread on the tiny test fixture (the r12
     # size floor would otherwise no-op it and leave nothing to assert)
-    base = (dd._spread_for_compute(cat.documents, "doc_id", min_bytes=0)
+    base = (rel_ops.spread_for_compute(cat.documents, "doc_id",
+                                       min_bytes=0)
             .select(F.col("doc_id").alias("id"),
                     dd.hashed_shingles(F.col("text"), 3).alias("__hs")))
     plan = (base.select("id", F.explode("__hs").alias("__h"))

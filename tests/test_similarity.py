@@ -116,6 +116,25 @@ def test_ivf_topk_recovers_exact_match(rows):
     assert abs(best["cosine_sim"] - 1.0) < 1e-9
 
 
+def test_ivf_topk_rejects_duplicate_query_ids(rows):
+    """Two queries under one id used to merge into one top-k list (3
+    rows for id 0, dropping neighbours 7 and 9 of the second query);
+    ivf_topk joins its queries instead of collecting them, so the
+    duplicate check fails the plan when it runs."""
+    import pytest
+    step = 2 * math.pi / 32
+    corpus = rows([(i, [math.cos(i * step), math.sin(i * step)])
+                   for i in range(32)], EMB)
+    qschema = "query_id long, embedding array<float>"
+    dup = rows([(0, [1.0, 0.0]), (0, [0.0, 1.0])], qschema)
+    with pytest.raises(Exception, match="duplicate query ids"):
+        sim.ivf_topk(corpus, dup, k=3, nlist=4, n_probe=4).collect()
+    one = rows([(0, [1.0, 0.0]), (1, [0.0, 1.0])], qschema)
+    got = sorted((r["query_id"], r["vec_id"]) for r in sim.ivf_topk(
+        corpus, one, k=3, nlist=4, n_probe=4).collect())
+    assert got == [(0, 0), (0, 1), (0, 31), (1, 7), (1, 8), (1, 9)]
+
+
 def test_sign_buckets_udf_matches_expression_form(rows):
     """Reference: a test-local numpy sign-bit fold — bit i of a bucket
     id is set iff the vector's dot with random_hyperplanes plane i is

@@ -418,8 +418,8 @@ def test_streaming_dedup_rolling_index(spark, rows, tmp_path):
     from bi_etl_and_integration_spark.operators.dedup import (
         minhash_lookup)
     kept = sd._intra_batch_survivors(b2, "text", "doc_id", params, 0.5)
-    dup = minhash_lookup(kept, prior, "text", "doc_id", num_hashes=32,
-                         bands=16, jaccard_threshold=0.5)
+    dup = minhash_lookup(kept, prior, "text", "doc_id",
+                         jaccard_threshold=0.5)
     kept = kept.join(dup.select(F.col("id_a").alias("doc_id"))
                      .distinct(), "doc_id", "left_anti")
     assert {r["doc_id"] for r in kept.collect()} == {9}
@@ -467,8 +467,7 @@ def test_compact_minhash_index_preserves_lookup(spark, rows, tmp_path):
         (r["id_a"], r["id_b"], r["jaccard_sim"])
         for r in minhash_lookup(
             probe, load_minhash_index(spark, index_dir, params),
-            "text", "doc_id", num_hashes=32, bands=16,
-            jaccard_threshold=0.5).collect())
+            "text", "doc_id", jaccard_threshold=0.5).collect())
     before = res()
     assert before and before[0][1] == 0
     kept_epoch = compact_minhash_index(spark, index_dir)
@@ -548,7 +547,7 @@ def test_compact_minhash_index_repairs_crash_duplicates(spark, rows,
     probe = rows([(9, base + "probe copy")], DOCS)
     got = minhash_lookup(probe,
                          load_minhash_index(spark, index_dir, params),
-                         "text", "doc_id", num_hashes=32, bands=16,
+                         "text", "doc_id",
                          jaccard_threshold=0.5).collect()
     assert [(r["id_a"], r["id_b"]) for r in got] == [(9, 0)]
 
@@ -774,8 +773,7 @@ def test_dedup_stream_live_compaction(spark, rows, tmp_path):
         return sorted(
             (r["id_a"], r["id_b"]) for r in minhash_lookup(
                 probe, load_minhash_index(spark, idx_dir, params),
-                "text", "doc_id", num_hashes=32, bands=16,
-                jaccard_threshold=0.5).collect())
+                "text", "doc_id", jaccard_threshold=0.5).collect())
     assert hits(idx_live) == hits(idx_ref) == [(99, 0)]
 
     with pytest.raises(ValueError, match="compact_every"):

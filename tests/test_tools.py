@@ -434,6 +434,26 @@ def test_persist_only_through_cached():
     assert not raw, f"raw persist/cache calls (use cached()): {raw}"
 
 
+def test_dedup_shingles_and_jaccard_built_once():
+    """The Jaccard pair generators share one shingle-set base and one
+    verify: ``operators/dedup.py`` calls ``hashed_shingles`` and
+    ``array_intersect`` exactly once each, so a generator cannot grow
+    its own copy whose threshold or rounding drifts."""
+    import ast
+    from collections import Counter
+
+    path = os.path.join(ROOT, "bi_etl_and_integration_spark",
+                        "operators", "dedup.py")
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    calls = Counter(
+        n.func.attr if isinstance(n.func, ast.Attribute)
+        else getattr(n.func, "id", None)
+        for n in ast.walk(tree) if isinstance(n, ast.Call))
+    assert calls["hashed_shingles"] == 1, calls["hashed_shingles"]
+    assert calls["array_intersect"] == 1, calls["array_intersect"]
+
+
 def test_staged_table_prefixes_are_declared():
     """bench.py removes dead sessions' staged tables by the prefixes in
     ``queries.STAGE_PREFIXES``: every staged-table prefix queries.py
