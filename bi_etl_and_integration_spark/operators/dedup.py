@@ -730,13 +730,15 @@ def _cosine_verify(df: DataFrame, id_col: str, threshold: float,
         for lo in range(0, n - 1, _VERIFY_BLOCK):
             hi = min(lo + _VERIFY_BLOCK, n)
             # rows lo..hi vs all columns; upper triangle only (j > i)
-            sims = np.round(unit[lo:hi] @ unit.T, 4)
+            sims = unit[lo:hi] @ unit.T
+            # threshold on the raw cosine, round only the emitted value
+            # (as _jaccard_pairs does)
             ia, ib = np.nonzero(sims >= threshold)
             keep = ib > ia + lo
             ia, ib = ia[keep], ib[keep]
             out_a.append(ids[ia + lo])
             out_b.append(ids[ib])
-            out_s.append(sims[ia, ib])
+            out_s.append(np.round(sims[ia, ib], 4))
         return pd.DataFrame({"id_a": np.concatenate(out_a),
                              "id_b": np.concatenate(out_b),
                              "cosine_sim": np.concatenate(out_s)})

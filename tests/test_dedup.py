@@ -121,6 +121,23 @@ def test_jaccard_generators_threshold_unrounded_value(rows, gen):
     assert pairs(0.6666) == {(1, 2, 0.6667)}
 
 
+def test_cosine_verify_threshold_unrounded_value(rows):
+    """cos = 0.99895 reports as 0.999 but is below a 0.999 threshold:
+    the embedding verify thresholds the UNROUNDED cosine, like the
+    Jaccard generators, and rounds only the emitted value."""
+    import math
+
+    import pandas as pd
+    c = 0.99895
+    pdf = pd.DataFrame({"id": [1, 2],
+                        "v": [[1.0, 0.0], [c, math.sqrt(1 - c * c)]]})
+    df = rows([(1, [1.0, 0.0])], "vec_id long, embedding array<double>")
+    pairs = lambda t: list(dd._cosine_verify(  # noqa: E731, SLF001
+        df, "vec_id", t)[0](pdf).itertuples(index=False, name=None))
+    assert pairs(0.999) == []
+    assert pairs(0.9989) == [(1, 2, 0.999)]
+
+
 def test_embedding_dedup_identical_vectors(rows):
     df = rows([(1, [1.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0]),
                (3, [-1.0, 0.0, 0.0])],
