@@ -11,9 +11,10 @@ Reference parity:
     here are deterministic functions of (target, source) — re-running a
     failed batch converges to the same result.
 
-Without a transactional table format, the atomic-swap protocol for
-persisting results is ``write temp dir -> atomic rename`` handled by
-``pipeline.checkpointed_write`` (single-writer assumption documented).
+Persisting results: a dimension the engine reads back commits as a
+``sources.snapshots.SnapshotTable`` version (atomic manifest commit);
+``pipeline.checkpointed_write`` (temp dir -> rename) is export-only,
+for files read outside the engine.
 """
 
 from __future__ import annotations

@@ -4,15 +4,16 @@ ClickHouse MV carrying AggregateFunction partial states, DM/Правильное
 
 The ClickHouse pattern: the MV stores per-key partial STATES
 (``groupArrayState``), readers finalize with ``-Merge`` combinators.
-Spark-native equivalent: each batch appends one partial-state parquet
-delta (sum/count pairs per measure); reads merge all deltas; periodic
-compaction rewrites them as one.  Appends never rewrite history — the
-write cost of a refresh is O(batch), not O(view), which is the property
-that makes nightly 100 TB fact loads maintainable.
+Spark-native equivalent: the view is a ``SnapshotTable``; each batch
+appends one partial-state delta (sum/count pairs per measure) as an
+append commit; reads merge every delta of the latest version; periodic
+compaction folds them into one as an overwrite commit.  Appends never
+rewrite history — the write cost of a refresh is O(batch), not O(view),
+which is the property that makes nightly 100 TB fact loads maintainable.
 
-Crash safety: a refresh is one atomic parquet append of a new delta
-directory; compaction publishes via temp-dir swap (single-writer,
-documented in ``pipeline.checkpointed_write``).
+Crash safety: refreshes and compactions are manifest commits, so a
+reader sees the view before or after one, never a half-appended delta;
+replaced deltas stay readable by version until ``SnapshotTable.vacuum``.
 
 Exactness: pass DECIMAL measure columns for money-like data.  Double
 partial sums re-associate across deltas (and across compactions), which
@@ -22,13 +23,14 @@ refresh-then-merge bit-identical to a direct aggregation.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from bi_etl_and_integration_spark.operators.aggregate import (
     merge_state_tables, merge_states, partial_states)
+from bi_etl_and_integration_spark.sources.snapshots import SnapshotTable
 
 
 class IncrementalAggMV:
@@ -55,10 +57,10 @@ class IncrementalAggMV:
 
     def refresh(self, batch: DataFrame) -> None:
         states = partial_states(batch, self.keys, self.measures)
-        states.write.mode("append").parquet(self.path)
+        SnapshotTable(batch.sparkSession, self.path).write(states, "append")
 
     def _states(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path)
+        return SnapshotTable(spark, self.path).read()
 
     def read(self, spark: SparkSession) -> DataFrame:
         return merge_states(self._states(spark), self.keys,
@@ -67,13 +69,15 @@ class IncrementalAggMV:
     def compact(self, spark: SparkSession) -> None:
         """Fold every delta into a single state set.  The merged result
         is itself a valid state table (sums of sums), so compaction and
-        incremental appends compose indefinitely."""
-        from bi_etl_and_integration_spark.pipeline import (
-            checkpointed_write)
-        merged = merge_state_tables(self._states(spark), self.keys,
-                                    list(self.measures))
-        checkpointed_write(merged, self.path)
+        incremental appends compose indefinitely.  The fold keeps the
+        deltas' column order and types (a decimal SUM widens its
+        precision) so later refreshes still append onto it."""
+        states = self._states(spark)
+        merged = merge_state_tables(states, self.keys, list(self.measures))
+        SnapshotTable(spark, self.path).write(
+            merged.select([F.col(f.name).cast(f.dataType)
+                           for f in states.schema.fields]), "overwrite")
 
     def n_delta_files(self) -> int:
-        return len([f for f in os.listdir(self.path)
-                    if f.endswith(".parquet")])
+        """Files in the latest version (``history`` needs no session)."""
+        return SnapshotTable(None, self.path).history()[-1]["n_files"]

@@ -9,7 +9,9 @@ Reference parity:
   - per-component timing (PRACT/007 Vizualizer.md) -> stage metrics dict.
   - checkpoint/restart: only PHASE boundaries are resumable, never
     intra-flow progress (PRACT/004 CDC.md:552-555) -> ``resume_from`` +
-    ``checkpointed_write`` (atomic temp-dir swap).
+    idempotent stage outputs: ``SnapshotTable`` commits for tables the
+    engine reads back, ``checkpointed_write`` (temp-dir swap) for
+    exports only.
   - multicast persistence (PRO/Глава 07:76-80) -> a stage that fans a
     frame out caches it with ``operators.common.cached`` inside its own
     ``cache_scope()`` (the runner does not persist on its own; stages
@@ -24,6 +26,8 @@ import shutil
 import time
 import uuid
 from collections.abc import Callable, Mapping, Sequence
+from concurrent.futures import (FIRST_COMPLETED, Executor, Future,
+                                ThreadPoolExecutor, wait)
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -153,10 +157,12 @@ class Pipeline:
         The SparkSession is thread-safe and the scheduler interleaves
         the submitted jobs across executor slots; stage functions
         sharing driver-side state must synchronize it themselves.
-        Failure semantics match serial mode: a failed stage without a
-        failure-handler dependant aborts the pipeline (after in-flight
-        stages drain), handlers with ``run_on='failure'`` fire, and
-        downstream ``run_on='success'`` stages are marked ``not_run``.
+        ``max_parallel=1`` runs the same ready-stage loop with each
+        stage inline on the caller's thread.  In both modes a failed
+        stage without a failure-handler dependant aborts the pipeline
+        (after in-flight stages drain), handlers with
+        ``run_on='failure'`` fire, and downstream ``run_on='success'``
+        stages are marked ``not_run``.
         """
         names = [s.name for s in self.stages]
         if resume_from is not None and resume_from not in names:
@@ -177,24 +183,20 @@ class Pipeline:
                 status[st.name] = "skipped"
         todo = [st for st in ordered if st.name not in status]
 
-        if max_parallel <= 1:
-            first_err: Exception | None = None
-            for st in todo:
-                decision = self._decide(st, status)
-                if decision == "not_run":
-                    status[st.name] = "not_run"
-                    continue
-                err = self._execute(st, ctx, status)
-                if err is not None and not self._has_failure_handler(st.name):
-                    raise err
-            ctx.metrics["__status"] = status
-            return ctx
-
-        from concurrent.futures import (FIRST_COMPLETED, ThreadPoolExecutor,
-                                        wait)
         first_err: Exception | None = None
-        with ThreadPoolExecutor(max_workers=max_parallel) as pool:
-            running: dict = {}
+        running: dict = {}
+
+        def settle(futs) -> None:
+            nonlocal first_err
+            for fut in futs:
+                st, err = running.pop(fut), fut.result()
+                if (err is not None and first_err is None
+                        and not self._has_failure_handler(st.name)):
+                    first_err = err
+
+        pool = (ThreadPoolExecutor(max_workers=max_parallel)
+                if max_parallel > 1 else _InlineExecutor())
+        with pool:
             while todo or running:
                 progressed = False
                 for st in list(todo):
@@ -209,6 +211,9 @@ class Pipeline:
                         running[pool.submit(
                             self._execute, st, ctx, status)] = st
                         progressed = True
+                        # an inline stage is already done: settle it so a
+                        # failure stops the next launch, as serially
+                        settle([f for f in running if f.done()])
                 if not running:
                     if first_err is not None:
                         break
@@ -218,18 +223,24 @@ class Pipeline:
                             f"stalled stages: {[s.name for s in todo]}")
                     continue
                 done, _ = wait(running, return_when=FIRST_COMPLETED)
-                for fut in done:
-                    st = running.pop(fut)
-                    err = fut.result()
-                    if (err is not None and first_err is None
-                            and not self._has_failure_handler(st.name)):
-                        first_err = err
+                settle(done)
             for st in todo:                 # drained early on failure
                 status.setdefault(st.name, "not_run")
         ctx.metrics["__status"] = status
         if first_err is not None:
             raise first_err
         return ctx
+
+
+class _InlineExecutor(Executor):
+    """``max_parallel=1``: each stage runs on the caller's thread, so it
+    keeps the caller's ``setJobGroup`` and ``cache_scope()`` (both are
+    thread-local)."""
+
+    def submit(self, fn, /, *args, **kwargs) -> Future:
+        fut: Future = Future()
+        fut.set_result(fn(*args, **kwargs))
+        return fut
 
 
 def from_spec(spec: Mapping) -> Pipeline:
@@ -248,8 +259,11 @@ def from_spec(spec: Mapping) -> Pipeline:
     Stage kinds: ``read`` (DataFrameReader options), ``component``
     (registered PipelineComponent by name), ``sql`` (text with
     ``{stage}`` placeholders resolved to temp views), ``write``
-    (atomic checkpointed publish).  JSON/YAML-parsed dicts both work —
-    the spec is plain data, editable without touching engine code.
+    (``format: snapshot`` commits a ``SnapshotTable`` version; the
+    file formats parquet/orc/json/csv/text are an export through
+    :func:`checkpointed_write`; any other format is rejected when the
+    spec is built).  JSON/YAML-parsed dicts both work — the spec is
+    plain data, editable without touching engine code.
     """
     import re as _re
 
@@ -281,8 +295,14 @@ def from_spec(spec: Mapping) -> Pipeline:
                     return vname
                 return ctx.spark.sql(_re.sub(r"\{(\w+)\}", view, _q))
         elif "write" in st:
-            def fn(ctx, _c=dict(st["write"]), _in=st["input"]):
-                if _c.get("format") == "snapshot":
+            fmt = st["write"].get("format", "parquet")
+            if fmt not in ("parquet", "orc", "json", "csv", "text",
+                           "snapshot"):
+                raise ValueError(
+                    f"stage {name!r}: unsupported write format {fmt!r}")
+
+            def fn(ctx, _c=dict(st["write"]), _in=st["input"], _fmt=fmt):
+                if _fmt == "snapshot":
                     # transactional manifest commit (multi-writer-safe
                     # where exclusive create is atomic) instead of the
                     # single-writer dir swap
@@ -291,8 +311,7 @@ def from_spec(spec: Mapping) -> Pipeline:
                     return snapshot_write(
                         ctx.spark, ctx[_in], _c["path"],
                         mode=_c.get("mode", "overwrite"))
-                return checkpointed_write(ctx[_in], _c["path"],
-                                          fmt=_c.get("format", "parquet"))
+                return checkpointed_write(ctx[_in], _c["path"], fmt=_fmt)
         else:
             raise ValueError(f"stage {name!r}: no read/component/sql/write")
         p.stage(name, depends_on=depends,
@@ -322,17 +341,19 @@ def recover_publish(path: str) -> bool:
 
 def checkpointed_write(df: DataFrame, path: str, *,
                        fmt: str = "parquet") -> str:
-    """Crash-safe publish: write to a temp dir, then swap into place
-    (single-writer assumption — documented; a lakehouse format replaces
-    this on shared storage).  A partial write is never visible.  POSIX
-    has no atomic DIRECTORY swap, so between the two renames there is a
-    sub-millisecond window where ``path`` is absent; a crash inside
-    that window is healed by :func:`recover_publish` (run automatically
-    on the next publish), and the ``__old_`` backup is only deleted
-    after the new version is in place."""
+    """Crash-safe export: write to a temp dir, then swap into place.
+    Export-only — files for readers outside the engine (its one caller
+    is ``from_spec``'s non-snapshot ``write`` stage); every table the
+    engine reads back commits through ``sources.snapshots.SnapshotTable``
+    instead.  Single-writer assumption.  A partial write is never
+    visible.  POSIX has no atomic DIRECTORY swap, so between the two
+    renames there is a sub-millisecond window where ``path`` is absent;
+    a crash inside that window is healed by :func:`recover_publish`
+    (run automatically on the next publish), and the ``__old_`` backup
+    is only deleted after the new version is in place."""
     recover_publish(path)
     tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
-    getattr(df.write.mode("overwrite"), fmt)(tmp)
+    df.write.mode("overwrite").format(fmt).save(tmp)
     old = f"{path}__old_{uuid.uuid4().hex[:8]}"
     if os.path.exists(path):
         os.replace(path, old)
@@ -358,7 +379,7 @@ def backfill(pipeline: Pipeline, spark: SparkSession, *,
     skip finished periods, so a crashed backfill resumes where it died
     and a nightly catchup after downtime replays exactly the missed
     periods.  Period stages themselves must be idempotent writers
-    (``checkpointed_write`` / snapshot commits), which is also what
+    (snapshot commits / ``checkpointed_write`` exports), which is also what
     makes a CLEARED marker a safe Airflow-style re-run.
 
     Sequential oldest-first by design (Airflow depends_on_past): a

@@ -1,9 +1,11 @@
 """Snapshot table: a minimal transactional table format on plain
-parquet — the lakehouse-lite replacement for the temp-dir-swap publish
-protocol (``pipeline.checkpointed_write``), built because no
-Delta/Iceberg package exists in this environment (ROADMAP round-2
-re-check) and the pattern itself is public (Delta's _delta_log /
-Iceberg's metadata tree reduced to essentials).
+parquet, built because no Delta/Iceberg package exists in this
+environment (ROADMAP round-2 re-check) and the pattern itself is public
+(Delta's _delta_log / Iceberg's metadata tree reduced to essentials).
+
+Every table the engine writes and later reads back commits here (CDC
+targets, the foreachBatch upsert sink, ``IncrementalAggMV``'s deltas);
+``pipeline.checkpointed_write`` is export-only: files read outside it.
 
 Layout::
 
@@ -12,20 +14,24 @@ Layout::
       _manifests/v0000000001.json          the commit log
 
 A *manifest* lists the exact data files of one table version plus the
-schema DDL.  The COMMIT is the atomic exclusive creation of the next
-``v{N}.json`` (``O_CREAT|O_EXCL``): exactly one writer can create a
-given version, so concurrent writers serialize by retrying against the
-new latest — optimistic concurrency, no lock server.  Readers list the
-manifest dir, pick the highest version, and read exactly the files it
-names — they never see a half-written commit because data files are
-written BEFORE the manifest that references them and are never
-modified after.
+schema DDL.  Every commit (``write``, ``rollback``, ``compact``) goes
+through one routine: the full manifest is written under a temp name in
+``_manifests/``, then hard-linked to the next ``v{N}.json``.  The link
+is an atomic create-if-absent, so exactly one writer can claim a given
+version and concurrent writers serialize by retrying against the new
+latest — optimistic concurrency, no lock server — and a manifest is
+complete the moment it is visible.  Readers list the manifest dir, pick
+the highest version, and read exactly the files it names — they never
+see a half-written commit because data files are written BEFORE the
+manifest that references them and neither is modified after.
 
 Guarantees and their boundaries (stated, not implied):
   - Atomic visibility + snapshot isolation: yes, on any filesystem
-    with atomic exclusive create (POSIX local, NFSv4, HDFS).  S3 has
-    no atomic create-if-absent — same boundary Delta has without a
-    coordinating LogStore; front it with one writer or a lock there.
+    where ``link(2)`` is an atomic create-if-absent (POSIX local, NFS —
+    the classic NFS lock-file idiom).  S3 (and HDFS, which has no hard
+    links) offer no such primitive through ``os`` — same boundary Delta
+    has without a coordinating LogStore; front it with one writer or a
+    lock there.
   - Appends from concurrent writers: both survive (retry re-reads the
     latest parent).  Concurrent overwrite+append: last committed wins
     deterministically by version order — the append retries onto the
@@ -164,14 +170,14 @@ def _may_match(entry, predicates) -> bool:
     return True
 
 
-def _evolve_ddl(table_ddl: str, df_schema: T.StructType) -> str:
+def _evolve_ddl(table_ddl: str, append_ddl: str) -> str:
     """Union-extend a manifest schema with an appended frame's schema:
     table column order is preserved, brand-new columns append at the
     end; a same-name column with a different type raises."""
     table = T.StructType.fromDDL(table_ddl)
     existing = {f.name: f.dataType.simpleString() for f in table.fields}
     out = [f"{f.name} {existing[f.name]}" for f in table.fields]
-    for f in df_schema.fields:
+    for f in T.StructType.fromDDL(append_ddl).fields:
         new_t = f.dataType.simpleString()
         if f.name in existing:
             if existing[f.name] != new_t:
@@ -276,74 +282,19 @@ class SnapshotTable:
         simply lack the new column and read as NULL under the
         manifest's (authoritative) union schema.  A column present on
         both sides with a DIFFERENT type still errors: silent type
-        widening is how tables rot.
-
-        Data files land under an unborn commit-uuid dir first; the
-        manifest create is the only visibility switch, so a crash
-        before it leaves invisible garbage (reclaimed by ``vacuum``),
-        never a torn table."""
+        widening is how tables rot."""
         if mode not in ("overwrite", "append"):
             raise ValueError(f"mode must be overwrite/append, got {mode!r}")
-        commit_id = uuid.uuid4().hex[:12]
-        data_dir = os.path.join(self.path, "data", commit_id)
-        df.write.mode("errorifexists").parquet(data_dir)
-        new_files = []
-        for f in sorted(os.listdir(data_dir)):
-            if not f.endswith(".parquet"):
-                continue
-            rel = os.path.join("data", commit_id, f)
-            rows, stats = _file_stats(os.path.join(data_dir, f))
-            new_files.append({"path": rel, "rows": rows, "stats": stats})
-        ddl = ",".join(f.name + " " + f.dataType.simpleString()
-                       for f in df.schema.fields)
-        os.makedirs(os.path.join(self.path, _MANIFEST_DIR), exist_ok=True)
-
-        for _ in range(max_retries):
-            parent = self.latest_version()
-            files = list(new_files)
-            if mode == "append" and parent is not None:
-                pm = _read_manifest(self.path, parent)
-                if pm["schema"] != ddl:
-                    if not evolve_schema:
-                        raise ValueError(
-                            "append schema mismatch: table has "
-                            f"[{pm['schema']}], appending [{ddl}] — "
-                            "overwrite to change schema, or pass "
-                            "evolve_schema=True to union-extend it")
-                    ddl = _evolve_ddl(pm["schema"], df.schema)
-                files = pm["files"] + files
-            version = (parent or 0) + 1
-            manifest = {"version": version, "parent": parent,
-                        "operation": mode, "files": files,
-                        "schema": ddl, "ts": time.time(),
-                        "commit_id": commit_id}
-            target = _manifest_path(self.path, version)
-            try:
-                # O_EXCL create IS the commit: exactly one writer wins v
-                fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            except FileExistsError:
-                continue                     # lost the race: re-parent
-            with os.fdopen(fd, "w") as fh:
-                json.dump(manifest, fh)
-            return version
-        raise CommitConflict(
-            f"{self.path}: lost the commit race {max_retries} times")
+        return self._commit(mode, *self._stage(df),
+                            evolve_schema=evolve_schema,
+                            max_retries=max_retries)
 
     def rollback(self, to_version: int) -> int:
         """Restore an old version's file list as a NEW commit (history
         stays append-only, like Delta RESTORE)."""
         m = _read_manifest(self.path, to_version)
-        latest = self.latest_version()
-        version = (latest or 0) + 1
-        manifest = {"version": version, "parent": latest,
-                    "operation": f"rollback({to_version})",
-                    "files": m["files"], "schema": m["schema"],
-                    "ts": time.time(), "commit_id": m.get("commit_id")}
-        target = _manifest_path(self.path, version)
-        fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        with os.fdopen(fd, "w") as fh:
-            json.dump(manifest, fh)
-        return version
+        return self._commit(f"rollback({to_version})", m["files"],
+                            m["schema"], m.get("commit_id"))
 
     def compact(self, *, target_files: int = 1) -> int:
         """OPTIMIZE: rewrite the current version's data as
@@ -352,20 +303,69 @@ class SnapshotTable:
         ≥1 file; a thousand micro-batches = a thousand tiny scans).
         Old versions still read the old files until ``vacuum``."""
         df = self.read().coalesce(max(1, target_files))
-        return self._commit_like(df, "compact")
+        return self._commit("compact", *self._stage(df))
 
-    def _commit_like(self, df: DataFrame, operation: str) -> int:
-        v = self.write(df, "overwrite")
-        # annotate the operation (write() stamps "overwrite"); the
-        # manifest is ours until someone reads it — rewrite in place is
-        # safe because the version number is already claimed
-        p = _manifest_path(self.path, v)
-        with open(p) as fh:
-            m = json.load(fh)
-        m["operation"] = operation
-        with open(p, "w") as fh:
-            json.dump(m, fh)
-        return v
+    def _stage(self, df: DataFrame) -> tuple[list[dict], str, str]:
+        """Write ``df``'s data files under an unborn commit-uuid dir;
+        return (file entries with footer stats, schema DDL, commit id).
+        Until :meth:`_commit` names them they are invisible garbage
+        (reclaimed by ``vacuum``), never a torn table."""
+        commit_id = uuid.uuid4().hex[:12]
+        data_dir = os.path.join(self.path, "data", commit_id)
+        df.write.mode("errorifexists").parquet(data_dir)
+        files = []
+        for f in sorted(os.listdir(data_dir)):
+            if not f.endswith(".parquet"):
+                continue
+            rows, stats = _file_stats(os.path.join(data_dir, f))
+            files.append({"path": os.path.join("data", commit_id, f),
+                          "rows": rows, "stats": stats})
+        ddl = ",".join(f.name + " " + f.dataType.simpleString()
+                       for f in df.schema.fields)
+        return files, ddl, commit_id
+
+    def _commit(self, operation: str, files: list, ddl: str,
+                commit_id: str | None, *, evolve_schema: bool = False,
+                max_retries: int = 20) -> int:
+        """The one commit routine: publish the next version listing
+        ``files`` (an ``append`` extends the parent's list, re-read on
+        every retry).  The full manifest is hard-linked from a temp name
+        to ``v{N}.json`` (see the module docstring); a lost race
+        (``FileExistsError``) re-parents onto the new latest."""
+        mdir = os.path.join(self.path, _MANIFEST_DIR)
+        os.makedirs(mdir, exist_ok=True)
+        tmp = os.path.join(mdir, f"_{uuid.uuid4().hex}.tmp")
+        try:
+            for _ in range(max_retries):
+                parent = self.latest_version()
+                entries, schema = files, ddl
+                if operation == "append" and parent is not None:
+                    pm = _read_manifest(self.path, parent)
+                    if pm["schema"] != ddl:
+                        if not evolve_schema:
+                            raise ValueError(
+                                "append schema mismatch: table has "
+                                f"[{pm['schema']}], appending [{ddl}] — "
+                                "overwrite to change schema, or pass "
+                                "evolve_schema=True to union-extend it")
+                        schema = _evolve_ddl(pm["schema"], ddl)
+                    entries = pm["files"] + entries
+                version = (parent or 0) + 1
+                with open(tmp, "w") as fh:
+                    json.dump({"version": version, "parent": parent,
+                               "operation": operation, "files": entries,
+                               "schema": schema, "ts": time.time(),
+                               "commit_id": commit_id}, fh)
+                try:
+                    os.link(tmp, _manifest_path(self.path, version))
+                except FileExistsError:
+                    continue                 # lost the race: re-parent
+                return version
+            raise CommitConflict(
+                f"{self.path}: lost the commit race {max_retries} times")
+        finally:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
 
     # --------------------------------------------------------- vacuum
 

@@ -35,7 +35,8 @@ Every write here is therefore keyed by ``epoch_id`` and idempotent:
 survivors land at ``<survivors>/epoch=<id>`` and index rows at
 ``<index>/{buckets,shingles}/epoch=<id>`` with ``overwrite`` mode — a
 replayed epoch overwrites its own directory instead of double-adding
-(the same contract as `runner.foreach_batch_upsert`).  Within one
+(the replay contract `runner.foreach_batch_upsert_snapshot` meets with
+an idempotent apply).  Within one
 epoch the probe index is the union of all PRIOR epochs only, so a
 replay sees the identical index state and produces the identical
 survivor set.

@@ -2,10 +2,10 @@
 
   - ``stream_to_memory``: drive a streaming plan over file sources to
     completion synchronously (test/smoke harness).
-  - ``foreach_batch_upsert``: exactly-once-style sink — per micro-batch
-    MERGE into a keyed parquet target via the idempotent apply operator
-    (the reference's 'mark processed range only on success' contract is
-    Spark's checkpoint + idempotent sink).
+  - ``foreach_batch_upsert_snapshot``: exactly-once-style sink — per
+    micro-batch MERGE into a keyed ``SnapshotTable`` via the idempotent
+    apply operator (the reference's 'mark processed range only on
+    success' contract is Spark's checkpoint + idempotent sink).
   - ``incremental_cdc_run``: the batch-incremental scheduler analog of
     the reference's daily CDC run (PRACT/004:310-312): read
     (state, max] from a change table, apply, commit state LAST.
@@ -19,7 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bi_etl_and_integration_spark.operators.cdc import (
-    StateStore, apply_changes, read_range)
+    StateStore, apply_changes, apply_changes_transactional, read_range)
+from bi_etl_and_integration_spark.sources.snapshots import SnapshotTable
 
 
 def stream_to_memory(stream_df: DataFrame, name: str,
@@ -31,31 +32,6 @@ def stream_to_memory(stream_df: DataFrame, name: str,
          .format("memory").queryName(name).start())
     q.processAllAvailable()
     return q
-
-
-def foreach_batch_upsert(stream_df: DataFrame, *, target_path: str,
-                         keys: Sequence[str], offset_col: str,
-                         checkpoint_dir: str, op_col: str = "op",
-                         ):
-    """writeStream.foreachBatch sink applying each micro-batch as a
-    keyed MERGE onto a parquet target (temp-dir swap for atomicity)."""
-    def apply_batch(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
-        try:
-            target = spark.read.parquet(target_path)
-        except Exception:
-            target = batch.limit(0).drop(op_col, offset_col)
-        merged = apply_changes(target, batch, keys, offset_col, op_col)
-        tmp = f"{target_path}__epoch{epoch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        import shutil
-        shutil.rmtree(target_path, ignore_errors=True)
-        import os
-        os.replace(tmp, target_path)
-
-    return (stream_df.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update"))
 
 
 def incremental_cdc_run(spark: SparkSession, *, changes: DataFrame,
@@ -93,18 +69,12 @@ def foreach_batch_upsert_snapshot(stream_df: DataFrame, *,
                                   table_path: str, keys: Sequence[str],
                                   offset_col: str, checkpoint_dir: str,
                                   op_col: str = "op"):
-    """``foreach_batch_upsert`` with a transactional target: each
-    micro-batch MERGE lands as one SnapshotTable commit instead of the
-    rmtree+rename swap — concurrent readers keep the previous version
-    (no visibility gap, which the plain-parquet sink cannot avoid),
-    a crash mid-batch leaves only invisible data files (the streaming
-    checkpoint replays the batch; the apply is idempotent so the
-    retry converges), and the batch history is auditable per epoch."""
-    from bi_etl_and_integration_spark.operators.cdc import (
-        apply_changes_transactional)
-    from bi_etl_and_integration_spark.sources.snapshots import (
-        SnapshotTable)
-
+    """writeStream.foreachBatch sink applying each micro-batch as a
+    keyed MERGE that lands as one SnapshotTable commit: concurrent
+    readers keep the previous version (no visibility gap), a crash
+    mid-batch leaves only invisible data files (the streaming
+    checkpoint replays the batch; the apply is idempotent so the retry
+    converges), and the batch history is auditable per epoch."""
     def apply_batch(batch: DataFrame, epoch_id: int) -> None:
         table = SnapshotTable(batch.sparkSession, table_path)
         apply_changes_transactional(table, batch, keys, offset_col,

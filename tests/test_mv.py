@@ -51,3 +51,24 @@ def test_dict_lookup_is_projection_only(spark, rows):
     assert got == {1: "open", 2: "final", 3: "unknown"}
     assert plans.shuffle_count(out) == 0  # dictGet: pure projection
     assert plans.broadcast_join_count(out) == 0
+
+
+def test_mv_commits_through_snapshot_table(spark, rows, tmp_path):
+    """Refreshes are append commits and compaction an overwrite commit
+    of the folded states: the view's history is the commit log, and a
+    decimal view still takes refreshes after it is compacted."""
+    from bi_etl_and_integration_spark.sources.snapshots import (
+        SnapshotTable)
+    mv = IncrementalAggMV(str(tmp_path / "mv"), ["k"],
+                          {"t": F.col("v").cast("decimal(20,2)")})
+    mv.refresh(rows([("a", 1.0), ("b", 2.0)], "k string, v double"))
+    mv.refresh(rows([("a", 3.0)], "k string, v double"))
+    mv.compact(spark)
+    hist = SnapshotTable(spark, mv.path).history()
+    assert [(h["version"], h["operation"]) for h in hist] == [
+        (1, "append"), (2, "append"), (3, "overwrite")]
+    assert hist[1]["n_files"] > hist[0]["n_files"]    # deltas accumulate
+    assert mv.n_delta_files() == hist[-1]["n_files"]
+    mv.refresh(rows([("b", 5.0)], "k string, v double"))
+    got = {r["k"]: float(r["t"]) for r in mv.read(spark).collect()}
+    assert got == {"a": 4.0, "b": 7.0}

@@ -132,6 +132,27 @@ def test_pipeline_from_spec_rejects_unknown_stage_kind(spark):
         from_spec({"stages": [{"name": "x"}]})
 
 
+def test_pipeline_from_spec_rejects_unknown_write_format(spark, rows,
+                                                        tmp_path):
+    """A write format outside the known set fails when the spec is
+    built, and a direct export with it fails before the swap: the
+    published directory is left as it was."""
+    import os
+    from bi_etl_and_integration_spark.pipeline import from_spec
+    out = str(tmp_path / "out")
+    checkpointed_write(rows([(1,)], "id int"), out)
+    spec = {"name": "bad", "stages": [
+        {"name": "load", "sql": "SELECT 2 AS id"},
+        {"name": "out", "input": "load", "depends_on": ["load"],
+         "write": {"path": out, "format": "partitionBy"}}]}
+    with pytest.raises(ValueError, match="partitionBy"):
+        from_spec(spec)
+    with pytest.raises(Exception, match="DATA_SOURCE_NOT_FOUND"):
+        checkpointed_write(rows([(2,)], "id int"), out, fmt="partitionBy")
+    assert [r["id"] for r in spark.read.parquet(out).collect()] == [1]
+    assert sorted(os.listdir(tmp_path)) == ["out"]
+
+
 def test_catalog_sql_entry_point(spark):
     from bi_etl_and_integration_spark.sources import Catalog
     cat = Catalog(spark, "/root/testdata/sf0.001", register_views=True)
@@ -244,6 +265,22 @@ def test_parallel_run_matches_serial_statuses(spark):
     # c ran after both roots, d last
     assert seen.index("c") > max(seen.index("a"), seen.index("b"))
     assert seen[-1] == "d"
+
+
+def test_serial_run_executes_stages_on_callers_thread(spark):
+    """max_parallel=1 runs every stage inline: job groups and
+    cache_scope() are thread-local, so a caller's group must cover the
+    stages' jobs."""
+    import threading
+    seen = []
+    p = Pipeline("inline")
+    p.stage("a")(lambda ctx: seen.append(threading.get_ident()))
+    p.stage("b", depends_on=["a"])(
+        lambda ctx: seen.append(threading.get_ident()))
+    p.stage("c")(lambda ctx: seen.append(threading.get_ident()))
+    ctx = p.run(spark)
+    assert seen == [threading.get_ident()] * 3
+    assert ctx.metrics["__status"] == {"a": "ok", "b": "ok", "c": "ok"}
 
 
 def test_parallel_run_overlaps_independent_stages(spark):

@@ -66,7 +66,7 @@ def test_empty_dataframe_commit(spark, tmp_path):
 
 def test_concurrent_appends_all_survive(spark, tmp_path):
     """Optimistic concurrency: racing appends must serialize via the
-    O_EXCL manifest create — every row survives, versions are dense."""
+    atomic manifest link — every row survives, versions are dense."""
     from concurrent.futures import ThreadPoolExecutor
     t = SnapshotTable(spark, str(tmp_path / "t"))
     t.write(spark.createDataFrame([(0,)], "k int"), "overwrite")
@@ -237,3 +237,78 @@ def test_append_schema_evolution_union_and_nulls(spark, rows, tmp_path):
     # history intact: four committed versions, all readable
     assert len(t.versions()) == 3
     assert {r["k"] for r in t.read(version=1).collect()} == {1}
+
+
+def test_rollback_after_interloper_lands_on_next_free_version(
+        spark, tmp_path, monkeypatch):
+    """Another writer commits the version a rollback computed: the
+    rollback re-parents onto the next free version instead of failing."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.write(spark.createDataFrame([(1,)], "k int"), "overwrite")
+    t.write(spark.createDataFrame([(2,)], "k int"), "overwrite")
+    real_latest = t.latest_version
+    fired = []
+
+    def racing_latest():
+        v = real_latest()
+        if not fired:
+            fired.append(v)
+            # the interloper lands v+1 after this writer read v
+            SnapshotTable(spark, t.path).write(
+                spark.createDataFrame([(3,)], "k int"), "append")
+        return v
+
+    monkeypatch.setattr(t, "latest_version", racing_latest)
+    assert t.rollback(1) == 4
+    assert [r["k"] for r in t.read().collect()] == [1]
+    assert [h["operation"] for h in t.history()] == [
+        "overwrite", "overwrite", "append", "rollback(1)"]
+
+
+def test_failed_manifest_serialisation_publishes_nothing(
+        spark, tmp_path, monkeypatch):
+    """A commit that dies while serialising its manifest leaves no
+    v{N}.json (and no temp file): the previous version stays the
+    readable latest and later commits still append to it."""
+    from bi_etl_and_integration_spark.sources import snapshots as sn
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.write(spark.createDataFrame([(1,)], "k int"), "overwrite")
+
+    def broken_dump(obj, fh):
+        raise OSError("disk full")
+
+    with monkeypatch.context() as m:
+        m.setattr(sn.json, "dump", broken_dump)
+        with pytest.raises(OSError, match="disk full"):
+            t.write(spark.createDataFrame([(2,)], "k int"), "append")
+    assert os.listdir(os.path.join(t.path, "_manifests")) == [
+        os.path.basename(sn._manifest_path(t.path, 1))]
+    assert [r["k"] for r in t.read().collect()] == [1]
+    assert t.write(spark.createDataFrame([(3,)], "k int"), "append") == 2
+    assert sorted(r["k"] for r in t.read().collect()) == [1, 3]
+
+
+def test_compact_opens_no_existing_manifest_for_writing(
+        spark, tmp_path, monkeypatch):
+    """Committed manifests are immutable: compaction publishes a new
+    version without reopening (and truncating) one for writing."""
+    from bi_etl_and_integration_spark.sources import snapshots as sn
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.write(spark.createDataFrame([(0,)], "k int"), "overwrite")
+    t.write(spark.createDataFrame([(1,)], "k int"), "append")
+    rewrites = []
+
+    def spy_open(path, mode="r", *args, **kwargs):
+        if ("w" in mode or "a" in mode or "+" in mode) \
+                and os.path.basename(path).startswith("v") \
+                and os.path.exists(path):
+            rewrites.append(os.path.basename(path))
+        return open(path, mode, *args, **kwargs)
+
+    monkeypatch.setattr(sn, "open", spy_open, raising=False)
+    v = t.compact(target_files=1)
+    assert rewrites == []
+    last = t.history()[-1]
+    assert (last["version"], last["operation"], last["n_files"]) == (
+        v, "compact", 1)
+    assert sorted(r["k"] for r in t.read().collect()) == [0, 1]

@@ -48,46 +48,6 @@ def test_session_window_batch(rows):
     assert a_sessions == [1, 2]
 
 
-def test_foreach_batch_upsert_end_to_end(spark, rows, tmp_path):
-    """File stream -> foreachBatch keyed MERGE onto a parquet target:
-    inserts+updates applied, deletes removed, restart-safe by checkpoint
-    (the 'mark processed range only on success' contract, §3.3)."""
-    from bi_etl_and_integration_spark.operators.cdc import (
-        OP_DELETE, OP_INSERT, OP_UPDATE)
-    from bi_etl_and_integration_spark.streaming.runner import (
-        foreach_batch_upsert)
-
-    src = str(tmp_path / "cdc_src")
-    target = str(tmp_path / "cdc_target")
-    ckpt = str(tmp_path / "ckpt")
-    ch1 = rows([(1, "a", 1, OP_INSERT), (2, "b", 2, OP_INSERT)],
-               "k int, v string, lsn int, op int")
-    ch1.write.parquet(src)
-
-    stream = spark.readStream.schema(ch1.schema).parquet(src)
-    writer = foreach_batch_upsert(stream, target_path=target, keys=["k"],
-                                  offset_col="lsn", checkpoint_dir=ckpt)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {r["k"]: r["v"] for r in spark.read.parquet(target).collect()}
-    assert got == {1: "a", 2: "b"}
-
-    # second micro-batch: update 1, delete 2, insert 3
-    ch2 = rows([(1, "a2", 3, OP_UPDATE), (2, None, 4, OP_DELETE),
-                (3, "c", 5, OP_INSERT)], "k int, v string, lsn int, op int")
-    ch2.write.mode("append").parquet(src)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {r["k"]: r["v"] for r in spark.read.parquet(target).collect()}
-    assert got == {1: "a2", 3: "c"}
-
-
 def test_streaming_tumbling_end_to_end(spark, rows, tmp_path):
     """readStream -> watermark+window -> memory sink, batch-vs-stream
     result parity (the Q41 semantics check)."""
