@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from bi_etl_and_integration_spark.operators.fuzzy import tokenize
+
 __all__ = [
     "findstring", "substring", "left", "right", "length", "trim",
     "ltrim", "rtrim", "replace", "replacenull", "isnull_ternary",
@@ -103,11 +105,10 @@ def concat_ws(sep: str, *cols: Column | str) -> Column:
 def token(s: Column | str, delimiters: str, occurrence: int) -> Column:
     """SSIS TOKEN(s, delimiters, n): n-th token, 1-based; empty tokens
     skipped (split on runs of any delimiter char)."""
-    c = F.col(s) if isinstance(s, str) else s
     import re as _re
     pattern = "[" + _re.escape(delimiters) + "]+"
-    toks = F.array_remove(F.split(c, pattern), "")
-    return F.element_at(toks, occurrence)
+    return F.element_at(tokenize(s, lower=False, pattern=pattern),
+                        occurrence)
 
 
 def reverse_str(s: Column | str) -> Column:

@@ -160,36 +160,22 @@ def value_histogram(df: DataFrame, col: str, lo: float, hi: float,
 
 
 def functional_dependencies(df: DataFrame,
-                            pairs: Sequence[tuple[str, str]],
-                            fused: bool = False) -> DataFrame:
+                            pairs: Sequence[tuple[str, str]]) -> DataFrame:
     """Functional-dependency profiling (PRO/Глава 03:81-85: the
     profiler's "functional deps / key candidates" analysis): a → b
     holds iff every a-value maps to exactly one b-value, i.e.
     COUNT(DISTINCT a) == COUNT(DISTINCT (a, b)).
 
-    Two physical strategies, same result:
-
-    - ``fused=False`` (default): one two-level distinct aggregation
-      per pair — k pairs cost k scans + 2k small shuffles.
-      Measured-and-kept as the default: at sf0.1 on local NVMe the
-      fused variant below is ~25% SLOWER because its expand
-      (#determinants × #distinct-aggs row multiplier) outweighs the
-      scans it saves when scans are cheap.
-    - ``fused=True``: ALL pairs in ONE scan via GROUPING SETS — one
-      set per distinct determinant, every pair's COUNT(DISTINCT
-      dependent) as an aggregate, GROUPING_ID routing each output
-      row to its pair.  The scale dial: on cold object storage
-      (100 TB, scans dominate) the saved k-1 scans beat the expand
-      for a handful of candidate keys; capped at
-      ``_FUSE_MAX_PAIRS`` because the expand factor grows k².
+    One two-level distinct aggregation per pair — k pairs cost k scans
+    + 2k small shuffles.  A GROUPING SETS variant that fuses every pair
+    into one scan was measured ~25% SLOWER at sf0.1 (its
+    #determinants × #distinct-aggs expand outweighs the saved scans)
+    and is not kept.
 
     The violation count (#determinant values with >1 dependent)
     quantifies HOW broken a dependency is, not just whether.
     Output per pair: (determinant, dependent, n_det, n_pair, holds,
     n_violations)."""
-    pairs = list(pairs)
-    if fused and len(pairs) <= _FUSE_MAX_PAIRS:
-        return _functional_deps_fused(df, pairs)
     outs = []
     for a, b in pairs:
         grp = (df.groupBy(a)
@@ -203,43 +189,6 @@ def functional_dependencies(df: DataFrame,
             F.col("n_det"), F.col("n_pair"),
             (F.col("n_violations") == 0).alias("holds"),
             F.col("n_violations")))
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
-
-
-#: grouping-sets expand factor cap: dets × distinct-aggs row blowup
-_FUSE_MAX_PAIRS = 6
-
-
-def _functional_deps_fused(df: DataFrame,
-                           pairs: list[tuple[str, str]]) -> DataFrame:
-    dets = list(dict.fromkeys(a for a, _ in pairs))
-    det_ix = {a: j for j, a in enumerate(dets)}
-    k = len(dets)
-    agg1 = (df.groupingSets([[F.col(d)] for d in dets],
-                            *(F.col(d) for d in dets))
-            .agg(F.grouping_id().alias("__gid"),
-                 *[F.count_distinct(F.col(b)).alias(f"__nb_{i}")
-                   for i, (_, b) in enumerate(pairs)]))
-    agg2 = agg1.groupBy("__gid").agg(
-        F.count(F.lit(1)).alias("__n"),
-        *[x for i in range(len(pairs)) for x in (
-            F.sum(f"__nb_{i}").alias(f"__np_{i}"),
-            F.sum((F.col(f"__nb_{i}") > 1).cast("long"))
-            .alias(f"__nv_{i}"))])
-    # grouping set [d_j]: every det but d_j is aggregated-out ->
-    # grouping_id has all bits set except position j (MSB-first)
-    outs = []
-    for i, (a, b) in enumerate(pairs):
-        gid = (2 ** k - 1) ^ (2 ** (k - 1 - det_ix[a]))
-        outs.append(agg2.where(F.col("__gid") == gid).select(
-            F.lit(a).alias("determinant"), F.lit(b).alias("dependent"),
-            F.col("__n").alias("n_det"),
-            F.col(f"__np_{i}").alias("n_pair"),
-            (F.col(f"__nv_{i}") == 0).alias("holds"),
-            F.col(f"__nv_{i}").alias("n_violations")))
     out = outs[0]
     for o in outs[1:]:
         out = out.unionByName(o)

@@ -34,6 +34,8 @@ from typing import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bi_etl_and_integration_spark.operators.fuzzy import STOPWORDS, tokenize
+
 # ---------------------------------------------------------------- PII
 
 #: (name, pattern, replacement) — RE2-compatible (no lookaround, no
@@ -93,7 +95,7 @@ def quality_filter(df: DataFrame, text_col: str = "text", *,
     All rules are single-pass string expressions (token split is
     materialized once and shared); zero shuffle, codegen throughout."""
     c = F.col(text_col)
-    toks = F.filter(F.split(c, r"\s+"), lambda t: t != "")
+    toks = tokenize(c, lower=False, pattern=r"\s+")
     n_tokens = F.size(toks)
     n_chars = F.length(c)
     punct = "!\"#$%&'()*+,-./:;<=>?@[\\]^_`{|}~"
@@ -101,7 +103,6 @@ def quality_filter(df: DataFrame, text_col: str = "text", *,
     mean_wl = F.when(n_tokens > 0,
                      (n_chars - (n_tokens - 1)) / n_tokens).otherwise(0.0)
     punct_ratio = F.when(n_chars > 0, n_punct / n_chars).otherwise(0.0)
-    from bi_etl_and_integration_spark.operators.fuzzy import STOPWORDS
     sw = F.array(*[F.lit(s) for s in STOPWORDS])
     stop_ratio = F.when(
         n_tokens > 0,
@@ -195,7 +196,7 @@ def _ngram_col(text: Column, n: int) -> Column:
     """Distinct lowercase token ``n``-grams of one document as an
     array<string> (the audit-readable form; the join path uses
     :func:`_ngram_hash_col`)."""
-    toks = F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
+    toks = tokenize(text, pattern=r"\s+")
     cnt = F.size(toks) - (n - 1)
     return F.when(cnt > 0, F.array_distinct(F.transform(
         F.sequence(F.lit(1), F.greatest(cnt, F.lit(1))),
@@ -210,7 +211,7 @@ def _ngram_hash_col(text: Column, n: int) -> Column:
     per-gram string concatenation, which dominates the string form's
     cost at corpus scale (same tokenizer: whitespace split of
     lower(text), so an oracle over the string grams still matches)."""
-    toks = F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
+    toks = tokenize(text, pattern=r"\s+")
     th = F.transform(toks, lambda t: F.xxhash64(t))
     k = F.greatest(F.size(th) - (n - 1), F.lit(0))
     zipped = F.arrays_zip(*[F.slice(th, i + 1, F.size(th))

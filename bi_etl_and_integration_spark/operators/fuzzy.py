@@ -77,6 +77,10 @@ def fuzzy_lookup(df: DataFrame, ref: DataFrame, col: str, ref_col: str, *,
 #: bound the IVF/PQ trainers and the BPE vocab path use.
 _SMALL_GRAPH_EDGES = 100_000
 
+#: large/small-star round budget: O(log² n) rounds converge far below
+#: it for any graph that fits a cluster; an unconverged loop raises
+_STAR_MAX_ROUNDS = 25
+
 
 def _local_components(edge_rows) -> dict:
     """Union-find (path compression) over a driver-collected edge
@@ -134,10 +138,7 @@ def _local_labels_df(edges: DataFrame, probe_rows) -> DataFrame:
 
 
 def connected_components(edges: DataFrame, src: str = "src",
-                         dst: str = "dst", *,
-                         max_iter: int = 25,
-                         small_graph_threshold: int = _SMALL_GRAPH_EDGES
-                         ) -> DataFrame:
+                         dst: str = "dst") -> DataFrame:
     """Alternating large-star/small-star connected components
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC'14 — public algorithm).  Converges in O(log² n) rounds versus
@@ -150,24 +151,25 @@ def connected_components(edges: DataFrame, src: str = "src",
     where ``component`` is the minimum node id of its component.
 
     SMALL-GRAPH FAST PATH: when a bounded probe shows the edge list has
-    at most ``small_graph_threshold`` rows, the whole graph collects to
+    at most ``_SMALL_GRAPH_EDGES`` rows, the whole graph collects to
     the driver and union-find labels it in one pass — zero job waves
     instead of O(log² n) rounds of two shuffles each (the probe is a
-    ``limit(threshold+1)`` scan, so the decision itself never reads
-    more than threshold+1 rows even on a 100 TB edge set).  The labels
-    come back broadcast-hinted, so the caller's join against them
-    stays a broadcast.  Pass ``0`` to force the distributed algorithm.
+    ``limit(_SMALL_GRAPH_EDGES + 1)`` scan, so the decision itself
+    never reads more than that many rows even on a 100 TB edge set).
+    The labels come back broadcast-hinted, so the caller's join
+    against them stays a broadcast.
 
     Each distributed round is two shuffles (groupBy min + join) per
     star step, all JVM-side; no driver-side data beyond the
-    convergence flag.
+    convergence flag.  A loop still changing after
+    ``_STAR_MAX_ROUNDS`` rounds raises instead of returning partial
+    labels.
     """
     e0 = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
           .where(F.col("u") != F.col("v")))
-    if small_graph_threshold:
-        probe = e0.limit(small_graph_threshold + 1).collect()
-        if len(probe) <= small_graph_threshold:
-            return F.broadcast(_local_labels_df(e0, probe))
+    probe = e0.limit(_SMALL_GRAPH_EDGES + 1).collect()
+    if len(probe) <= _SMALL_GRAPH_EDGES:
+        return F.broadcast(_local_labels_df(e0, probe))
     # canonical orientation u > v; the edge set is kept distinct so the
     # convergence check compares sets, not multisets
     e = (e0.select(F.greatest("u", "v").alias("u"),
@@ -198,12 +200,16 @@ def connected_components(edges: DataFrame, src: str = "src",
                         F.least("v", "m").alias("v"))
                 .where(F.col("u") != F.col("v")).distinct())
 
-    for _ in range(max_iter):
+    for _ in range(_STAR_MAX_ROUNDS):
         nxt = _materialize(_small_star(_large_star(e)))
         changed = nxt.exceptAll(e).limit(1).count()
         e = nxt
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixpoint after {_STAR_MAX_ROUNDS}"
+            " large/small-star rounds")
     # at the fixpoint every edge points child -> component root (min id)
     roots = e.select(F.col("v").alias("id")).distinct() \
         .withColumn("component", F.col("id"))
@@ -261,9 +267,7 @@ def fuzzy_pairs(df: DataFrame, key: str, col: str, *,
 def fuzzy_grouping(df: DataFrame, key: str, col: str, *,
                    block: Column | Sequence[Column] | None = None,
                    min_similarity: float = 0.8,
-                   pairs: DataFrame | None = None,
-                   small_graph_threshold: int = _SMALL_GRAPH_EDGES
-                   ) -> DataFrame:
+                   pairs: DataFrame | None = None) -> DataFrame:
     """SSIS Fuzzy Grouping: cluster near-duplicate rows.
 
     Output = input columns + ``_key_in`` (row key), ``_key_out``
@@ -277,9 +281,8 @@ def fuzzy_grouping(df: DataFrame, key: str, col: str, *,
          blockers, see :func:`fuzzy_pairs`)
       2. :func:`connected_components` over the edge set — driver-local
          union-find when the edge set has at most
-         ``small_graph_threshold`` rows, alternating large/small-star
-         otherwise (``small_graph_threshold=0`` forces the
-         distributed loop); nodes without an edge are singletons
+         ``_SMALL_GRAPH_EDGES`` rows, alternating large/small-star
+         otherwise; nodes without an edge are singletons
       3. canonical = min key per component
 
     ``pairs`` short-circuits step 1 with a precomputed
@@ -297,7 +300,7 @@ def fuzzy_grouping(df: DataFrame, key: str, col: str, *,
     # driver-built frame, or the last checkpointed star round), so the
     # edge cache ends with this scope
     with cache_scope():
-        if internal_pairs and small_graph_threshold:
+        if internal_pairs:
             # ADVICE r8: the small-graph probe executes the (expensive)
             # blocked pair-generation plan; cache FIRST so an
             # over-threshold probe's partitions are reused by the
@@ -308,8 +311,7 @@ def fuzzy_grouping(df: DataFrame, key: str, col: str, *,
             # preserved).  Caller-given pairs stay uncached — the
             # caller owns their lifetime.
             edges = cached(edges)
-        comp = connected_components(
-            edges, small_graph_threshold=small_graph_threshold)
+        comp = connected_components(edges)
     labels = (nodes.select("id")
               .join(comp, "id", "left")
               .select("id", F.coalesce("component", F.col("id"))

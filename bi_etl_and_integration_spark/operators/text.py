@@ -16,7 +16,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bi_etl_and_integration_spark.operators.common import cached
+from bi_etl_and_integration_spark.operators.common import cached, materialize
 from bi_etl_and_integration_spark.operators.fuzzy import STOPWORDS, tokenize
 
 #: tiny per-language marker lexicons (n-gram-heuristic stand-in; a real
@@ -37,10 +37,9 @@ def token_count(text: Column | str, mode: str = "whitespace") -> Column:
     if mode == "whitespace":
         # measured-and-kept (x12b plan, sf0.1, min-of-4): this HOF
         # form 1.0s; regexp_count(c,'\S+') 3.1s; CASE-WHEN trim+split
-        # 3.0s.  The filter lambda looks like the slow path but the
-        # split array is materialized once and shared, while both
-        # "one-pass" rewrites re-evaluate per reference in
-        # filter+project without cross-operator CSE.
+        # 3.0s.  tokenize()'s array_remove form read 3.9-4.5s against
+        # this form's 1.4-1.9s (x12b, 5 alternating pairs, same plan
+        # shape).  The split array is materialized once and shared.
         return F.size(F.filter(F.split(c, r"\s+"), lambda t: t != ""))
     if mode == "bpe":
         return F.size(F.regexp_extract_all(
@@ -141,16 +140,16 @@ def chunk_documents(df: DataFrame, text_col: str = "text",
     yields identical ids, so downstream dedup/embedding jobs are
     idempotent).
 
-    Whitespace tokenization (tokens are rejoined verbatim — no
-    lowercasing or punctuation stripping, the chunk must carry the
-    original text).  Entirely higher-order functions over one narrow
-    projection + explode: no shuffle, no UDF, safe at 100 TB; a doc's
-    chunk fan-out is len/step rows, bounded by the longest document,
-    not the corpus."""
+    Tokens split on runs of any whitespace character and are rejoined
+    with single spaces (no lowercasing or punctuation stripping, the
+    chunk must carry the original words).  Entirely higher-order
+    functions over one narrow projection + explode: no shuffle, no
+    UDF, safe at 100 TB; a doc's chunk fan-out is len/step rows,
+    bounded by the longest document, not the corpus."""
     if overlap_tokens >= chunk_tokens:
         raise ValueError("overlap_tokens must be < chunk_tokens")
     step = chunk_tokens - overlap_tokens
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = tokenize(text_col, lower=False, pattern=r"\s+")
     # last window starts at most at len-overlap so every tail token is
     # covered exactly once past the previous chunk's overlap
     starts = F.sequence(
@@ -165,11 +164,9 @@ def chunk_documents(df: DataFrame, text_col: str = "text",
             F.least(F.lit(chunk_tokens), F.size(toks) - s + 1)
             .cast("int").alias("n_tokens")))
     # NULL / empty / whitespace-only text -> no chunks (explode drops
-    # the empty array): split('') returns [''] which would otherwise
-    # fabricate a chunk claiming n_tokens=1 for a zero-token document
-    chunks = F.when(F.col(text_col).isNull()
-                    | (F.trim(F.col(text_col)) == ""),
-                    F.array()).otherwise(chunks)
+    # the empty array); sequence(1, 1) would otherwise fabricate one
+    # chunk for a zero-token document
+    chunks = F.when(F.size(toks) > 0, chunks).otherwise(F.array())
     return (df.select(F.col(id_col).alias("id"),
                       F.explode(chunks).alias("c"))
             .select("id", "c.chunk_start", "c.chunk", "c.n_tokens"))
@@ -266,8 +263,7 @@ def bm25_rank(docs: DataFrame, query_terms: list[str], *,
     # carries two Generate nodes over the same 500k-doc scan).
     # ``per_doc`` is (id, dl, tf_0..tf_k) — a narrow int frame —
     # cached because stats and the score projection both consume it.
-    toks = F.filter(F.split(F.lower(F.col(text_col)), " "),
-                    lambda t: t != "")
+    toks = tokenize(text_col, pattern=" ")
     # per-term counts in ONE full-array pass: first keep only query
     # tokens (|query| comparisons per token), then count each term
     # over that near-empty array — measured at sf10 (500k docs,
@@ -350,8 +346,7 @@ def unigram_lm_score(docs: DataFrame, *, id_col: str = "doc_id",
 
     Output: (id_col, n_tokens, avg_logprob, n_unseen).
     """
-    toks = F.filter(F.split(F.lower(F.col(text_col)), " "),
-                    lambda t: t != "")
+    toks = tokenize(text_col, pattern=" ")
     exploded = docs.select(F.col(id_col), F.explode(toks).alias("__tok"))
     if model is None:
         model = exploded.groupBy("__tok") \
@@ -403,10 +398,13 @@ def _bpe_train_vocab(word_freq: dict[str, int], n_merges: int,
     return merges
 
 
+#: distinct-word count at or below which BPE training runs on the
+#: driver (the vocab regime every published BPE trainer assumes)
+_BPE_DRIVER_MAX_WORDS = 200_000
+
+
 def bpe_train(docs: DataFrame, *, text_col: str = "text",
               n_merges: int = 50, min_pair_count: int = 2,
-              distributed: bool | None = None,
-              collect_threshold: int = 200_000,
               ) -> list[tuple[str, str]]:
     """Byte-pair-encoding merge-table training (Sennrich et al.,
     "Neural Machine Translation of Rare Words with Subword Units",
@@ -419,45 +417,37 @@ def bpe_train(docs: DataFrame, *, text_col: str = "text",
     The corpus-sized pass is ALWAYS distributed (explode + word-count
     aggregate).  What happens next is sized to the vocab, exactly like
     the IVF/PQ trainers: a vocab that fits the driver
-    (``<= collect_threshold`` distinct words — the common case even
-    for large corpora, and the regime every published BPE trainer
+    (``<= _BPE_DRIVER_MAX_WORDS`` distinct words — the common case
+    even for large corpora, and the regime every published BPE trainer
     assumes) collects once and iterates in memory, where n_merges
-    rounds cost milliseconds instead of n_merges job waves.  A
-    web-scale vocab (``distributed=True``, or auto when the count
-    exceeds the threshold) stays in Spark: per merge round,
+    rounds cost milliseconds instead of n_merges job waves.  A larger
+    web-scale vocab stays in Spark: per merge round,
     adjacent-pair counts via a zip_with(slice, slice) explode + hash
     aggregate (ONE shuffle of (pair, partial-count) rows), the single
     best pair collected to the driver (count desc, then lexicographic
     — fully deterministic), and the merge applied with a left-to-right
     greedy array fold (the published replacement order), state
-    localCheckpoint'd per round so the analyzer never sees a growing
-    plan.  Both paths implement the identical algorithm and tie-break
-    (regression-tested against each other); the driver ends up holding
-    ONLY the merge table either way.
+    lineage cut per round (:func:`materialize`) so the analyzer never
+    sees a growing plan.  Both paths implement the identical algorithm
+    and tie-break (regression-tested against each other); the driver
+    ends up holding ONLY the merge table either way.
 
     Returns the ranked merge list; feed it to :func:`bpe_encode`.
     """
-    toks = F.filter(F.split(F.lower(F.col(text_col)), " "),
-                    lambda t: t != "")
+    toks = tokenize(text_col, pattern=" ")
     vocab = (docs.select(F.explode(toks).alias("__w"))
              .groupBy("__w").agg(F.count(F.lit(1)).alias("__freq")))
-    if distributed is None:
-        # one job decides AND delivers: collect at most threshold+1
-        # vocab rows — if they all fit, that IS the training input
-        head = vocab.limit(collect_threshold + 1).collect()
-        if len(head) <= collect_threshold:
-            return _bpe_train_vocab(
-                {r["__w"]: r["__freq"] for r in head},
-                n_merges, min_pair_count)
-        distributed = True
-    if not distributed:
-        wf = {r["__w"]: r["__freq"] for r in vocab.collect()}
-        return _bpe_train_vocab(wf, n_merges, min_pair_count)
+    # one job decides AND delivers: collect at most max+1 vocab rows —
+    # if they all fit, that IS the training input
+    head = vocab.limit(_BPE_DRIVER_MAX_WORDS + 1).collect()
+    if len(head) <= _BPE_DRIVER_MAX_WORDS:
+        return _bpe_train_vocab({r["__w"]: r["__freq"] for r in head},
+                                n_merges, min_pair_count)
     # split into character symbols + explicit end-of-word marker
-    state = vocab.select(
+    state = materialize(vocab.select(
         F.concat(F.split(F.col("__w"), ""),
                  F.array(F.lit("</w>"))).alias("__syms"),
-        F.col("__freq")).localCheckpoint(eager=True)
+        F.col("__freq")))
 
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
@@ -486,8 +476,7 @@ def bpe_train(docs: DataFrame, *, text_col: str = "text",
                 F.concat(F.slice(acc, 1, F.size(acc) - 1),
                          F.array(F.concat(la, lb))))
             .otherwise(F.concat(acc, F.array(s))))
-        state = (state.withColumn("__syms", merged)
-                 .localCheckpoint(eager=True))
+        state = materialize(state.withColumn("__syms", merged))
     return merges
 
 

@@ -3170,10 +3170,10 @@ def x10(spark, cat):
 
 
 @q("x14_chunking",
-   r"WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') "
-   "AS toks FROM documents WHERE trim(text) <> ''), "
+   r"WITH t AS (SELECT doc_id, list_filter(regexp_split_to_array(text, "
+   r"'\s+'), x -> x <> '') AS toks FROM documents), "
    "u AS (SELECT doc_id, toks, UNNEST(generate_series(1, "
-   "GREATEST(len(toks) - 8, 1), 24)) AS s FROM t) "
+   "GREATEST(len(toks) - 8, 1), 24)) AS s FROM t WHERE len(toks) > 0) "
    "SELECT doc_id AS id, CAST(s AS INT) AS chunk_start, "
    "array_to_string(list_slice(toks, s, s + 31), ' ') AS chunk, "
    "CAST(LEAST(32, len(toks) - s + 1) AS INT) AS n_tokens "

@@ -101,19 +101,22 @@ def test_functional_dependencies(rows):
     assert out[("det", "dep")] == (False, 1)  # 'b' maps to two values
 
 
-def test_functional_dependencies_fused_equals_loop(rows):
+def test_functional_dependencies_null_determinant(rows):
+    """A NULL determinant is one group (groupBy), and NULL dependents
+    are not counted (COUNT DISTINCT)."""
     df = rows([(1, "a", "x", 7), (2, "a", "x", 7), (3, "b", "y", 8),
                (4, "b", "z", 8), (5, None, "y", 9)],
               "id int, det string, dep string, n int")
     pairs = [("id", "det"), ("det", "dep"), ("det", "n"), ("n", "dep")]
-    key = ["determinant", "dependent"]
-    loop = sorted(
-        cl.functional_dependencies(df, pairs, fused=False).collect(),
-        key=lambda r: [r[k] for k in key])
-    fused = sorted(
-        cl.functional_dependencies(df, pairs, fused=True).collect(),
-        key=lambda r: [r[k] for k in key])
-    assert [r.asDict() for r in loop] == [r.asDict() for r in fused]
+    got = sorted(tuple(r) for r in
+                 cl.functional_dependencies(df, pairs).collect())
+    # (determinant, dependent, n_det, n_pair, holds, n_violations)
+    assert got == [
+        ("det", "dep", 3, 4, False, 1),   # 'b' -> y, z
+        ("det", "n", 3, 3, True, 0),
+        ("id", "det", 5, 4, True, 0),     # id 5 -> NULL: 0 distinct
+        ("n", "dep", 3, 4, False, 1),     # 8 -> y, z
+    ]
 
 
 def test_domain_cleanse_corrections_dataframe(rows):

@@ -72,32 +72,35 @@ def test_tokenize(rows):
     assert toks == ["hello", "world", "foo", "bar"]
 
 
-def test_connected_components_star(rows):
-    """Large/small-star CC (distributed path FORCED via threshold 0):
-    a long chain (worst case for label propagation) plus a separate
-    pair and a ring all resolve to the min id of their component."""
+def _components(edges, monkeypatch, small_graph_edges: int) -> dict:
+    monkeypatch.setattr(fz, "_SMALL_GRAPH_EDGES", small_graph_edges)
+    return {r["id"]: r["component"]
+            for r in fz.connected_components(edges).collect()}
+
+
+def test_connected_components_star(rows, monkeypatch):
+    """Large/small-star CC (distributed path FORCED via a 0-edge
+    driver limit): a long chain (worst case for label propagation)
+    plus a separate pair and a ring all resolve to the min id of
+    their component."""
     chain = [(i, i + 1) for i in range(1, 8)]          # 1-2-...-8
     ring = [(20, 21), (21, 22), (22, 20)]
     pair = [(40, 41)]
     edges = rows(chain + ring + pair, "src bigint, dst bigint")
-    comp = {r["id"]: r["component"]
-            for r in fz.connected_components(
-                edges, small_graph_threshold=0).collect()}
+    comp = _components(edges, monkeypatch, 0)
     assert all(comp[i] == 1 for i in range(1, 9))
     assert all(comp[i] == 20 for i in (20, 21, 22))
     assert comp[40] == 40 and comp[41] == 40
 
 
-def test_connected_components_duplicate_and_reversed_edges(rows):
+def test_connected_components_duplicate_and_reversed_edges(rows,
+                                                           monkeypatch):
     edges = rows([(2, 1), (1, 2), (2, 3), (3, 1)], "src int, dst int")
     for thr in (0, 100):        # distributed and driver-local paths
-        comp = {r["id"]: r["component"]
-                for r in fz.connected_components(
-                    edges, small_graph_threshold=thr).collect()}
-        assert comp == {1: 1, 2: 1, 3: 1}
+        assert _components(edges, monkeypatch, thr) == {1: 1, 2: 1, 3: 1}
 
 
-def test_connected_components_local_matches_distributed(rows):
+def test_connected_components_local_matches_distributed(rows, monkeypatch):
     """The driver-local union-find fast path returns exactly the
     distributed fixpoint — same ids, same min-id components, same
     schema — on a graph mixing chains, rings, dups, and reversals."""
@@ -109,39 +112,51 @@ def test_connected_components_local_matches_distributed(rows):
                  for _ in range(40)]                        # random blob
     edges_py += [(v, u) for u, v in edges_py[:10]]          # reversals
     edges = rows(edges_py, "src bigint, dst bigint")
-    dist = fz.connected_components(edges, small_graph_threshold=0)
-    loc = fz.connected_components(edges, small_graph_threshold=10_000)
+    monkeypatch.setattr(fz, "_SMALL_GRAPH_EDGES", 0)
+    dist = fz.connected_components(edges)
+    monkeypatch.setattr(fz, "_SMALL_GRAPH_EDGES", 10_000)
+    loc = fz.connected_components(edges)
     assert dist.schema == loc.schema
     assert ({(r["id"], r["component"]) for r in dist.collect()}
             == {(r["id"], r["component"]) for r in loc.collect()})
 
 
-def test_connected_components_probe_respects_threshold(rows):
+def test_connected_components_probe_respects_threshold(rows, monkeypatch):
     """An edge list larger than the threshold takes the distributed
     path (the probe must not silently truncate the graph)."""
     edges = rows([(i, i + 1) for i in range(1, 12)],
                  "src bigint, dst bigint")
-    comp = {r["id"]: r["component"]
-            for r in fz.connected_components(
-                edges, small_graph_threshold=5).collect()}
+    comp = _components(edges, monkeypatch, 5)
     assert all(comp[i] == 1 for i in range(1, 13))
 
 
-def test_fuzzy_grouping_distributed_matches_local(rows):
-    """The forced large/small-star loop (threshold 0) and the
-    driver-local union-find (threshold 100) give the same clusters."""
+def test_connected_components_raises_without_fixpoint(rows, monkeypatch):
+    """A star loop that has not converged within its round budget
+    raises instead of returning partial labels (a 64-node chain needs
+    more than one round)."""
+    import pytest
+    edges = rows([(i, i + 1) for i in range(1, 64)],
+                 "src bigint, dst bigint")
+    monkeypatch.setattr(fz, "_STAR_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        _components(edges, monkeypatch, 0)
+
+
+def test_fuzzy_grouping_distributed_matches_local(rows, monkeypatch):
+    """The forced large/small-star loop (driver limit 0) and the
+    driver-local union-find (limit 100) give the same clusters."""
     df = rows([(1, "abcdef"), (2, "abcdeX"), (3, "abcdXX"), (9, "zzzzzz")],
               "k int, name string")
     expected = {1: 1, 2: 1, 3: 1, 9: 9}
     for thr in (0, 100):
+        monkeypatch.setattr(fz, "_SMALL_GRAPH_EDGES", thr)
         got = {r["_key_in"]: r["_key_out"]
                for r in fz.fuzzy_grouping(
-                   df, "k", "name", min_similarity=0.6,
-                   small_graph_threshold=thr).collect()}
+                   df, "k", "name", min_similarity=0.6).collect()}
         assert got == expected, thr
 
 
-def test_fuzzy_grouping_releases_internal_edges(spark, rows):
+def test_fuzzy_grouping_releases_internal_edges(spark, rows, monkeypatch):
     """Repeated calls that build their own pair set must not leave the
     persisted edge set behind (ADVICE r8's probe persist is released
     once the labels exist), on either CC path."""
@@ -156,10 +171,10 @@ def test_fuzzy_grouping_releases_internal_edges(spark, rows):
         return set(jsc.getPersistentRDDs().keySet())
 
     for thr in (0, 100):
+        monkeypatch.setattr(fz, "_SMALL_GRAPH_EDGES", thr)
         base = persistent()
         for _ in range(3):
-            out = fz.fuzzy_grouping(df, "k", "name", min_similarity=0.6,
-                                    small_graph_threshold=thr)
+            out = fz.fuzzy_grouping(df, "k", "name", min_similarity=0.6)
             assert out.count() == 4
         del out
         # the star rounds' localCheckpoint blocks are owned by the

@@ -78,6 +78,18 @@ def test_chunk_documents_overlap_and_tail(rows):
         tx.chunk_documents(df, chunk_tokens=4, overlap_tokens=4)
 
 
+def test_chunk_documents_splits_on_every_whitespace(rows):
+    """Tabs and newlines delimit tokens like spaces do, wherever they
+    sit: leading non-space whitespace fabricates no empty token, and a
+    document made of it alone yields no chunk."""
+    df = rows([(1, "\ta b"), (2, "a\nb\t"), (3, "\t"), (4, "\n"),
+               (5, " \r\n ")], DOCS)
+    got = sorted((r["id"], r["chunk_start"], r["chunk"], r["n_tokens"])
+                 for r in tx.chunk_documents(df, chunk_tokens=4,
+                                             overlap_tokens=2).collect())
+    assert got == [(1, 1, "a b", 2), (2, 1, "a b", 2)]
+
+
 def test_pack_sequences_budget_invariants(rows):
     import pytest
     df = rows([(i, f"doc{i} " * 0 + " ".join(f"w{j}" for j in range(n)))
@@ -252,17 +264,19 @@ def _ref_bpe_train(word_freq, n_merges, min_count=2):
     return merges
 
 
-def test_bpe_train_matches_reference_and_encodes(rows):
+def test_bpe_train_matches_reference_and_encodes(rows, monkeypatch):
+    from bi_etl_and_integration_spark.operators import text
     from bi_etl_and_integration_spark.operators.text import (
         bpe_encode, bpe_train)
     docs = rows([(1, "low low low lower lower newest newest"),
                  (2, "newest newest newest wider wider low")],
                 "doc_id long, text string")
-    merges = bpe_train(docs, n_merges=10)       # auto: driver path
+    merges = bpe_train(docs, n_merges=10)       # driver path
     freq = {"low": 4, "lower": 2, "newest": 5, "wider": 2}
     assert merges == _ref_bpe_train(freq, 10)
     # the distributed rounds implement the identical algorithm
-    assert bpe_train(docs, n_merges=10, distributed=True) == merges
+    monkeypatch.setattr(text, "_BPE_DRIVER_MAX_WORDS", 0)
+    assert bpe_train(docs, n_merges=10) == merges
     assert len(merges) > 3
     enc = {r["doc_id"]: r["bpe_tokens"] for r in
            bpe_encode(docs, merges).collect()}

@@ -454,6 +454,53 @@ def test_dedup_shingles_and_jaccard_built_once():
     assert calls["array_intersect"] == 1, calls["array_intersect"]
 
 
+def test_word_splits_only_through_tokenize():
+    """Every split-into-words in the package goes through
+    ``operators.fuzzy.tokenize``: no ``filter(split(...), t != "")`` or
+    ``array_remove(split(...), "")`` anywhere else, so a tokenizer
+    cannot drift on empty tokens or leading whitespace.  The one
+    exception is ``text.token_count``, whose filter-lambda form is
+    measured faster in x12b (see its comment)."""
+    import ast
+
+    def _name(f):
+        return f.attr if isinstance(f, ast.Attribute) \
+            else getattr(f, "id", None)
+
+    def _drops_empty(call):
+        if len(call.args) < 2:
+            return False
+        pred = call.args[1]
+        if _name(call.func) == "array_remove":
+            return isinstance(pred, ast.Constant) and pred.value == ""
+        return (isinstance(pred, ast.Lambda)
+                and isinstance(pred.body, ast.Compare)
+                and isinstance(pred.body.left, ast.Name)
+                and isinstance(pred.body.ops[0], ast.NotEq)
+                and isinstance(pred.body.comparators[0], ast.Constant)
+                and pred.body.comparators[0].value == "")
+
+    fuzzy, text = (os.path.join(ROOT, "bi_etl_and_integration_spark",
+                                "operators", f)
+                   for f in ("fuzzy.py", "text.py"))
+    raw = []
+    for path in _py_files("bi_etl_and_integration_spark"):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        kept = {fuzzy: "tokenize", text: "token_count"}.get(path)
+        skip = {id(n) for d in ast.walk(tree)
+                if isinstance(d, ast.FunctionDef) and d.name == kept
+                for n in ast.walk(d)}
+        raw += [f"{os.path.relpath(path, ROOT)}:{n.lineno}"
+                for n in ast.walk(tree)
+                if isinstance(n, ast.Call) and id(n) not in skip
+                and _name(n.func) in ("filter", "array_remove")
+                and n.args and isinstance(n.args[0], ast.Call)
+                and _name(n.args[0].func) == "split"
+                and _drops_empty(n)]
+    assert not raw, f"hand-written word splits (use tokenize()): {raw}"
+
+
 def test_staged_table_prefixes_are_declared():
     """bench.py removes dead sessions' staged tables by the prefixes in
     ``queries.STAGE_PREFIXES``: every staged-table prefix queries.py
