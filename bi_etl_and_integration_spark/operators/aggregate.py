@@ -22,6 +22,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bi_etl_and_integration_spark.operators.windows import limit_by
+
 AGGS = {
     "sum": F.sum, "count": F.count, "avg": F.avg, "min": F.min,
     "max": F.max, "stddev": F.stddev, "first": F.first, "last": F.last,
@@ -130,12 +132,10 @@ def top_k_by_key(df: DataFrame, keys: Sequence[str], value_col: str,
     The window never sees raw rows, so its partition size is the key's
     value cardinality, not its row count.  Deterministic tie-break on
     the value.  Output: keys + (value, n, rank)."""
-    from pyspark.sql.window import Window
     c = (df.groupBy(*keys, value_col)
          .agg(F.count(F.lit(1)).alias("n")))
-    w = Window.partitionBy(*keys).orderBy(F.desc("n"), F.col(value_col))
-    return (c.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
+    return limit_by(c, keys, [F.desc("n"), F.col(value_col)], k,
+                    rank_col="rank")
 
 
 def _space_saving_update(state, floor: int, vc, m: int):

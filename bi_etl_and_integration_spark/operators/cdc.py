@@ -28,7 +28,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bi_etl_and_integration_spark.operators.windows import latest_per_key
+from bi_etl_and_integration_spark.operators.windows import limit_by
 
 OP_DELETE, OP_INSERT, OP_UPDATE = 1, 2, 4
 
@@ -114,7 +114,7 @@ def net_changes(changes: DataFrame, keys: Sequence[str], offset_col: str,
                 tiebreak: Sequence[Column] | None = None) -> DataFrame:
     """CDC "Net" mode: last change per key wins within the range."""
     order = [F.col(offset_col).desc()] + list(tiebreak or [])
-    return latest_per_key(changes, keys, order)
+    return limit_by(changes, keys, order, 1)
 
 
 def split_ops(changes: DataFrame, op_col: str = "op",

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from bi_etl_and_integration_spark.operators.common import (
     materialize as _materialize)
+from bi_etl_and_integration_spark.operators.windows import limit_by
 
 
 def merge_apply(target: DataFrame, source: DataFrame, keys: Sequence[str],
@@ -94,15 +95,12 @@ def scd2_apply(target: DataFrame, source: DataFrame, keys: Sequence[str],
     entirely (an effective time IS the SCD2 input; validate upstream
     with cast_with_quarantine if NULLs are possible).
     """
-    from pyspark.sql.window import Window
     keys = list(keys)
     src = (source.select(*keys, *compare_cols,
                          F.col(eff_ts_col).alias("__eff"))
            .where(F.col("__eff").isNotNull()))
-    w = Window.partitionBy(*keys).orderBy(
-        F.col("__eff").desc(), *[F.col(c).desc() for c in compare_cols])
-    src = (src.withColumn("__rn", F.row_number().over(w))
-           .where(F.col("__rn") == 1).drop("__rn"))
+    src = limit_by(src, keys, [F.col("__eff").desc(),
+                               *[F.col(c).desc() for c in compare_cols]], 1)
     cur = target.where(F.col(current_col))
     hist = target.where(~F.col(current_col))
 

@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from bi_etl_and_integration_spark.operators.windows import limit_by
+
 ColumnLike = Column | str
 
 #: spread_for_compute source-size floor: below this many bytes the
@@ -386,17 +388,14 @@ def exact_stratified_sample(df: DataFrame, strata_col: str, k: int,
     row promotes exactly the next-ranked one (bounded churn — the
     growth-stable property ``curation.assign_split`` documents).
 
-    Plan shape: one shuffle on ``strata_col`` for the row_number
+    Plan shape: one shuffle on ``strata_col`` for the ``limit_by``
     window.  At 100 TB prefer ids over wide rows downstream of this
     (project first); the window itself holds only a counter per
     stratum, no buffering.
     """
     h = F.pmod(F.col(id_col).cast("bigint") * F.lit(salt),
                F.lit(4294967296))
-    w = Window.partitionBy(strata_col).orderBy(h.asc(),
-                                               F.col(id_col).asc())
-    return (df.withColumn("__rk", F.row_number().over(w))
-            .where(F.col("__rk") <= k).drop("__rk"))
+    return limit_by(df, [strata_col], [h.asc(), F.col(id_col).asc()], k)
 
 
 # ------------------------------------------------------ pivot/unpivot
@@ -433,7 +432,7 @@ def weighted_sample(df: DataFrame, weight_col: str, k: int,
     engines).  Rows with NULL or non-positive weight never win.
     ``by`` draws k per group instead of k global.
 
-    Plan shape: one row_number window — shuffled on ``by`` when
+    Plan shape: one ``limit_by`` window — shuffled on ``by`` when
     grouped; the global form ranks via top-k (TakeOrdered), never a
     total sort.
     """
@@ -443,10 +442,8 @@ def weighted_sample(df: DataFrame, weight_col: str, k: int,
     key = F.when(w > 0, F.log(u) / w)        # larger = more likely kept
     ranked = df.withColumn("__wk", key).where(F.col("__wk").isNotNull())
     if by:
-        win = Window.partitionBy(*by).orderBy(
-            F.col("__wk").desc(), F.col(id_col).asc())
-        return (ranked.withColumn("__rk", F.row_number().over(win))
-                .where(F.col("__rk") <= k).drop("__rk", "__wk"))
+        return limit_by(ranked, by, [F.col("__wk").desc(),
+                                     F.col(id_col).asc()], k).drop("__wk")
     return (ranked.orderBy(F.col("__wk").desc(), F.col(id_col).asc())
             .limit(k).drop("__wk"))
 

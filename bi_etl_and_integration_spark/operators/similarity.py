@@ -11,7 +11,7 @@ stage:
                    rows: a per-batch scoring callback, a per-PARTITION
                    top-k per query — only k × partitions candidates
                    leave the scan and the corpus never shuffles
-  _rank            ``row_number() <= k`` per query, ties on neighbor id
+  _rank            ``windows.limit_by`` k per query, ties on neighbor id
   _rerank          exact cosine of a shortlist, its float vectors
                    fetched by a bounded broadcast join
 
@@ -46,6 +46,8 @@ import pandas as pd  # module-level: pandas_udf resolves 'pd.Series' hints
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from bi_etl_and_integration_spark.operators.windows import limit_by
 
 
 def cosine_similarity_udf():
@@ -156,12 +158,10 @@ def _rank(scored: DataFrame, k: int, query_id_col: str, id_col: str,
           score_col: str = "cosine_sim") -> DataFrame:
     """The top ``k`` rows per query by (score desc, id asc):
     (query_id, id, score, rank)."""
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col(score_col).desc(), F.col(id_col))
-    return (scored.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= k)
-            .select(query_id_col, id_col, score_col,
-                    F.col("__rn").alias("rank")))
+    return (limit_by(scored, [query_id_col],
+                     [F.col(score_col).desc(), F.col(id_col)], k,
+                     rank_col="rank")
+            .select(query_id_col, id_col, score_col, "rank"))
 
 
 def _cosine_rank(pairs: DataFrame, k: int, query_id_col: str,

@@ -4,8 +4,8 @@ Reference parity:
   - ClickHouse ``LIMIT n BY key`` (DM/Правильное построение витрины с
     множественными агрегациями.md:102-117) -> ``limit_by``.
   - SCD2 current-version selection / end-dating (PRO/Глава 10:49-59)
-    -> ``latest_per_key`` / ``scd2_windows``.
-  - CDC Net mode last-change-per-key (PRACT/006:162) -> ``latest_per_key``.
+    -> ``limit_by(..., 1)`` / ``scd2_windows``.
+  - CDC Net mode last-change-per-key (PRACT/006:162) -> ``limit_by(..., 1)``.
   - Analytic frames (running sums, lag/lead) — beyond-reference surface.
 """
 
@@ -20,20 +20,14 @@ from pyspark.sql.window import Window
 
 def limit_by(df: DataFrame, keys: Sequence[str], order: Sequence[Column],
              n: int, rank_col: str | None = None) -> DataFrame:
-    """Per-key top-N (LIMIT n BY key).  One shuffle on ``keys``; with
-    AQE the per-partition sort is bounded by group size.  Tie-break by
+    """Per-key top-N (LIMIT n BY key), the package's one rank-and-keep
+    window (n=1 is latest-per-key).  One shuffle on ``keys``; with AQE
+    the per-partition sort is bounded by group size.  Tie-break by
     including a unique column in ``order`` for determinism."""
     w = Window.partitionBy(*keys).orderBy(*order)
-    out = df.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") <= n)
-    return (out.withColumnRenamed("__rn", rank_col) if rank_col
-            else out.drop("__rn"))
-
-
-def latest_per_key(df: DataFrame, keys: Sequence[str],
-                   order: Sequence[Column]) -> DataFrame:
-    """Last row per key in ``order`` (descending conventions belong in
-    ``order`` itself).  Drives SCD2 current-version and CDC Net mode."""
-    return limit_by(df, keys, order, 1)
+    rn = rank_col or "__rn"
+    out = df.withColumn(rn, F.row_number().over(w)).where(F.col(rn) <= n)
+    return out if rank_col else out.drop(rn)
 
 
 def scd2_windows(df: DataFrame, keys: Sequence[str], eff_ts: str, *,

@@ -1482,9 +1482,9 @@ def q33b(spark, cat):
    "FROM orders) SELECT o_custkey, o_orderkey FROM v WHERE rn=1 "
    "ORDER BY o_custkey")
 def q34(spark, cat):
-    latest = win_ops.latest_per_key(
+    latest = win_ops.limit_by(
         cat.orders, ["o_custkey"],
-        [F.col("o_orderdate").desc(), F.col("o_orderkey").desc()])
+        [F.col("o_orderdate").desc(), F.col("o_orderkey").desc()], 1)
     return latest.select("o_custkey", "o_orderkey").orderBy("o_custkey")
 
 

@@ -12,7 +12,8 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from bi_etl_and_integration_spark.operators.windows import limit_by
 
 
 def _windowed(df: DataFrame, ts_col: str, window_expr: Column,
@@ -139,8 +140,6 @@ def dedup_within_watermark(df: DataFrame, keys: Sequence[str],
                     # maps aren't orderable at ANY nesting depth
                     # (array<map<...>>, struct<...map...>)
                     and "map<" not in t]
-        w = Window.partitionBy(*keys).orderBy(F.col(ts_col), *tiebreak)
-        return (df.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1).drop("__rn"))
+        return limit_by(df, keys, [F.col(ts_col), *tiebreak], 1)
     return (df.withWatermark(ts_col, watermark)
             .dropDuplicatesWithinWatermark(list(keys)))

@@ -27,6 +27,31 @@ def test_fuzzy_lookup_keeps_best_match(rows):
     assert out[0]["_similarity"] > 0.8
 
 
+def test_fuzzy_lookup_keeps_duplicate_input_rows(rows):
+    """keep_best is one row per input ROW, not per distinct row value:
+    two identical input rows each keep their best match."""
+    dirty = rows([(1, "jonathan"), (1, "jonathan"), (2, "zach")],
+                 "id int, name string")
+    ref = rows([("jonatan",), ("zachary",)], "clean string")
+    out = fz.fuzzy_lookup(dirty, ref, "name", "clean",
+                          min_similarity=0.4).collect()
+    assert sorted((r["id"], r["clean"]) for r in out) == [
+        (1, "jonatan"), (1, "jonatan"), (2, "zachary")]
+    assert "__row" not in out[0].asDict()
+
+
+def test_fuzzy_lookup_accepts_map_columns(rows):
+    """A map payload column rides along: keep_best never orders by
+    the input's values (maps are not orderable)."""
+    dirty = rows([(1, "jonathan", {"src": 1})],
+                 "id int, name string, tags map<string,int>")
+    ref = rows([("jonatan",), ("jon",)], "clean string")
+    out = fz.fuzzy_lookup(dirty, ref, "name", "clean",
+                          min_similarity=0.4).collect()
+    assert [(r["id"], r["clean"], r["tags"]) for r in out] == [
+        (1, "jonatan", {"src": 1})]
+
+
 def test_fuzzy_lookup_below_threshold_drops(rows):
     dirty = rows([(1, "aaaa")], "id int, name string")
     ref = rows([("azzz",)], "clean string")

@@ -434,6 +434,33 @@ def test_persist_only_through_cached():
     assert not raw, f"raw persist/cache calls (use cached()): {raw}"
 
 
+def test_row_number_only_through_limit_by():
+    """Every "rank rows per key, keep rank <= k" in the package goes
+    through ``operators.windows.limit_by``: ``row_number`` is called
+    only there and where the rank is read as a value, not filtered on
+    (``similarity.rrf_fuse``'s RRF contribution,
+    ``aggregate.topn_others``' tail relabel)."""
+    import ast
+
+    allowed = {("operators/windows.py", "limit_by"),
+               ("operators/similarity.py", "rrf_fuse"),
+               ("operators/aggregate.py", "topn_others")}
+    pkg = os.path.join(ROOT, "bi_etl_and_integration_spark")
+    stray = []
+    for path in _py_files("bi_etl_and_integration_spark"):
+        rel = os.path.relpath(path, pkg).replace(os.sep, "/")
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for top in tree.body:
+            owner = (rel, getattr(top, "name", None))
+            stray += [f"{rel}:{n.lineno}" for n in ast.walk(top)
+                      if isinstance(n, ast.Call)
+                      and (getattr(n.func, "attr", None)
+                           or getattr(n.func, "id", None)) == "row_number"
+                      and owner not in allowed]
+    assert not stray, f"row_number outside limit_by: {stray}"
+
+
 def test_dedup_shingles_and_jaccard_built_once():
     """The Jaccard pair generators share one shingle-set base and one
     verify: ``operators/dedup.py`` calls ``hashed_shingles`` and
