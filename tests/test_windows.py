@@ -12,6 +12,15 @@ def test_limit_by(rows):
     out = win.limit_by(df, ["k"], [F.col("v").desc()], 3)
     got = sorted((r["k"], r["v"]) for r in out.collect())
     assert got == [("a", 7), ("a", 8), ("a", 9), ("b", 1)]
+
+
+def test_limit_by_keeps_rank_col(rows):
+    df = rows([("a", 2), ("a", 1)], "k string, v int")
+    out = win.limit_by(df, ["k"], [F.col("v")], 2, rank_col="rn")
+    assert {(r["v"], r["rn"]) for r in out.collect()} == {(1, 1), (2, 2)}
+
+
+def test_latest_per_key(rows):
     # n=1 on a descending order: the latest row per key (SCD2 current
     # version, CDC Net mode)
     df = rows([(1, 10, "old"), (1, 20, "new"), (2, 5, "only")],
@@ -19,12 +28,6 @@ def test_limit_by(rows):
     out = win.limit_by(df, ["k"], [F.col("ts").desc()], 1)
     got = {r["k"]: r["v"] for r in out.collect()}
     assert got == {1: "new", 2: "only"}
-
-
-def test_limit_by_keeps_rank_col(rows):
-    df = rows([("a", 2), ("a", 1)], "k string, v int")
-    out = win.limit_by(df, ["k"], [F.col("v")], 2, rank_col="rn")
-    assert {(r["v"], r["rn"]) for r in out.collect()} == {(1, 1), (2, 2)}
 
 
 def test_scd2_windows_partition_the_timeline(rows):
