@@ -39,7 +39,6 @@ The entry points pick their scoring and their candidate source:
 
 from __future__ import annotations
 
-import os
 import random
 
 import pandas as pd  # module-level: pandas_udf resolves 'pd.Series' hints
@@ -394,10 +393,13 @@ def ivf_index_write(corpus: DataFrame, index_dir: str, *,
                     centroids=None, pq_m: int | None = None,
                     pq_nbits: int = 6,
                     pq_train_iters: int = 8) -> None:
-    """Persist an IVF index AT REST: the corpus written to
-    ``<index_dir>/vectors`` PARTITIONED BY its coarse list id, plus
-    the trained centroids at ``<index_dir>/centroids`` — the faiss
-    inverted-file layout expressed as a parquet partition scheme.
+    """Persist an IVF index AT REST: one :class:`SnapshotTable` at
+    ``index_dir`` whose data is the corpus PARTITIONED BY its coarse
+    list id, with the trained centroids as a sidecar of the same
+    commit — the faiss inverted-file layout expressed as a parquet
+    partition scheme.  A rebuild is a new version: a reader sees the
+    old version or the new one, never new vectors with old centroids,
+    and an interrupted rebuild leaves the old version searchable.
 
     Why this is the 100 TB search shape (vs :func:`ivf_topk`, which
     re-assigns the corpus per query batch): assignment is paid ONCE
@@ -418,13 +420,18 @@ def ivf_index_write(corpus: DataFrame, index_dir: str, *,
     vector additionally stores ``pq_m`` one-byte subspace codes
     (trained on the same bounded sample, L2-normalized — cosine
     metric), persisted as a ``pq_code`` column in the same files and
-    the codebooks at ``<index_dir>/pq_books``.  An
+    the codebooks as a second sidecar.  An
     :func:`ivf_search` with ``shortlist=`` then runs its candidate
     scan over the CODES column only — at 100 TB the probe reads
     ~n_probe/nlist of the files AND only m bytes per row of them;
-    the float vectors are touched just for the shortlist re-rank."""
+    the float vectors are touched just for the shortlist re-rank.
+    A rebuild without ``pq_m`` commits a version with no codebooks."""
     import numpy as np
+
+    from bi_etl_and_integration_spark.sources.snapshots import (
+        SnapshotTable)
     spark = corpus.sparkSession
+    table = SnapshotTable(spark, index_dir)
     if centroids is not None:
         cmat = np.asarray(centroids, dtype=np.float64)
     else:
@@ -432,7 +439,11 @@ def ivf_index_write(corpus: DataFrame, index_dir: str, *,
                           train_size)
     assigned = corpus.withColumn(
         "centroid_id",
-        _ivf_nearest_udf(cmat, 1)(F.col(vec_col))[0])
+        _ivf_nearest_udf(cmat, 1)(F.col(vec_col))[0].cast("int"))
+    cents = [(int(i), [float(x) for x in cmat[:, i]])
+             for i in range(cmat.shape[1])]
+    sidecars = {"centroids": table._stage(spark.createDataFrame(
+        cents, "centroid_id int, centroid array<double>").coalesce(1))[0]}
     if pq_m is not None:
         books = _pq_books(corpus, vec_col, pq_m, pq_nbits, pq_train_iters,
                           seed, train_size)
@@ -440,105 +451,58 @@ def ivf_index_write(corpus: DataFrame, index_dir: str, *,
         brows = [(int(j), int(c), [float(v) for v in books[j, c]])
                  for j in range(books.shape[0])
                  for c in range(books.shape[1])]
-        (spark.createDataFrame(
+        sidecars["pq_books"] = table._stage(spark.createDataFrame(
             brows, "subspace int, code int, center array<double>")
-         .coalesce(1).write.mode("overwrite")
-         .parquet(os.path.join(index_dir, "pq_books")))
-    elif os.path.isdir(os.path.join(index_dir, "pq_books")):
-        # rebuilding a formerly-IVFADC index without pq_m must also
-        # retire the old codebooks: a stale pq_books directory would
-        # make _ivf_read_pq_books treat the codeless vectors as
-        # IVFADC — appends would mix schemas and shortlist searches
-        # would read a missing pq_code column
-        import shutil
-        shutil.rmtree(os.path.join(index_dir, "pq_books"))
-    (assigned.write.mode("overwrite").partitionBy("centroid_id")
-     .parquet(os.path.join(index_dir, "vectors")))
-    cents = [(int(i), [float(x) for x in cmat[:, i]])
-             for i in range(cmat.shape[1])]
-    (spark.createDataFrame(cents,
-                           "centroid_id int, centroid array<double>")
-     .coalesce(1).write.mode("overwrite")
-     .parquet(os.path.join(index_dir, "centroids")))
+            .coalesce(1))[0]
+    table._commit("overwrite", *table._stage(assigned, "centroid_id"),
+                  sidecars=sidecars)
 
 
-# (kind, path, fingerprint) -> loaded sidecar.  Centroids and codebooks
-# are tiny (nlist / m*ksub rows) but each read is a full Spark job; a
-# repeated-probe session (the real search workload: one index, many
-# query batches) pays that job per batch without this.  The
-# fingerprint is the sidecar files' (name, mtime_ns, size) tuple, so
-# any rebuild (ivf_index_write overwrites the sidecars) invalidates —
-# appends never touch the sidecars, correctly keeping the cache.
-# Inserting a new fingerprint for a (kind, path) EVICTS the old entry
-# (ADVICE r10): a long-lived session that rebuilds the same index
-# repeatedly must not accumulate dead centroid/codebook arrays.
-_IVF_SIDECAR_CACHE: dict = {}
-
-
-def _sidecar_cache_put(kind: str, path: str, fp, value) -> None:
-    for k in [k for k in _IVF_SIDECAR_CACHE
-              if k[0] == kind and k[1] == path]:
-        del _IVF_SIDECAR_CACHE[k]
-    _IVF_SIDECAR_CACHE[(kind, path, fp)] = value
-
-
-def _sidecar_fingerprint(path: str):
-    if not os.path.isdir(path):
-        return None
-    st = []
-    for f in sorted(os.listdir(path)):
-        s = os.stat(os.path.join(path, f))
-        st.append((f, s.st_mtime_ns, s.st_size))
-    return tuple(st)
-
-
-def _ivf_read_centroids(spark, index_dir: str):
-    """Load the stored centroid table back into the dim × nlist
-    matrix + id vector the quantizer udf expects (ids need not be
-    contiguous — the matrix column order follows the sorted id
-    order and lookups go through the id vector).  Session-cached by
-    file fingerprint (rebuilds invalidate, appends don't need to)."""
+def _ivf_centroids(t):
+    """Stored centroid rows -> the dim × nlist matrix + id vector the
+    quantizer udf expects (ids need not be contiguous — the matrix
+    column order follows the sorted id order and lookups go through
+    the id vector)."""
     import numpy as np
-    path = os.path.join(index_dir, "centroids")
-    key = ("centroids", path, _sidecar_fingerprint(path))
-    if key[2] is not None and key in _IVF_SIDECAR_CACHE:
-        return _IVF_SIDECAR_CACHE[key]
-    crows = (spark.read.parquet(path)
-             .orderBy("centroid_id").collect())
-    if not crows:
-        raise ValueError(f"ivf index: empty centroid table under "
-                         f"{index_dir}")
-    cmat = np.stack([np.asarray(r["centroid"], dtype=np.float64)
-                     for r in crows]).T            # dim × nlist
-    cid = np.asarray([r["centroid_id"] for r in crows])
-    _sidecar_cache_put("centroids", path, key[2], (cmat, cid))
+    rows = sorted(zip(t.column("centroid_id").to_pylist(),
+                      t.column("centroid").to_pylist()))
+    if not rows:
+        raise ValueError("ivf index: empty centroid table")
+    cmat = np.asarray([c for _, c in rows], dtype=np.float64).T
+    cid = np.asarray([i for i, _ in rows])
+    for a in (cmat, cid):
+        a.setflags(write=False)        # every cache hit shares them
     return cmat, cid
 
 
-def _ivf_read_pq_books(spark, index_dir: str):
-    """Load stored PQ codebooks back into the (m, ksub, dsub) array
-    :func:`pq_encode` expects, or None when the index has no PQ leg.
-    Session-cached by file fingerprint like the centroids."""
+def _ivf_pq_books(t):
+    """Stored PQ codebook rows -> the (m, ksub, dsub) array
+    :func:`pq_encode` expects."""
     import numpy as np
-    path = os.path.join(index_dir, "pq_books")
-    fp = _sidecar_fingerprint(path)
-    if fp is None:
-        return None
-    key = ("pq_books", path, fp)
-    if key in _IVF_SIDECAR_CACHE:
-        return _IVF_SIDECAR_CACHE[key]
-    rows = (spark.read.parquet(path)
-            .orderBy("subspace", "code").collect())
-    if not rows:
-        return None
-    m = max(r["subspace"] for r in rows) + 1
-    ksub = max(r["code"] for r in rows) + 1
-    dsub = len(rows[0]["center"])
-    books = np.empty((m, ksub, dsub))
-    for r in rows:
-        books[r["subspace"], r["code"]] = r["center"]
-    _sidecar_cache_put("pq_books", path, fp, books)
+    sub, code, center = (t.column(c).to_pylist()
+                         for c in ("subspace", "code", "center"))
+    books = np.empty((max(sub) + 1, max(code) + 1, len(center[0])))
+    books[sub, code] = center
+    books.setflags(write=False)        # every cache hit shares it
     return books
+
+
+def _ivf_index(spark, index_dir: str):
+    """(table, version, (cmat, cid), books) of the index's latest
+    version — books None without ``pq_m``.  Everything comes from ONE
+    pinned version, so a search or an append never pairs vectors with
+    another version's quantizers.  The sidecars are decoded once per
+    committed version in a session (``snapshots._sidecar``)."""
+    from bi_etl_and_integration_spark.sources.snapshots import (
+        SnapshotTable, _sidecar)
+    table = SnapshotTable(spark, index_dir)
+    version = table.latest_version()
+    if version is None:
+        raise FileNotFoundError(f"ivf index: {index_dir} has no "
+                                "committed version")
+    return (table, version,
+            _sidecar(table.path, version, "centroids", _ivf_centroids),
+            _sidecar(table.path, version, "pq_books", _ivf_pq_books))
 
 
 def ivf_index_append(batch: DataFrame, index_dir: str, *,
@@ -558,23 +522,23 @@ def ivf_index_append(batch: DataFrame, index_dir: str, *,
     ``ivf_index_write(A ∪ B, centroids=stored)`` would — certified
     bit-exact in tests/test_similarity.py and end-to-end by driver
     query x44b.  Cost: one narrow Arrow map over the batch + one
-    partitioned write; the existing index files are never touched."""
-    spark = batch.sparkSession
-    cmat, cid = _ivf_read_centroids(spark, index_dir)
+    partitioned write committed as the next version, which carries the
+    parent's centroids and codebooks; the existing index files are
+    never touched."""
+    table, _, (cmat, cid), books = _ivf_index(batch.sparkSession,
+                                              index_dir)
     nearest = _ivf_nearest_udf(cmat, 1)(F.col(vec_col))[0]
     assigned = batch.withColumn(
         "centroid_id",
         # stored ids need not be contiguous: map the argmax POSITION
         # back through the id vector (plan-literal array lookup)
         F.array([F.lit(int(i)) for i in cid])[nearest].cast("int"))
-    books = _ivf_read_pq_books(spark, index_dir)
     if books is not None:
         # IVFADC index: the batch's codes come from the index's OWN
         # stored codebooks (retraining them would make old and new
         # codes incomparable under one query LUT)
         assigned = pq_encode(assigned, books, vec_col=vec_col)
-    (assigned.write.mode("append").partitionBy("centroid_id")
-     .parquet(os.path.join(index_dir, "vectors")))
+    table.write(assigned, "append", partition_by="centroid_id")
 
 
 def ivf_search(spark, index_dir: str, queries: DataFrame, k: int = 10,
@@ -622,7 +586,7 @@ def ivf_search(spark, index_dir: str, queries: DataFrame, k: int = 10,
     import numpy as np
     if shortlist is not None and shortlist <= k:
         raise ValueError(f"shortlist ({shortlist}) must exceed k ({k})")
-    cmat, cid = _ivf_read_centroids(spark, index_dir)
+    table, version, (cmat, cid), books = _ivf_index(spark, index_dir)
     qids, qmat = _query_batch(queries, "ivf_search", query_id_col,
                               vec_col, max_query_rows)
     if shortlist is not None and shortlist * len(qids) > max_shortlist_rows:
@@ -638,7 +602,7 @@ def ivf_search(spark, index_dir: str, queries: DataFrame, k: int = 10,
     # literal IN over the partition column: this is what static
     # partition pruning needs — only the probed lists' directories are
     # listed/read
-    vectors = (spark.read.parquet(os.path.join(index_dir, "vectors"))
+    vectors = (table.read(version)
                .where(F.col("centroid_id").isin(
                    sorted(set().union(*probes)))))
     qfield = queries.schema[query_id_col]
@@ -660,7 +624,6 @@ def ivf_search(spark, index_dir: str, queries: DataFrame, k: int = 10,
             k, query_id_col, id_col)
 
     # ---- IVFADC path: ADC over the codes column, exact re-rank ----
-    books = _ivf_read_pq_books(spark, index_dir)
     if books is None:
         raise ValueError(
             "ivf_search: shortlist= needs an IVFADC index — rebuild "

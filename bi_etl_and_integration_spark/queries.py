@@ -2997,7 +2997,7 @@ def _ivf_append_dirs(spark, cat) -> tuple[str, str]:
         batch = cat.embeddings.where(F.col("vec_id") % 2 == 1)
         sim_ops.ivf_index_write(base, d_app, nlist=8)
         sim_ops.ivf_index_append(batch, d_app)
-        cmat, _ = sim_ops._ivf_read_centroids(spark, d_app)  # noqa: SLF001
+        _, _, (cmat, _), _ = sim_ops._ivf_index(spark, d_app)  # noqa: SLF001
         sim_ops.ivf_index_write(cat.embeddings, d_reb, centroids=cmat)
         return d_app, d_reb
     return _session_memo(spark, "ivf_append", cat.sf_dir, build)
@@ -3022,14 +3022,11 @@ def x44b(spark, cat):
     ivf_index_write of the full corpus under the same frozen
     centroids (symmetric exceptAll empty), restated by the oracle as
     literal TRUE."""
+    from bi_etl_and_integration_spark.sources.snapshots import (
+        SnapshotTable)
     d_app, d_reb = _ivf_append_dirs(spark, cat)
-    import os as _os
-    va = (spark.read.parquet(_os.path.join(d_app, "vectors"))
-          .select("vec_id", F.col("centroid_id").cast("int")
-                  .alias("centroid_id")))
-    vr = (spark.read.parquet(_os.path.join(d_reb, "vectors"))
-          .select("vec_id", F.col("centroid_id").cast("int")
-                  .alias("centroid_id")))
+    va, vr = (SnapshotTable(spark, d).read()
+              .select("vec_id", "centroid_id") for d in (d_app, d_reb))
     eq = (va.exceptAll(vr).unionByName(vr.exceptAll(va))
           .agg((F.count(F.lit(1)) == 0).alias("append_equals_rebuild")))
 

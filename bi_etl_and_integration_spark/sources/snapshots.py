@@ -3,27 +3,37 @@ parquet, built because no Delta/Iceberg package exists in this
 environment (ROADMAP round-2 re-check) and the pattern itself is public
 (Delta's _delta_log / Iceberg's metadata tree reduced to essentials).
 
-Every table the engine writes and later reads back commits here (CDC
-targets, the foreachBatch upsert sink, ``IncrementalAggMV``'s deltas);
-``pipeline.checkpointed_write`` is export-only: files read outside it.
+Every table the engine writes and later reads back commits here: CDC
+targets, the foreachBatch upsert sink, ``IncrementalAggMV``'s deltas,
+the ``dedup_stream`` minhash index (``buckets`` and ``shingles``, one
+epoch-stamped version per micro-batch) and the IVF index (vectors
+Hive-partitioned by ``centroid_id``, centroids and PQ books as
+sidecars).  ``pipeline.checkpointed_write`` is export-only: files read
+outside it.
 
 Layout::
 
     table/
       data/<commit-uuid>/part-*.parquet    immutable, write-once
+      data/<commit-uuid>/<col>=<v>/...     the same, ``partition_by`` set
       _manifests/v0000000001.json          the commit log
 
 A *manifest* lists the exact data files of one table version plus the
-schema DDL.  Every commit (``write``, ``rollback``, ``compact``) goes
-through one routine: the full manifest is written under a temp name in
-``_manifests/``, then hard-linked to the next ``v{N}.json``.  The link
-is an atomic create-if-absent, so exactly one writer can claim a given
-version and concurrent writers serialize by retrying against the new
-latest — optimistic concurrency, no lock server — and a manifest is
-complete the moment it is visible.  Readers list the manifest dir, pick
-the highest version, and read exactly the files it names — they never
-see a half-written commit because data files are written BEFORE the
-manifest that references them and neither is modified after.
+schema DDL, and optionally: the ``partition_by`` column; ``sidecars``,
+named file lists committed with the data and visible only together
+with it (an index's centroids); and the ``epoch`` of the newest
+idempotent-writer commit (Delta's ``txn`` action), which every later
+version carries forward.  Every commit (``write``, ``rollback``,
+``compact``) goes through one routine: the full manifest is written
+under a temp name in ``_manifests/``, then hard-linked to the next
+``v{N}.json``.  The link is an atomic create-if-absent, so exactly one
+writer can claim a given version and concurrent writers serialize by
+retrying against the new latest — optimistic concurrency, no lock
+server — and a manifest is complete the moment it is visible.  Readers
+list the manifest dir, pick the highest version, and read exactly the
+files it names — they never see a half-written commit because data
+files are written BEFORE the manifest that references them and neither
+is modified after.
 
 Guarantees and their boundaries (stated, not implied):
   - Atomic visibility + snapshot isolation: yes, on any filesystem
@@ -44,6 +54,7 @@ Guarantees and their boundaries (stated, not implied):
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -89,6 +100,36 @@ def _entry_path(entry) -> str:
     """Manifest file entry -> relative path (v1 manifests stored bare
     strings; v2 stores {path, rows, stats})."""
     return entry if isinstance(entry, str) else entry["path"]
+
+
+def _all_entries(m: dict) -> list:
+    """Every file a manifest references: data files and sidecars."""
+    return m["files"] + [e for es in m.get("sidecars", {}).values()
+                         for e in es]
+
+
+def _sidecar(path: str, version: int, name: str, decode):
+    """``decode(pyarrow.Table)`` of the sidecar ``name`` committed in
+    ``version`` of the table at ``path``; None when that version has
+    none.  Decoded once per file list (see :func:`_decoded`)."""
+    entries = _read_manifest(path, version).get("sidecars", {}).get(name)
+    if entries is None:
+        return None
+    return _decoded(tuple(os.path.join(path, _entry_path(e))
+                          for e in entries), decode)
+
+
+@functools.lru_cache(maxsize=16)
+def _decoded(files: tuple, decode):
+    """``decode`` of committed files read as one pyarrow Table.  Their
+    names carry the commit's uuid and committed files never change, so
+    the file list is an exact key: a search session that probes one
+    index version many times decodes it once, while a rebuild — or a
+    table deleted and recreated at the same path, which reuses version
+    numbers — names new files.  ``maxsize`` bounds what a session that
+    keeps rebuilding tables holds."""
+    import pyarrow.parquet as pq
+    return decode(pq.read_table(list(files)))
 
 
 def _stat_value(v):
@@ -206,6 +247,16 @@ class SnapshotTable:
         v = _list_versions(self.path)
         return v[-1] if v else None
 
+    def _version_before(self, epoch: int) -> int | None:
+        """Newest version whose recorded ``epoch`` (see :meth:`_commit`)
+        is below ``epoch``: the state batch ``epoch`` of an idempotent
+        writer read on its first attempt, so a replay reads it too.
+        None when there is no such version."""
+        for v in reversed(self.versions()):
+            if _read_manifest(self.path, v).get("epoch", -1) < epoch:
+                return v
+        return None
+
     def history(self) -> list[dict]:
         """Commit log, oldest first: version/operation/ts/n_files."""
         out = []
@@ -248,7 +299,20 @@ class SnapshotTable:
             return self.spark.createDataFrame([], schema)
         # explicit schema: the manifest is the source of truth, not
         # whichever file's footer gets sampled first
-        return self.spark.read.schema(schema).parquet(*files)
+        if not m.get("partition_by"):
+            return self.spark.read.schema(schema).parquet(*files)
+        # one read per commit directory: its basePath lets Spark parse
+        # `col=value` from the paths (a filter on the column stays a
+        # static partition filter), and one read over several commit
+        # dirs fails with CONFLICTING_DIRECTORY_STRUCTURES
+        commits: dict = {}
+        for f in files:
+            rel = os.path.relpath(f, self.path).split(os.sep)
+            commits.setdefault(os.path.join(self.path, *rel[:2]),
+                               []).append(f)
+        return functools.reduce(DataFrame.unionByName, (
+            self.spark.read.schema(schema).option("basePath", d)
+            .parquet(*fs) for d, fs in commits.items()))
 
     def row_count(self, version: int | None = None) -> int | None:
         """Exact row count from manifest metadata — no scan.  None if
@@ -268,11 +332,16 @@ class SnapshotTable:
     # ----------------------------------------------------------- write
 
     def write(self, df: DataFrame, mode: str = "overwrite", *,
+              partition_by: str | None = None,
               evolve_schema: bool = False,
               max_retries: int = 20) -> int:
         """Commit ``df`` as the next version.  ``mode``: ``overwrite``
         replaces the file list, ``append`` extends the parent's.
         Returns the committed version number.
+
+        ``partition_by``: write the files Hive-partitioned by that
+        column, so a filter on it prunes whole directories at read
+        time (an append must use the table's own partitioning).
 
         ``evolve_schema`` (append only): columns new to the table are
         ADDED to the manifest schema (at the end, Delta
@@ -285,7 +354,7 @@ class SnapshotTable:
         widening is how tables rot."""
         if mode not in ("overwrite", "append"):
             raise ValueError(f"mode must be overwrite/append, got {mode!r}")
-        return self._commit(mode, *self._stage(df),
+        return self._commit(mode, *self._stage(df, partition_by),
                             evolve_schema=evolve_schema,
                             max_retries=max_retries)
 
@@ -294,53 +363,86 @@ class SnapshotTable:
         stays append-only, like Delta RESTORE)."""
         m = _read_manifest(self.path, to_version)
         return self._commit(f"rollback({to_version})", m["files"],
-                            m["schema"], m.get("commit_id"))
+                            m["schema"], m.get("commit_id"),
+                            m.get("partition_by"),
+                            sidecars=m.get("sidecars"))
 
     def compact(self, *, target_files: int = 1) -> int:
         """OPTIMIZE: rewrite the current version's data as
         ``target_files`` files and commit the result — small-file
         compaction after many streaming/CDC appends (each append is
         ≥1 file; a thousand micro-batches = a thousand tiny scans).
-        Old versions still read the old files until ``vacuum``."""
+        Old versions still read the old files until ``vacuum``.
+        Partitioning and sidecars carry over; the epoch too, as on
+        every commit."""
         df = self.read().coalesce(max(1, target_files))
-        return self._commit("compact", *self._stage(df))
+        part = _read_manifest(self.path, self.latest_version()).get(
+            "partition_by")
+        return self._commit("compact", *self._stage(df, part))
 
-    def _stage(self, df: DataFrame) -> tuple[list[dict], str, str]:
+    def _stage(self, df: DataFrame, partition_by: str | None = None,
+               ) -> tuple[list[dict], str, str, str | None]:
         """Write ``df``'s data files under an unborn commit-uuid dir;
-        return (file entries with footer stats, schema DDL, commit id).
-        Until :meth:`_commit` names them they are invisible garbage
-        (reclaimed by ``vacuum``), never a torn table."""
+        return (file entries with footer stats, schema DDL, commit id,
+        ``partition_by``).  Until :meth:`_commit` names them they are
+        invisible garbage (reclaimed by ``vacuum``), never a torn
+        table."""
         commit_id = uuid.uuid4().hex[:12]
         data_dir = os.path.join(self.path, "data", commit_id)
-        df.write.mode("errorifexists").parquet(data_dir)
+        writer = df.write.mode("errorifexists")
+        if partition_by:
+            writer = writer.partitionBy(partition_by)
+        writer.parquet(data_dir)
         files = []
-        for f in sorted(os.listdir(data_dir)):
-            if not f.endswith(".parquet"):
-                continue
-            rows, stats = _file_stats(os.path.join(data_dir, f))
-            files.append({"path": os.path.join("data", commit_id, f),
-                          "rows": rows, "stats": stats})
+        # walk the tree: a partitioned write nests files in col=v dirs
+        for root, _, names in sorted(os.walk(data_dir)):
+            for f in sorted(names):
+                if f.endswith(".parquet"):
+                    full = os.path.join(root, f)
+                    rows, stats = _file_stats(full)
+                    files.append({"path": os.path.relpath(full, self.path),
+                                  "rows": rows, "stats": stats})
+        # a partitioned read puts the partition column last
+        fields = sorted(df.schema.fields,
+                        key=lambda f: f.name == partition_by)
         ddl = ",".join(f.name + " " + f.dataType.simpleString()
-                       for f in df.schema.fields)
-        return files, ddl, commit_id
+                       for f in fields)
+        return files, ddl, commit_id, partition_by
 
     def _commit(self, operation: str, files: list, ddl: str,
-                commit_id: str | None, *, evolve_schema: bool = False,
-                max_retries: int = 20) -> int:
+                commit_id: str | None, partition_by: str | None = None,
+                *, sidecars: dict | None = None, epoch: int | None = None,
+                evolve_schema: bool = False, max_retries: int = 20,
+                ) -> int:
         """The one commit routine: publish the next version listing
         ``files`` (an ``append`` extends the parent's list, re-read on
         every retry).  The full manifest is hard-linked from a temp name
         to ``v{N}.json`` (see the module docstring); a lost race
-        (``FileExistsError``) re-parents onto the new latest."""
+        (``FileExistsError``) re-parents onto the new latest.
+
+        ``sidecars``: ``{name: file entries}`` committed with the data;
+        None keeps the parent's on ``append``/``compact`` and means none
+        otherwise.  ``epoch``: the idempotent writer's batch id — when
+        the parent already records an epoch >= it, this commit already
+        landed in an earlier attempt, so it is skipped and the parent
+        version returned."""
         mdir = os.path.join(self.path, _MANIFEST_DIR)
         os.makedirs(mdir, exist_ok=True)
         tmp = os.path.join(mdir, f"_{uuid.uuid4().hex}.tmp")
         try:
             for _ in range(max_retries):
                 parent = self.latest_version()
+                pm = ({} if parent is None
+                      else _read_manifest(self.path, parent))
+                if epoch is not None and pm.get("epoch", -1) >= epoch:
+                    return parent
                 entries, schema = files, ddl
-                if operation == "append" and parent is not None:
-                    pm = _read_manifest(self.path, parent)
+                if operation == "append" and pm:
+                    if pm.get("partition_by") != partition_by:
+                        raise ValueError(
+                            "append partitioning mismatch: table has "
+                            f"{pm.get('partition_by')!r}, appending "
+                            f"{partition_by!r}")
                     if pm["schema"] != ddl:
                         if not evolve_schema:
                             raise ValueError(
@@ -351,11 +453,21 @@ class SnapshotTable:
                         schema = _evolve_ddl(pm["schema"], ddl)
                     entries = pm["files"] + entries
                 version = (parent or 0) + 1
+                manifest = {"version": version, "parent": parent,
+                            "operation": operation, "files": entries,
+                            "schema": schema, "ts": time.time(),
+                            "commit_id": commit_id}
+                side = sidecars
+                if side is None and operation in ("append", "compact"):
+                    side = pm.get("sidecars")
+                for key, value in (("partition_by", partition_by),
+                                   ("sidecars", side),
+                                   ("epoch", epoch if epoch is not None
+                                    else pm.get("epoch"))):
+                    if value is not None:
+                        manifest[key] = value
                 with open(tmp, "w") as fh:
-                    json.dump({"version": version, "parent": parent,
-                               "operation": operation, "files": entries,
-                               "schema": schema, "ts": time.time(),
-                               "commit_id": commit_id}, fh)
+                    json.dump(manifest, fh)
                 try:
                     os.link(tmp, _manifest_path(self.path, version))
                 except FileExistsError:
@@ -374,14 +486,17 @@ class SnapshotTable:
         ``keep_last`` newest (plus orphans from crashed writes).
         Returns deleted paths.  After vacuum, ``read(version=old)``
         fails for pruned versions — retention is the time-travel
-        horizon, exactly the Delta VACUUM contract."""
+        horizon, exactly the Delta VACUUM contract.  ``keep_last`` < 1
+        raises: no retention tail would keep even the latest version."""
+        if keep_last < 1:
+            raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         versions = _list_versions(self.path)
         if not versions:
             return []
         keep = set()
         for v in versions[-keep_last:]:
             keep.update(_entry_path(e) for e in
-                        _read_manifest(self.path, v)["files"])
+                        _all_entries(_read_manifest(self.path, v)))
         keep_dirs = {p.split(os.sep)[1] for p in keep}
         data_root = os.path.join(self.path, "data")
         deleted = []
@@ -392,10 +507,10 @@ class SnapshotTable:
                     full = os.path.join(data_root, d)
                     shutil.rmtree(full, ignore_errors=True)
                     deleted.append(full)
-        for v in versions[:-keep_last] if keep_last else versions:
+        for v in versions[:-keep_last]:
             m = _read_manifest(self.path, v)
             if any(_entry_path(e).split(os.sep)[1] not in keep_dirs
-                   for e in m["files"]):
+                   for e in _all_entries(m)):
                 os.remove(_manifest_path(self.path, v))
         return deleted
 

@@ -7,6 +7,7 @@ import math
 from pyspark.sql import functions as F
 
 from bi_etl_and_integration_spark.operators import similarity as sim
+from bi_etl_and_integration_spark.sources.snapshots import SnapshotTable
 
 EMB = "vec_id long, embedding array<float>"
 
@@ -677,19 +678,19 @@ def test_ivf_index_append_equals_rebuild(rows, tmp_path):
     idx = str(tmp_path / "ivf_app")
     sim.ivf_index_write(base, idx, nlist=4)
     before = {(r["vec_id"], r["centroid_id"]) for r in
-              spark.read.parquet(idx + "/vectors")
+              SnapshotTable(spark, idx).read()
               .select("vec_id", "centroid_id").collect()}
     sim.ivf_index_append(batch, idx)
     after = {(r["vec_id"], r["centroid_id"]) for r in
-             spark.read.parquet(idx + "/vectors")
+             SnapshotTable(spark, idx).read()
              .select("vec_id", "centroid_id").collect()}
     assert before <= after and len(after) == 300   # (b): old rows intact
     # (a) append == rebuild under the stored centroids, bit-exact
-    cmat, _ = sim._ivf_read_centroids(spark, idx)
+    _, _, (cmat, _), _ = sim._ivf_index(spark, idx)
     idx2 = str(tmp_path / "ivf_reb")
     sim.ivf_index_write(base.unionByName(batch), idx2, centroids=cmat)
     rebuilt = {(r["vec_id"], r["centroid_id"]) for r in
-               spark.read.parquet(idx2 + "/vectors")
+               SnapshotTable(spark, idx2).read()
                .select("vec_id", "centroid_id").collect()}
     assert after == rebuilt
     # (c) all-list search over the appended index == exact brute force
@@ -701,6 +702,50 @@ def test_ivf_index_append_equals_rebuild(rows, tmp_path):
     assert ([r["vec_id"] for r in sorted(got, key=lambda r: r["rank"])]
             == [r["vec_id"] for r in sorted(exact,
                                             key=lambda r: r["rank"])])
+
+
+def test_ivf_interrupted_rebuild_keeps_previous_version(rows, tmp_path,
+                                                         monkeypatch):
+    """A rebuild interrupted after its files are staged but before its
+    commit leaves the previous version searchable with identical
+    results: vectors, centroids and codebooks become visible only
+    together, in one manifest."""
+    import os
+
+    import numpy as np
+    import pytest
+
+    rng = np.random.RandomState(29)
+    corpus = rows([(i, [float(x) for x in rng.randn(16)])
+                   for i in range(120)],
+                  "vec_id long, embedding array<double>")
+    queries = rows([(i, [float(x) for x in rng.randn(16)])
+                    for i in range(2)],
+                   "query_id long, embedding array<double>")
+    spark = corpus.sparkSession
+    idx = str(tmp_path / "ivf_interrupt")
+    sim.ivf_index_write(corpus, idx, nlist=4, pq_m=4, pq_nbits=4)
+
+    def search():
+        return sorted(
+            (r["query_id"], r["rank"], r["vec_id"], r["cosine_sim"])
+            for r in sim.ivf_search(spark, idx, queries, k=5, n_probe=2,
+                                    shortlist=20).collect())
+
+    before = search()
+    staged = len(os.listdir(os.path.join(idx, "data")))
+
+    def interrupted(self, *args, **kwargs):
+        raise RuntimeError("interrupted before the commit")
+
+    monkeypatch.setattr(SnapshotTable, "_commit", interrupted)
+    with pytest.raises(RuntimeError, match="interrupted"):
+        sim.ivf_index_write(corpus, idx, nlist=4, seed=7)
+    monkeypatch.undo()
+    # the rebuild's files are on disk, but no manifest names them
+    assert len(os.listdir(os.path.join(idx, "data"))) > staged
+    assert SnapshotTable(spark, idx).latest_version() == 1
+    assert search() == before
 
 
 def test_ivf_index_pq_adc_search(rows, tmp_path):
@@ -723,7 +768,7 @@ def test_ivf_index_pq_adc_search(rows, tmp_path):
     spark = corpus.sparkSession
     idx = str(tmp_path / "ivfadc")
     sim.ivf_index_write(corpus, idx, nlist=4, pq_m=4, pq_nbits=5)
-    vec = spark.read.parquet(idx + "/vectors")
+    vec = SnapshotTable(spark, idx).read()
     assert "pq_code" in vec.columns
     got = sim.ivf_search(spark, idx, queries, k=5, n_probe=4,
                          shortlist=240)
@@ -742,7 +787,7 @@ def test_ivf_index_pq_adc_search(rows, tmp_path):
                   for i in range(40)],
                  "vec_id long, embedding array<double>")
     sim.ivf_index_append(batch, idx)
-    allv = spark.read.parquet(idx + "/vectors")
+    allv = SnapshotTable(spark, idx).read()
     assert allv.where("pq_code IS NULL").count() == 0
     assert allv.count() == 280
     # guards
@@ -755,13 +800,11 @@ def test_ivf_index_pq_adc_search(rows, tmp_path):
 
 
 def test_ivf_rebuild_without_pq_clears_stale_books(rows, tmp_path):
-    """Rebuilding a formerly-IVFADC index with pq_m=None must retire
-    the old pq_books directory (ADVICE r9): a stale codebook dir would
-    make the index read as IVFADC while its vectors carry no pq_code —
-    appends would mix schemas and shortlist searches would crash or
-    silently mis-score."""
-    import os
-
+    """Rebuilding a formerly-IVFADC index with pq_m=None must commit a
+    version without codebooks (ADVICE r9): stale books would make the
+    index read as IVFADC while its vectors carry no pq_code — appends
+    would mix schemas and shortlist searches would crash or silently
+    mis-score."""
     import numpy as np
     import pytest
     from bi_etl_and_integration_spark.operators import similarity as sim
@@ -773,18 +816,17 @@ def test_ivf_rebuild_without_pq_clears_stale_books(rows, tmp_path):
     spark = corpus.sparkSession
     idx = str(tmp_path / "ivf_cycle")
     sim.ivf_index_write(corpus, idx, nlist=4, pq_m=4, pq_nbits=4)
-    assert os.path.isdir(os.path.join(idx, "pq_books"))
+    assert sim._ivf_index(spark, idx)[3] is not None
     # rebuild WITHOUT pq: books must be gone, index reads as plain IVF
     sim.ivf_index_write(corpus, idx, nlist=4)
-    assert not os.path.isdir(os.path.join(idx, "pq_books"))
-    assert sim._ivf_read_pq_books(spark, idx) is None
-    assert "pq_code" not in spark.read.parquet(idx + "/vectors").columns
+    assert sim._ivf_index(spark, idx)[3] is None
+    assert "pq_code" not in SnapshotTable(spark, idx).read().columns
     # append into the rebuilt index stays codeless (no mixed schema)
     batch = rows([(1000 + i, [float(x) for x in rng.randn(16)])
                   for i in range(10)],
                  "vec_id long, embedding array<double>")
     sim.ivf_index_append(batch, idx)
-    allv = spark.read.parquet(idx + "/vectors")
+    allv = SnapshotTable(spark, idx).read()
     assert "pq_code" not in allv.columns and allv.count() == 130
     # and a shortlist search against it raises the clear guard
     queries = rows([(0, [float(x) for x in rng.randn(16)])],
@@ -845,32 +887,50 @@ def test_ivf_search_shortlist_cap_guard(rows, tmp_path):
                for q in range(4))
 
 
-def test_ivf_sidecar_cache_evicts_stale_fingerprints(rows, tmp_path):
-    """ADVICE r10: rebuilding the same index must EVICT the prior
-    fingerprint's cached centroid/codebook arrays for that path —
-    the cache must hold at most one entry per (kind, path), not leak
-    one per rebuild in a long-lived session."""
+def test_ivf_search_reads_rebuilt_version_with_bounded_cache(rows,
+                                                             tmp_path):
+    """The decoded centroids and codebooks are cached per committed
+    version: after a rebuild — or after the index directory is deleted
+    and rebuilt, which reuses version numbers — the next search uses
+    the NEW centroids, never a stale cached copy, and the cache stays
+    bounded however many versions a long-lived session reads."""
+    import shutil
+
     import numpy as np
     from bi_etl_and_integration_spark.operators import similarity as sim
+    from bi_etl_and_integration_spark.sources import snapshots
 
     rng = np.random.RandomState(23)
     corpus = rows([(i, [float(x) for x in rng.randn(16)])
                    for i in range(60)],
                   "vec_id long, embedding array<double>")
+    queries = rows([(0, [float(x) for x in rng.randn(16)])],
+                   "query_id long, embedding array<double>")
     spark = corpus.sparkSession
-    idx = str(tmp_path / "ivf_evict")
-    cpath = idx + "/centroids"
-    for seed in (1, 2, 3):
-        sim.ivf_index_write(corpus, idx, nlist=4, seed=seed,
-                            pq_m=4, pq_nbits=4)
-        sim._ivf_read_centroids(spark, idx)
-        sim._ivf_read_pq_books(spark, idx)
-        for kind, sub in (("centroids", "/centroids"),
-                          ("pq_books", "/pq_books")):
-            keys = [k for k in sim._IVF_SIDECAR_CACHE
-                    if k[0] == kind and k[1] == idx + sub]
-            assert len(keys) == 1, (kind, len(keys))
-    # the surviving entry is the CURRENT file state, not a stale one
-    key = next(k for k in sim._IVF_SIDECAR_CACHE
-               if k[0] == "centroids" and k[1] == cpath)
-    assert key[2] == sim._sidecar_fingerprint(cpath)
+    idx = str(tmp_path / "ivf_rebuild")
+    sim.ivf_index_write(corpus, idx, nlist=4, pq_m=4, pq_nbits=4)
+    sim.ivf_search(spark, idx, queries, k=3, n_probe=4).collect()
+    _, _, (first, _), _ = sim._ivf_index(spark, idx)
+    # rebuild under a different frozen quantizer: the next read must
+    # return exactly the new version's centroids
+    sim.ivf_index_write(corpus, idx, centroids=-first)
+    _, version, (cmat, _), books = sim._ivf_index(spark, idx)
+    assert version == 2 and books is None
+    assert np.array_equal(cmat, -first)
+    got = sim.ivf_search(spark, idx, queries, k=3, n_probe=4).collect()
+    exact = sim.brute_force_topk(corpus, queries, k=3).collect()
+    assert ({r["rank"]: r["vec_id"] for r in got}
+            == {r["rank"]: r["vec_id"] for r in exact})
+    # deleted and rebuilt at the same path: version 1 again, new files
+    shutil.rmtree(idx)
+    sim.ivf_index_write(corpus, idx, centroids=-first)
+    _, version, (cmat, _), _ = sim._ivf_index(spark, idx)
+    assert version == 1 and np.array_equal(cmat, -first)
+    # bounded: more distinct keys than the cache holds leave it at its
+    # maximum size
+    table = SnapshotTable(spark, idx)
+    info = snapshots._decoded.cache_info()
+    for i in range(info.maxsize + 4):
+        snapshots._sidecar(table.path, 1, "centroids", lambda t, i=i: i)
+    info = snapshots._decoded.cache_info()
+    assert info.currsize == info.maxsize

@@ -125,6 +125,44 @@ def test_vacuum_prunes_old_versions(spark, tmp_path):
     assert len(live) == 2
 
 
+def test_vacuum_rejects_keep_last_below_one(spark, tmp_path):
+    """keep_last=0 used to delete nothing and keep_last=-1 the oldest
+    version: both are errors, and every version stays readable."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    for i in range(3):
+        t.write(spark.createDataFrame([(i,)], "k int"), "overwrite")
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="keep_last"):
+            t.vacuum(keep_last=bad)
+    assert [[r["k"] for r in t.read(v).collect()] for v in (1, 2, 3)] \
+        == [[0], [1], [2]]
+
+
+def test_partitioned_table_appends_and_compacts(spark, tmp_path):
+    """partition_by: files land in Hive ``col=value`` dirs and read
+    back across commits (one read per commit directory); compaction
+    keeps the partitioning; an append must use the table's own."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.write(spark.createDataFrame([(1, "a"), (2, "b")], "p int, s string"),
+            partition_by="p")
+    t.write(spark.createDataFrame([(1, "c")], "p int, s string"),
+            "append", partition_by="p")
+    rows = lambda: sorted(tuple(r) for r in t.read().collect())  # noqa: E731
+    assert t.read().columns == ["s", "p"]
+    assert rows() == [("a", 1), ("b", 2), ("c", 1)]
+    assert sorted(r["s"] for r in t.read().where("p = 1").collect()) \
+        == ["a", "c"]
+    t.compact()
+    assert rows() == [("a", 1), ("b", 2), ("c", 1)]
+    from bi_etl_and_integration_spark.sources import snapshots as sn
+    m = sn._read_manifest(t.path, t.latest_version())
+    assert m["partition_by"] == "p"
+    assert all(os.sep + "p=" in e["path"] for e in m["files"])
+    with pytest.raises(ValueError, match="partitioning"):
+        t.write(spark.createDataFrame([(3, "d")], "p int, s string"),
+                "append")
+
+
 def test_convenience_wrappers(spark, tmp_path):
     p = str(tmp_path / "t")
     snapshot_write(spark, spark.createDataFrame([(5,)], "k int"), p)

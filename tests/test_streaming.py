@@ -7,6 +7,7 @@ tumbling window into a memory sink."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 from pyspark.sql import functions as F
 
@@ -308,6 +309,28 @@ def test_stream_enrich_static_dim(spark, rows, tmp_path):
         q.stop()
 
 
+def _index_tables(spark, index_dir):
+    """The (buckets, shingles) snapshot tables of a dedup_stream index."""
+    from bi_etl_and_integration_spark.sources.snapshots import (
+        SnapshotTable)
+    return [SnapshotTable(spark, os.path.join(index_dir, kind))
+            for kind in ("buckets", "shingles")]
+
+
+def _latest_epoch(table):
+    from bi_etl_and_integration_spark.sources.snapshots import (
+        _read_manifest)
+    return _read_manifest(table.path, table.latest_version())["epoch"]
+
+
+def _commit_dirs(table):
+    """The data commit directories the latest version references."""
+    from bi_etl_and_integration_spark.sources.snapshots import (
+        _read_manifest)
+    m = _read_manifest(table.path, table.latest_version())
+    return {e["path"].split(os.sep)[1] for e in m["files"]}
+
+
 def test_streaming_dedup_rolling_index(spark, rows, tmp_path):
     """Rolling-crawl online dedup: two micro-batches through
     streaming.dedup.dedup_stream — batch 1 establishes the index,
@@ -315,10 +338,9 @@ def test_streaming_dedup_rolling_index(spark, rows, tmp_path):
     and its cross-batch near-dup of an epoch-0 survivor, and the
     persisted index grows by exactly the survivors.  Replay of the
     final epoch (the crash-recovery path) is byte-idempotent."""
-    from bi_etl_and_integration_spark.streaming.dedup import (
-        dedup_stream, load_minhash_index)
+    from bi_etl_and_integration_spark.streaming.dedup import dedup_stream
     from bi_etl_and_integration_spark.operators.dedup import (
-        MinhashParams)
+        MinhashIndex, MinhashParams)
 
     base = "the quick brown fox jumps over the lazy dog " * 5
     other = "completely different text about spark aggregation " * 5
@@ -360,21 +382,20 @@ def test_streaming_dedup_rolling_index(spark, rows, tmp_path):
     assert got == {0, 2, 9}
 
     params = MinhashParams(32, 16, 3, 42, 1)
-    idx = load_minhash_index(spark, index_dir, params)
+    tables = _index_tables(spark, index_dir)
+    idx = MinhashIndex(*(t.read() for t in tables), params)
     assert idx is not None and idx.params == params
     assert ({r["id"] for r in idx.shingles.select("id").collect()}
             == {0, 2, 9})
 
     # replay idempotence: re-apply the last epoch by hand (the
     # foreachBatch replay shape) - survivor set and index unchanged
-    epochs = sorted({r["epoch"] for r in spark.read.parquet(
-        index_dir + "/shingles").select("epoch").distinct().collect()})
-    last = epochs[-1]
+    last = _latest_epoch(tables[1])
     from bi_etl_and_integration_spark.streaming import dedup as sd
     # drive the same logic through the public pieces instead of the
     # closure: probe index BEFORE the last epoch, recompute survivors
-    prior = load_minhash_index(spark, index_dir, params,
-                               before_epoch=last)
+    prior = MinhashIndex(*(t.read(t._version_before(last))
+                           for t in tables), params)
     from bi_etl_and_integration_spark.operators.dedup import (
         minhash_lookup)
     kept = sd._intra_batch_survivors(b2, "text", "doc_id", params, 0.5)
@@ -386,14 +407,14 @@ def test_streaming_dedup_rolling_index(spark, rows, tmp_path):
 
 
 def test_compact_minhash_index_preserves_lookup(spark, rows, tmp_path):
-    """Compaction folds every COMMITTED epoch (all but the newest)
-    into the second-newest: lookup results are identical before and
-    after, history collapses to {keep, newest}, and the newest epoch
-    — the only one a resumed stream could replay — is left untouched."""
+    """Compacting both index tables (SnapshotTable.compact) folds every
+    epoch's files into one: lookup results are identical before and
+    after, and the compacted version keeps the newest epoch, so a
+    replay of that epoch — the only one a resumed stream could replay
+    — still probes the untouched pre-epoch version."""
     from bi_etl_and_integration_spark.operators.dedup import (
-        MinhashParams, minhash_lookup)
-    from bi_etl_and_integration_spark.streaming.dedup import (
-        compact_minhash_index, dedup_stream, load_minhash_index)
+        MinhashIndex, MinhashParams, minhash_lookup)
+    from bi_etl_and_integration_spark.streaming.dedup import dedup_stream
 
     base = "the quick brown fox jumps over the lazy dog " * 5
     src = str(tmp_path / "src")
@@ -422,94 +443,31 @@ def test_compact_minhash_index_preserves_lookup(spark, rows, tmp_path):
         q.stop()
 
     params = MinhashParams(32, 16, 3, 42, 1)
+    tables = _index_tables(spark, index_dir)
     probe = rows([(9, base + "probe copy")], DOCS)
     res = lambda: sorted(  # noqa: E731
         (r["id_a"], r["id_b"], r["jaccard_sim"])
         for r in minhash_lookup(
-            probe, load_minhash_index(spark, index_dir, params),
+            probe, MinhashIndex(*(t.read() for t in tables), params),
             "text", "doc_id", jaccard_threshold=0.5).collect())
     before = res()
     assert before and before[0][1] == 0
-    kept_epoch = compact_minhash_index(spark, index_dir)
-    assert kept_epoch == 1                 # epochs {0,1,2} -> keep 1
+    for t in tables:
+        t.compact()
+    assert [_latest_epoch(t) for t in tables] == [2, 2]
     assert res() == before
-    shingles = spark.read.parquet(index_dir + "/shingles")
-    assert ({r["epoch"] for r in shingles.select("epoch")
-             .distinct().collect()} == {kept_epoch, 2})
-    assert ({r["id"] for r in shingles.select("id").collect()}
+    shingles = tables[1]
+    assert len(_commit_dirs(shingles)) == 1
+    assert ({r["id"] for r in shingles.read().select("id").collect()}
             == {0, 2, 4, 6})
-    # newest epoch untouched: still exactly its own rows
-    assert ({r["id"] for r in shingles.where(F.col("epoch") == 2)
-             .select("id").collect()} == {6})
-    # idempotent re-run ({1,2} left -> no-op, returns newest)
-    assert compact_minhash_index(spark, index_dir) == 2
+    # a replay of the newest epoch probes the pre-epoch version, which
+    # still holds exactly the rows of epochs {0, 1}
+    assert ({r["id"] for r in shingles.read(shingles._version_before(2))
+             .select("id").collect()} == {0, 2, 4})
+    # idempotent re-run
+    for t in tables:
+        t.compact()
     assert res() == before
-
-
-def test_compact_minhash_index_repairs_crash_duplicates(spark, rows,
-                                                        tmp_path):
-    """A crash between compaction's two steps leaves the same rows in
-    both the compacted epoch and an older epoch dir; re-running
-    compaction must DEDUPLICATE (shingles by id, buckets by
-    band/bucket/id), not bake the duplicates in — duplicated shingle
-    rows would multiply minhash_lookup's verify join per candidate."""
-    import shutil
-
-    from bi_etl_and_integration_spark.operators.dedup import (
-        MinhashParams, minhash_lookup)
-    from bi_etl_and_integration_spark.streaming.dedup import (
-        compact_minhash_index, dedup_stream, load_minhash_index)
-
-    base = "the quick brown fox jumps over the lazy dog " * 5
-    src = str(tmp_path / "src")
-    index_dir = str(tmp_path / "index")
-    DOCS = "doc_id long, text string"
-    b1 = rows([(0, base + "one")], DOCS)
-    b1.write.parquet(src)
-    writer = dedup_stream(
-        spark.readStream.schema(b1.schema).parquet(src),
-        index_dir=index_dir, survivors_dir=str(tmp_path / "out"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        num_hashes=32, bands=16, jaccard_threshold=0.5)
-    for batch in ([(4, "another document entirely " * 5)],
-                  [(6, "a third unrelated corpus slice " * 5)]):
-        q = writer.start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        rows(batch, DOCS).write.mode("append").parquet(src)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    # simulate the crash mid-compaction of epochs {0,1,2}: the keep
-    # epoch (1) already holds the merged copy of 0 ∪ 1 while epoch=0
-    # still exists on disk
-    for kind in ("buckets", "shingles"):
-        src0 = f"{index_dir}/{kind}/epoch=0"
-        dst1 = f"{index_dir}/{kind}/epoch=1"
-        merged = spark.read.parquet(src0).unionByName(
-            spark.read.parquet(dst1))
-        tmp = f"{index_dir}/{kind}/__crashsim"
-        merged.write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).write.mode("overwrite").parquet(dst1)
-        shutil.rmtree(tmp)
-
-    kept = compact_minhash_index(spark, index_dir)
-    assert kept == 1
-    shingles = spark.read.parquet(index_dir + "/shingles")
-    ids = [r["id"] for r in shingles.select("id").collect()]
-    assert sorted(ids) == [0, 4, 6]       # exactly once each
-    params = MinhashParams(32, 16, 3, 42, 1)
-    probe = rows([(9, base + "probe copy")], DOCS)
-    got = minhash_lookup(probe,
-                         load_minhash_index(spark, index_dir, params),
-                         "text", "doc_id",
-                         jaccard_threshold=0.5).collect()
-    assert [(r["id_a"], r["id_b"]) for r in got] == [(9, 0)]
 
 
 def test_compact_then_resume_replays_uncommitted_epoch(spark, rows,
@@ -518,15 +476,15 @@ def test_compact_then_resume_replays_uncommitted_epoch(spark, rows,
     crash alignment (ADVICE r6): the stream stopped after the final
     batch's sink writes landed but BEFORE its checkpoint commit, so on
     resume Structured Streaming REPLAYS that batch.  Compaction must
-    leave the replayable (newest) epoch untouched: the replay's
-    before_epoch probe must see the full compacted history (its
-    cross-batch drop decisions unchanged) and its epoch overwrite must
-    not destroy the compacted index."""
+    leave the replayable (newest) epoch's prior state readable: the
+    replay's probe must see the full history (its cross-batch drop
+    decisions unchanged) and its skipped commits must not disturb the
+    compacted index."""
     import os as _os
 
-    from bi_etl_and_integration_spark.operators.dedup import MinhashParams
-    from bi_etl_and_integration_spark.streaming.dedup import (
-        compact_minhash_index, dedup_stream, load_minhash_index)
+    from bi_etl_and_integration_spark.operators.dedup import (
+        MinhashIndex, MinhashParams)
+    from bi_etl_and_integration_spark.streaming.dedup import dedup_stream
 
     base = "the quick brown fox jumps over the lazy dog " * 5
     src = str(tmp_path / "src")
@@ -570,8 +528,10 @@ def test_compact_then_resume_replays_uncommitted_epoch(spark, rows,
     if _os.path.exists(crc):
         _os.remove(crc)
 
-    kept = compact_minhash_index(spark, index_dir)
-    assert kept == 1                       # {0,1} merged; 2 untouched
+    tables = _index_tables(spark, index_dir)
+    for t in tables:
+        t.compact()
+    assert [_latest_epoch(t) for t in tables] == [2, 2]
 
     q = writer.start()                     # resume: replays batch 2
     try:
@@ -584,16 +544,18 @@ def test_compact_then_resume_replays_uncommitted_epoch(spark, rows,
     surv = spark.read.parquet(out).collect()
     assert sorted(r["doc_id"] for r in surv) == [0, 2, 4, 9]
     params = MinhashParams(32, 16, 3, 42, 1)
-    idx = load_minhash_index(spark, index_dir, params)
+    idx = MinhashIndex(*(t.read() for t in tables), params)
     assert ({r["id"] for r in idx.shingles.select("id").collect()}
             == {0, 2, 4, 9})
-    shingles = spark.read.parquet(index_dir + "/shingles")
-    assert ({r["epoch"] for r in shingles.select("epoch")
-             .distinct().collect()} == {1, 2})
+    # the replay committed nothing: the compacted version is still the
+    # latest, each id exactly once
+    assert tables[1].history()[-1]["operation"] == "compact"
+    assert sorted(r["id"] for r in idx.shingles.select("id")
+                  .collect()) == [0, 2, 4, 9]
 
     # and the resumed stream keeps deduplicating against compacted
     # history: a near-dup of the epoch-1 survivor (now inside the
-    # compacted epoch) is dropped, a fresh doc survives
+    # compacted files) is dropped, a fresh doc survives
     rows([(11, "a novel document entirely " * 5 + "tail"),
           (12, "post-resume brand new content " * 5)], DOCS) \
         .write.mode("append").parquet(src)
@@ -606,60 +568,80 @@ def test_compact_then_resume_replays_uncommitted_epoch(spark, rows,
                   spark.read.parquet(out).collect()) == [0, 2, 4, 9, 12]
 
 
-def test_compact_repairs_cross_kind_epoch_strand(spark, rows, tmp_path):
-    """Review r7: a crash BETWEEN compaction's two kinds leaves the
-    kinds' epoch inventories diverging (buckets compacted, shingles
-    not).  The epoch landscape must come from the UNION across kinds,
-    or the stranded shingles dirs get re-merged forever but never
-    deleted (permanent duplicate verify-join candidates)."""
-    import shutil as _sh
+def test_dedup_stream_replays_crash_between_index_commits(
+        spark, rows, tmp_path, monkeypatch):
+    """A crash between a micro-batch's buckets commit and its shingles
+    commit replays to the same survivors and the same index as an
+    uninterrupted run: the replay probes the pre-epoch versions, skips
+    the buckets commit its epoch already recorded, and commits only
+    the missing shingles."""
+    import pytest
 
-    from bi_etl_and_integration_spark.streaming.dedup import (
-        compact_minhash_index, dedup_stream)
+    from bi_etl_and_integration_spark.sources.snapshots import (
+        SnapshotTable)
+    from bi_etl_and_integration_spark.streaming.dedup import dedup_stream
 
-    src = str(tmp_path / "src")
-    index_dir = str(tmp_path / "index")
+    base = "the quick brown fox jumps over the lazy dog " * 5
     DOCS = "doc_id long, text string"
-    b1 = rows([(0, "the quick brown fox jumps over the dog " * 5)], DOCS)
-    b1.write.parquet(src)
-    writer = dedup_stream(
-        spark.readStream.schema(b1.schema).parquet(src),
-        index_dir=index_dir, survivors_dir=str(tmp_path / "out"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        num_hashes=32, bands=16, jaccard_threshold=0.5)
-    for batch in ([(4, "another document entirely " * 5)],
-                  [(6, "a third unrelated corpus slice " * 5)]):
+    batches = [
+        [(0, base + "one"), (2, "spark shuffles partitions " * 5)],
+        # 4 near-dups epoch-0 survivor 0; 5 is fresh
+        [(4, base + "late copy"), (5, "a genuinely novel document " * 5)],
+    ]
+    real_commit = SnapshotTable._commit
+
+    def crash_before_shingles(self, *args, **kwargs):
+        if self.path.endswith("shingles") and kwargs.get("epoch") == 1:
+            raise RuntimeError("crash between the index commits")
+        return real_commit(self, *args, **kwargs)
+
+    def run(tag, crash):
+        src = str(tmp_path / f"src_{tag}")
+        index_dir = str(tmp_path / f"index_{tag}")
+        out = str(tmp_path / f"out_{tag}")
+        rows(batches[0], DOCS).write.parquet(src)
+        writer = dedup_stream(
+            spark.readStream.schema(DOCS).parquet(src),
+            index_dir=index_dir, survivors_dir=out,
+            checkpoint_dir=str(tmp_path / f"ckpt_{tag}"),
+            num_hashes=32, bands=16, jaccard_threshold=0.5)
         q = writer.start()
         try:
             q.processAllAvailable()
         finally:
             q.stop()
-        rows(batch, DOCS).write.mode("append").parquet(src)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # simulate the cross-kind crash on epochs {0,1,2}: buckets already
-    # compacted (0+1 merged into 1, 0 deleted), shingles untouched
-    merged = spark.read.parquet(f"{index_dir}/buckets/epoch=0") \
-        .unionByName(spark.read.parquet(f"{index_dir}/buckets/epoch=1"))
-    tmp = f"{index_dir}/buckets/__crashsim"
-    merged.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(
-        f"{index_dir}/buckets/epoch=1")
-    _sh.rmtree(tmp)
-    _sh.rmtree(f"{index_dir}/buckets/epoch=0")
+        rows(batches[1], DOCS).write.mode("append").parquet(src)
+        tables = _index_tables(spark, index_dir)
+        if crash:
+            monkeypatch.setattr(SnapshotTable, "_commit",
+                                crash_before_shingles)
+            q = writer.start()
+            try:
+                with pytest.raises(Exception):
+                    q.processAllAvailable()
+            finally:
+                q.stop()
+                monkeypatch.undo()
+            assert [_latest_epoch(t) for t in tables] == [1, 0]
+        q = writer.start()                 # replays epoch 1 after a crash
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return tables, out
 
-    kept = compact_minhash_index(spark, index_dir)
-    assert kept == 1
-    sh = spark.read.parquet(index_dir + "/shingles")
-    assert ({r["epoch"] for r in sh.select("epoch").distinct()
-             .collect()} == {1, 2})           # stray epoch 0 GONE
-    assert sorted(r["id"] for r in sh.select("id").collect()) == [0, 4, 6]
-    bk = spark.read.parquet(index_dir + "/buckets")
-    assert ({r["epoch"] for r in bk.select("epoch").distinct()
-             .collect()} == {1, 2})
+    ref_tables, out_ref = run("ref", False)
+    tables, out = run("crash", True)
+    survivors = lambda d: sorted(  # noqa: E731
+        r["doc_id"] for r in spark.read.parquet(d).collect())
+    assert survivors(out) == survivors(out_ref) == [0, 2, 5]
+    assert [len(t.versions()) for t in tables] == [2, 2]
+    for t, ref in zip(tables, ref_tables):
+        assert _latest_epoch(t) == 1
+        cols = [c for c in ref.read().columns if c != "__hs"]
+        got = sorted(tuple(r) for r in t.read().select(cols).collect())
+        assert got == sorted(tuple(r) for r in
+                             ref.read().select(cols).collect())
 
 
 def test_dedup_stream_live_compaction(spark, rows, tmp_path):
@@ -673,9 +655,8 @@ def test_dedup_stream_live_compaction(spark, rows, tmp_path):
     import pytest
 
     from bi_etl_and_integration_spark.operators.dedup import (
-        MinhashParams, minhash_lookup)
-    from bi_etl_and_integration_spark.streaming.dedup import (
-        dedup_stream, load_minhash_index)
+        MinhashIndex, MinhashParams, minhash_lookup)
+    from bi_etl_and_integration_spark.streaming.dedup import dedup_stream
 
     base = "the quick brown fox jumps over the lazy dog " * 5
     DOCS = "doc_id long, text string"
@@ -716,14 +697,13 @@ def test_dedup_stream_live_compaction(spark, rows, tmp_path):
     live = {r["doc_id"] for r in spark.read.parquet(out_live).collect()}
     assert live == ref == {0, 2, 4, 6, 9}     # 8 dropped cross-batch
 
-    # live index: epochs {0..3} compacted down (epoch 2's in-batch
-    # compaction merged {0,1} while 2 was newest); same row set
+    # live index: the four epochs' files compacted down (epoch 2's
+    # in-batch compaction merged {0,1,2}, epoch 3 appended); same rows
     params = MinhashParams(32, 16, 3, 42, 1)
-    sh = spark.read.parquet(idx_live + "/shingles")
-    live_epochs = {r["epoch"] for r in sh.select("epoch")
-                   .distinct().collect()}
-    ref_epochs = {r["epoch"] for r in spark.read.parquet(
-        idx_ref + "/shingles").select("epoch").distinct().collect()}
+    live_sh, ref_sh = (_index_tables(spark, d)[1]
+                       for d in (idx_live, idx_ref))
+    sh = live_sh.read()
+    live_epochs, ref_epochs = _commit_dirs(live_sh), _commit_dirs(ref_sh)
     assert len(live_epochs) < len(ref_epochs) == 4
     assert ({r["id"] for r in sh.select("id").collect()}
             == {0, 2, 4, 6, 9})
@@ -732,7 +712,9 @@ def test_dedup_stream_live_compaction(spark, rows, tmp_path):
     def hits(idx_dir):
         return sorted(
             (r["id_a"], r["id_b"]) for r in minhash_lookup(
-                probe, load_minhash_index(spark, idx_dir, params),
+                probe, MinhashIndex(*(t.read() for t in
+                                      _index_tables(spark, idx_dir)),
+                                    params),
                 "text", "doc_id", jaccard_threshold=0.5).collect())
     assert hits(idx_live) == hits(idx_ref) == [(99, 0)]
 
@@ -743,6 +725,44 @@ def test_dedup_stream_live_compaction(spark, rows, tmp_path):
             index_dir=str(tmp_path / "i2"),
             survivors_dir=str(tmp_path / "o2"),
             checkpoint_dir=str(tmp_path / "c2"), compact_every=1)
+
+
+def test_dedup_stream_reader_snapshot_survives_live_compaction(
+        spark, rows, tmp_path):
+    """A reader that holds a snapshot of the index across a live
+    compaction (compact_every=2) reads the same rows afterwards: the
+    compaction commits a new version and deletes nothing."""
+    from bi_etl_and_integration_spark.streaming.dedup import dedup_stream
+
+    DOCS = "doc_id long, text string"
+    src = str(tmp_path / "src")
+    index_dir = str(tmp_path / "index")
+    rows([(0, "the quick brown fox jumps over the lazy dog " * 5),
+          (2, "spark shuffles partitions " * 5)], DOCS).write.parquet(src)
+    writer = dedup_stream(
+        spark.readStream.schema(DOCS).parquet(src),
+        index_dir=index_dir, survivors_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"), num_hashes=32, bands=16,
+        jaccard_threshold=0.5, compact_every=2)
+
+    def run(batch):
+        if batch:
+            rows(batch, DOCS).write.mode("append").parquet(src)
+        q = writer.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    run(None)                                          # epoch 0
+    run([(4, "a novel document entirely " * 5)])       # epoch 1
+    shingles = _index_tables(spark, index_dir)[1]
+    held = shingles.read()
+    before = sorted(r["id"] for r in held.select("id").collect())
+    assert before == [0, 2, 4]
+    run([(6, "yet another unrelated corpus slice " * 5)])  # compacts
+    assert shingles.history()[-1]["operation"] == "compact"
+    assert sorted(r["id"] for r in held.select("id").collect()) == before
 
 
 def test_dedup_stream_releases_batch_caches(spark, rows, tmp_path):

@@ -434,6 +434,33 @@ def test_persist_only_through_cached():
     assert not raw, f"raw persist/cache calls (use cached()): {raw}"
 
 
+def test_indexes_persist_only_through_snapshots():
+    """The engine's indexes commit through ``SnapshotTable``:
+    ``operators/similarity.py`` makes no DataFrameWriter access (a
+    ``.write`` attribute that is not itself called, as in
+    ``df.write.mode(...)``; ``SnapshotTable.write(df)`` is a call),
+    ``streaming/dedup.py`` exactly one (the survivors export), and
+    neither deletes files — ``SnapshotTable.vacuum`` is the one
+    deleter."""
+    import ast
+
+    want = {"operators/similarity.py": 0, "streaming/dedup.py": 1}
+    for rel, n_writes in want.items():
+        path = os.path.join(ROOT, "bi_etl_and_integration_spark", rel)
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        called = {id(n.func) for n in ast.walk(tree)
+                  if isinstance(n, ast.Call)}
+        writes = [n.lineno for n in ast.walk(tree)
+                  if isinstance(n, ast.Attribute) and n.attr == "write"
+                  and id(n) not in called]
+        rmtree = [n.lineno for n in ast.walk(tree)
+                  if isinstance(n, ast.Call)
+                  and getattr(n.func, "attr", None) == "rmtree"]
+        assert len(writes) == n_writes, f"{rel}: writes at {writes}"
+        assert not rmtree, f"{rel}: rmtree at {rmtree}"
+
+
 def test_row_number_only_through_limit_by():
     """Every "rank rows per key, keep rank <= k" in the package goes
     through ``operators.windows.limit_by``: ``row_number`` is called
