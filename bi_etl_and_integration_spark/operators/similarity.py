@@ -538,7 +538,7 @@ def ivf_index_append(batch: DataFrame, index_dir: str, *,
         # stored codebooks (retraining them would make old and new
         # codes incomparable under one query LUT)
         assigned = pq_encode(assigned, books, vec_col=vec_col)
-    table.write(assigned, "append", partition_by="centroid_id")
+    table.write(assigned, "append")
 
 
 def ivf_search(spark, index_dir: str, queries: DataFrame, k: int = 10,

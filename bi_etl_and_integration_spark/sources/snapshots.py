@@ -15,7 +15,7 @@ Layout::
 
     table/
       data/<commit-uuid>/part-*.parquet    immutable, write-once
-      data/<commit-uuid>/<col>=<v>/...     the same, ``partition_by`` set
+      data/__commit=<commit-uuid>/<col>=<v>/...  ``partition_by`` set
       _manifests/v0000000001.json          the commit log
 
 A *manifest* lists the exact data files of one table version plus the
@@ -276,7 +276,9 @@ class SnapshotTable:
 
         ``prune``: manifest-level data skipping — ``[(col, op, value)]``
         with op ∈ =,<,<=,>,>= drops every file whose footer min/max
-        PROVES no row matches, before Spark lists a single file.  This
+        PROVES no row matches (on a partitioned table: every commit
+        dir none of whose files may match), before Spark lists a single
+        file.  This
         is an optimization contract, not a filter: the caller still
         applies the real ``where()`` (files lacking stats are always
         read).  At 100 TB this removes the per-file footer round trip
@@ -301,18 +303,19 @@ class SnapshotTable:
         # whichever file's footer gets sampled first
         if not m.get("partition_by"):
             return self.spark.read.schema(schema).parquet(*files)
-        # one read per commit directory: its basePath lets Spark parse
-        # `col=value` from the paths (a filter on the column stays a
-        # static partition filter), and one read over several commit
-        # dirs fails with CONFLICTING_DIRECTORY_STRUCTURES
-        commits: dict = {}
-        for f in files:
-            rel = os.path.relpath(f, self.path).split(os.sep)
-            commits.setdefault(os.path.join(self.path, *rel[:2]),
-                               []).append(f)
-        return functools.reduce(DataFrame.unionByName, (
-            self.spark.read.schema(schema).option("basePath", d)
-            .parquet(*fs) for d, fs in commits.items()))
+        # a partitioned commit dir is itself a `__commit=<id>` level, so
+        # one scan with basePath data/ parses both levels from the
+        # paths and a filter on the column stays a static partition
+        # filter, however many commits the version spans.  The scan
+        # gets commit dirs, not files: a commit dir holds exactly the
+        # files its commit named, and Spark lists more than 32 paths
+        # (parallelPartitionDiscovery.threshold) in a job with one
+        # task per path
+        dirs = sorted({os.path.join(self.path, *os.path.relpath(
+            f, self.path).split(os.sep)[:2]) for f in files})
+        return (self.spark.read.schema(schema.add("__commit", "string"))
+                .option("basePath", os.path.join(self.path, "data"))
+                .parquet(*dirs).drop("__commit"))
 
     def row_count(self, version: int | None = None) -> int | None:
         """Exact row count from manifest metadata — no scan.  None if
@@ -332,16 +335,12 @@ class SnapshotTable:
     # ----------------------------------------------------------- write
 
     def write(self, df: DataFrame, mode: str = "overwrite", *,
-              partition_by: str | None = None,
               evolve_schema: bool = False,
               max_retries: int = 20) -> int:
         """Commit ``df`` as the next version.  ``mode``: ``overwrite``
         replaces the file list, ``append`` extends the parent's.
-        Returns the committed version number.
-
-        ``partition_by``: write the files Hive-partitioned by that
-        column, so a filter on it prunes whole directories at read
-        time (an append must use the table's own partitioning).
+        Returns the committed version number.  An append keeps the
+        table's partitioning (see :meth:`_stage`).
 
         ``evolve_schema`` (append only): columns new to the table are
         ADDED to the manifest schema (at the end, Delta
@@ -354,7 +353,8 @@ class SnapshotTable:
         widening is how tables rot."""
         if mode not in ("overwrite", "append"):
             raise ValueError(f"mode must be overwrite/append, got {mode!r}")
-        return self._commit(mode, *self._stage(df, partition_by),
+        part = self._partition_by() if mode == "append" else None
+        return self._commit(mode, *self._stage(df, part),
                             evolve_schema=evolve_schema,
                             max_retries=max_retries)
 
@@ -367,18 +367,29 @@ class SnapshotTable:
                             m.get("partition_by"),
                             sidecars=m.get("sidecars"))
 
-    def compact(self, *, target_files: int = 1) -> int:
-        """OPTIMIZE: rewrite the current version's data as
-        ``target_files`` files and commit the result — small-file
-        compaction after many streaming/CDC appends (each append is
-        ≥1 file; a thousand micro-batches = a thousand tiny scans).
-        Old versions still read the old files until ``vacuum``.
-        Partitioning and sidecars carry over; the epoch too, as on
-        every commit."""
-        df = self.read().coalesce(max(1, target_files))
-        part = _read_manifest(self.path, self.latest_version()).get(
-            "partition_by")
-        return self._commit("compact", *self._stage(df, part))
+    def compact(self, *, target_files: int | None = None) -> int:
+        """OPTIMIZE: rewrite the current version's data and commit the
+        result — small-file compaction after many streaming/CDC appends
+        (each append is ≥1 file; a thousand micro-batches = a thousand
+        tiny scans).  ``target_files=None`` writes one file per read
+        split: Spark packs small files into splits of up to
+        ``spark.sql.files.maxPartitionBytes``, so the rewrite runs in
+        parallel and the file count follows the data size; an integer
+        coalesces to that many files (one task each).  Old versions
+        still read the old files until ``vacuum``.  Partitioning and
+        sidecars carry over; the epoch too, as on every commit."""
+        df = self.read()
+        if target_files is not None:
+            df = df.coalesce(max(1, target_files))
+        return self._commit("compact", *self._stage(df,
+                                                    self._partition_by()))
+
+    def _partition_by(self) -> str | None:
+        """The latest version's partition column (None: unpartitioned
+        or no version yet)."""
+        v = self.latest_version()
+        return None if v is None else _read_manifest(
+            self.path, v).get("partition_by")
 
     def _stage(self, df: DataFrame, partition_by: str | None = None,
                ) -> tuple[list[dict], str, str, str | None]:
@@ -386,9 +397,12 @@ class SnapshotTable:
         return (file entries with footer stats, schema DDL, commit id,
         ``partition_by``).  Until :meth:`_commit` names them they are
         invisible garbage (reclaimed by ``vacuum``), never a torn
-        table."""
+        table.  ``partition_by``: the files are Hive-partitioned by
+        that column under a ``__commit=<id>`` dir (see :meth:`read`),
+        so a filter on it prunes whole directories at read time."""
         commit_id = uuid.uuid4().hex[:12]
-        data_dir = os.path.join(self.path, "data", commit_id)
+        data_dir = os.path.join(self.path, "data", f"__commit={commit_id}"
+                                if partition_by else commit_id)
         writer = df.write.mode("errorifexists")
         if partition_by:
             writer = writer.partitionBy(partition_by)
@@ -439,9 +453,12 @@ class SnapshotTable:
                 entries, schema = files, ddl
                 if operation == "append" and pm:
                     if pm.get("partition_by") != partition_by:
+                        # only an overwrite with another partitioning
+                        # landing after this append's _stage gets here:
+                        # the two layouts cannot share one scan
                         raise ValueError(
                             "append partitioning mismatch: table has "
-                            f"{pm.get('partition_by')!r}, appending "
+                            f"{pm.get('partition_by')!r}, staged "
                             f"{partition_by!r}")
                     if pm["schema"] != ddl:
                         if not evolve_schema:
@@ -487,7 +504,10 @@ class SnapshotTable:
         Returns deleted paths.  After vacuum, ``read(version=old)``
         fails for pruned versions — retention is the time-travel
         horizon, exactly the Delta VACUUM contract.  ``keep_last`` < 1
-        raises: no retention tail would keep even the latest version."""
+        raises: no retention tail would keep even the latest version.
+        An orphan is any data dir no retained manifest names, which
+        includes a concurrent writer's staged but not yet committed
+        one: run vacuum while no writer of the table is in flight."""
         if keep_last < 1:
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         versions = _list_versions(self.path)

@@ -90,14 +90,19 @@ def dedup_stream(stream_df: DataFrame, *, index_dir: str,
     module docstring).
 
     ``compact_every=N``: every N epochs, after the epoch's own commits,
-    both tables are compacted (:meth:`SnapshotTable.compact`) inside
-    ``foreachBatch``; the compacted version keeps its parent's epoch, so
-    a replay still probes the pre-epoch version.  Nothing is deleted in
-    the stream: a reader holding an older snapshot, in the stream or
-    outside it, keeps reading it.  Storage therefore grows until
-    :meth:`SnapshotTable.vacuum` runs on the tables — the one deleter,
-    an explicit maintenance step whose ``keep_last`` must cover the
-    versions a replay or a reader still needs.
+    both tables are compacted (:meth:`SnapshotTable.compact`, one file
+    per read split, written in parallel) inside ``foreachBatch``; the
+    compacted version keeps its parent's epoch, so a replay still probes
+    the pre-epoch version.  Nothing is deleted in the stream: a reader
+    holding an older snapshot, in the stream or outside it, keeps
+    reading it.  Every compaction therefore leaves one more full copy
+    of the index on disk — over E epochs about E/N copies, so storage
+    grows quadratically in E — until :meth:`SnapshotTable.vacuum` runs,
+    the one deleter.  Vacuum is maintenance with the stream stopped
+    (it would delete a running batch's staged, uncommitted files):
+    stop → ``vacuum(keep_last=3)`` on both tables → resume.  Three
+    versions keep the newest epoch's append, its compaction and the
+    version before them, which a replay of that epoch probes.
     """
     params = MinhashParams(num_hashes, bands, shingle_n, seed, n_probes)
     if compact_every is not None and compact_every < 2:

@@ -139,28 +139,37 @@ def test_vacuum_rejects_keep_last_below_one(spark, tmp_path):
 
 
 def test_partitioned_table_appends_and_compacts(spark, tmp_path):
-    """partition_by: files land in Hive ``col=value`` dirs and read
-    back across commits (one read per commit directory); compaction
-    keeps the partitioning; an append must use the table's own."""
+    """A partitioned table: files land in Hive ``col=value`` dirs, an
+    append keeps the table's partitioning, the version reads back as
+    ONE scan across its commits with a static partition filter, and
+    compaction keeps the partitioning."""
     t = SnapshotTable(spark, str(tmp_path / "t"))
-    t.write(spark.createDataFrame([(1, "a"), (2, "b")], "p int, s string"),
-            partition_by="p")
-    t.write(spark.createDataFrame([(1, "c")], "p int, s string"),
-            "append", partition_by="p")
+    t._commit("overwrite", *t._stage(
+        spark.createDataFrame([(1, "a"), (2, "b")], "p int, s string"), "p"))
+    t.write(spark.createDataFrame([(1, "c")], "p int, s string"), "append")
     rows = lambda: sorted(tuple(r) for r in t.read().collect())  # noqa: E731
     assert t.read().columns == ["s", "p"]
     assert rows() == [("a", 1), ("b", 2), ("c", 1)]
-    assert sorted(r["s"] for r in t.read().where("p = 1").collect()) \
-        == ["a", "c"]
+    pruned = t.read().where("p = 1")
+    assert sorted(r["s"] for r in pruned.collect()) == ["a", "c"]
+    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    assert len(scans) == 1 and "PartitionFilters: [isnotnull(p" in scans[0]
+    from bi_etl_and_integration_spark.sources import snapshots as sn
+
+    def files():
+        return sn._read_manifest(t.path, t.latest_version())["files"]
+    assert len({e["path"].split(os.sep)[1] for e in files()}) == 2
+    assert all(os.sep + "p=" in e["path"] for e in files())
     t.compact()
     assert rows() == [("a", 1), ("b", 2), ("c", 1)]
-    from bi_etl_and_integration_spark.sources import snapshots as sn
-    m = sn._read_manifest(t.path, t.latest_version())
-    assert m["partition_by"] == "p"
-    assert all(os.sep + "p=" in e["path"] for e in m["files"])
+    assert sn._read_manifest(t.path, t.latest_version())["partition_by"] \
+        == "p"
+    assert all(os.sep + "p=" in e["path"] for e in files())
+    # files staged unpartitioned cannot join the partitioned version
     with pytest.raises(ValueError, match="partitioning"):
-        t.write(spark.createDataFrame([(3, "d")], "p int, s string"),
-                "append")
+        t._commit("append", *t._stage(
+            spark.createDataFrame([(3, "d")], "p int, s string")))
 
 
 def test_convenience_wrappers(spark, tmp_path):
@@ -245,6 +254,23 @@ def test_compact_merges_small_files(spark, tmp_path):
     # pre-compaction version is still intact until vacuum
     assert len(t.read(v - 1).inputFiles()) == before
 
+
+
+def test_compact_writes_one_file_per_read_split(spark, tmp_path):
+    """compact() keeps the read's splits, so the rewrite runs as
+    parallel tasks and still merges small files; target_files=n
+    coalesces to n."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    for i in range(8):
+        t.write(spark.createDataFrame([(i,)], "k int"), "append")
+    splits = t.read().rdd.getNumPartitions()
+    assert 1 < splits < 8
+    t.compact()
+    # an empty split writes no file
+    assert 1 < t.history()[-1]["n_files"] <= splits
+    assert sorted(r["k"] for r in t.read().collect()) == list(range(8))
+    t.compact(target_files=1)
+    assert t.history()[-1]["n_files"] == 1
 
 def test_append_schema_evolution_union_and_nulls(spark, rows, tmp_path):
     """evolve_schema=True: new columns append to the manifest schema;

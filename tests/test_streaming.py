@@ -765,6 +765,68 @@ def test_dedup_stream_reader_snapshot_survives_live_compaction(
     assert sorted(r["id"] for r in held.select("id").collect()) == before
 
 
+
+def test_dedup_stream_vacuum_between_runs_keeps_replay_state(
+        spark, rows, tmp_path):
+    """The storage-reclaim cycle for a compacting stream: stop ->
+    vacuum(keep_last=3) on both index tables -> resume, under the crash
+    alignment where the resumed stream REPLAYS the newest (compacting)
+    epoch.  Vacuum deletes the copies that only pre-compaction versions
+    name, and the replay still probes the version before its epoch: the
+    near-dup it carries is dropped again."""
+    from bi_etl_and_integration_spark.streaming.dedup import dedup_stream
+
+    base = "the quick brown fox jumps over the lazy dog " * 5
+    DOCS = "doc_id long, text string"
+    src = str(tmp_path / "src")
+    index_dir = str(tmp_path / "index")
+    out = str(tmp_path / "survivors")
+    ckpt = str(tmp_path / "ckpt")
+    rows([(0, base + "one"), (2, "spark shuffles partitions " * 5)],
+         DOCS).write.parquet(src)
+    writer = dedup_stream(
+        spark.readStream.schema(DOCS).parquet(src),
+        index_dir=index_dir, survivors_dir=out, checkpoint_dir=ckpt,
+        num_hashes=32, bands=16, jaccard_threshold=0.5, compact_every=2)
+
+    def run():
+        q = writer.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    run()                                                     # epoch 0
+    for batch in ([(4, "a novel document entirely " * 5)],
+                  [(6, "yet another unrelated corpus slice " * 5)],
+                  [(7, "a third fresh slice of the crawl " * 5)],
+                  # near-dup of epoch-0 survivor 0, compacted history
+                  [(8, base + "late copy"),
+                   (9, "fresh final content " * 5)]):
+        rows(batch, DOCS).write.mode("append").parquet(src)
+        run()                                # epochs 1..4; 2, 4 compact
+    survivors = lambda: sorted(  # noqa: E731
+        r["doc_id"] for r in spark.read.parquet(out).collect())
+    assert survivors() == [0, 2, 4, 6, 7, 9]
+
+    # epoch 4's commits landed but its checkpoint commit did not
+    os.remove(os.path.join(ckpt, "commits", "4"))
+    crc = os.path.join(ckpt, "commits", ".4.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    tables = _index_tables(spark, index_dir)
+    for t in tables:
+        # the epoch 0, 1 and 2 appends: named only by versions before
+        # the retained tail (epoch 3's append, epoch 4's append and its
+        # compaction)
+        assert len(t.vacuum(keep_last=3)) == 3
+        assert len(os.listdir(os.path.join(t.path, "data"))) == 4
+    run()                                       # resume: replays epoch 4
+    assert survivors() == [0, 2, 4, 6, 7, 9]
+    shingles = tables[1]
+    assert (sorted(r["id"] for r in shingles.read().select("id").collect())
+            == [0, 2, 4, 6, 7, 9])
+
 def test_dedup_stream_releases_batch_caches(spark, rows, tmp_path):
     """Each micro-batch's caches — the batch, its survivors and the
     shingle tables the dedup and lookup operators cache — end with the
