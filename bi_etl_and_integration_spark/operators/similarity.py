@@ -273,57 +273,72 @@ def sign_buckets_udf(n_planes: int, seeds: list[int]):
     return buckets
 
 
-def _spherical_kmeans(x, nlist: int, n_iter: int, seed: int):
-    """Driver-side spherical k-means on a TRAINING SAMPLE (the
-    faiss-style IVF train step): rows of ``x`` are L2-normalized, so
-    nearest-by-cosine == argmax dot; each Lloyd iteration is one
-    sample x nlist BLAS matmul.  Deterministic for a fixed seed; an
-    emptied list is reseeded to the point farthest from its assigned
-    centroid so every list stays populated (balanced lists are the
-    whole point of training vs raw sampling)."""
+def _lloyd(x, init, n_iter: int, *, spherical: bool):
+    """The package's one Lloyd k-means loop, driver-side numpy over a
+    bounded sample.  Each iteration assigns every row of ``x`` to the
+    centroid with the largest ``2x·c − |c|²`` (nearest by L2; for unit
+    rows and unit centroids the same order as cosine), ties to the
+    lower index — one sample × k BLAS matmul — then moves each
+    centroid to the mean of its members, renormalized when
+    ``spherical``.  An emptied cluster is reseeded to the point
+    farthest from its assigned centroid, and that point is marked
+    taken so no two clusters reseed to it in one iteration (with every
+    point taken — fewer rows than clusters — it keeps its centroid).
+    The caller owns the seeding: ``init`` (k × dim) is copied, never
+    modified.  Returns ``(centroids, assign)``, ``assign`` being each
+    row's centroid index under the returned centroids."""
     import numpy as np
-    rng = np.random.default_rng(seed)
-    norms = np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-    xu = x / norms
-    cents = xu[rng.choice(len(xu), size=nlist, replace=False)]
+    cents = np.array(init, dtype=np.float64)
+    xx = np.einsum("ij,ij->i", x, x)
+
+    def nearest():
+        score = 2.0 * (x @ cents.T) - np.einsum("ij,ij->i", cents, cents)
+        assign = np.argmax(score, axis=1)
+        return assign, xx - score[np.arange(len(x)), assign]
+
     for _ in range(max(0, n_iter)):
-        sims = xu @ cents.T                      # sample × nlist
-        assign = np.argmax(sims, axis=1)
-        own = sims[np.arange(len(xu)), assign]
-        for c in range(nlist):
-            members = xu[assign == c]
+        assign, far = nearest()
+        for c in range(len(cents)):
+            members = x[assign == c]
             if len(members):
-                m = members.sum(axis=0)
-                cents[c] = m / max(np.linalg.norm(m), 1e-12)
-            else:
-                # reseed to the worst-fit point; mark it taken (+inf)
-                # so a second empty list in the SAME iteration can't
-                # pick the same point and duplicate the centroid
-                worst = int(np.argmin(own))
-                cents[c] = xu[worst]
+                m = members.mean(axis=0)
+                cents[c] = m / max(np.linalg.norm(m), 1e-12) \
+                    if spherical else m
+            elif far.max() > -np.inf:
+                worst = int(np.argmax(far))
+                cents[c] = x[worst]
                 assign[worst] = c
-                own[worst] = np.inf
-    return cents
+                far[worst] = -np.inf
+    return cents, nearest()[0]
+
+
+def _train_sample(frame: DataFrame, vec_col: str, n: int):
+    """The bounded training sample every trainer collects: the first
+    ``n`` vectors of ``frame`` as an n × dim float64 matrix — at
+    100 TB the only corpus data that reaches the driver."""
+    import numpy as np
+    return np.asarray([r[0] for r in frame.select(vec_col).limit(n)
+                       .collect()], dtype=np.float64)
 
 
 def _ivf_train(corpus: DataFrame, vec_col: str, nlist: int, seed: int,
                train_iters: int, train_size: int | None):
-    """Shared IVF coarse-quantizer training (faiss-style): collect a
-    bounded sample (the only data that ever reaches the driver at
-    100 TB) and run driver-side spherical k-means.  Returns the
+    """Shared IVF coarse-quantizer training (faiss-style): spherical
+    :func:`_lloyd` on a bounded sample (default 64 x nlist rows, at
+    least 2048), seeded by a ``default_rng(seed)`` draw.  Returns the
     dim × nlist centroid matrix (unit rows, transposed for dot)."""
     import numpy as np
     if train_size is None:
         train_size = max(nlist * 64, 2048)
-    sample = (corpus.select(F.col(vec_col).alias("cvec"))
-              .limit(train_size).collect())
-    x = np.asarray([row["cvec"] for row in sample], dtype=np.float64)
-    if len(x) <= nlist:
-        norms = np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-        return (x / norms).T
+    x = _train_sample(corpus, vec_col, train_size)
+    xu = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+    if len(xu) <= nlist:
+        return xu.T
     # trained centroids: balanced lists -> each probe reads ~1/nlist
     # of the corpus instead of whatever a raw sample happened to cut
-    return _spherical_kmeans(x, nlist, train_iters, seed).T
+    seeds = xu[np.random.default_rng(seed).choice(len(xu), size=nlist,
+                                                  replace=False)]
+    return _lloyd(xu, seeds, train_iters, spherical=True)[0].T
 
 
 def _ivf_nearest_udf(cmat, n: int):
@@ -454,8 +469,12 @@ def ivf_index_write(corpus: DataFrame, index_dir: str, *,
         sidecars["pq_books"] = table._stage(spark.createDataFrame(
             brows, "subspace int, code int, center array<double>")
             .coalesce(1))[0]
-    table._commit("overwrite", *table._stage(assigned, "centroid_id"),
-                  sidecars=sidecars)
+    # one shuffle by list: AQE packs each list into advisory-size files
+    # (and still splits a large one) instead of one file per (input
+    # partition, list)
+    table._commit("overwrite",
+                  *table._stage(assigned.hint("rebalance", "centroid_id"),
+                                "centroid_id"), sidecars=sidecars)
 
 
 def _ivf_centroids(t):
@@ -521,7 +540,8 @@ def ivf_index_append(batch: DataFrame, index_dir: str, *,
     over corpus A lays out every row exactly where
     ``ivf_index_write(A ∪ B, centroids=stored)`` would — certified
     bit-exact in tests/test_similarity.py and end-to-end by driver
-    query x44b.  Cost: one narrow Arrow map over the batch + one
+    query x44b.  Cost: one narrow Arrow map over the batch, one
+    shuffle by list id (about one new file per list) and one
     partitioned write committed as the next version, which carries the
     parent's centroids and codebooks; the existing index files are
     never touched."""
@@ -538,7 +558,7 @@ def ivf_index_append(batch: DataFrame, index_dir: str, *,
         # stored codebooks (retraining them would make old and new
         # codes incomparable under one query LUT)
         assigned = pq_encode(assigned, books, vec_col=vec_col)
-    table.write(assigned, "append")
+    table.write(assigned.hint("rebalance", "centroid_id"), "append")
 
 
 def ivf_search(spark, index_dir: str, queries: DataFrame, k: int = 10,
@@ -660,7 +680,7 @@ def ivf_search(spark, index_dir: str, queries: DataFrame, k: int = 10,
 
 def _pq_train(x, m: int, nbits: int, n_iter: int, seed: int):
     """Driver-side PQ codebook training on a bounded sample: split the
-    dim into ``m`` contiguous subspaces, run Lloyd k-means with
+    dim into ``m`` contiguous subspaces, run :func:`_lloyd` with
     ``2**nbits`` centroids in each.  Returns (m, ksub, dsub) float64.
     Rows of ``x`` must already be L2-normalized when the downstream
     metric is cosine (pq_topk does this)."""
@@ -674,22 +694,9 @@ def _pq_train(x, m: int, nbits: int, n_iter: int, seed: int):
     books = np.empty((m, ksub, dsub))
     for j in range(m):
         sub = x[:, j * dsub:(j + 1) * dsub]
-        if n <= ksub:
-            # degenerate sample: pad with repeats so argmin still works
-            cents = sub[rng.choice(n, size=ksub, replace=True)].copy()
-        else:
-            cents = sub[rng.choice(n, size=ksub, replace=False)].copy()
-        for _ in range(max(0, n_iter)):
-            # nearest centroid by L2: argmax(2x·c - |c|²) — one BLAS gemm
-            d2 = 2.0 * (sub @ cents.T) - (cents * cents).sum(1)[None, :]
-            assign = np.argmax(d2, axis=1)
-            for c in range(ksub):
-                members = sub[assign == c]
-                if len(members):
-                    cents[c] = members.mean(axis=0)
-                else:                     # empty cell: reseed randomly
-                    cents[c] = sub[rng.integers(n)]
-        books[j] = cents
+        # a degenerate sample (n <= ksub) seeds with repeats
+        seeds = sub[rng.choice(n, size=ksub, replace=n <= ksub)]
+        books[j] = _lloyd(sub, seeds, n_iter, spherical=False)[0]
     return books
 
 
@@ -730,9 +737,7 @@ def _pq_books(corpus: DataFrame, vec_col: str, m: int, nbits: int,
     import numpy as np
     if train_size is None:
         train_size = max((1 << nbits) * 32, 4096)
-    sample = (corpus.select(F.col(vec_col).alias("v"))
-              .limit(train_size).collect())
-    x = np.asarray([r["v"] for r in sample], dtype=np.float64)
+    x = _train_sample(corpus, vec_col, train_size)
     x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
     return _pq_train(x, m, nbits, n_iter, seed)
 
@@ -913,38 +918,25 @@ def kmeans_assign(df: DataFrame, centroids: list[tuple[int, list[float]]],
 
 
 def _group_centroids(C, G: int, n_iter: int = 10):
-    """Driver-side deterministic Lloyd over the k centroid POINTS:
-    group them into G super-clusters for the coarse assignment path.
-    Returns ``(group_of[k], supers[G × dim], radius[G])`` where
-    ``radius[g]`` = max true L2 distance from super g to its members
-    (the triangle-inequality bound's term).  Deterministic: seeds are
-    G evenly spaced rows of C (caller order), ties in argmin go to the
-    lower group index.  Cost is O(k·G·dim) numpy on the driver — the
+    """:func:`_lloyd` over the k centroid POINTS: group them into G
+    super-clusters for the coarse assignment path.  Returns
+    ``(group_of[k], supers[G × dim], radius[G])`` where ``radius[g]``
+    = max true L2 distance from super g to its members (the
+    triangle-inequality bound's term, valid for any grouping).
+    Deterministic: seeds are G evenly spaced rows of C (caller
+    order).  Cost is O(k·G·dim) numpy on the driver — the
     same driver-holds-k·dim contract kmeans_assign already has."""
     import numpy as np
     k = len(C)
     if G >= k:
         return (np.arange(k), C.copy(), np.zeros(k))
-    supers = C[np.round(np.linspace(0, k - 1, G)).astype(int)].copy()
-    assign = None
-    for _ in range(max(1, n_iter)):
-        D = ((C * C).sum(1)[:, None] - 2.0 * (C @ supers.T)
-             + (supers * supers).sum(1)[None, :])
-        assign = np.argmin(D, axis=1)
-        for g in range(G):
-            m = C[assign == g]
-            if len(m):
-                supers[g] = m.mean(axis=0)
-    D = ((C * C).sum(1)[:, None] - 2.0 * (C @ supers.T)
-         + (supers * supers).sum(1)[None, :])
-    assign = np.argmin(D, axis=1)
+    supers, group_of = _lloyd(
+        C, C[np.round(np.linspace(0, k - 1, G)).astype(int)],
+        max(1, n_iter), spherical=False)
+    dist = np.sqrt(np.maximum(((C - supers[group_of]) ** 2).sum(1), 0.0))
     radius = np.zeros(G)
-    for g in range(G):
-        m = C[assign == g]
-        if len(m):
-            radius[g] = float(np.sqrt(np.maximum(
-                ((m - supers[g]) ** 2).sum(1), 0.0)).max())
-    return assign, supers, radius
+    np.maximum.at(radius, group_of, dist)
+    return group_of, supers, radius
 
 
 def _kmeans_assign_arrow(df: DataFrame,
@@ -1123,41 +1115,31 @@ def _kmeans_assign_arrow(df: DataFrame,
 def kmeans_fit(df: DataFrame, k: int, *, vec_col: str = "embedding",
                id_col: str = "vec_id", n_iter: int = 5,
                ) -> list[tuple[int, list[float]]]:
-    """Distributed Lloyd's k-means over an embedding column — the
-    semantic-clustering primitive (topic bucketing for corpus mixing,
-    true IVF list training).  Deterministic: seeds are the k rows with
-    the smallest ``id_col`` (reproducible across runs and engines —
-    no RNG), assignment ties break on centroid id.
+    """Lloyd's k-means over an embedding column — the semantic-
+    clustering primitive (topic bucketing for corpus mixing, true IVF
+    list training) — trained driver-side by :func:`_lloyd` on a
+    bounded sample, the same contract as the IVF trainer.
+    Deterministic: the sample is the ``max(64·k, 2048)`` non-NULL rows
+    with the smallest ``id_col`` and the seeds are its first k rows
+    (reproducible across runs and engines — no RNG); assignment ties
+    break on centroid id, and an emptied cluster is reseeded to the
+    point farthest from its centroid (so repeated seed vectors cannot
+    leave clusters empty for good).
 
-    Per iteration: one narrow assignment pass (:func:`kmeans_assign`)
-    + ONE shuffle for the per-dimension means — posexplode
-    to (cluster, dim_pos, value) then hash aggregate: avg is
-    algebraic, so map-side partial aggregation reduces the shuffle to
-    tasks × k × dim rows regardless of corpus size.  Only the k·dim
-    centroid matrix ever reaches the driver (same contract as the IVF
-    trainer).  Empty clusters keep their previous centroid.
+    Cost: ONE job — the ordered, limited collect (a top-N per
+    partition, no shuffle) — then ``n_iter`` numpy iterations over at
+    most ``max(64·k, 2048)`` × dim doubles.  Up to that many rows the
+    result is the full-data Lloyd.  Above it, the centroids fit the
+    lowest-id rows only: a corpus whose ids correlate with its content
+    must be shuffled or sampled before the fit (assign the whole
+    corpus afterwards with :func:`kmeans_assign`).
     """
-    seeds = (df.orderBy(F.col(id_col).asc()).limit(k)
-             .select(vec_col).collect())
-    cents: list[tuple[int, list[float]]] = [
-        (i, [float(x) for x in r[0]]) for i, r in enumerate(seeds)]
-    for _ in range(n_iter):
-        assigned = kmeans_assign(df, cents, vec_col=vec_col,
-                                 out_col="__c")
-        means = (assigned
-                 .select("__c", F.posexplode(F.col(vec_col))
-                         .alias("__p", "__x"))
-                 .groupBy("__c", "__p")
-                 .agg(F.avg(F.col("__x").cast("double")).alias("__m"))
-                 .collect())
-        by_c: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_c.setdefault(r["__c"], {})[r["__p"]] = r["__m"]
-        cents = [
-            (cid, [by_c[cid][p] for p in range(len(vec))]
-             if cid in by_c else vec)
-            for cid, vec in cents]
-    return cents
+    x = _train_sample(df.where(F.col(vec_col).isNotNull())
+                      .orderBy(id_col), vec_col, max(64 * k, 2048))
+    if not len(x):
+        raise ValueError(f"kmeans_fit: {vec_col} has no non-NULL vector")
+    cents, _ = _lloyd(x, x[:k], n_iter, spherical=False)
+    return [(i, [float(v) for v in c]) for i, c in enumerate(cents)]
 
 
 def rrf_fuse(rankings: list[tuple[DataFrame, str]], *, id_col: str,

@@ -4117,7 +4117,9 @@ def x30(spark, cat):
     centroids = the 8 lowest-id embeddings): nearest-centroid
     assignment is a zero-shuffle Arrow/BLAS map; cluster sizes verify
     the exact per-row assignment against the oracle's cross-join
-    argmin.  ``kmeans_fit`` iterates this same plan."""
+    argmin.  ``kmeans_fit`` produces centroids in this same
+    ``(cid, vector)`` form (driver-side Lloyd on a one-job bounded
+    sample); this plan is how they are applied to a corpus."""
     cents = [(int(r["vec_id"]), [float(x) for x in r["embedding"]])
              for r in cat.embeddings.where(F.col("vec_id") < 8)
              .select("vec_id", "embedding").collect()]

@@ -161,23 +161,34 @@ def test_sign_buckets_udf_matches_expression_form(rows):
 
 
 def test_spherical_kmeans_balances_and_converges():
-    """Clustered data: trained centroids land one-per-true-cluster
-    (raw seed sampling can drop a cluster entirely), every list stays
-    populated, and the result is deterministic for a fixed seed."""
+    """Clustered data, in both ``_lloyd`` modes: trained centroids land
+    one-per-true-cluster (raw seed sampling can drop a cluster
+    entirely), every list stays populated, the returned assignment is
+    the nearest centroid, spherical centroids stay unit, and the
+    result is deterministic for a fixed seed."""
     import numpy as np
 
-    from bi_etl_and_integration_spark.operators.similarity import (
-        _spherical_kmeans)
+    from bi_etl_and_integration_spark.operators.similarity import _lloyd
     rng = np.random.default_rng(3)
     anchors = np.eye(4)  # 4 orthogonal cluster directions
     x = np.vstack([a + rng.normal(0, 0.05, size=(50, 4))
                    for a in anchors])
-    c1 = _spherical_kmeans(x.copy(), 4, 8, seed=9)
-    c2 = _spherical_kmeans(x.copy(), 4, 8, seed=9)
-    assert np.allclose(c1, c2)  # deterministic
-    # each anchor direction is captured by exactly one centroid
-    owners = {int(np.argmax(c1 @ a)) for a in anchors}
-    assert owners == set(range(4))
+    x /= np.linalg.norm(x, axis=1, keepdims=True)
+    init = x[np.random.default_rng(9).choice(len(x), size=4,
+                                             replace=False)]
+    for spherical in (True, False):
+        c1, a1 = _lloyd(x, init, 8, spherical=spherical)
+        c2, a2 = _lloyd(x, init, 8, spherical=spherical)
+        assert np.allclose(c1, c2) and (a1 == a2).all()  # deterministic
+        # each anchor direction is captured by exactly one centroid
+        owners = {int(np.argmax(c1 @ a)) for a in anchors}
+        assert owners == set(range(4))
+        assert sorted(np.bincount(a1, minlength=4)) == [50] * 4
+        d2 = ((x[:, None, :] - c1[None]) ** 2).sum(-1)
+        assert (a1 == d2.argmin(1)).all()
+        if spherical:
+            assert np.allclose(np.linalg.norm(c1, axis=1), 1.0)
+    assert np.allclose(np.linalg.norm(init, axis=1), 1.0)  # not modified
 
 
 def test_ivf_trained_recall_vs_brute_force(rows):
@@ -315,6 +326,21 @@ def test_kmeans_fit_matches_numpy_lloyd(rows):
     sizes = Counter(r["cluster"] for r in
                     kmeans_assign(df, cents).collect())
     assert sorted(sizes.values()) == [20, 20]
+
+
+def test_kmeans_fit_reseeds_duplicate_seeds(rows):
+    """Repeated seed vectors: the k lowest ids are three copies of one
+    point, so every row ties to centroid 0 and the other two clusters
+    start empty.  Each is reseeded to the point farthest from its
+    centroid, so the fit finds all three blobs instead of returning
+    the first seed twice."""
+    a, b, c = [0.0, 0.0], [10.0, 0.0], [5.0, 15.0]
+    df = rows([(i, v) for i, v in enumerate([a] * 10 + [b] * 10
+                                             + [c] * 10)],
+              "vec_id long, embedding array<double>")
+    cents = sim.kmeans_fit(df, 3)
+    assert [cid for cid, _ in cents] == [0, 1, 2]
+    assert sorted(v for _, v in cents) == sorted([a, b, c])
 
 
 def test_rrf_fuse_ranks_and_missing_items(rows):
@@ -702,6 +728,33 @@ def test_ivf_index_append_equals_rebuild(rows, tmp_path):
     assert ([r["vec_id"] for r in sorted(got, key=lambda r: r["rank"])]
             == [r["vec_id"] for r in sorted(exact,
                                             key=lambda r: r["rank"])])
+
+
+def test_ivf_index_append_writes_one_file_per_list(rows, tmp_path):
+    """A build and an append shuffle by list id before the partitioned
+    write: a 4-partition input whose partitions each hold every list
+    adds at most nlist data files, not one per (partition, list)."""
+    import numpy as np
+
+    from bi_etl_and_integration_spark.sources.snapshots import (
+        _read_manifest)
+    rng = np.random.RandomState(3)
+    base = rows([(i, [float(x) for x in rng.randn(8)])
+                 for i in range(200)],
+                "vec_id long, embedding array<double>")
+    batch = rows([(i, [float(x) for x in rng.randn(8)])
+                  for i in range(200, 400)],
+                 "vec_id long, embedding array<double>").repartition(4)
+    idx = str(tmp_path / "ivf_files")
+    sim.ivf_index_write(base, idx, nlist=4)
+    table = SnapshotTable(base.sparkSession, idx)
+
+    def files():
+        return len(_read_manifest(idx, table.latest_version())["files"])
+    before = files()
+    assert before <= 4
+    sim.ivf_index_append(batch, idx)
+    assert files() - before <= 4
 
 
 def test_ivf_interrupted_rebuild_keeps_previous_version(rows, tmp_path,

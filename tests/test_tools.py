@@ -186,6 +186,22 @@ def test_correctness_local_covers_declared_corpus():
     assert not missing, f"no local verdict line for: {missing[:5]}"
 
 
+def test_plans_md_covers_declared_corpus():
+    """PLANS.md must be regenerated (explain_corpus.py --md) in the
+    same change that adds or renames queries: one row per declared
+    query and none for a query that is gone."""
+    sys.path.insert(0, ROOT)
+    from bi_etl_and_integration_spark.queries import QUERIES
+    with open(os.path.join(ROOT, "PLANS.md")) as f:
+        names = {line.split("|")[1].strip() for line in f
+                 if line.startswith("| ")} - {"query", "---"}
+    missing = [n for n in QUERIES if n not in names]
+    assert not missing, (
+        f"no PLANS.md row for: {missing[:5]} — regenerate with "
+        "`python tools/explain_corpus.py <sf0.001 dir> --md > PLANS.md`")
+    assert names <= set(QUERIES), sorted(names - set(QUERIES))[:5]
+
+
 def test_no_pathological_bench_outlier():
     """Commit-time guard for the round-3 failure class: a single
     query silently regressing to a 100x plan (q10b: 106.7s, Expand +
@@ -506,6 +522,32 @@ def test_dedup_shingles_and_jaccard_built_once():
         for n in ast.walk(tree) if isinstance(n, ast.Call))
     assert calls["hashed_shingles"] == 1, calls["hashed_shingles"]
     assert calls["array_intersect"] == 1, calls["array_intersect"]
+
+
+def test_centroid_update_built_once():
+    """Every k-means in ``operators/similarity.py`` (IVF lists, PQ
+    codebooks, coarse grouping, ``kmeans_fit``) trains through
+    ``_lloyd``: the module has exactly one centroid-mean site — a
+    ``mean``/``avg`` call or a ``sum`` over axis 0 — so a trainer
+    cannot grow its own loop with its own empty-cluster rule."""
+    import ast
+
+    def _is_mean(call):
+        f = call.func
+        if not isinstance(f, ast.Attribute):
+            return False
+        axis = [k.value for k in call.keywords if k.arg == "axis"]
+        return f.attr in ("mean", "avg") or f.attr == "sum" and any(
+            isinstance(a, ast.Constant) and a.value == 0
+            for a in axis + call.args[:1])
+
+    path = os.path.join(ROOT, "bi_etl_and_integration_spark",
+                        "operators", "similarity.py")
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    sites = sorted(n.lineno for n in ast.walk(tree)
+                   if isinstance(n, ast.Call) and _is_mean(n))
+    assert len(sites) == 1, f"centroid-mean sites at lines {sites}"
 
 
 def test_word_splits_only_through_tokenize():
